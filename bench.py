@@ -14,8 +14,9 @@ seconds the query spent synthesizing its test corpus (encoded media
 blobs, landed change feeds, persisted indexes — work a production
 deployment never pays because its assets already exist; the reference's
 own benchmark likewise times only the streaming pass,
-server/Crane.go:63-99). Fixture builds are memoized per (process, sf)
-and their wall-clock is accumulated in inventory.fixture_seconds();
+server/Crane.go:63-99). Fixtures, persisted indexes and trained models
+are built once per process through inventory.artifact, and their
+wall-clock is accumulated in inventory.fixture_seconds();
 bench snapshots it around each query and reports the split —
 ``queries`` holds operator seconds, ``fixture_s`` the per-query fixture
 seconds, ``fixture_total_sec`` the run's total (round-9 verdict #1).

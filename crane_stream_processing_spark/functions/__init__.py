@@ -85,7 +85,7 @@ def dot(a: Column | str, b: Column | str) -> Column:
     ``list_dot_product(a::DOUBLE[], b::DOUBLE[])`` (also a left-to-right
     double fold, so values match bit-for-bit).
 
-    Measured NEGATIVE (round 10, tools/exp_dot_unroll.py): unrolling the
+    Measured NEGATIVE (round 10, OPTIMIZATION_r10.md): unrolling the
     sum into a flat 64-wide expression is ~3× faster PER CORE on a large
     pair scan (380k cosines, single scan partition: 8.6 s → 2.6 s,
     bit-equal), but swapping it in here made every sim/dedup registry

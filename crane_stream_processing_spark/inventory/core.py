@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 from .. import apps
 from . import dsum, davg, query, t
 
-_CLF_DIRS: dict[str, str] = {}  # per-process rendered-CLF fixture cache
-
 
 # --------------------------------------------------------------------------
 # Flagship: TPC-H Q1-style pricing summary (SURVEY.md §7 M1).
@@ -178,13 +176,10 @@ def src_clf_typed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
-
     from .. import datasource
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build_clf() -> str:
+    def _build_clf(log_dir: str) -> None:
         ev = t(spark, sf_dir, "events")
         lines = ev.select(
             F.concat(
@@ -194,11 +189,9 @@ def src_clf_typed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("event_id") % 97).cast("string"),
             ).alias("value")
         )
-        log_dir = tempfile.mkdtemp(prefix="crane_clf_")
         lines.repartition(8).write.mode("overwrite").text(log_dir)
-        return log_dir
 
-    log_dir = cached_fixture(_CLF_DIRS, sf_dir, _build_clf)
+    log_dir = artifact("crane_clf", sf_dir, _build_clf)
 
     datasource.register(spark)
     typed = spark.read.format("crane_clf").option("path", log_dir).load()
@@ -234,25 +227,17 @@ def app_grep_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return matches.groupBy("vm").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-_PART_DIRS: dict[str, str] = {}  # per-process partitioned-write fixture cache
-
-
 def _part_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """events written hive-partitioned by event_type, memoized per
-    (process, sf_dir) with liveness re-validation (shared by the
-    partitioned-roundtrip and DPP queries)."""
-    import tempfile
-
+    """events written hive-partitioned by event_type, an artifact shared
+    by the partitioned-roundtrip and DPP queries."""
     from .. import catalog
-    from . import cached_fixture
+    from . import artifact
 
-    def _build() -> str:
+    def _build(part_dir: str) -> None:
         ev = catalog.load_table(spark, sf_dir, "events")
-        part_dir = tempfile.mkdtemp(prefix="crane_part_")
         ev.write.mode("overwrite").partitionBy("event_type").parquet(part_dir)
-        return part_dir
 
-    return cached_fixture(_PART_DIRS, sf_dir, _build)
+    return artifact("crane_part", sf_dir, _build)
 
 
 @query(
@@ -278,9 +263,6 @@ def io_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
-
-    from .. import catalog
     from . import dsum
 
     part_dir = _part_fixture(spark, sf_dir)
@@ -326,9 +308,6 @@ def io_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
-
-    from .. import catalog
     from . import dsum
 
     part_dir = _part_fixture(spark, sf_dir)
@@ -351,10 +330,6 @@ def io_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSV_DIRS: dict[str, tuple[str, object]] = {}  # sf_dir → (path, schema)
-_JSON_DIRS: dict[str, tuple[str, object]] = {}
-
-
 @query(
     "src_csv_roundtrip",
     oracle="""
@@ -374,19 +349,14 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
+    from . import artifact, dsum
 
-    from . import dsum
-
-    from . import cached_fixture
-
-    def _build_csv() -> tuple[str, object]:
+    def _build_csv(path: str) -> tuple[str, object]:
         src = t(spark, sf_dir, "customer")
-        path = tempfile.mkdtemp(prefix="crane_csv_")
         src.write.mode("overwrite").option("header", True).csv(path)
         return (path, src.schema)
 
-    path, schema = cached_fixture(_CSV_DIRS, sf_dir, _build_csv)
+    path, schema = artifact("crane_csv", sf_dir, _build_csv)
     # The graded read goes through the engine's own typed CSV surface
     # (explicit schema + DROPMALFORMED), not a raw spark.read.
     from ..io import read_csv
@@ -417,17 +387,14 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build_json() -> tuple[str, object]:
+    def _build_json(path: str) -> tuple[str, object]:
         src = t(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="crane_json_")
         src.write.mode("overwrite").json(path)
         return (path, src.schema)
 
-    path, schema = cached_fixture(_JSON_DIRS, sf_dir, _build_json)
+    path, schema = artifact("crane_json", sf_dir, _build_json)
     from ..io import read_json  # engine's typed JSONL surface
 
     df = read_json(spark, path, schema)
@@ -436,9 +403,6 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").alias("total_chars"),
         F.sum(F.length("text")).alias("total_text_len"),
     )
-
-
-_ORC_DIRS: dict[str, tuple[str, object]] = {}
 
 
 @query(
@@ -460,19 +424,14 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
+    from . import artifact, dsum
 
-    from . import dsum
-
-    from . import cached_fixture
-
-    def _build_orc() -> tuple[str, object]:
+    def _build_orc(path: str) -> tuple[str, object]:
         src = t(spark, sf_dir, "orders")
-        path = tempfile.mkdtemp(prefix="crane_orc_")
         src.write.mode("overwrite").orc(path)
         return (path, src.schema)
 
-    path, schema = cached_fixture(_ORC_DIRS, sf_dir, _build_orc)
+    path, schema = artifact("crane_orc", sf_dir, _build_orc)
     df = spark.read.schema(schema).orc(path)
     return df.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -481,9 +440,6 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_order"
         ),
     )
-
-
-_XML_DIRS: dict[str, tuple[str, object]] = {}
 
 
 @query(
@@ -509,14 +465,11 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
-
-    from . import cached_fixture
+    from . import artifact
     from ..io import read_xml
 
-    def _build_xml() -> tuple[str, object]:
+    def _build_xml(path: str) -> tuple[str, object]:
         src = t(spark, sf_dir, "documents")
-        path = tempfile.mkdtemp(prefix="crane_xml_")
         src.write.mode("overwrite").option("rowTag", "doc").option(
             "rootTag", "docs"
         ).format("xml").save(path)
@@ -524,7 +477,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 0x0C, 0x0E-0x1F): a corpus row containing one would be written
         # but dropped on re-read by DROPMALFORMED while the oracle reads
         # the original parquet — a SILENT divergence. Fail loudly at
-        # fixture-build time instead (round-5 advice).
+        # fixture-build time instead.
         n_src = src.count()
         n_back = read_xml(spark, path, src.schema, row_tag="doc").count()
         if n_back != n_src:
@@ -534,7 +487,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return (path, src.schema)
 
-    path, schema = cached_fixture(_XML_DIRS, sf_dir, _build_xml)
+    path, schema = artifact("crane_xml", sf_dir, _build_xml)
 
     df = read_xml(spark, path, schema, row_tag="doc")
     return df.groupBy("lang").agg(
@@ -542,9 +495,6 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").alias("total_chars"),
         F.sum(F.length("text")).alias("total_text_len"),
     )
-
-
-_DYNPO_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -578,16 +528,13 @@ def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table
-    import tempfile
-
     from .. import catalog
-    from . import cached_fixture, dsum
+    from . import artifact, dsum
 
-    def _build_dynpo() -> str:
+    def _build_dynpo(d: str) -> None:
         ev = catalog.load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value", "event_type"
         )
-        d = tempfile.mkdtemp(prefix="crane_dynpo_")
         ev.write.mode("overwrite").partitionBy("event_type").parquet(d)
         corrected = ev.filter(F.col("event_type") == "error").withColumn(
             "value", F.col("value") * 2
@@ -595,9 +542,8 @@ def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
         corrected.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("event_type").parquet(d)
-        return d
 
-    path = cached_fixture(_DYNPO_DIRS, sf_dir, _build_dynpo)
+    path = artifact("crane_dynpo", sf_dir, _build_dynpo)
     return (
         spark.read.parquet(path)
         .groupBy("event_type")
@@ -606,9 +552,6 @@ def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
             dsum("value").alias("total_value"),
         )
     )
-
-
-_CDC_DIRS: dict[str, str] = {}
 
 
 @query(
@@ -659,12 +602,10 @@ def io_batch_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table
-    import tempfile
-
     from .. import catalog
-    from . import cached_fixture, dsum
+    from . import artifact, dsum
 
-    def _build_cdc() -> str:
+    def _build_cdc(d: str) -> None:
         ev = catalog.load_table(spark, sf_dir, "events").select(
             "event_id", "value"
         )
@@ -685,19 +626,15 @@ def io_batch_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .unionByName(ins)
         )
-        d = tempfile.mkdtemp(prefix="crane_cdc_")
         merged.write.mode("overwrite").parquet(d)
-        return d
 
-    path = cached_fixture(_CDC_DIRS, sf_dir, _build_cdc)
+    path = artifact("crane_cdc", sf_dir, _build_cdc)
     return spark.read.parquet(path).agg(
         F.count(F.lit(1)).alias("n_rows"),
         dsum("value").alias("total_value"),
         F.sum("event_id").cast("long").alias("id_checksum"),
     )
 
-
-_IVM_DIRS: dict[str, str] = {}
 
 # The shared IVM fixture contract: the materialized per-customer aggregate
 # over PRE-CUTOFF orders, and the synthetic change feed (inserts = orders
@@ -721,19 +658,16 @@ IVM_ORACLE = """
 
 
 def ivm_base_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per process+sf) the IVM base state: the
-    per-customer COUNT + exact-decimal SUM over pre-cutoff orders,
-    written to parquet — the at-rest view a refresh reads INSTEAD of the
-    fact table."""
+    """Materialize (as an artifact) the IVM base state: the per-customer
+    COUNT + exact-decimal SUM over pre-cutoff orders, written to parquet
+    — the at-rest view a refresh reads INSTEAD of the fact table."""
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table
-    import tempfile
-
     from .. import catalog
-    from . import cached_fixture
+    from . import artifact
 
-    def _build_base() -> str:
+    def _build_base(d: str) -> None:
         orders = catalog.load_table(spark, sf_dir, "orders")
         agg = (
             orders.filter(F.col("o_orderdate") < IVM_CUT)
@@ -745,11 +679,9 @@ def ivm_base_dir(spark: SparkSession, sf_dir: str) -> str:
                 ).alias("total_dec"),
             )
         )
-        d = tempfile.mkdtemp(prefix="crane_ivm_base_")
         agg.write.mode("overwrite").parquet(d)
-        return d
 
-    return cached_fixture(_IVM_DIRS, sf_dir, _build_base)
+    return artifact("crane_ivm_base", sf_dir, _build_base)
 
 
 def ivm_signed_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,9 +765,6 @@ def io_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     return ivm_fold_view(base_agg, delta)
 
 
-_IVM_MIN_DIRS: dict[str, str] = {}
-
-
 @query(
     "io_minmax_partial_rescan",
     oracle="""
@@ -881,14 +810,12 @@ def io_minmax_partial_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table
-    import tempfile
-
     from .. import catalog
-    from . import cached_fixture
+    from . import artifact
 
     CUT = "1997-01-01"
 
-    def _build_minview() -> str:
+    def _build_minview(d: str) -> None:
         orders = catalog.load_table(spark, sf_dir, "orders")
         agg = (
             orders.filter(F.col("o_orderdate") < CUT)
@@ -898,11 +825,9 @@ def io_minmax_partial_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_orders"),
             )
         )
-        d = tempfile.mkdtemp(prefix="crane_ivm_min_")
         agg.write.mode("overwrite").parquet(d)
-        return d
 
-    path = cached_fixture(_IVM_MIN_DIRS, sf_dir, _build_minview)
+    path = artifact("crane_ivm_min", sf_dir, _build_minview)
     matview = spark.read.parquet(path)
     orders = t(spark, sf_dir, "orders")
     pre = orders.filter(F.col("o_orderdate") < CUT)
@@ -951,32 +876,25 @@ def io_minmax_partial_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDC_IVM_DIRS: dict[str, str] = {}
-
-
 def cdc_ivm_base_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per process+sf) the CDC-IVM base state: the
-    per-user COUNT + exact-decimal SUM(value) view over events — shared
-    by the batch upsert query and its streaming twin."""
+    """Materialize (as an artifact) the CDC-IVM base state: the per-user
+    COUNT + exact-decimal SUM(value) view over events — shared by the
+    batch upsert query and its streaming twin."""
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table
-    import tempfile
-
     from .. import catalog
-    from . import cached_fixture
+    from . import artifact
 
-    def _build_base() -> str:
+    def _build_base(d: str) -> None:
         ev = catalog.load_table(spark, sf_dir, "events")
         agg = ev.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(28,4)")).alias("total_dec"),
         )
-        d = tempfile.mkdtemp(prefix="crane_cdcivm_base_")
         agg.write.mode("overwrite").parquet(d)
-        return d
 
-    return cached_fixture(_CDC_IVM_DIRS, sf_dir, _build_base)
+    return artifact("crane_cdcivm_base", sf_dir, _build_base)
 
 
 def cdc_signed_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1081,9 +999,6 @@ def io_cdc_ivm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BINFILE_DIRS: dict[str, str] = {}
-
-
 @query(
     "src_binaryfile_scan",
     oracle="""
@@ -1107,16 +1022,13 @@ def src_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-encoded, truncated, or reordered between the filesystem and the
     DataFrame. At 100 TB this scan parallelizes per file (each blob one
     task, no splitting mid-file) which is precisely what opaque media
-    wants; fixture is process-memoized with liveness revalidation like
-    every other source fixture."""
+    wants; the fixture is an artifact like every other source fixture."""
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table
-    import tempfile
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build_binfiles() -> str:
+    def _build_binfiles(d: str) -> None:
         # bounded fixture: 50 rows by literal id filter — the collect
         # moves a fixed-size artifact, not SF-scaled data
         rows = (
@@ -1125,13 +1037,11 @@ def src_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text")
             .collect()
         )
-        d = tempfile.mkdtemp(prefix="crane_binfile_")
         for r in rows:
             with open(os.path.join(d, f"doc_{r.doc_id}.txt"), "wb") as fh:
                 fh.write(r.text.encode("utf-8"))
-        return d
 
-    path = cached_fixture(_BINFILE_DIRS, sf_dir, _build_binfiles)
+    path = artifact("crane_binfile", sf_dir, _build_binfiles)
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
@@ -1188,7 +1098,9 @@ def src_rate_word_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_SFS: set[str] = set()  # sf_dirs whose bucketed tables exist
+# sf_dirs whose bucketed tables exist in the live session's catalog: valid
+# only for that session's lifetime, so not an artifact.
+_BUCKETED_SFS: set[str] = set()
 
 
 @query(
@@ -1260,9 +1172,6 @@ def io_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZORDER_DIRS: dict[str, str] = {}  # per-process z-ordered write fixture cache
-
-
 @query(
     "io_zorder_layout",
     oracle="""
@@ -1315,24 +1224,19 @@ def io_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
-
     from ..operators.layout import morton_interleave, write_zordered
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build_zorder() -> str:
+    def _build_zorder(zdir: str) -> None:
         orders = t(spark, sf_dir, "orders").withColumn(
             "o_orderday",
             F.datediff(
                 F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
             ).cast("long"),
         )
-        zdir = tempfile.mkdtemp(prefix="crane_zorder_")
         write_zordered(orders, zdir, "o_custkey", "o_orderday", num_files=8)
-        return zdir
 
-    zdir = cached_fixture(_ZORDER_DIRS, sf_dir, _build_zorder)
+    zdir = artifact("crane_zorder", sf_dir, _build_zorder)
 
     df = spark.read.parquet(zdir).filter(
         (F.col("o_custkey").between(100, 500))
@@ -1346,9 +1250,6 @@ def io_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             morton_interleave(F.col("o_custkey"), F.col("o_orderday"))
         ).alias("z_sum"),
     )
-
-
-_EVOLVE_DIRS: dict[str, str] = {}  # per-process schema-evolution fixture
 
 
 @query(
@@ -1375,16 +1276,11 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import ensure_engine_confs
 
     ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
-    import tempfile
-
     from .. import catalog
-    from . import dsum
+    from . import artifact, dsum
 
-    from . import cached_fixture
-
-    def _build_evolve() -> str:
+    def _build_evolve(evdir: str) -> None:
         ev = catalog.load_table(spark, sf_dir, "events")
-        evdir = tempfile.mkdtemp(prefix="crane_evolve_")
         old = ev.filter(F.col("event_id") % 2 == 0).select(
             "event_id", "user_id", "value"
         )
@@ -1393,9 +1289,8 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         old.write.mode("overwrite").parquet(os.path.join(evdir, "gen=0"))
         new.write.mode("overwrite").parquet(os.path.join(evdir, "gen=1"))
-        return evdir
 
-    evdir = cached_fixture(_EVOLVE_DIRS, sf_dir, _build_evolve)
+    evdir = artifact("crane_evolve", sf_dir, _build_evolve)
 
     # Hive-style discovery keeps `gen` as a partition column, so the
     # generation count is independent of the evolved column's NULLs —
@@ -1411,9 +1306,6 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum("value").alias("total_value"),
         F.count("etype").alias("n_etype"),
     )
-
-
-_COMPACT_FIXTURES: dict[str, tuple[str, int, int]] = {}  # sf_dir -> (dir, before, after)
 
 
 @query(
@@ -1442,11 +1334,10 @@ def io_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog.ensure_engine_confs(spark)  # fixture memo may skip load_table
     import glob as _glob
     import shutil
-    import tempfile
 
-    from . import cached_fixture
+    from . import artifact
 
-    def _build_compact() -> tuple[str, int, int]:
+    def _build_compact(d: str) -> tuple[str, int, int]:
         ev = t(spark, sf_dir, "events").select("event_id")
         # every repartition(64) partition must be non-empty or the
         # oracle's 64/4 file-count literals hash-fail opaquely — fail
@@ -1460,23 +1351,20 @@ def io_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(
                 f"io_compact_small_files needs >=64 events, got {n_events}"
             )
-        small = tempfile.mkdtemp(prefix="crane_small_")
+        small = os.path.join(d, "small")
         ev.coalesce(1).repartition(64).write.mode("overwrite").parquet(small)
         n_before = len(_glob.glob(os.path.join(small, "part-*.parquet")))
-        compact = tempfile.mkdtemp(prefix="crane_compact_")
+        compact = os.path.join(d, "compact")
         spark.read.parquet(small).repartition(4).write.mode(
             "overwrite"
         ).parquet(compact)
         n_after = len(_glob.glob(os.path.join(compact, "part-*.parquet")))
         # the compact write has executed eagerly; the 64-file staging dir
-        # is garbage now — only the compacted dir is memoized/re-read
-        # (cached_fixture registers the compacted dir for atexit reaping)
+        # is garbage now — only the compacted dir is re-read
         shutil.rmtree(small, ignore_errors=True)
         return (compact, n_before, n_after)
 
-    compact, n_before, n_after = cached_fixture(
-        _COMPACT_FIXTURES, sf_dir, _build_compact
-    )
+    compact, n_before, n_after = artifact("crane_compact", sf_dir, _build_compact)
 
     return (
         spark.read.parquet(compact)

@@ -503,6 +503,7 @@ def join_salted_skew_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Clone sessions carry live-session state (confs, catalog): not artifacts.
 _ISOLATED_SESSIONS: dict[tuple[int, str], SparkSession] = {}
 
 
@@ -622,7 +623,8 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_CBO_DBS: dict[str, str] = {}  # sf_dir → catalog database with ANALYZEd copies
+# sf_dir → database of ANALYZEd copies in the live session's catalog; not an artifact
+_CBO_DBS: dict[str, str] = {}
 
 _CBO_TABLES = {
     "orders": "o_orderkey, o_custkey, o_totalprice",
@@ -640,8 +642,8 @@ def _cbo_stats_db(spark: SparkSession, sf_dir: str) -> str:
     scales never collide), re-validated on reuse via tableExists AND an
     isdir check on the warehouse directory — the data lives in scratch
     space a tmp-reaper can empty mid-process, and the catalog alone
-    would keep vouching for vanished files (round-6 advice; the same
-    hazard class cached_fixture handles). This
+    would keep vouching for vanished files (the same hazard the artifact
+    registry's isdir check handles). This
     is the offline step a production deployment schedules after ingest:
     stats are table metadata, amortized across every query that plans
     against them. Hygiene: the key is the REALPATH of sf_dir (a trailing

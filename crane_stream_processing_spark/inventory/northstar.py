@@ -169,22 +169,17 @@ def dedup_minhash_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.jaccard_pairs(docs, pairs, "doc_id", "text", sets_df=sets)
 
 
-_DEDUP_INDEX_DIRS: dict[str, str] = {}  # sf_dir → persisted band-bucket index
-
-
 def _dedup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted AT-REST dedup index: DISTINCT (band_idx, band_hash)
-    buckets of the EXISTING corpus (doc_id % 4 != 0), written once per
-    (process, sf_dir) as parquet — the artifact an incremental ingest
-    pipeline keeps between runs so newcomers are checked against history
-    WITHOUT re-banding it. Bounded by distinct buckets (≤ 4·docs rows of
-    two small columns), it is the batch analogue of the state store
-    `stream_dedup_minhash` keeps within its watermark."""
-    import tempfile
+    buckets of the EXISTING corpus (doc_id % 4 != 0), written once as a
+    parquet artifact — what an incremental ingest pipeline keeps between
+    runs so newcomers are checked against history WITHOUT re-banding it.
+    Bounded by distinct buckets (≤ 4·docs rows of two small columns), it
+    is the batch analogue of the state store `stream_dedup_minhash`
+    keeps within its watermark."""
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build() -> str:
+    def _build(path: str) -> None:
         docs = t_cpu(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 4 != 0
         )
@@ -193,11 +188,9 @@ def _dedup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("band_idx", "band_hash")
             .distinct()
         )
-        path = tempfile.mkdtemp(prefix="crane_dedup_index_")
         idx.write.mode("overwrite").parquet(path)
-        return path
 
-    return spark.read.parquet(cached_fixture(_DEDUP_INDEX_DIRS, sf_dir, _build))
+    return spark.read.parquet(artifact("crane_dedup_index", sf_dir, _build))
 
 
 @query(
@@ -641,11 +634,8 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001-0.1, vs 0.3-0.6 at nprobe=1 — the soft assignment is what
     buys the margin)."""
     emb = t_cpu(spark, sf_dir, "embeddings")
-    key = (sf_dir, 8, 2)
-    if key not in _KMEANS_MODELS:
-        _KMEANS_MODELS[key] = S.kmeans_fit(emb, k=8, iters=2)
     sem = (
-        D.semantic_prune(emb, _KMEANS_MODELS[key], threshold=0.4, nprobe=2)
+        D.semantic_prune(emb, _kmeans8(spark, sf_dir), threshold=0.4, nprobe=2)
         .filter(F.col("pruned") < 200)
         .withColumn("__sem", F.lit(1))
     )
@@ -1124,27 +1114,20 @@ def _sql_ivf_cell(vec_expr: str) -> str:
     return f"(list_position([{dots}], list_max([{dots}])) - 1)"
 
 
-_IVF_INDEX_DIRS: dict[str, str] = {}  # (sf_dir) → persisted inverted-file dir
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str):
-    """The persisted IVF index for the fixed demo centroids: built once per
-    (process, corpus) via ivf_bucket_corpus and written as parquet — the
+    """The persisted IVF index for the fixed 8-cell demo centroids: an
+    artifact built by ivf_bucket_corpus and written as parquet — the
     offline index-build step every real IVF deployment amortizes. Reading
     it back is lossless, so searches answer identically to inline
     bucketing (the oracle recomputes cells from scratch and still
     matches)."""
-    import tempfile
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build() -> str:
+    def _build(path: str) -> None:
         emb = t_cpu(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="crane_ivf_index_")
         S.ivf_bucket_corpus(emb, _CENTROIDS).write.mode("overwrite").parquet(path)
-        return path
 
-    return spark.read.parquet(cached_fixture(_IVF_INDEX_DIRS, sf_dir, _build))
+    return spark.read.parquet(artifact("crane_ivf8_index", sf_dir, _build))
 
 
 @query(
@@ -1535,57 +1518,42 @@ def sim_ivf_arrow_coarse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF64_INDEX_DIRS: dict[str, str] = {}  # sf_dir → persisted 64-cell index
-
-
 def _ivf64_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted LARGE-K (64-cell, relational coarse quantizer)
-    inverted file — the at-rest artifact `stream_ivf_ingest` appends to.
-    Built once per (process, corpus) like `_ivf_index`; the health query
-    below audits it in place."""
-    import tempfile
+    inverted file — the at-rest artifact `stream_ivf_ingest` appends to
+    and `stream_ivf_query_topk` serves from. An artifact like
+    `_ivf_index`; the health query below audits it in place."""
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build() -> str:
+    def _build(path: str) -> None:
         emb = t_cpu(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="crane_ivf64_index_")
         S.ivf_bucket_corpus(emb, _CENTROIDS64, relational=True).write.mode(
             "overwrite"
         ).parquet(path)
-        return path
 
-    return spark.read.parquet(cached_fixture(_IVF64_INDEX_DIRS, sf_dir, _build))
-
-
-_TRAINED_INDEX_DIRS: dict[tuple, str] = {}
+    return spark.read.parquet(artifact("crane_ivf64_index", sf_dir, _build))
 
 
 def _trained_ivf_index(
-    spark: SparkSession, mkey: tuple, emb: DataFrame, centroids
+    spark: SparkSession, sf_dir: str, model: str, emb: DataFrame, centroids
 ) -> DataFrame:
-    """The persisted TRAINED inverted file, keyed on the trained model —
-    the `_ivf_index`/`_ivf64_index` pattern applied to the trained-
-    centroid serving queries (round-10): a production deployment buckets
-    the corpus once when the model lands (the offline index build,
-    credited as fixture time like every other persisted index) and every
-    search thereafter reads the at-rest artifact. Reading back is
-    lossless (float/double/int columns), so searches answer identically
-    to inline bucketing — the oracles recompute cells from scratch and
-    still match."""
-    import tempfile
+    """The persisted TRAINED inverted file of ``emb`` under the trained
+    ``centroids``, keyed on the model's name — the `_ivf_index` pattern
+    applied to the trained-centroid serving queries: a production
+    deployment buckets the corpus once when the model lands (the offline
+    index build) and every search thereafter reads the at-rest artifact.
+    Reading back is lossless (float/double/int columns), so searches
+    answer identically to inline bucketing — the oracles recompute cells
+    from scratch and still match."""
+    from . import artifact
 
-    from . import cached_fixture
-
-    def _build() -> str:
-        path = tempfile.mkdtemp(prefix="crane_ivf_trained_index_")
+    def _build(path: str) -> None:
         S.ivf_bucket_corpus(emb, centroids).write.mode("overwrite").parquet(
             path
         )
-        return path
 
     return spark.read.parquet(
-        cached_fixture(_TRAINED_INDEX_DIRS, mkey, _build)
+        artifact("crane_ivf_trained_index", sf_dir, _build, model)
     )
 
 
@@ -1662,20 +1630,24 @@ def sim_ivf_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trained64(spark: SparkSession, sf_dir: str):
-    """The per-(process, sf) exact-trained k=64 / 2-iteration model and
-    its not-null corpus frame — ONE definition for the retrain loop and
-    both trained serving queries (review finding: three hand-synced
-    copies would let the training filter / k / iters / cache key drift
-    between queries whose oracles share one CTE re-derivation)."""
+    """The exact-trained k=64 / 2-iteration model (an artifact) and its
+    not-null corpus frame — ONE definition for the retrain loop and both
+    trained serving queries, so the training filter / k / iters cannot
+    drift between queries whose oracles share one CTE re-derivation."""
+    from . import artifact
+
     emb = t_cpu(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
-    key = (sf_dir, 64, 2, "exact")
-    if key not in _KMEANS_MODELS:
-        _KMEANS_MODELS[key] = S.kmeans_fit_exact(
+    model = artifact(
+        "crane_kmeans64_exact_model",
+        sf_dir,
+        lambda: S.kmeans_fit_exact(
             emb.filter(S.l2norm("embedding") > 0), k=64, iters=2
-        )
-    return emb, _KMEANS_MODELS[key]
+        ),
+        directory=False,
+    )
+    return emb, model
 
 
 def _sql_kmeans64_exact_ctes() -> str:
@@ -1959,9 +1931,7 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 10),
         trained,
         k=3,
-        bucketed=_trained_ivf_index(
-            spark, ("exact64", sf_dir), emb, trained
-        ),
+        bucketed=_trained_ivf_index(spark, sf_dir, "exact64", emb, trained),
     )
 
 
@@ -2016,9 +1986,7 @@ def sim_ivf_trained_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         trained,
         k=3,
         nprobe=2,
-        bucketed=_trained_ivf_index(
-            spark, ("exact64", sf_dir), emb, trained
-        ),
+        bucketed=_trained_ivf_index(spark, sf_dir, "exact64", emb, trained),
     )
 
 
@@ -2298,7 +2266,50 @@ def sim_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_MODELS: dict[tuple[str, int, int], list[list[float]]] = {}
+def _kmeans8(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """The k=8 / 2-iteration k-means model (an artifact) shared by
+    semantic dedup, the trained IVF certificate and IVF-PQ: train once,
+    serve every subsequent search — the production IVF lifecycle."""
+    from . import artifact
+
+    return artifact(
+        "crane_kmeans8_model",
+        sf_dir,
+        lambda: S.kmeans_fit(t_cpu(spark, sf_dir, "embeddings"), k=8, iters=2),
+        directory=False,
+    )
+
+
+def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """The 8x32 / 2-iteration PQ codebooks (an artifact) shared by the PQ
+    and IVF-PQ queries."""
+    from . import artifact
+
+    return artifact(
+        "crane_pq_codebooks",
+        sf_dir,
+        lambda: S.pq_fit(
+            t_cpu(spark, sf_dir, "embeddings"), m=8, ksub=32, iters=2
+        ),
+        directory=False,
+    )
+
+
+def _pq_codes(spark: SparkSession, sf_dir: str, books) -> DataFrame:
+    """The corpus encoded under ``books`` (8 codes/vector), persisted as
+    an artifact — the offline index-build step a production ANN
+    deployment amortizes (the codes file IS the index; at 100 TB it is
+    ~1/32 the float corpus and the only thing the search reads). Reading
+    back is lossless, so searches answer identically to inline encoding —
+    the oracles recompute everything from scratch and still hash-match."""
+    from . import artifact
+
+    def _build(path: str) -> None:
+        S.pq_encode(t_cpu(spark, sf_dir, "embeddings"), books).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    return spark.read.parquet(artifact("crane_pq_codes", sf_dir, _build))
 
 
 @query(
@@ -2326,17 +2337,14 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-centroid variant sim_ivf_ann_topk carries the row-level oracle
     for the search machinery itself."""
     emb = t_cpu(spark, sf_dir, "embeddings")
-    key = (sf_dir, 8, 2)
-    if key not in _KMEANS_MODELS:
-        _KMEANS_MODELS[key] = S.kmeans_fit(emb, k=8, iters=2)
-    centroids = _KMEANS_MODELS[key]
+    centroids = _kmeans8(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
     ivf = S.ivf_ann_topk(
         emb,
         queries,
         centroids,
         k=3,
-        bucketed=_trained_ivf_index(spark, ("k8", sf_dir), emb, centroids),
+        bucketed=_trained_ivf_index(spark, sf_dir, "k8", emb, centroids),
     ).select(
         "query_id", "cand_id", F.lit(1).alias("__hit")
     )
@@ -2357,9 +2365,6 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_hits") >= F.lit(0.5) * F.col("n_exact")).alias("recall_ok"),
         )
     )
-
-
-_PQ_MODELS: dict[tuple[str, int, int, int], list[list[list[float]]]] = {}
 
 
 @query(
@@ -2394,14 +2399,11 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index. Exact-side row counts come from the oracle; recall_ok is the
     certificate bit."""
     emb = t_cpu(spark, sf_dir, "embeddings")
-    key = (sf_dir, 8, 32, 2)
-    if key not in _PQ_MODELS:
-        _PQ_MODELS[key] = S.pq_fit(emb, m=8, ksub=32, iters=2)
-    books = _PQ_MODELS[key]
+    books = _pq_books(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
     pq = S.pq_adc_topk(
         emb, queries, books, shortlist=50, k=3,
-        codes=_pq_codes(spark, sf_dir, key, books),
+        codes=_pq_codes(spark, sf_dir, books),
     ).select(
         "query_id", "cand_id", F.lit(1).alias("__hit")
     )
@@ -2418,51 +2420,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_exact",
             (F.col("n_hits") >= F.lit(0.5) * F.col("n_exact")).alias("recall_ok"),
         )
-    )
-
-
-# Persisted trained-index artifacts, shared by sim_pq_adc_topk and
-# sim_ivfpq_topk: the encoded corpus (8 codes/vector) and the coarse cell
-# assignment are each built ONCE per (process, corpus, model) and written
-# as parquet — the offline index-build step a production ANN deployment
-# amortizes (the codes file IS the index; at 100 TB it is ~1/32 the float
-# corpus and the only thing the search reads). Reading back is lossless,
-# so searches answer identically to inline encoding — the oracles
-# recompute everything from scratch and still hash-match.
-_PQ_CODES_DIRS: dict[tuple[str, int, int, int], str] = {}
-_IVF_CELL_DIRS: dict[tuple[str, int, int], str] = {}
-
-
-def _persisted(spark: SparkSession, cache: dict, key, build) -> DataFrame:
-    import tempfile
-
-    from . import cached_fixture
-
-    def _write() -> str:
-        path = tempfile.mkdtemp(prefix="crane_ann_index_")
-        build().write.mode("overwrite").parquet(path)
-        return path
-
-    return spark.read.parquet(cached_fixture(cache, key, _write))
-
-
-def _pq_codes(spark: SparkSession, sf_dir: str, pkey, books) -> DataFrame:
-    return _persisted(
-        spark,
-        _PQ_CODES_DIRS,
-        pkey,
-        lambda: S.pq_encode(t_cpu(spark, sf_dir, "embeddings"), books),
-    )
-
-
-def _ivf_cells(spark: SparkSession, sf_dir: str, ckey, centroids) -> DataFrame:
-    return _persisted(
-        spark,
-        _IVF_CELL_DIRS,
-        ckey,
-        lambda: S.ivf_bucket_corpus(
-            t_cpu(spark, sf_dir, "embeddings"), centroids
-        ).select("cand_id", "cell"),
     )
 
 
@@ -2492,18 +2449,15 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact-side counts come from the oracle; recall_ok is the
     certificate bit."""
     emb = t_cpu(spark, sf_dir, "embeddings")
-    ckey = (sf_dir, 8, 2)
-    if ckey not in _KMEANS_MODELS:
-        _KMEANS_MODELS[ckey] = S.kmeans_fit(emb, k=8, iters=2)
-    pkey = (sf_dir, 8, 32, 2)
-    if pkey not in _PQ_MODELS:
-        _PQ_MODELS[pkey] = S.pq_fit(emb, m=8, ksub=32, iters=2)
+    centroids, books = _kmeans8(spark, sf_dir), _pq_books(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
+    # the coarse cells are the k=8 trained index sim_ivf_kmeans_topk reads
+    cells = _trained_ivf_index(spark, sf_dir, "k8", emb, centroids)
     approx = S.ivfpq_topk(
-        emb, queries, _KMEANS_MODELS[ckey], _PQ_MODELS[pkey],
+        emb, queries, centroids, books,
         nprobe=3, shortlist=50, k=3,
-        codes=_pq_codes(spark, sf_dir, pkey, _PQ_MODELS[pkey]),
-        cells=_ivf_cells(spark, sf_dir, ckey, _KMEANS_MODELS[ckey]),
+        codes=_pq_codes(spark, sf_dir, books),
+        cells=cells.select("cand_id", "cell"),
     ).select("query_id", "cand_id", F.lit(1).alias("__hit"))
     exact = S.cosine_topk(emb, queries, k=3).select("query_id", "cand_id")
     return (
@@ -3015,21 +2969,19 @@ def _energy_delta_fp(energies: DataFrame) -> DataFrame:
     )
 
 
-_MEDIA_DIRS: dict[tuple[str, str], str] = {}
+# (sf_dir, kind) → scan partitions of the landed media corpus, probed in
+# the live session (like inventory._SCAN_PARTS), so not an artifact.
 _MEDIA_PARTS: dict[tuple[str, str], int] = {}
 
 
 def media_fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Land an encoded media corpus ONCE per (process, sf, kind) — the
-    round-9 verdict's item #1: encoding (zlib DEFLATE, RIFF container
-    writes) is FIXTURE SYNTHESIS, not the operator under test — a real
-    deployment's assets already exist in the landing zone — so the
-    graded/benched cost of every mm_* query is the decode→feature path
-    only. Same discipline as _ivm_feed_dir; build time lands in
+    """Land an encoded media corpus as an artifact keyed on ``kind``:
+    encoding (zlib DEFLATE, RIFF container writes) is FIXTURE SYNTHESIS,
+    not the operator under test — a real deployment's assets already
+    exist in the landing zone — so the graded/benched cost of every mm_*
+    query is the decode→feature path only; the build time lands in
     inventory.fixture_seconds() and bench.py reports it separately."""
-    import tempfile
-
-    from . import cached_fixture
+    from . import artifact
 
     builders = {
         "bmp": M.synthesize_bmp,
@@ -3040,14 +2992,12 @@ def media_fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
         "wav_pert": M.synthesize_wav_perturbed,
     }
 
-    def _build() -> str:
-        d = tempfile.mkdtemp(prefix=f"crane_media_{kind}_")
+    def _build(d: str) -> None:
         builders[kind](t(spark, sf_dir, "documents")).write.mode(
             "overwrite"
         ).parquet(d)
-        return d
 
-    return cached_fixture(_MEDIA_DIRS, (sf_dir, kind), _build)
+    return artifact("crane_media", sf_dir, _build, kind)
 
 
 def _media(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:

@@ -44,20 +44,19 @@ _EVENTS_FIELDS = [
     ("props", T.StringType()),
 ]
 
-_TS_TYPE_CACHE: dict[str, T.DataType] = {}  # sf_dir → stored type of events.ts
-
-_SENTINEL_DIR: dict[str, str] = {}  # process-wide cache, see _stream_events_sentinel
-
 
 def _events_ts_type(spark: SparkSession, sf_dir: str) -> T.DataType:
-    if sf_dir not in _TS_TYPE_CACHE:
-        probe = (
-            spark.read.option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .schema
-        )
-        _TS_TYPE_CACHE[sf_dir] = probe["ts"].dataType
-    return _TS_TYPE_CACHE[sf_dir]
+    from . import artifact
+
+    return artifact(
+        "crane_events_ts_type",
+        sf_dir,
+        lambda: spark.read.option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .schema["ts"]
+        .dataType,
+        directory=False,
+    )
 
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
@@ -110,22 +109,19 @@ def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the streaming analog of an end-of-stream marker. Callers filter the
     sentinels back out of the result.
 
-    The two sentinel rows are constants, so the parquet dir is written once
-    per process and reused (file streams re-list the dir per query start;
-    re-writing it each call just burned a job). The sentinel file is
-    written with ts as TIMESTAMP_LTZ micros and both legs are normalized
-    to that type before the union, so it composes with any stored ts type
-    in the real table (see _normalize_ts)."""
-    import tempfile
-
+    The two sentinel rows are constants, so the parquet dir is an artifact
+    that depends on no table (file streams re-list the dir per query
+    start; re-writing it each call just burned a job). The sentinel file
+    is written with ts as TIMESTAMP_LTZ micros and both legs are
+    normalized to that type before the union, so it composes with any
+    stored ts type in the real table (see _normalize_ts)."""
     _set_session_confs(spark)
 
-    from . import cached_fixture
+    from . import artifact
 
     far_us = 4102444800 * 1_000_000  # 2100-01-01 as epoch µs
 
-    def _build_sentinel() -> str:
-        sentinel_dir = tempfile.mkdtemp(prefix="crane_sentinel_")
+    def _build_sentinel(sentinel_dir: str) -> None:
         spark.createDataFrame(
             [
                 (-1, far_us, -1, "error", 0.0, "{}"),
@@ -135,9 +131,8 @@ def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("ts", F.timestamp_micros("ts")).coalesce(1).write.mode(
             "overwrite"
         ).parquet(sentinel_dir)
-        return sentinel_dir
 
-    sentinel_dir = cached_fixture(_SENTINEL_DIR, "sentinel", _build_sentinel)
+    sentinel_dir = artifact("crane_sentinel", None, _build_sentinel)
     real = _stream_events(spark, sf_dir)
     sent = spark.readStream.schema(_events_schema(T.TimestampType())).parquet(
         sentinel_dir
@@ -172,7 +167,7 @@ def _scoped_stream_partitions(spark: SparkSession, parts: int | None = None):
     17.1s for all nine sf0.1 streaming queries — state commit, not CPU, is
     the floor at this state size). ``parts`` narrows the default further
     for a SPECIFIC query whose drain is state-machinery-bound (round-11
-    interleaved sweep, tools/exp_stream_parts.py: the stream-stream joins,
+    interleaved sweep, recorded in OPTIMIZATION_r11.md: the stream-stream joins,
     watermarked windows and dedups measured 0.2–1.0 s faster at 2 state
     partitions than 4, while CPU-heavy drains — banding, PQ encode,
     curate — prefer 4; per-query widths are the round-10 verdict item #3
@@ -1239,37 +1234,32 @@ def _oracle_stream_dsir_score() -> str:
     """
 
 
-_DSIR_MODELS: dict[str, list[float]] = {}  # sf_dir → trained 256-bucket LLR
-_DOC_SPANS: dict[str, int] = {}  # sf_dir → documents doc_id span (static)
-
-
 def _dsir_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The offline-trained 256-bucket DSIR LLR model for the streaming
-    consumers, fit ONCE per (process, sf) — the _KMEANS_MODELS /
-    _PQ_MODELS discipline applied to the text model: both streaming
-    DSIR queries declare the model "trained offline on the batch
-    corpus", yet each call re-derived the one-row relation inside its
-    own (re-resolved-per-micro-batch) plan, paying the corpus
-    tokenize→bigram→hash→aggregate once per drain. The trained values
-    are collected once (256 doubles — a bounded model artifact, the
-    same boundedness contract as the k-means centroid lists) and
-    re-enter every consumer as a literal one-row relation. Lossless:
-    collect → Python float → createDataFrame round-trips doubles
-    bit-exactly, so scores are identical to deriving the relation
-    inline (both stream consumers stay row-graded against the oracle's
-    from-scratch model re-derivation)."""
+    consumers, an artifact like the k-means and PQ models: both streaming
+    DSIR queries declare the model "trained offline on the batch corpus",
+    so the trained values are collected once (256 doubles — a bounded
+    model artifact, the same boundedness contract as the k-means
+    centroid lists) and re-enter every consumer as a literal one-row
+    relation instead of a corpus tokenize→bigram→hash→aggregate inside
+    each drain's plan. Lossless: collect → Python float →
+    createDataFrame round-trips doubles bit-exactly, so scores are
+    identical to deriving the relation inline (both stream consumers
+    stay row-graded against the oracle's from-scratch model
+    re-derivation)."""
     from ..operators.text import dsir_model_array
+    from . import artifact
 
-    if sf_dir not in _DSIR_MODELS:
+    def _train() -> list[float]:
+        # dsir_model_array's internal shared cache is registered for the
+        # harness's post-query release_query_caches sweep, per contract.
         row = dsir_model_array(
             t(spark, sf_dir, "documents"), "text", F.col("lang") == "en"
         ).collect()[0]
-        _DSIR_MODELS[sf_dir] = [float(x) for x in row.llr]
-        # dsir_model_array's internal shared cache is registered for the
-        # harness's post-query release_query_caches sweep, per contract.
-    return spark.createDataFrame(
-        [(list(_DSIR_MODELS[sf_dir]),)], "llr array<double>"
-    )
+        return [float(x) for x in row.llr]
+
+    llr = artifact("crane_dsir_model", sf_dir, _train, directory=False)
+    return spark.createDataFrame([(list(llr),)], "llr array<double>")
 
 
 @query("stream_dsir_score", oracle=_oracle_stream_dsir_score())
@@ -1484,19 +1474,23 @@ def stream_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     1700000000 + doc_id seconds), so no duplicate can outrun the state
     window whatever the id range of the graded SF — the bounded-state
     default horizon is for open-ended production streams only."""
+    from . import artifact
+
     docs_batch = t(spark, sf_dir, "documents")
-    model = _dsir_model(spark, sf_dir)  # offline-trained, per-process memo
-    # 3-long scalar row (bounded model-artifact collect): the id span
-    # sizes the dedup state window to cover the whole graded corpus.
-    # Memoized per (process, sf) beside the model — static input, static
-    # span; re-deriving it per call re-scanned the corpus for one long.
-    if sf_dir not in _DOC_SPANS:
-        _DOC_SPANS[sf_dir] = int(
+    model = _dsir_model(spark, sf_dir)  # offline-trained artifact
+    # one-long scalar row: the id span sizes the dedup state window to
+    # cover the whole graded corpus. An artifact beside the model — a
+    # static probe of the table, not re-scanned per call.
+    span = artifact(
+        "crane_doc_span",
+        sf_dir,
+        lambda: int(
             docs_batch.agg(
                 (F.max("doc_id") - F.min("doc_id") + 1).alias("s")
             ).first()["s"]
-        )
-    span = _DOC_SPANS[sf_dir]
+        ),
+        directory=False,
+    )
     out = build_curate_stream(
         _spread(_stream_docs(spark, sf_dir).select("doc_id", "text")),
         model,
@@ -1527,29 +1521,22 @@ def _assert_single_batch_journal(sink_dir: str, what: str) -> None:
         )
 
 
-_IVM_FEED_DIRS: dict[str, str] = {}
-
-
 def _ivm_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land the signed IVM change feed (core.ivm_signed_feed — ONE
-    definition with the batch twin) as its own parquet table, once per
-    (process, sf): the streaming refresh under test reads ONLY this feed
-    plus the materialized aggregate, never the fact table — the
-    production deployment shape the batch query's docstring could only
-    describe (its delta is synthesized in-plan for the bounded grade)."""
-    import tempfile
-
-    from . import cached_fixture
+    definition with the batch twin) as its own parquet artifact: the
+    streaming refresh under test reads ONLY this feed plus the
+    materialized aggregate, never the fact table — the production
+    deployment shape the batch query's docstring could only describe
+    (its delta is synthesized in-plan for the bounded grade)."""
+    from . import artifact
     from .core import ivm_signed_feed
 
-    def _build() -> str:
-        d = tempfile.mkdtemp(prefix="crane_ivm_feed_")
+    def _build(d: str) -> None:
         ivm_signed_feed(spark, sf_dir).repartition(4).write.mode(
             "overwrite"
         ).parquet(d)
-        return d
 
-    return cached_fixture(_IVM_FEED_DIRS, sf_dir, _build)
+    return artifact("crane_ivm_feed", sf_dir, _build)
 
 
 # The maintainer machinery (journal sink + compaction cycle) lives in
@@ -1627,9 +1614,6 @@ def stream_incremental_agg_maintenance(
     return ivm_fold_view(base, journal)
 
 
-_IVF_INDEX_DIRS: dict[str, str] = {}
-
-
 def _oracle_stream_ivf_query_topk() -> str:
     # Identical answer contract to the batch paths — literally the SAME
     # oracle object (northstar.ORACLE_IVF_COARSE_TOPK), so the
@@ -1644,9 +1628,8 @@ def stream_ivf_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONLINE VECTOR SEARCH — the serving half the ingest twins left
     open: `stream_ivf_ingest` / `stream_ivfpq_ingest` keep the inverted
     file FRESH as vectors arrive; this query answers a STREAM OF
-    QUERIES against it. The IVF index is built once and persisted
-    (`ivf_bucket_corpus` → parquet — the production artifact, cells +
-    norms precomputed); query vectors then arrive on a file stream and
+    QUERIES against it. The IVF index is the persisted 64-cell artifact
+    (`northstar._ivf64_index` — cells + norms precomputed); query vectors then arrive on a file stream and
     every micro-batch is answered inside ``foreachBatch`` by the exact
     batch search machinery (`ivf_ann_topk(bucketed=index)`: row-local
     coarse assignment of the QUERY side only — broadcast centroid
@@ -1667,20 +1650,10 @@ def stream_ivf_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import similarity as S
     from ..streaming.ann_ingest import idempotent_batch_sink
-    from . import cached_fixture, register_scratch_dir, t_cpu
-    from .northstar import _CENTROIDS64
+    from . import register_scratch_dir
+    from .northstar import _CENTROIDS64, _ivf64_index
 
-    emb = t_cpu(spark, sf_dir, "embeddings")
-
-    def _build_index() -> str:
-        d = tempfile.mkdtemp(prefix="crane_ivf_index_")
-        S.ivf_bucket_corpus(emb, _CENTROIDS64).write.mode(
-            "overwrite"
-        ).parquet(d)
-        return d
-
-    idx_dir = cached_fixture(_IVF_INDEX_DIRS, sf_dir, _build_index)
-    index = spark.read.parquet(idx_dir)
+    index = _ivf64_index(spark, sf_dir)
 
     out_dir = tempfile.mkdtemp(prefix="crane_ivfserve_")
     ckpt = tempfile.mkdtemp(prefix="crane_ivfserve_ckpt_")
@@ -1726,9 +1699,6 @@ def stream_ivf_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return served.select("query_id", "cand_id", "cos_sim", "rank")
 
 
-_IVF_RW_BASE_DIRS: dict[str, str] = {}
-
-
 @query("stream_ivf_ingest_then_serve", oracle=_oracle_stream_ivf_query_topk())
 def stream_ivf_ingest_then_serve(
     spark: SparkSession, sf_dir: str
@@ -1763,10 +1733,8 @@ def stream_ivf_ingest_then_serve(
 
     from ..operators import similarity as S
     from ..streaming.ann_ingest import idempotent_batch_sink
-    from . import register_scratch_dir, t_cpu
+    from . import artifact, register_scratch_dir, t_cpu
     from .northstar import _CENTROIDS64
-
-    from . import cached_fixture
 
     scratch = tempfile.mkdtemp(prefix="crane_ivf_rw_")
     register_scratch_dir(scratch)
@@ -1778,16 +1746,14 @@ def stream_ivf_ingest_then_serve(
     )
     held = F.col("vec_id") % 5 == 3
 
-    # offline build (everything EXCEPT the holdout cohort) — a fixture:
-    # production's base index already exists; built once per (process, sf)
-    def _build_base() -> str:
-        d = tempfile.mkdtemp(prefix="crane_ivf_rw_base_")
+    # offline build (everything EXCEPT the holdout cohort) — an artifact:
+    # production's base index already exists
+    def _build_base(d: str) -> None:
         S.ivf_bucket_corpus(emb.filter(~held), _CENTROIDS64).write.mode(
             "overwrite"
         ).parquet(d)
-        return d
 
-    base_dir = cached_fixture(_IVF_RW_BASE_DIRS, sf_dir, _build_base)
+    base_dir = artifact("crane_ivf_rw_base", sf_dir, _build_base)
 
     # phase 1 — INGEST: the holdout cohort arrives; each micro-batch
     # buckets its vectors and appends under its own __batch_id partition
@@ -2015,27 +1981,20 @@ def stream_weighted_es_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return current().select("doc_id", F.col("h").alias("es_key"))
 
 
-_CDC_FEED_DIRS: dict[str, str] = {}
-
-
 def _cdc_feed_dir(spark: SparkSession, sf_dir: str) -> str:
     """Land the CDC signed-change feed (core.cdc_signed_feed — ONE
-    definition with the batch twin) as its own parquet table, once per
-    (process, sf): the streaming maintainer under test reads ONLY this
-    landed feed plus the materialized view, never the fact table."""
-    import tempfile
-
-    from . import cached_fixture
+    definition with the batch twin) as its own parquet artifact: the
+    streaming maintainer under test reads ONLY this landed feed plus the
+    materialized view, never the fact table."""
+    from . import artifact
     from .core import cdc_signed_feed
 
-    def _build() -> str:
-        d = tempfile.mkdtemp(prefix="crane_cdc_feed_")
+    def _build(d: str) -> None:
         cdc_signed_feed(spark, sf_dir).repartition(4).write.mode(
             "overwrite"
         ).parquet(d)
-        return d
 
-    return cached_fixture(_CDC_FEED_DIRS, sf_dir, _build)
+    return artifact("crane_cdc_feed", sf_dir, _build)
 
 
 def _oracle_stream_cdc_ivm() -> str:
@@ -2153,10 +2112,9 @@ def stream_ivm_compaction_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import add_fixture_seconds
 
     feed_dir = _ivm_feed_dir(spark, sf_dir)
-    # resolve (and possibly build) the shared base fixture BEFORE the
-    # copy timer below: ivm_base_dir is a cached_fixture that credits
-    # its own build time, so building it inside the window would
-    # double-count (review finding)
+    # resolve (and possibly build) the shared base artifact BEFORE the
+    # copy timer below: ivm_base_dir credits its own build time, so
+    # building it inside the window would double-count
     shared_base = ivm_base_dir(spark, sf_dir)
     scratch = tempfile.mkdtemp(prefix="crane_ivm_cycle_")
     register_scratch_dir(scratch)

@@ -248,43 +248,3 @@ def test_driver_check_type_audit_flags_arrays_and_timestamps():
     # the real driver crashed, a scalar set must pass
     assert dc.pandas_canon_smoke([(1, [1.0, 2.0])], ["a", "v"]) is not None
     assert dc.pandas_canon_smoke([(1, "x"), (2, None)], ["a", "s"]) is None
-
-
-def test_cached_fixture_revalidates_vanished_dir(tmp_path):
-    """Round-5 advice: a tmp-reaper can delete a memoized fixture dir
-    mid-process; a stale cache entry must be detected (isdir) and the
-    fixture rebuilt, not returned as a vanished path."""
-    import shutil
-
-    from crane_stream_processing_spark.inventory import (
-        _FIXTURE_CLEANUP,
-        cached_fixture,
-    )
-
-    cache: dict = {}
-    builds = []
-
-    def build():
-        d = tmp_path / f"fx{len(builds)}"
-        d.mkdir()
-        builds.append(str(d))
-        return (str(d), "schema-token")
-
-    first = cached_fixture(cache, "k", build)
-    assert first == cached_fixture(cache, "k", build)  # memoized
-    assert len(builds) == 1
-    assert first[0] in _FIXTURE_CLEANUP  # registered for atexit reaping
-
-    shutil.rmtree(first[0])  # simulate the tmp reaper
-    second = cached_fixture(cache, "k", build)
-    assert len(builds) == 2 and second[0] == builds[1]
-    import os
-
-    assert os.path.isdir(second[0])
-
-    # str-valued caches (path-only fixtures) use the default extractor too
-    scache: dict = {}
-    sdir = tmp_path / "sfx"
-    sdir.mkdir()
-    assert cached_fixture(scache, "k", lambda: str(sdir)) == str(sdir)
-    assert cached_fixture(scache, "k", lambda: (_ for _ in ()).throw(AssertionError)) == str(sdir)

@@ -1,16 +1,9 @@
 """Round-11 optimization invariants: per-query streaming state-partition
-widths, the recursion clone's scoped confs, and per-fixture build
-attribution."""
+widths and the recursion clone's scoped confs (per-artifact build
+attribution is tested in test_artifacts.py)."""
 
 from __future__ import annotations
 
-import os
-
-from crane_stream_processing_spark.inventory import (
-    cached_fixture,
-    fixture_build_seconds,
-    fixture_seconds,
-)
 from crane_stream_processing_spark.inventory.streaming_queries import (
     _scoped_stream_partitions,
 )
@@ -58,26 +51,3 @@ def test_recursion_clone_scopes_aqe_off_for_floor_sized_input(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == host_parts
     df.write.mode("overwrite").format("noop").save()
     release_query_caches(spark)
-
-
-def test_cached_fixture_credits_named_builds(tmp_path):
-    """cached_fixture accumulates per-fixture seconds under the mkdtemp
-    prefix (random suffix stripped), and re-use costs nothing."""
-    import tempfile
-
-    cache: dict = {}
-
-    def build() -> str:
-        return tempfile.mkdtemp(prefix="crane_r11test_fixture_")
-
-    before_total = fixture_seconds()
-    d = cached_fixture(cache, "k", build)
-    assert os.path.isdir(d)
-    builds = fixture_build_seconds()
-    assert "crane_r11test_fixture" in builds
-    first = builds["crane_r11test_fixture"]
-    assert fixture_seconds() >= before_total
-    # memoized reuse: no new credit
-    d2 = cached_fixture(cache, "k", build)
-    assert d2 == d
-    assert fixture_build_seconds()["crane_r11test_fixture"] == first
