@@ -1316,7 +1316,7 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qvec"),
         l2norm("embedding").alias("qn"),
     ).filter(F.col("qn") > 0)
-    qprobed = S._with_coarse_dots(qbase, _CENTROIDS, "qvec", None).select(
+    qprobed = S.coarse_dots(qbase, _CENTROIDS, "qvec").select(
         "query_id",
         "qvec",
         "qn",
@@ -1458,19 +1458,16 @@ ORACLE_IVF_COARSE_TOPK: str = f"""
 
 @query("sim_ivf_rel_coarse_topk", oracle=ORACLE_IVF_COARSE_TOPK)
 def sim_ivf_rel_coarse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-k IVF with the RELATIONAL coarse quantizer (round-4 verdict
-    item #2): at k=64 cells the coarse stage stops inlining centroid
-    literals — operators/similarity.py auto-switches above LITERAL_K_MAX
-    to a single-row broadcast matrix relation (array<struct<cvec,off>>),
-    crossJoined in (bounded: ONE row) and folded per-row with
-    F.transform — so the physical plan is O(1) in k (measured 18 KB vs
-    294 KB for the literal form at k=64) while the dot arrays stay
-    bit-identical (same per-element fold, same cell order). This is the
-    shape a billion-vector IVF needs: centroids are DATA in a broadcast
-    variable, not plan text. Cell assignment remains a deterministic
-    row-local argmax (first-occurrence max → low-index tiebreak), so the
-    oracle re-derives cells with the same 64 inlined plane literals and
-    the grade is row-level, not a certificate."""
+    """Large-k IVF (k=64 cells) through the coarse quantizer
+    (operators/similarity.py coarse_dots): the centroids ride a
+    single-row broadcast matrix relation, crossJoined in (bounded: ONE
+    row) and folded per-row with F.transform — so the physical plan is
+    O(1) in k (measured 18 KB vs 294 KB for inlined centroid literals
+    at k=64). This is the shape a billion-vector IVF needs: centroids
+    are DATA in a broadcast variable, not plan text. Cell assignment is
+    a deterministic row-local argmax (first-occurrence max → low-index
+    tiebreak), so the oracle re-derives cells with the same 64 inlined
+    plane literals and the grade is row-level, not a certificate."""
     emb = t_cpu(spark, sf_dir, "embeddings")
     return S.ivf_ann_topk(
         emb, emb.filter(F.col("vec_id") < 10), _CENTROIDS64, k=3
@@ -1519,15 +1516,14 @@ def sim_ivf_arrow_coarse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf64_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted LARGE-K (64-cell, relational coarse quantizer)
-    inverted file — the at-rest artifact `stream_ivf_ingest` appends to
+    """The persisted LARGE-K (64-cell) inverted file — the at-rest artifact `stream_ivf_ingest` appends to
     and `stream_ivf_query_topk` serves from. An artifact like
     `_ivf_index`; the health query below audits it in place."""
     from . import artifact
 
     def _build(path: str) -> None:
         emb = t_cpu(spark, sf_dir, "embeddings")
-        S.ivf_bucket_corpus(emb, _CENTROIDS64, relational=True).write.mode(
+        S.ivf_bucket_corpus(emb, _CENTROIDS64).write.mode(
             "overwrite"
         ).parquet(path)
 
@@ -1839,7 +1835,7 @@ def sim_ivf_retrain_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy — it is a parquet fixture read, cheap per branch. Values are
     # preserved exactly; the persisted RDD is swept by
     # release_query_caches after grading.
-    after = S.ivf_bucket_corpus(emb, trained, relational=True).localCheckpoint()
+    after = S.ivf_bucket_corpus(emb, trained).localCheckpoint()
     q = emb.filter(F.col("vec_id") < 10)
     exact = S.cosine_topk(emb, q, k=3).select("query_id", "cand_id")
     annb = S.ivf_ann_topk(

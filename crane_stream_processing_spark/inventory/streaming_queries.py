@@ -981,7 +981,7 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING incremental ANN-index ingest (round-5 verdict item #2 —
     the production index-maintenance path): embeddings arrive on a file
     stream and each micro-batch routes every new vector to its TRAINED
-    k=64 IVF cell via the relational coarse quantizer
+    k=64 IVF cell via the coarse quantizer
     (operators/similarity.py ivf_assign — the 1-row broadcast
     centroid_matrix relation cross-joined in as a stream-static join,
     then a row-local F.transform dot fold + argmax). Because the stage
@@ -1095,12 +1095,10 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         )
     )
-    cmat = F.broadcast(S.centroid_matrix(spark, _CENTROIDS64))
     pqmat = F.broadcast(S.pq_codebook_matrix(spark, _pq_stream_books()))
     staged = (
-        emb.crossJoin(cmat)
+        S.coarse_dots(emb, _CENTROIDS64, "embedding")
         .crossJoin(pqmat)
-        .withColumn("__dots", S.matrix_dots(F.col("embedding"), F.col("__cmat")))
         .withColumn(
             "__codes",
             S.pq_codes_from_matrix(

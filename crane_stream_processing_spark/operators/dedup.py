@@ -500,18 +500,18 @@ def semantic_prune(
     over corpora should do the same or unpersist via
     ``spark.sparkContext._jsc.getPersistentRDDs()`` sweep."""
     from ..functions import dot, l2norm
-    from .similarity import centroid_dots, probe_cells
+    from .similarity import coarse_dots, probe_cells
 
-    cells = probe_cells(centroid_dots(F.col(vec_col), centroids), nprobe)
     # Both self-join legs read the soft-assigned relation — uncheckpointed
     # the corpus-wide k-dot assignment pass executes once per leg
     # (round-10, guide §1.2; the substring_window_pairs discipline).
     # Swept by release_query_caches.
     e = (
-        emb.select(
+        coarse_dots(emb, centroids, vec_col)
+        .select(
             F.col(id_col),
             F.col(vec_col),
-            F.explode(cells).alias("cell"),
+            F.explode(probe_cells(F.col("__dots"), nprobe)).alias("cell"),
             l2norm(vec_col).alias("nrm"),
         )
         .filter(F.col("nrm") > 0)

@@ -29,9 +29,8 @@ __all__ = [
     "lsh_ann_topk_multiprobe",
     "binary_code_words",
     "binary_quant_topk",
-    "centroid_dots",
     "centroid_matrix",
-    "matrix_dots",
+    "coarse_dots",
     "ivf_centroid",
     "ivf_assign",
     "ivf_assign_arrow",
@@ -124,9 +123,18 @@ def _cosine_topk_within(
     joined = q.crossJoin(c) if on is None else q.join(c, on)
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("cand_id"))
+    return _rank_by_cosine(joined, k)
+
+
+def _rank_by_cosine(joined: DataFrame, k: int, *carry: str) -> DataFrame:
+    """Exact cosine of each (query, candidate) row of ``joined`` from its
+    (qvec, qn, cvec, cn) columns, rounded to 6 decimals, and the per-query
+    top-k by score with a cand_id tiebreak. Output: (query_id, cand_id,
+    *carry, cos_sim, rank)."""
     scored = joined.select(
         "query_id",
         "cand_id",
+        *carry,
         F.round(dot("qvec", "cvec") / (F.col("qn") * F.col("cn")), 6).alias(
             "cos_sim"
         ),
@@ -137,6 +145,36 @@ def _cosine_topk_within(
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
+
+
+def _exact_rerank(
+    short: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    *carry: str,
+) -> DataFrame:
+    """Second stage of every shortlist variant: join the (query_id,
+    cand_id, *carry) shortlist back to the normed corpus vectors (an id
+    equi-join: |Q|·shortlist rows against the corpus) and query vectors
+    (the small broadcast), then :func:`_rank_by_cosine`. Zero vectors
+    are dropped on both sides, as in :func:`cosine_topk`."""
+    c_full = corpus.select(
+        F.col(id_col).alias("cand_id"),
+        F.col(vec_col).alias("cvec"),
+        l2norm(vec_col).alias("cn"),
+    ).filter(F.col("cn") > 0)
+    q_full = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("qvec"),
+            l2norm(vec_col).alias("qn"),
+        ).filter(F.col("qn") > 0)
+    )
+    joined = short.join(c_full, "cand_id").join(q_full, "query_id")
+    return _rank_by_cosine(joined, k, *carry)
 
 
 def cosine_topk(
@@ -304,22 +342,13 @@ def matryoshka_topk(
     visible per hit.
 
     Zero-prefix vectors are dropped on both sides (a nonzero prefix norm
-    implies a nonzero full norm, so one prefix-norm filter covers both
-    stages); the graded oracle applies the identical guard.
+    implies a nonzero full norm, so the re-rank's full-norm filter drops
+    nothing more); the graded oracle applies the identical guard.
 
     The coarse pass carries ONLY (query_id, cand_id, pre_sim) into the
     per-query top-k shuffle — full vectors would make the stage-1
-    exchange move the exact payload the prefix trick exists to avoid.
-    Shortlist survivors then join their vectors back: candidates by an
-    equi join against the corpus (|Q|·shortlist rows vs corpus — hash
-    join on id), query vectors by the same tiny broadcast."""
-    q_full = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            l2norm(vec_col).alias("qn"),
-        )
-    )
+    exchange move the exact payload the prefix trick exists to avoid;
+    :func:`_exact_rerank` joins the survivors' vectors back."""
     q_pre = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -348,29 +377,7 @@ def matryoshka_topk(
     short = coarse.withColumn("prank", F.row_number().over(w1)).filter(
         F.col("prank") <= shortlist
     )
-    c_full = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        l2norm(vec_col).alias("cn"),
-    )
-    rescored = (
-        short.join(c_full, "cand_id")
-        .join(q_full, "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            "pre_sim",
-            F.round(
-                dot("qvec", "cvec") / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return rescored.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
+    return _exact_rerank(short, corpus, queries, id_col, vec_col, k, "pre_sim")
 
 
 def lsh_ann_topk(
@@ -521,87 +528,42 @@ def binary_quant_topk(
         .withColumn("hrank", F.row_number().over(hw))
         .filter(F.col("hrank") <= shortlist)
     )
-    cos = F.round(dot("qvec", "cvec") / (F.col("qn") * F.col("cn")), 6)
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        short.select("query_id", "cand_id", "hamming", cos.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(rw))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def centroid_dots(vec: Column, centroids: list[list[float]]) -> Column:
-    """Per-centroid dot products as an array column. Materialize this into
-    its own column before argmax-ing — `ivf_centroid` references it twice
-    (array_position + array_max), and an inlined expression would compute
-    all |centroids| dots twice per row.
-
-    LITERAL form: the centroids are inlined into the plan, so expression
-    size grows O(k·dim). Right for small k (the graded k=8/16 demos);
-    above :data:`LITERAL_K_MAX` the IVF entry points switch to the
-    relational :func:`centroid_matrix` + :func:`matrix_dots` shape, where
-    the matrix rides a broadcast RELATION and the plan stays O(1) in k
-    (round-4 verdict item: a large-k IVF wants the PQ-style
-    codebook-relation join for the coarse stage too)."""
-    return F.array(
-        *[dot(vec, F.array(*[F.lit(v) for v in row])) for row in centroids]
-    )
-
-
-# Above this centroid count the IVF coarse stage stops inlining centroid
-# literals into the plan and joins a 1-row broadcast matrix relation
-# instead — plan size O(1) in k, centroids move as data (a k·dim·8-byte
-# broadcast: ~2 MB even at k=4096, dim=64).
-LITERAL_K_MAX = 16
+    return _rank_by_cosine(short, k, "hamming")
 
 
 def centroid_matrix(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
     """The centroid matrix as DATA: a single-row relation whose one column
-    ``__cmat`` is ``array<struct<cvec: array<double>, off: double>>`` in
-    cell order (``off`` = ||c||²/2, the argmin-L2 stager k-means uses).
-    Broadcast-crossJoined into the vector side (bounded: ONE row), it
-    carries the full matrix without any O(k·dim) literal expressions; cell
-    id stays the array index, so :func:`ivf_centroid` / :func:`probe_cells`
-    consume :func:`matrix_dots` output unchanged."""
-    row = [
-        (
-            [float(x) for x in c],
-            sum(float(x) * float(x) for x in c) / 2.0,
-        )
-        for c in centroids
-    ]
+    ``__cmat`` is ``array<array<double>>``, one centroid per element in
+    cell order. Broadcast-crossJoined into the vector side (bounded: ONE
+    row; k·dim·8 bytes, ~2 MB even at k=4096, dim=64), it carries the
+    full matrix without any O(k·dim) literal expressions, so the plan
+    stays O(1) in k. Built from pandas so that, with Arrow enabled, it is
+    a JVM-side LocalRelation: a relation parallelized from Python rows
+    needs a Python-worker job to build the broadcast (~0.3 s per query on
+    a 4-core VM, independent of data size)."""
+    import pandas as pd
+
+    rows = [[float(x) for x in c] for c in centroids]
     return spark.createDataFrame(
-        [(row,)], "__cmat array<struct<cvec: array<double>, off: double>>"
+        pd.DataFrame({"__cmat": [rows]}), "__cmat array<array<double>>"
     )
 
 
-def matrix_dots(vec: Column, matrix: Column) -> Column:
-    """Per-centroid dot array from a matrix COLUMN — float-identical to
-    :func:`centroid_dots` (same per-element fold, same cell order), but
-    the centroids arrive as broadcast data instead of plan literals."""
-    return F.transform(matrix, lambda c: dot(vec, c["cvec"]))
-
-
-def _with_coarse_dots(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    relational: bool | None,
+def coarse_dots(
+    df: DataFrame, centroids: list[list[float]], vec_col: str
 ) -> DataFrame:
-    """Attach the ``__dots`` per-centroid dot array to ``df``: literal
-    expressions for small k, the 1-row broadcast matrix relation above
-    :data:`LITERAL_K_MAX` (or as forced by ``relational``). Both paths
-    produce bit-identical arrays."""
-    if relational is None:
-        relational = len(centroids) > LITERAL_K_MAX
-    if not relational:
-        return df.withColumn("__dots", centroid_dots(F.col(vec_col), centroids))
+    """The coarse quantizer: ``df`` plus ``__dots``, the array of
+    dot(``vec_col``, centroid) in cell order — the one source of
+    per-centroid dots for every IVF entry point, both k-means trainers
+    and semantic dedup. The centroids arrive through the broadcast
+    :func:`centroid_matrix` relation; cell id is the array index, so
+    :func:`ivf_centroid` / :func:`probe_cells` consume ``__dots``
+    directly. Row-local, so a streaming ``df`` gets a stream-static
+    broadcast join."""
     mat = F.broadcast(centroid_matrix(df.sparkSession, centroids))
     return (
         df.crossJoin(mat)
-        .withColumn("__dots", matrix_dots(F.col(vec_col), F.col("__cmat")))
+        .withColumn("__dots", F.transform("__cmat", lambda c: dot(vec_col, c)))
         .drop("__cmat")
     )
 
@@ -632,10 +594,10 @@ def probe_cells(dots: Column, nprobe: int) -> Column:
 
 def ivf_centroid(dots: Column) -> Column:
     """IVF coarse quantizer: cell id = argmax of the centroid-dot array
-    (max dot ≈ min L2 for unit-ish vectors, and cheaper). Centroids are
-    fixed literals so assignment is a pure row-local expression both
-    engines compute identically; array_position takes the FIRST occurrence
-    of the max → deterministic low-index tiebreak; 0-based cell id."""
+    (max dot ≈ min L2 for unit-ish vectors, and cheaper). Assignment is
+    a pure row-local expression both engines compute identically;
+    array_position takes the FIRST occurrence of the max → deterministic
+    low-index tiebreak; 0-based cell id."""
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
@@ -644,21 +606,18 @@ def ivf_assign(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    relational: bool | None = None,
 ) -> DataFrame:
     """Coarse-quantize each vector to its trained IVF cell — (id, cell)
     only, the incremental index-INGEST stage: new vectors arriving after
     the index was trained are routed to their inverted lists without
-    touching history. Entirely row-local (broadcast-matrix dot fold +
-    argmax; above :data:`LITERAL_K_MAX` the centroids ride the 1-row
-    broadcast relation of :func:`centroid_matrix` — a stream-static
-    broadcast cross join, bounded: ONE row), so the stage composes
-    unchanged with Structured Streaming micro-batches: the streaming twin
-    ``stream_ivf_ingest`` runs this exact function on a file stream and
-    is graded batch-equivalently. Cells are bit-identical to
+    touching history. Entirely row-local (:func:`coarse_dots` + argmax —
+    a stream-static broadcast cross join, bounded: ONE row), so the stage
+    composes unchanged with Structured Streaming micro-batches: the
+    streaming twin ``stream_ivf_ingest`` runs this exact function on a
+    file stream and is graded batch-equivalently. Cells are bit-identical to
     :func:`ivf_bucket_corpus` (same fold, same argmax tiebreak)."""
     base = df.select(F.col(id_col), F.col(vec_col))
-    return _with_coarse_dots(base, centroids, vec_col, relational).select(
+    return coarse_dots(base, centroids, vec_col).select(
         id_col, ivf_centroid(F.col("__dots")).alias("cell")
     )
 
@@ -780,23 +739,19 @@ def ivf_bucket_corpus(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    relational: bool | None = None,
 ) -> DataFrame:
     """The IVF index build: assign every corpus vector to its nearest
     centroid cell and precompute its norm — columns (cand_id, cvec, cn,
     cell). In a production system this runs ONCE per corpus+centroid set
     and persists (the inverted file); searches then only bucket the query
     side. Persisting and re-reading it is lossless (float/double/int
-    columns), so cached indexes answer identically to inline bucketing.
-    Above :data:`LITERAL_K_MAX` centroids (or with ``relational=True``)
-    the coarse dots come from the broadcast matrix relation instead of
-    plan literals — identical floats, O(1) plan size in k."""
+    columns), so cached indexes answer identically to inline bucketing."""
     base = corpus.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cvec"),
         l2norm(vec_col).alias("cn"),
     ).filter(F.col("cn") > 0)
-    return _with_coarse_dots(base, centroids, "cvec", relational).select(
+    return coarse_dots(base, centroids, "cvec").select(
         "cand_id", "cvec", "cn", ivf_centroid(F.col("__dots")).alias("cell")
     )
 
@@ -810,7 +765,6 @@ def ivf_ann_topk(
     k: int = 3,
     bucketed: DataFrame | None = None,
     exclude_self: bool = True,
-    relational: bool | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: both sides assigned to their nearest
     centroid cell; search probes only the query's cell (nprobe=1), exact
@@ -818,19 +772,17 @@ def ivf_ann_topk(
     candidates shrink by ~|centroids|; recall/cost is tuned by the
     centroid count and (in a fuller build) nprobe > 1. Pass ``bucketed``
     (a prebuilt :func:`ivf_bucket_corpus` result) to search an existing
-    index instead of bucketing the corpus inline. Above
-    :data:`LITERAL_K_MAX` centroids the coarse stage goes relational
-    (broadcast matrix join) — same cells, O(1) plan size in k."""
+    index instead of bucketing the corpus inline."""
     qbase = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         l2norm(vec_col).alias("qn"),
     ).filter(F.col("qn") > 0)
-    q = _with_coarse_dots(qbase, centroids, "qvec", relational).select(
+    q = coarse_dots(qbase, centroids, "qvec").select(
         "query_id", "qvec", "qn", ivf_centroid(F.col("__dots")).alias("cell")
     )
     c = bucketed if bucketed is not None else ivf_bucket_corpus(
-        corpus, centroids, id_col, vec_col, relational
+        corpus, centroids, id_col, vec_col
     )
     return _cosine_topk_within(q, c, k, on="cell", exclude_self=exclude_self)
 
@@ -845,7 +797,6 @@ def ivf_ann_topk_nprobe(
     nprobe: int = 2,
     bucketed: DataFrame | None = None,
     exclude_self: bool = True,
-    relational: bool | None = None,
 ) -> DataFrame:
     """IVF ANN with multi-probe: each query searches its ``nprobe`` nearest
     cells (descending centroid dot), recovering most of the recall nprobe=1
@@ -864,16 +815,29 @@ def ivf_ann_topk_nprobe(
         F.col(vec_col).alias("qvec"),
         l2norm(vec_col).alias("qn"),
     ).filter(F.col("qn") > 0)
-    q = _with_coarse_dots(qbase, centroids, "qvec", relational).select(
+    q = coarse_dots(qbase, centroids, "qvec").select(
         "query_id",
         "qvec",
         "qn",
         F.explode(probe_cells(F.col("__dots"), nprobe)).alias("cell"),
     )
     c = bucketed if bucketed is not None else ivf_bucket_corpus(
-        corpus, centroids, id_col, vec_col, relational
+        corpus, centroids, id_col, vec_col
     )
     return _cosine_topk_within(q, c, k, on="cell", exclude_self=exclude_self)
+
+
+def _nearest_cell(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """(v, cell): the assignment step of both Lloyd's trainers — argmin
+    ||v − c||² as argmax(dot(v, c) − ||c||²/2) over the :func:`coarse_dots`
+    array, first-occurrence (lowest-cell) tiebreak via :func:`ivf_centroid`."""
+    offs = [sum(float(x) * float(x) for x in c) / 2.0 for c in centroids]
+    l2scores = F.zip_with(
+        F.col("__dots"), F.array(*[F.lit(o) for o in offs]), lambda d, o: d - o
+    )
+    return coarse_dots(vecs, centroids, "v").select(
+        "v", ivf_centroid(l2scores).alias("cell")
+    )
 
 
 def kmeans_fit(
@@ -945,35 +909,7 @@ def kmeans_fit(
         if arrow:
             return _kmeans_iterate_arrow(vecs, centroids, iters)
         for _ in range(iters):
-            # argmax over dot(v, c_i) - ||c_i||^2 / 2  ==  argmin ||v - c_i||^2
-            if k > LITERAL_K_MAX:
-                # Large k: centroids ride a 1-row broadcast matrix relation
-                # (centroid_matrix computes the same ||c||²/2 offsets
-                # driver-side) — plan size stays O(1) per iteration.
-                mat = F.broadcast(centroid_matrix(vecs.sparkSession, centroids))
-                scored = vecs.crossJoin(mat).select(
-                    "v",
-                    F.transform(
-                        F.col("__cmat"),
-                        lambda c: dot(F.col("v"), c["cvec"]) - c["off"],
-                    ).alias("__s"),
-                )
-            else:
-                offs = [sum(x * x for x in c) / 2.0 for c in centroids]
-                scores = F.array(
-                    *[
-                        dot(F.col("v"), F.array(*[F.lit(x) for x in c])) - F.lit(o)
-                        for c, o in zip(centroids, offs)
-                    ]
-                )
-                scored = vecs.select("v", scores.alias("__s"))
-            assigned = scored.select(
-                "v",
-                (F.array_position(F.col("__s"), F.array_max("__s")) - 1)
-                .cast("int")
-                .alias("cell"),
-            )
-            sums = assigned.groupBy("cell").agg(
+            sums = _nearest_cell(vecs, centroids).groupBy("cell").agg(
                 F.count(F.lit(1)).alias("n"),
                 *[
                     F.sum(F.element_at("v", d + 1)).alias(f"s{d}")
@@ -1027,8 +963,8 @@ def kmeans_fit_exact(
        decimal→double conversion, one IEEE division, one exact
        exponent shift — identical in any engine.
 
-    Scale shape matches :func:`kmeans_fit`: assignment is the broadcast
-    centroid-matrix relation above LITERAL_K_MAX (O(1) plan in k), the
+    Scale shape matches :func:`kmeans_fit`: assignment is the shared
+    broadcast centroid-matrix step (:func:`_nearest_cell`), the
     decimal sums collapse map-side to ≤k rows × dim per partition, and
     only the k×dim model reaches the driver. The decimal-sum integer
     headroom is 38 digits ≈ 2¹²⁶ — at 2⁴⁸ per component that is ~2⁷⁸
@@ -1053,20 +989,6 @@ def kmeans_fit_exact(
     vecs = df.select(F.col(vec_col).alias("v")).persist()
     try:
         for _ in range(iters):
-            scored = _with_coarse_dots(vecs, centroids, "v", None)
-            offs = [
-                sum(float(x) * float(x) for x in c) / 2.0 for c in centroids
-            ]
-            # argmax(dot - off) = argmin L2: subtract offs element-wise,
-            # then the shared first-occurrence argmax (ivf_centroid)
-            l2scores = F.zip_with(
-                F.col("__dots"),
-                F.array(*[F.lit(o) for o in offs]),
-                lambda d, o: d - o,
-            )
-            assigned = scored.select(
-                "v", ivf_centroid(l2scores).alias("cell")
-            )
             comp = [
                 F.element_at("v", d + 1).cast("double") * F.lit(scale)
                 for d in range(dim)
@@ -1090,6 +1012,7 @@ def kmeans_fit_exact(
                 lambda a, b: a + b,
             )
             aggs.append(F.sum(nonint).alias("__nonint"))
+            assigned = _nearest_cell(vecs, centroids)
             sums = assigned.groupBy("cell").agg(*aggs).collect()
             if sum(r["__nonint"] for r in sums):
                 raise ValueError(
@@ -1627,7 +1550,6 @@ def pq_adc_topk(
     Output: (query_id, cand_id, cos_sim, rank) for the exact re-ranked
     top-k; grade recall against brute force — ADC is an approximation,
     so its contract is a recall certificate, not row equality."""
-    m = len(codebooks)
     # ``codes`` lets the caller hand in the persisted encoded corpus (the
     # on-disk PQ index) instead of re-encoding per search — the offline
     # index-build amortization every PQ deployment relies on. Lossless
@@ -1635,14 +1557,27 @@ def pq_adc_topk(
     if codes is None:
         codes = pq_encode(corpus, codebooks, id_col, vec_col)
     codes = codes.withColumnRenamed("vid", "cand_id")
-    # LUT = |Q| queries x (m·ksub)-row codebook relation: a crossJoin of
-    # two broadcast-tiny sides (10 x 256 here). The earlier form inlined
-    # the whole codebook as m·ksub·dsub literals into one explode
-    # expression — semantically identical, but analysis + codegen of the
-    # 2k-literal projection cost ~2 s per run at any SF; the relational
-    # build is constant-time in plan size (measured 4.5 s -> 2.4 s).
+    lut = _adc_lut(queries, codebooks, id_col, vec_col)
+    short = _adc_shortlist(
+        codes.join(lut, ["sub_id", "code"]), shortlist, exclude_self
+    )
+    return _exact_rerank(short, corpus, queries, id_col, vec_col, k)
+
+
+def _adc_lut(
+    queries: DataFrame,
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ADC lookup table, broadcast: (query_id, sub_id, code, lutv)
+    with lutv = dot(query subvector, centroid) — |Q| queries crossJoined
+    with the (m·ksub)-row codebook relation, two broadcast-tiny sides.
+    Inlining the codebook as m·ksub·dsub literals instead is
+    semantically identical, but analysis + codegen of the 2k-literal
+    projection cost ~2 s per run at any SF (measured 4.5 s -> 2.4 s)."""
     dsub = len(codebooks[0][0])
-    lut = F.broadcast(
+    return F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
         )
@@ -1656,47 +1591,25 @@ def pq_adc_topk(
             ).alias("lutv"),
         )
     )
-    adc = (
-        codes.join(lut, ["sub_id", "code"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.round(F.sum("lutv"), 6).alias("adc"))
+
+
+def _adc_shortlist(
+    scored: DataFrame, shortlist: int, exclude_self: bool
+) -> DataFrame:
+    """Per-query top-``shortlist`` candidates by ADC score: the SUM of
+    each (query_id, cand_id)'s ``lutv`` rows, rounded to 6 so membership
+    is stable across retries/engines up to genuine 1e-6 ties (which the
+    cand_id tiebreak then pins)."""
+    adc = scored.groupBy("query_id", "cand_id").agg(
+        F.round(F.sum("lutv"), 6).alias("adc")
     )
     if exclude_self:
         adc = adc.filter(F.col("query_id") != F.col("cand_id"))
-    w1 = Window.partitionBy("query_id").orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("adc").desc(), F.col("cand_id")
     )
-    short = adc.withColumn("arank", F.row_number().over(w1)).filter(
+    return adc.withColumn("arank", F.row_number().over(w)).filter(
         F.col("arank") <= shortlist
-    )
-    c_full = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        l2norm(vec_col).alias("cn"),
-    ).filter(F.col("cn") > 0)
-    q_full = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            l2norm(vec_col).alias("qn"),
-        ).filter(F.col("qn") > 0)
-    )
-    rescored = (
-        short.join(c_full, "cand_id")
-        .join(q_full, "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot("qvec", "cvec") / (F.col("qn") * F.col("cn")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return rescored.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
     )
 
 
@@ -1733,7 +1646,6 @@ def ivfpq_topk(
     Recall compounds both approximations (cell pruning AND code
     compression), so it sits below either alone — grade it with a
     certificate, never row equality."""
-    dsub = len(codebooks[0][0])
     # Both index halves accept the persisted on-disk form (see
     # pq_adc_topk): cells = (cand_id, cell), codes = pq_encode output.
     if cells is None:
@@ -1743,73 +1655,21 @@ def ivfpq_topk(
     if codes is None:
         codes = pq_encode(corpus, codebooks, id_col, vec_col)
     codes = codes.withColumnRenamed("vid", "cand_id")
+    qbase = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
     probes = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            centroid_dots(F.col(vec_col), centroids).alias("__dots"),
-        ).select(
+        coarse_dots(qbase, centroids, vec_col).select(
             "query_id",
             F.explode(probe_cells(F.col("__dots"), nprobe)).alias("cell"),
         )
     )
-    lut = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        )
-        .crossJoin(_codebook_df(queries, codebooks))
-        .select(
-            "query_id",
-            "sub_id",
-            "code",
-            dot(
-                F.slice("qvec", F.col("sub_id") * dsub + 1, dsub), F.col("cvec")
-            ).alias("lutv"),
-        )
-    )
-    adc = (
+    lut = _adc_lut(queries, codebooks, id_col, vec_col)
+    scored = (
         codes.join(cells, "cand_id")
         .join(probes, "cell")
         .join(lut, ["query_id", "sub_id", "code"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.round(F.sum("lutv"), 6).alias("adc"))
     )
-    if exclude_self:
-        adc = adc.filter(F.col("query_id") != F.col("cand_id"))
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("cand_id")
-    )
-    short = adc.withColumn("arank", F.row_number().over(w1)).filter(
-        F.col("arank") <= shortlist
-    )
-    c_full = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        l2norm(vec_col).alias("cn"),
-    ).filter(F.col("cn") > 0)
-    q_full = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            l2norm(vec_col).alias("qn"),
-        ).filter(F.col("qn") > 0)
-    )
-    rescored = (
-        short.join(c_full, "cand_id")
-        .join(q_full, "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot("qvec", "cvec") / (F.col("qn") * F.col("cn")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return rescored.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
+    short = _adc_shortlist(scored, shortlist, exclude_self)
+    return _exact_rerank(short, corpus, queries, id_col, vec_col, k)
 
 
 def quantize_floor(

@@ -10,12 +10,10 @@ from pyspark.sql import functions as F
 from crane_stream_processing_spark.catalog import load_table
 from crane_stream_processing_spark.functions import dot
 from crane_stream_processing_spark.operators.similarity import (
-    LITERAL_K_MAX,
-    centroid_dots,
     hyperplanes,
     ivf_ann_topk,
-    ivf_ann_topk_nprobe,
-    ivf_centroid,
+    ivf_assign,
+    ivfpq_topk,
     kmeans_fit,
 )
 
@@ -52,14 +50,21 @@ def test_kmeans_reduces_inertia(spark, emb):
     assert len(c4) == 4 and len(c4[0]) == 64
 
 
-def test_kmeans_cells_partition_corpus(spark, emb):
-    cents = kmeans_fit(emb, k=4, iters=2)
-    cells = emb.select(
-        centroid_dots(F.col("embedding"), cents).alias("__d")
-    ).select(ivf_centroid(F.col("__d")).alias("cell"))
-    counts = {r.cell: r.n for r in cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()}
+@pytest.mark.parametrize("k", [4, 32])
+def test_kmeans_cells_partition_corpus(spark, emb, k):
+    """The trained model is a valid k×dim matrix and its cells partition
+    the corpus, at small k and at k=32."""
+    cents = kmeans_fit(emb, k=k, iters=1)
+    assert len(cents) == k and len(cents[0]) == 64
+    counts = {
+        r.cell: r.n
+        for r in ivf_assign(emb, cents)
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
     assert sum(counts.values()) == emb.count()
-    assert set(counts) <= set(range(4))
+    assert set(counts) <= set(range(k))
 
 
 def test_trained_ivf_search_runs(spark, emb):
@@ -70,50 +75,41 @@ def test_trained_ivf_search_runs(spark, emb):
     assert len({r.query_id for r in rows}) <= 5
 
 
-def test_relational_coarse_matches_literal(spark, emb):
-    """The broadcast-matrix coarse quantizer must produce BIT-identical
-    results to the literal form at any k, for both nprobe=1 and
-    multi-probe (round-4 verdict item #2: large-k IVF wants the
-    codebook-relation shape)."""
-    cents = hyperplanes(64, 64, seed="crane-ivf64")
-    q = emb.filter(F.col("vec_id") < 10)
-    for fn, kw in ((ivf_ann_topk, {}), (ivf_ann_topk_nprobe, {"nprobe": 3})):
-        lit = sorted(map(tuple, fn(emb, q, cents, k=3, relational=False, **kw).collect()))
-        rel = sorted(map(tuple, fn(emb, q, cents, k=3, relational=True, **kw).collect()))
-        assert lit == rel and lit
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _leaked_centroids(cents, plan: str) -> list[int]:
+    """Centroids whose first component appears as plan text. Checks every
+    centroid: a plan string truncates a long ``array(...)`` argument list
+    at spark.sql.debug.maxToStringFields (25), so a literal leak shows
+    only the leading centroids."""
+    return [i for i, c in enumerate(cents) if str(c[0]) in plan]
 
 
 def test_relational_coarse_plan_shape(spark, emb):
-    """Above LITERAL_K_MAX the auto path must (a) carry the centroid
-    matrix as broadcast DATA — no centroid component may appear as a plan
-    literal — and (b) keep the plan O(1) in k."""
+    """The coarse quantizer must (a) carry the centroid matrix as
+    broadcast DATA — no centroid component may appear as a plan literal —
+    and (b) keep the plan O(1) in k: the k=64 plan is no larger than the
+    k=8 plan, give or take expression-id digits."""
     cents = hyperplanes(64, 64, seed="crane-ivf64")
-    assert len(cents) > LITERAL_K_MAX
     q = emb.filter(F.col("vec_id") < 10)
-    auto = ivf_ann_topk(emb, q, cents, k=3)  # relational=None → auto
-    plan = auto._jdf.queryExecution().executedPlan().toString()
+    plan = _executed_plan(ivf_ann_topk(emb, q, cents, k=3))
     assert "BroadcastNestedLoopJoin" in plan
-    assert str(cents[40][0]) not in plan, "centroid literal leaked into plan"
-    lit_plan = ivf_ann_topk(
-        emb, q, cents, k=3, relational=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert len(plan) < len(lit_plan) / 5
+    assert not _leaked_centroids(cents, plan), "centroid literal leaked into plan"
+    plan8 = _executed_plan(ivf_ann_topk(emb, q, cents[:8], k=3))
+    assert len(plan) < 1.1 * len(plan8)
 
 
-def test_kmeans_large_k_uses_relational_scoring(spark, emb):
-    """k > LITERAL_K_MAX trains through the matrix relation; the model is
-    still a valid k×dim matrix and cells still partition the corpus."""
-    cents = kmeans_fit(emb, k=32, iters=1)
-    assert len(cents) == 32 and len(cents[0]) == 64
-    cells = emb.select(
-        centroid_dots(F.col("embedding"), cents).alias("__d")
-    ).select(ivf_centroid(F.col("__d")).alias("cell"))
-    counts = {
-        r.cell: r.n
-        for r in cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert sum(counts.values()) == emb.count()
-    assert set(counts) <= set(range(32))
+def test_ivfpq_query_probes_carry_no_centroid_literals(spark, emb):
+    """ivfpq_topk's query-side probes go through the same coarse
+    quantizer as every other IVF entry point: at k=64 no centroid
+    component may appear as a plan literal."""
+    cents = hyperplanes(64, 64, seed="crane-ivf64")
+    books = [hyperplanes(16, 8, seed=f"crane-pq-sub{j}") for j in range(8)]
+    q = emb.filter(F.col("vec_id") < 10)
+    plan = _executed_plan(ivfpq_topk(emb, q, cents, books, k=3))
+    assert not _leaked_centroids(cents, plan), "centroid literal leaked into plan"
 
 
 def test_arrow_coarse_assign_matches_relational(spark, emb):

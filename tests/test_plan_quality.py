@@ -180,16 +180,6 @@ _NLJ_ALLOWED = {
     # searches are cell equi-joins
     "curate_dsir_shift",  # same 1-row DSIR-model scalar broadcast as
     # curate_dsir_importance/resample, feeding the histogram groupBys
-    "sim_ivf_rel_coarse_topk",  # relational coarse quantizer: the 1-row
-    # centroid-matrix broadcast crossJoin (bounded: ONE row) on each side
-    "sim_ivf_trained_topk",  # same 1-row centroid-matrix crossJoin —
-    # trained centroids are DATA above LITERAL_K_MAX; the search itself
-    # is the cell equi-join
-    "sim_ivf_trained_nprobe_topk",  # same bounded matrix crossJoin; the
-    # nprobe fan-out is a row-local explode, candidates via cell equi-join
-    "sim_ivf_arrow_coarse_topk",  # same 1-row centroid-matrix crossJoin,
-    # but only on the 10-query side (the corpus side assigns via the
-    # Arrow exact-fold mapInPandas — no join at all)
     "sim_pq_adc_topk",  # same certificate pattern: the PQ path itself is
     # all equi-joins; only the exact baseline crossJoins the 10 queries
     "sim_ivfpq_topk",  # composed IVF x PQ: same bounded LUT-build and
@@ -210,11 +200,38 @@ _NLJ_ALLOWED = {
 }
 
 
+def _builds_on_centroid_matrix(lines: list[str], i: int) -> bool:
+    """Whether the BroadcastNestedLoopJoin at ``lines[i]`` of a tree
+    string is the coarse quantizer's join: one child is a
+    ``BroadcastExchange IdentityBroadcastMode`` directly over
+    ``LocalTableScan [__cmat#…]``, the one-row centroid_matrix relation
+    (bounded: every vector meets exactly one row)."""
+
+    def col(line: str) -> int:  # where the node text starts
+        return len(line) - len(line.lstrip(" :+-"))
+
+    c = col(lines[i])
+    for j in range(i + 1, len(lines) - 1):
+        cj = col(lines[j])
+        if cj <= c:
+            break
+        if (
+            cj == c + 3
+            and lines[j][cj:].startswith("BroadcastExchange IdentityBroadcastMode")
+            and col(lines[j + 1]) == cj + 3
+            and lines[j + 1][cj + 3:].startswith("LocalTableScan [__cmat#")
+        ):
+            return True
+    return False
+
+
 def test_registry_wide_no_accidental_quadratic_joins(spark, sf_dir):
     """Sweep every batch query's physical plan: a CartesianProduct anywhere,
     or a BroadcastNestedLoopJoin outside the explicit allowlist, is a
     100 TB-killer introduced by accident (lost broadcast hint, non-equi
-    condition slipping into a big join)."""
+    condition slipping into a big join). The coarse quantizer's join onto
+    the one-row centroid matrix is bounded by shape, so it is recognised
+    structurally rather than allowlisted by query name."""
     offenders = {}
     for name in sorted(REGISTRY):
         if name.startswith("stream_"):
@@ -223,9 +240,16 @@ def test_registry_wide_no_accidental_quadratic_joins(spark, sf_dir):
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
         )
+        lines = plan.splitlines()
+        nlj = [
+            i
+            for i, line in enumerate(lines)
+            if "BroadcastNestedLoopJoin" in line
+            and not _builds_on_centroid_matrix(lines, i)
+        ]
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
-        elif "BroadcastNestedLoopJoin" in plan and name not in _NLJ_ALLOWED:
+        elif nlj and name not in _NLJ_ALLOWED:
             offenders[name] = "BroadcastNestedLoopJoin"
     assert not offenders, f"quadratic join shapes crept in: {offenders}"
 

@@ -21,6 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from crane_stream_processing_spark.inventory import (  # noqa: E402
     REGISTRY,
     fixture_seconds,
@@ -59,9 +60,6 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("opt_measure")
-
-    def force(df):
-        df.write.mode("overwrite").format("noop").save()
 
     # Warm-up mirrors bench.py: flagship plan + Python worker pool.
     force(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))

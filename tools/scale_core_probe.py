@@ -139,6 +139,7 @@ def main() -> None:
         build(args.build, args.out, args.src)
         return
 
+    from bench import force
     from crane_stream_processing_spark.inventory import (
         REGISTRY,
         fixture_seconds,
@@ -148,9 +149,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", args.out)
     names = args.queries or DEFAULT_QUERIES
     spark = get_spark("scale_core_probe")
-
-    def force(df):
-        df.write.mode("overwrite").format("noop").save()
 
     force(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
 

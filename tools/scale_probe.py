@@ -40,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import force  # noqa: E402
 from crane_stream_processing_spark.catalog import load_table  # noqa: E402
 from crane_stream_processing_spark.session import get_spark  # noqa: E402
 
@@ -63,10 +64,6 @@ def replicate(df: DataFrame, n: int, shift_cols: list[str]) -> DataFrame:
     return out.drop("__copy")
 
 
-def force(df: DataFrame) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def shapes(spark, n: int) -> dict:
     from crane_stream_processing_spark.operators import dedup as D
     from crane_stream_processing_spark.operators import similarity as S
@@ -87,9 +84,8 @@ def shapes(spark, n: int) -> dict:
         n,
         ["vec_id"],
     )
-    # 256 data-independent centroid directions — far above LITERAL_K_MAX,
-    # so the coarse assignment runs through the broadcast matrix relation
-    # (the round-5 large-k shape; plan stays O(1) in k).
+    # 256 data-independent centroid directions: the coarse assignment
+    # runs through the broadcast matrix relation (plan stays O(1) in k).
     cents256 = S.hyperplanes(256, 64, seed="crane-probe-ivf")
     w = (
         Window.partitionBy("o_custkey")
@@ -350,13 +346,10 @@ def ingest_probe(spark, n: int) -> dict:
         )
 
     def run_relational() -> None:
-        cmat = F.broadcast(S.centroid_matrix(spark, _CENTROIDS64))
         pqmat = F.broadcast(S.pq_codebook_matrix(spark, books))
         staged = (
-            stream_src()
-            .crossJoin(cmat)
+            S.coarse_dots(stream_src(), _CENTROIDS64, "embedding")
             .crossJoin(pqmat)
-            .withColumn("__dots", S.matrix_dots(F.col("embedding"), F.col("__cmat")))
             .withColumn(
                 "__codes",
                 S.pq_codes_from_matrix(
