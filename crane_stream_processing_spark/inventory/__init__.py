@@ -200,14 +200,14 @@ def artifact(name: str, sf_dir: str | None, build, *key, directory: bool = True)
 _QUERY_CACHES: list[DataFrame] = []
 
 # Memory-sink table names created by streaming registry queries
-# (streaming_queries._run_to_memory). A memory sink stores its WHOLE
+# (streaming_queries.drain with a str sink). A memory sink stores its WHOLE
 # result on the driver, and the temp view plus the terminated
 # StreamExecution keep those rows reachable forever — across a 260-query
 # bench run the retained sinks compound into GC pressure that slows every
 # later streaming query (measured: stream_ivfpq_ingest 5.5→8.9→13.0 s on
-# three same-session runs without release, flat 4.3–5.4 s with it —
-# round-8 verdict's "consistent IVF×PQ drift"). release_query_caches
-# drops the views and resets terminated-query tracking after each query.
+# three same-session runs without release, flat 4.3–5.4 s with it).
+# release_query_caches drops the views and resets terminated-query
+# tracking after each query.
 _MEMORY_SINKS: set[str] = set()
 
 

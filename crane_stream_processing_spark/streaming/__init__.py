@@ -17,6 +17,13 @@ at-least-once-with-duplicates (SURVEY.md §2.9 ST1-ST3).
 - :mod:`.ann_ingest` — the production ANN-index ingest: Arrow kernels in
   foreachBatch + a batch-id-idempotent parquet sink (exactly-once on
   plain parquet)
+- :mod:`.ivm` / :mod:`.sampling` — the view-maintenance journal sink and
+  the bottom-k sampler fold, also foreachBatch sinks
+
+The sinks here are plain ``(batch_df, batch_id)`` callables: a bounded
+pass drains a stream into one through
+``inventory.streaming_queries.drain``, and calling one again with a
+batch id forces a replay.
 """
 
 from .sources import file_lines, kafka_lines, rate_lines, socket_lines
@@ -28,7 +35,6 @@ from .ann_ingest import (
     idempotent_batch_sink,
     ivfpq_index_sink,
     read_ivfpq_index,
-    start_ivfpq_ingest_arrow,
 )
 
 __all__ = [
@@ -47,7 +53,6 @@ __all__ = [
     "with_observed_metrics",
     "idempotent_batch_sink",
     "ivfpq_index_sink",
-    "start_ivfpq_ingest_arrow",
     "read_ivfpq_index",
     "compact_index",
 ]

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "idempotent_batch_sink",
     "ivfpq_index_sink",
-    "start_ivfpq_ingest_arrow",
     "read_ivfpq_index",
     "compact_index",
 ]
@@ -59,9 +58,8 @@ def idempotent_batch_sink(
     overwrite mode is a per-write option; nothing session-global changes.
     ``transform`` hosts work that must run OUTSIDE the streaming plan
     (e.g. the Arrow encode kernels); pure-Catalyst stages can equally
-    stay in the streaming plan and pass ``None``. Exposed separately from
-    the query starters so a replay can be forced deterministically in
-    tests (call it twice with one batch)."""
+    stay in the streaming plan and pass ``None``. A replay is forced
+    deterministically by calling the sink again with a batch id."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = transform(batch_df) if transform is not None else batch_df
@@ -108,40 +106,6 @@ def ivfpq_index_sink(
         )
 
     return idempotent_batch_sink(out_dir, encode)
-
-
-def start_ivfpq_ingest_arrow(
-    emb_stream: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    out_dir: str,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exact_fold: bool = True,
-    available_now: bool = True,
-):
-    """Start the production IVF×PQ ingest over an embeddings stream:
-    Arrow-encoded entries land in ``out_dir`` (parquet, partitioned by
-    ``__batch_id``), offsets in ``checkpoint``. ``available_now=True``
-    runs a bounded drain-everything pass (the test/backfill mode);
-    ``False`` leaves the query running on the default trigger (the
-    deployment mode). Returns the StreamingQuery."""
-    writer = (
-        emb_stream.writeStream.foreachBatch(
-            ivfpq_index_sink(
-                out_dir,
-                centroids,
-                codebooks,
-                id_col=id_col,
-                vec_col=vec_col,
-                exact_fold=exact_fold,
-            )
-        ).option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_ivfpq_index(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
-    "start_ivm_maintenance",
+    "ivm_maintenance_sink",
     "compact_ivm_journal",
     "read_journal",
     "signed_fold",
@@ -90,22 +90,20 @@ def signed_fold(
     )
 
 
-def start_ivm_maintenance(
-    feed_stream: DataFrame,
+def ivm_maintenance_sink(
     journal_dir: str,
-    checkpoint: str,
     key: str = "o_custkey",
-    available_now: bool = True,
     base_dir: str | None = None,
     compact_every: int | None = None,
     count_col: str = "n_orders",
     sum_col: str = "total_dec",
 ):
-    """Start the streaming IVM maintainer over a signed-change feed.
-    Returns ``(StreamingQuery, sink)`` — the sink is exposed so tests and
-    the graded query can force a deterministic replay (call it again with
-    a batch id). Used by the graded
-    ``stream_incremental_agg_maintenance`` and tests/test_streaming_ivm.py.
+    """The streaming IVM maintainer as a foreachBatch sink over a
+    signed-change feed: each micro-batch folds to per-group partials
+    under its own ``__batch_id`` partition of ``journal_dir``. Drain a
+    feed through it with ``inventory.streaming_queries.drain``; tests
+    and the graded queries call it directly with a batch id to force a
+    deterministic replay.
 
     With ``base_dir`` + ``compact_every=N``, the maintainer runs its own
     compaction cycle IN-LINE: after writing batch id B ≡ 0 (mod N), it
@@ -126,30 +124,25 @@ def start_ivm_maintenance(
             F.sum("dn").alias("dn"), F.sum("dv").alias("dv")
         ),
     )
-    if compact_every:
-        if base_dir is None:
-            raise ValueError("compact_every requires base_dir")
-        inner = sink
+    if not compact_every:
+        return sink
+    if base_dir is None:
+        raise ValueError("compact_every requires base_dir")
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:  # noqa: F811
-            inner(batch_df, batch_id)
-            if batch_id > 0 and batch_id % compact_every == 0:
-                compact_ivm_journal(
-                    batch_df.sparkSession,
-                    base_dir,
-                    journal_dir,
-                    upto_batch_id=batch_id - 1,
-                    key=key,
-                    count_col=count_col,
-                    sum_col=sum_col,
-                )
+    def compacting_sink(batch_df: DataFrame, batch_id: int) -> None:
+        sink(batch_df, batch_id)
+        if batch_id > 0 and batch_id % compact_every == 0:
+            compact_ivm_journal(
+                batch_df.sparkSession,
+                base_dir,
+                journal_dir,
+                upto_batch_id=batch_id - 1,
+                key=key,
+                count_col=count_col,
+                sum_col=sum_col,
+            )
 
-    writer = feed_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return compacting_sink
 
 
 def compacted_upto(base_dir: str | None) -> int:

@@ -73,6 +73,11 @@ class ProgressRecorder(StreamingQueryListener):
         self.progress.append(
             {
                 "query": p.name,
+                # the run this batch belongs to: the listener is
+                # session-global and events arrive async, so a consumer
+                # slicing the ledger keeps only the run ids it started
+                "id": str(p.id),
+                "run_id": str(p.runId),
                 "batch_id": p.batchId,
                 # event wall timestamp (ISO) — the honest elapsed-time
                 # denominator for rate math (tools/flow_rate.py): batch

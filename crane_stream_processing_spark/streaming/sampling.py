@@ -33,7 +33,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["bottomk_sampler", "start_bottomk_sampler", "es_keyed"]
+__all__ = ["bottomk_sampler", "es_keyed"]
 
 
 def es_keyed(weight_col: str, id_col: str = "doc_id"):
@@ -69,9 +69,11 @@ def bottomk_sampler(
     """Build the sampler's ``(fold, current)`` pair over ``state_root``.
     ``fold(batch_df, batch_id)`` merges a batch (any DataFrame carrying
     ``id_col``) into the published sample; ``current()`` reads the live
-    sample (``id_col``, ``h``) through the pointer. Exposed separately
-    from the query starter so tests and the graded query can force
-    deterministic replays (call ``fold`` again with any batch).
+    sample (``id_col``, ``h``) through the pointer. ``fold`` is the
+    foreachBatch sink a stream drains into
+    (``inventory.streaming_queries.drain``); tests and the graded
+    queries force deterministic replays by calling it again with any
+    batch.
 
     ``keyed`` maps a batch to its (id_col, h) key relation and decides
     WHAT distribution the sample draws: the default md5-of-id gives a
@@ -136,27 +138,3 @@ def bottomk_sampler(
                 break
 
     return fold, current
-
-
-def start_bottomk_sampler(
-    stream_df: DataFrame,
-    state_root: str,
-    checkpoint: str,
-    k: int = 100,
-    id_col: str = "doc_id",
-    available_now: bool = True,
-    keyed=None,
-    key_type: str = "string",
-):
-    """Start the sampler over a streaming DataFrame. Returns
-    ``(StreamingQuery, fold, current)``."""
-    fold, current = bottomk_sampler(
-        stream_df.sparkSession, state_root, k=k, id_col=id_col,
-        keyed=keyed, key_type=key_type,
-    )
-    writer = stream_df.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), fold, current

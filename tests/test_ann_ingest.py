@@ -14,6 +14,7 @@ from crane_stream_processing_spark.inventory.streaming_queries import (
     _pq_stream_books,
     _PQ_STREAM_DSUB,
     _stream_embeddings,
+    drain,
     stream_ivfpq_ingest,
 )
 from crane_stream_processing_spark.inventory.northstar import _CENTROIDS64
@@ -21,7 +22,6 @@ from crane_stream_processing_spark.operators import similarity as S
 from crane_stream_processing_spark.streaming import (
     ivfpq_index_sink,
     read_ivfpq_index,
-    start_ivfpq_ingest_arrow,
 )
 
 
@@ -40,18 +40,12 @@ def test_foreachbatch_arrow_ingest_matches_graded_relational_stream(
     — same cells, same codes, same exploded grain — proving the
     production fast path and the oracle-graded path are the same index."""
     out = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_ivfpq_ingest_arrow(
+    drain(
         _stream_embeddings(spark, sf_dir).filter(
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         ),
-        _CENTROIDS64,
-        _pq_stream_books(),
-        out,
-        ckpt,
-        exact_fold=True,
+        ivfpq_index_sink(out, _CENTROIDS64, _pq_stream_books(), exact_fold=True),
     )
-    q.awaitTermination()
     arrow_rows = _entries(read_ivfpq_index(spark, out))
     rel_rows = _entries(stream_ivfpq_ingest(spark, sf_dir))
     assert arrow_rows == rel_rows
@@ -149,12 +143,10 @@ def test_checkpoint_restart_ingests_nothing_new(spark, sf_dir, tmp_path):
     src = _stream_embeddings(spark, sf_dir).filter(
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
-    books = _pq_stream_books()
-    q = start_ivfpq_ingest_arrow(src, _CENTROIDS64, books, out, ckpt)
-    q.awaitTermination()
+    sink = ivfpq_index_sink(out, _CENTROIDS64, _pq_stream_books())
+    drain(src, sink, checkpoint=ckpt)
     first = _entries(read_ivfpq_index(spark, out))
-    q2 = start_ivfpq_ingest_arrow(src, _CENTROIDS64, books, out, ckpt)
-    q2.awaitTermination()
+    drain(src, sink, checkpoint=ckpt)
     assert _entries(read_ivfpq_index(spark, out)) == first
 
 

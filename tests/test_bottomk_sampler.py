@@ -9,10 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from crane_stream_processing_spark.streaming.sampling import (
-    bottomk_sampler,
-    start_bottomk_sampler,
-)
+from crane_stream_processing_spark.inventory.streaming_queries import drain
+from crane_stream_processing_spark.streaming.sampling import bottomk_sampler
 
 
 def _ids(df):
@@ -58,8 +56,8 @@ def test_multibatch_middle_replay_restart_and_retirement(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q, fold, current = start_bottomk_sampler(stream, state, ckpt, k=25)
-        q.awaitTermination()
+        fold, current = bottomk_sampler(spark, state, k=25)
+        drain(stream, fold, checkpoint=ckpt)
         return fold, current
 
     fold, current = run()

@@ -228,6 +228,11 @@ def test_observed_metrics_and_listener(spark, tdir):
         # the started ledger (query id + run incarnation) is recorded,
         # and the CLI-facing rates() summary reports this query
         assert any(s["query"] == "obs_q" and s["run_id"] for s in rec.started)
+        # every progress entry names its run, so late events of an earlier
+        # drain can be told apart from this one's
+        runs = {s["run_id"] for s in rec.started if s["query"] == "obs_q"}
+        obs = [p for p in rec.progress if p["query"] == "obs_q"]
+        assert obs and all(p["run_id"] in runs for p in obs)
         assert rec.rates().get("obs_q", 0.0) >= 0.0
     finally:
         spark.streams.removeListener(rec)
@@ -250,6 +255,8 @@ def test_progress_recorder_idle_and_rates_accounting():
         return SimpleNamespace(
             progress=SimpleNamespace(
                 name=name,
+                id=f"qid-{name}",
+                runId=f"run-{name}",
                 batchId=batch,
                 numInputRows=10,
                 processedRowsPerSecond=rate,
@@ -263,6 +270,77 @@ def test_progress_recorder_idle_and_rates_accounting():
     rec.onQueryProgress(prog("q_a", 250.0, 1))  # latest wins
     rec.onQueryProgress(prog("q_b", None, 0))  # no rate yet → omitted
     assert rec.rates() == {"q_a": 250.0}
+
+
+def test_drain_failing_sink_reraises_and_cleans_up(spark, tdir):
+    """A drain whose foreachBatch sink raises must surface the failure,
+    put the session's shuffle-partition count back, and leave no
+    checkpoint dir behind (the temp checkpoint is removed however the
+    drain ends)."""
+    import glob
+    import tempfile
+
+    from crane_stream_processing_spark.inventory.streaming_queries import drain
+
+    _write_lines(tdir, "x.txt", ["a", "b"])
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    pattern = os.path.join(tempfile.gettempdir(), "crane_drain_ckpt_*")
+    before = set(glob.glob(pattern))
+    seen_during = []
+
+    def failing_sink(batch_df, batch_id):
+        seen_during.append(set(glob.glob(pattern)) - before)
+        raise RuntimeError("sink failed on purpose")
+
+    with pytest.raises(Exception, match="sink failed on purpose"):
+        drain(spark.readStream.format("text").load(tdir), failing_sink)
+    # the sink ran inside a live drain checkpoint (so the prefix checked
+    # below is the one drain uses) ...
+    assert seen_during and seen_during[0]
+    # ... and after the failure the conf and the temp dirs are restored
+    assert spark.conf.get(key) == prev
+    assert set(glob.glob(pattern)) == before
+
+
+def test_replay_batch0_guard_and_idempotence(spark, tdir):
+    """replay_batch0 refuses a multi-batch journal (replaying the whole
+    feed as batch 0 would double-apply batches >= 1) and, on a
+    single-batch journal, rewrites batch 0 in place: same row multiset,
+    still the only partition."""
+    from crane_stream_processing_spark.inventory.streaming_queries import (
+        replay_batch0,
+    )
+    from crane_stream_processing_spark.streaming import idempotent_batch_sink
+
+    rows = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (2, "b")], "k long, v string"
+    )
+
+    def parts(d):
+        return sorted(x for x in os.listdir(d) if x.startswith("__batch_id="))
+
+    multi = os.path.join(tdir, "multi")
+    sink = idempotent_batch_sink(multi)
+    sink(rows, 0)
+    sink(rows, 1)
+    with pytest.raises(AssertionError, match="single-batch drain"):
+        replay_batch0(multi, "two-batch journal")
+    assert parts(multi) == ["__batch_id=0", "__batch_id=1"]
+
+    single = os.path.join(tdir, "single")
+    idempotent_batch_sink(single)(rows, 0)
+
+    def content():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(single).select("k", "v").collect()
+        )
+
+    before = content()
+    assert before == [(1, "a"), (2, "b"), (2, "b")]
+    replay_batch0(single, "one-batch journal")
+    assert content() == before
+    assert parts(single) == ["__batch_id=0"]
 
 
 def test_streaming_wordcount_end_to_end(spark, tdir):

@@ -18,9 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from crane_stream_processing_spark.inventory.core import ivm_fold_view
-from crane_stream_processing_spark.inventory.streaming_queries import (
-    start_ivm_maintenance,
-)
+from crane_stream_processing_spark.inventory.streaming_queries import drain
+from crane_stream_processing_spark.streaming.ivm import ivm_maintenance_sink
 
 FEED_SCHEMA = "o_custkey long, dn long, dv decimal(28,4)"
 
@@ -68,10 +67,8 @@ def _run(spark, feed_dir, journal_dir, ckpt, max_files=None):
     reader = spark.readStream.schema(FEED_SCHEMA)
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", int(max_files))
-    q, sink = start_ivm_maintenance(
-        reader.parquet(feed_dir), journal_dir, ckpt
-    )
-    q.awaitTermination()
+    sink = ivm_maintenance_sink(journal_dir)
+    drain(reader.parquet(feed_dir), sink, checkpoint=ckpt)
     return sink
 
 
@@ -405,10 +402,8 @@ def test_cdc_feed_restart_and_delete_wins(spark, tmp_path):
         reader = spark.readStream.schema(
             "user_id long, dn long, dv decimal(28,4)"
         ).option("maxFilesPerTrigger", 1)
-        q, sink = start_ivm_maintenance(
-            reader.parquet(feed), journal, ckpt, key="user_id"
-        )
-        q.awaitTermination()
+        sink = ivm_maintenance_sink(journal, key="user_id")
+        drain(reader.parquet(feed), sink, checkpoint=ckpt)
         return sink
 
     def view():
@@ -490,11 +485,11 @@ def test_auto_compaction_inside_maintainer(spark, tmp_path):
     reader = spark.readStream.schema(FEED_SCHEMA).option(
         "maxFilesPerTrigger", 1
     )
-    q, _ = start_ivm_maintenance(
-        reader.parquet(feed), journal, ckpt,
-        base_dir=base_dir, compact_every=2,
+    drain(
+        reader.parquet(feed),
+        ivm_maintenance_sink(journal, base_dir=base_dir, compact_every=2),
+        checkpoint=ckpt,
     )
-    q.awaitTermination()
 
     assert compacted_upto(base_dir) == 3
     live = {d for d in os.listdir(journal) if d.startswith("__batch_id=")}

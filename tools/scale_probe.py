@@ -320,9 +320,10 @@ def ingest_probe(spark, n: int) -> dict:
     from crane_stream_processing_spark.inventory.streaming_queries import (
         _PQ_STREAM_DSUB,
         _pq_stream_books,
+        drain,
     )
     from crane_stream_processing_spark.operators import similarity as S
-    from crane_stream_processing_spark.streaming import start_ivfpq_ingest_arrow
+    from crane_stream_processing_spark.streaming import ivfpq_index_sink
 
     emb = replicate(
         load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding"),
@@ -378,25 +379,11 @@ def ingest_probe(spark, n: int) -> dict:
                 bdf, _CENTROIDS64, books, exact_fold=exact_fold
             ).write.mode("overwrite").format("noop").save()
 
-        ck = _scratch("crane_ingestprobe_ck_")
-        q = (
-            stream_src()
-            .writeStream.foreachBatch(fb)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        shutil.rmtree(ck, ignore_errors=True)
+        drain(stream_src(), fb)
 
     def run_arrow_parquet() -> None:
-        ck = _scratch("crane_ingestprobe_ck_")
         out_dir = _scratch("crane_ingestprobe_out_")
-        q = start_ivfpq_ingest_arrow(
-            stream_src(), _CENTROIDS64, books, out_dir, ck, exact_fold=True
-        )
-        q.awaitTermination()
-        shutil.rmtree(ck, ignore_errors=True)
+        drain(stream_src(), ivfpq_index_sink(out_dir, _CENTROIDS64, books))
         shutil.rmtree(out_dir, ignore_errors=True)
 
     variants = {
