@@ -42,6 +42,10 @@ TABLES = (
 )
 
 
+# The schema each table has as ``load_table`` returns it. The generated
+# date columns are stored as timezone-less ``timestamp[us]``, which Spark
+# reads as TIMESTAMP_NTZ; only ``events.ts`` is normalized to TIMESTAMP
+# (``normalize_events_ts``).
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -89,7 +93,7 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -105,7 +109,7 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(
@@ -158,8 +162,9 @@ def ensure_engine_confs(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one catalog table. Parquet carries its own schema; the catalog
-    schema in SCHEMAS is the declared contract (asserted in tests)."""
+    """Read one catalog table. Parquet carries its own schema; SCHEMAS is
+    the declared contract, and tests/test_cli_and_sources.py asserts that
+    the returned schema equals it at every generated scale factor."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     ensure_engine_confs(spark)

@@ -1478,13 +1478,12 @@ def sim_ivf_rel_coarse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_arrow_coarse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ARROW production fast path under the correctness gate: the
     corpus-side coarse assignment — the bulk stage that dominates a
-    billion-vector index build — runs through
-    ``ivf_assign_arrow(exact_fold=True)`` (one vectorized
-    ``np.add.accumulate`` fold per Arrow batch, 13× the interpreted
-    relational path at 100× data and 280× via plain matmul when ulps
-    don't matter, DESIGN.md), and the result must hash-match the SAME
-    row-level oracle as `sim_ivf_rel_coarse_topk` — DuckDB re-deriving
-    every cell from the 64 inlined plane literals. This is only
+    billion-vector index build — runs through ``ivf_assign_arrow`` (one
+    vectorized ``np.add.accumulate`` fold per Arrow batch, 13× the
+    interpreted relational path at 100× data, DESIGN.md), and the result
+    must hash-match the SAME row-level oracle as `sim_ivf_rel_coarse_topk`
+    — DuckDB re-deriving every cell from the 64 inlined plane literals.
+    This is only
     possible because the exact fold is the IDENTICAL association order
     as Catalyst's ``aggregate`` and DuckDB's ``list_dot_product``
     (bitwise-proven in tests/test_kmeans_ivf.py on a cancellation
@@ -1496,7 +1495,7 @@ def sim_ivf_arrow_coarse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import l2norm
 
     emb = t_cpu(spark, sf_dir, "embeddings")
-    cells = S.ivf_assign_arrow(emb, _CENTROIDS64, exact_fold=True)
+    cells = S.ivf_assign_arrow(emb, _CENTROIDS64)
     bucketed = (
         emb.select(
             F.col("vec_id").alias("cand_id"),

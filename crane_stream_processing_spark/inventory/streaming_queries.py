@@ -1127,12 +1127,12 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_ivfpq_arrow_idempotent_sink(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The PRODUCTION ingest path itself under the row-level hash gate
-    (round-6 verdict items #2+#3 as one graded query): the same
-    embeddings stream as `stream_ivfpq_ingest`, but encoded by the fused
-    Arrow kernel (`similarity.ivfpq_encode_arrow`, exact_fold — one
-    matmul+einsum per Arrow batch, ~26× the interpreted relational
-    scoring in tools/scale_probe.py --ingest) inside ``foreachBatch``,
+    """The PRODUCTION ingest path itself under the row-level hash gate:
+    the same embeddings stream as `stream_ivfpq_ingest`, but encoded by
+    the fused Arrow kernel (`similarity.ivfpq_encode_arrow` — one
+    vectorized sequential-fold pass per Arrow batch instead of the
+    interpreted relational scoring; rates in DESIGN.md, from
+    tools/scale_probe.py --ingest-only) inside ``foreachBatch``,
     writing PARQUET partitioned by ``__batch_id`` with dynamic partition
     overwrite (`streaming.ann_ingest`). After the bounded drain, the
     first batch is deliberately REPLAYED through the sink — the exact
@@ -1140,7 +1140,7 @@ def stream_ivfpq_arrow_idempotent_sink(
     the duplicate-version hazard the reference's SDFS append carries,
     server/sdfs.go:276-283) — and the graded result is the POST-REPLAY
     table read back from disk. It must hash-match the SAME oracle as the
-    relational stream: identical cells and codes (exact_fold's strict
+    relational stream: identical cells and codes (the kernel's strict
     sequential dots == Catalyst == DuckDB) AND exactly one copy of every
     row (the replay overwrote its own partition instead of appending).
     At 100 TB this is the deployment contract: O(new data) per

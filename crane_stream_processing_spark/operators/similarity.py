@@ -23,7 +23,6 @@ __all__ = [
     "hyperplanes",
     "lsh_bucket",
     "cosine_topk",
-    "cosine_topk_arrow",
     "cosine_near_pairs",
     "lsh_ann_topk",
     "lsh_ann_topk_multiprobe",
@@ -41,7 +40,6 @@ __all__ = [
     "random_projection",
     "pq_fit",
     "pq_encode",
-    "pq_encode_arrow",
     "pq_codebook_matrix",
     "pq_codes_from_matrix",
     "pq_adc_topk",
@@ -205,113 +203,6 @@ def cosine_topk(
         l2norm(vec_col).alias("cn"),
     ).filter(F.col("cn") > 0)
     return _cosine_topk_within(q, c, k, exclude_self=exclude_self)
-
-
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Arrow/numpy FAST PATH for exact brute-force cosine top-k — the
-    third dense stage after :func:`ivf_assign_arrow` /
-    :func:`pq_encode_arrow`: the (small, driver-collected — same
-    boundedness contract as :func:`cosine_topk`'s broadcast) query set
-    becomes one numpy matrix, each corpus Arrow batch scores all pairs
-    as a single ``V @ Qᵀ`` matmul and emits only its LOCAL top-k per
-    query, and a final window keeps the global top-k — so the full
-    |Q|·|corpus| pair relation never exists as rows (the relational
-    path materializes and window-sorts all of it). Scoring contract is
-    the shared one (6-decimal round, score desc, cand_id tiebreak,
-    optional self-pair filter), applied identically in the local and
-    global selections; output rows asserted identical to
-    :func:`cosine_topk` in tests/test_ann_recall.py. Use the relational
-    path where the oracle grades bit-exact folds; use this for the
-    production exact baseline / final re-rank at scale."""
-    import numpy as np
-    import pandas as pd
-
-    def round_half_up6(x):
-        # F.round is BigDecimal HALF_UP (ties away from zero); np.round is
-        # half-to-even. They differ only on exact decimal midpoints at the
-        # 7th place (dyadic rationals — reachable with small-integer
-        # fixture vectors), but "row-identical to cosine_topk" must hold
-        # there too, so emulate HALF_UP vectorized.
-        # + 0.0 normalizes IEEE -0.0 (sign(-1e-9)*0.0) to the +0.0
-        # BigDecimal produces — signed zero would break row-identity.
-        return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6 + 0.0
-
-    qrows = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            l2norm(vec_col).alias("qn"),
-        )
-        .filter(F.col("qn") > 0)
-        .collect()
-    )
-    if not qrows:
-        empty = "query_id long, cand_id long, cos_sim double, rank int"
-        return corpus.sparkSession.createDataFrame([], empty)
-    qids = np.asarray([r.query_id for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r.qvec, dtype=np.float64) for r in qrows])
-    qn = np.asarray([r.qn for r in qrows], dtype=np.float64)
-
-    def local_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cn = np.sqrt((vecs * vecs).sum(axis=1))
-            keep = cn > 0
-            if not keep.any():
-                continue
-            vecs, cn = vecs[keep], cn[keep]
-            cids = pdf[id_col].values[keep].astype(np.int64)
-            sims = round_half_up6(
-                (vecs @ qmat.T) / np.outer(cn, qn)
-            )  # n × |Q|
-            if exclude_self:
-                self_mask = cids[:, None] == qids[None, :]
-                sims = np.where(self_mask, -np.inf, sims)
-            frames = []
-            for j in range(len(qids)):
-                order = np.lexsort((cids, -sims[:, j]))[:k]
-                order = order[np.isfinite(sims[order, j])]
-                if len(order) == 0:
-                    continue
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[j],
-                            "cand_id": cids[order],
-                            "cos_sim": sims[order, j],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    local = (
-        corpus.select(id_col, vec_col)
-        # match ivf_assign_arrow/pq_encode_arrow: drop NULL rows before the
-        # kernel (np.stack would crash on a NULL embedding, whereas the
-        # relational path silently drops them via the cn > 0 filter).
-        .filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-        .mapInPandas(
-            local_topk, "query_id long, cand_id long, cos_sim double"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return local.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
 
 
 def matryoshka_topk(
@@ -671,67 +562,64 @@ def pq_codes_from_matrix(vec: Column, pqmat: Column, dsub: int) -> Column:
     )
 
 
+def _vector_batches(batches, vec_col: str, dim: int):
+    """(pdf, vecs) for each non-empty pandas batch of a ``mapInPandas``
+    kernel: ``vecs`` is the batch's vector column as an n × ``dim``
+    float64 matrix. A vector of another length raises."""
+    import numpy as np
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        if vecs.shape[1] != dim:
+            raise ValueError(f"vector dim {vecs.shape[1]} != index dim {dim}")
+        yield pdf, vecs
+
+
+def _fold_argmax(x, mat, offs=0.0):
+    """First-max argmax over the last axis of ``dot(x, mat) − offs``, for
+    ``x`` of shape (..., dim) and ``mat`` of shape (..., k, dim). Each dot
+    is the strict left-to-right ``np.add.accumulate`` fold of the
+    elementwise products — the association order of Catalyst's
+    ``aggregate`` and DuckDB's ``list_dot_product`` — so scores are
+    bit-identical to the relational operators, and ``argmax`` keeps their
+    low-index tiebreak. Costs one (..., k, dim) temporary."""
+    import numpy as np
+
+    dots = np.add.accumulate(x[..., None, :] * mat, axis=-1)[..., -1]
+    return (dots - offs).argmax(axis=-1).astype("int32")
+
+
 def ivf_assign_arrow(
     df: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_fold: bool = False,
 ) -> DataFrame:
-    """Arrow/numpy FAST PATH for the coarse quantizer — (id, cell) like
-    :func:`ivf_assign`, but each Arrow batch is scored as ONE dense
-    ``(batch × dim) @ (dim × k)`` matmul instead of per-row interpreted
-    higher-order-function folds. Catalyst HOF lambdas are evaluated
-    interpreted (no whole-stage codegen inside ``transform``), which
-    makes the relational path's cost ~linear in k·dim PER ROW in Python
-    of the JVM interpreter; BLAS does the same arithmetic at memory
-    bandwidth. Measured at sf0.1 (DESIGN.md): ~20-40× faster at k=256.
-
-    Contract vs :func:`ivf_assign`: same argmax, same LOW-INDEX tiebreak
-    (``np.argmax`` takes the first maximum). Dots are float64 either way,
-    but BLAS may reorder the accumulation, so the last-ulp values can
-    differ from the sequential fold — cells only flip on dot ties at ulp
-    scale (never observed on real embeddings; asserted corpus-wide equal
-    to the relational path in tests/test_kmeans_ivf.py). Use the
-    relational path where BIT-exact oracle parity is graded; use this
-    for production throughput. NULL ids/vectors are filtered (a NULL
-    embedding has no cell on any path).
-
-    ``exact_fold=True`` removes even the ulp caveat: dots are computed
-    with ``np.add.accumulate`` over the elementwise products — a STRICT
-    sequential left fold, the identical association order as Catalyst's
-    ``aggregate`` fold and DuckDB's ``list_dot_product`` — so every dot
-    is bit-for-bit equal to the relational path (asserted in
-    tests/test_kmeans_ivf.py, including a catastrophic-cancellation
-    fixture where the association ORDER decides the argmax). Costs one
-    n×k×dim temporary per batch (vectorized, memory-bound: slower than
-    the matmul, still far from the interpreted path)."""
+    """Arrow/numpy form of the coarse quantizer — (id, cell) like
+    :func:`ivf_assign`, but each Arrow batch is scored by one vectorized
+    fold (:func:`_fold_argmax`) instead of per-row higher-order-function
+    folds, which Catalyst evaluates interpreted (no whole-stage codegen
+    inside ``transform``). Cells are bit-identical to :func:`ivf_assign`,
+    including on a catastrophic-cancellation fixture where the
+    association order decides the argmax (tests/test_kmeans_ivf.py).
+    NULL ids/vectors are filtered (a NULL embedding has no cell on any
+    path); mis-sized vectors raise."""
     import numpy as np
     import pandas as pd
 
-    mat = np.asarray(centroids, dtype=np.float64).T  # dim × k
-    out_schema = f"{id_col} long, cell int"
+    cmat = np.asarray(centroids, dtype=np.float64)  # k × dim
 
     def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if exact_fold:
-                # products: n × k × dim, folded strictly left-to-right
-                prods = vecs[:, None, :] * mat.T[None, :, :]
-                dots = np.add.accumulate(prods, axis=2)[:, :, -1]
-            else:
-                dots = vecs @ mat
-            cells = np.argmax(dots, axis=1).astype("int32")
+        for pdf, vecs in _vector_batches(batches, vec_col, cmat.shape[1]):
+            cells = _fold_argmax(vecs, cmat)
             yield pd.DataFrame({id_col: pdf[id_col].values, "cell": cells})
 
     base = df.select(id_col, vec_col).filter(
         F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
     )
-    return base.mapInPandas(assign, out_schema)
+    return base.mapInPandas(assign, f"{id_col} long, cell int")
 
 
 def ivf_bucket_corpus(
@@ -846,7 +734,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 4,
-    arrow: bool = False,
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means over an embedding column — the trainer
     for data-driven IVF cells (vs the fixed-direction demo centroids).
@@ -863,17 +750,7 @@ def kmeans_fit(
     deterministic: the k lowest-id vectors. The vector column is cached
     for the duration of training (each iteration re-reads it; at cluster
     scale this is the standard iterate-over-cached-input pattern) and
-    released before returning.
-
-    ``arrow=True`` swaps the iteration body for the Arrow/numpy
-    production kernel (:func:`_kmeans_iterate_arrow` — one matmul +
-    ``np.add.at`` partial sums per batch instead of k interpreted HOF
-    dots per row and a k×dim-column relational aggregate; measured ~4×
-    at k=64/sf0.1 and growing with k·dim). Trained centroids can differ
-    from the relational path in last-ulp accumulation order, so
-    consumers of an arrow-trained model stay certificate-graded — the
-    same contract as ``ivf_assign_arrow``'s BLAS mode.
-    """
+    released before returning."""
     # Deterministic init: the k lexicographically-lowest-id DISTINCT
     # vectors. Deduplication matters on dedup-heavy corpora — two
     # identical seeds would stay identical forever (argmax ties go to the
@@ -906,8 +783,6 @@ def kmeans_fit(
 
     vecs = df.select(F.col(vec_col).alias("v")).persist()
     try:
-        if arrow:
-            return _kmeans_iterate_arrow(vecs, centroids, iters)
         for _ in range(iters):
             sums = _nearest_cell(vecs, centroids).groupBy("cell").agg(
                 F.count(F.lit(1)).alias("n"),
@@ -1029,75 +904,6 @@ def kmeans_fit_exact(
             centroids = new_c
     finally:
         vecs.unpersist()
-    return centroids
-
-
-def _kmeans_iterate_arrow(
-    vecs: DataFrame, centroids: list[list[float]], iters: int
-) -> list[list[float]]:
-    """The Arrow/numpy iteration body of :func:`kmeans_fit` — the TRAINING
-    extension of the ``ivf_assign_arrow`` production pattern: instead of
-    Catalyst evaluating k interpreted HOF dots per row and then a
-    k×dim-column relational aggregate, each Arrow batch does ONE
-    ``(batch × dim) @ (dim × k)`` matmul for the assignment (argmax of
-    dot − ||c||²/2, same low-index tiebreak — ``np.argmax`` takes the
-    first maximum) and accumulates per-cell counts + per-dimension sums
-    locally with ``np.add.at`` (in-batch row order = the same sequential
-    fold order as Spark's partial aggregate). Each task then emits at
-    most k tiny (cell, n, sums) rows, so the shuffle-equivalent is the
-    same O(k·dim·partitions) the relational path moves and only the
-    k×dim model reaches the driver. Ulp caveat identical to
-    ``ivf_assign_arrow``'s BLAS mode: accumulation reorder can flip
-    argmax only on ulp-scale ties, so trained-model consumers stay
-    certificate-graded (``sim_ivf_kmeans_topk`` discipline); parity with
-    the relational trainer is asserted in tests/test_kmeans_ivf.py."""
-    import numpy as np
-    import pandas as pd
-
-    for _ in range(iters):
-        C = np.asarray(centroids, dtype=np.float64)
-        kk, dd = C.shape
-        offs = (C * C).sum(axis=1) / 2.0
-
-        def partials(batches, C=C, offs=offs, kk=kk, dd=dd):
-            n_acc = np.zeros(kk, dtype=np.int64)
-            s_acc = np.zeros((kk, dd), dtype=np.float64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-                )
-                cells = np.argmax(V @ C.T - offs, axis=1)
-                np.add.at(n_acc, cells, 1)
-                np.add.at(s_acc, cells, V)
-            nz = np.nonzero(n_acc)[0]
-            yield pd.DataFrame(
-                {
-                    "cell": nz.astype("int32"),
-                    "n": n_acc[nz],
-                    "s": [s_acc[i].tolist() for i in nz],
-                }
-            )
-
-        rows = vecs.mapInPandas(
-            partials, "cell int, n long, s array<double>"
-        ).collect()  # ≤ k rows per task — the model, never the data
-        # collect() returns task-completion order, which varies run to
-        # run; float addition is order-sensitive in the last ulps, and a
-        # ulp flip in a centroid can flip an argmax tie downstream
-        # (round-8 advice). Sort the partials by their full content so
-        # the driver-side fold is run-deterministic.
-        rows.sort(key=lambda r: (r.cell, r.n, tuple(r.s)))
-        n_tot = np.zeros(kk, dtype=np.int64)
-        s_tot = np.zeros((kk, dd), dtype=np.float64)
-        for r in rows:
-            n_tot[r.cell] += r.n
-            s_tot[r.cell] += np.asarray(r.s, dtype=np.float64)
-        new_c = [list(c) for c in centroids]  # empty cells keep old center
-        for c in np.nonzero(n_tot)[0]:
-            new_c[c] = (s_tot[c] / n_tot[c]).tolist()
-        centroids = new_c
     return centroids
 
 
@@ -1379,129 +1185,38 @@ def pq_encode(
     return _assign_codes(sub, _codebook_df(df, codebooks))
 
 
-def pq_encode_arrow(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exact_fold: bool = False,
-) -> DataFrame:
-    """Arrow/numpy FAST PATH for the PQ encoder — (vid, sub_id, code)
-    like :func:`pq_encode`, but each Arrow batch scores every
-    (subvector, centroid) pair in ONE ``einsum('nmd,mkd->nmk')`` instead
-    of the explode → broadcast-join → groupBy-argmin pipeline (whose
-    per-pair arithmetic also runs interpreted, and whose n·m·ksub
-    intermediate never needs to exist as rows at all). Same
-    ``argmax(dot − ||c||²/2)`` staging and the same LOWEST-code tiebreak
-    (``np.argmax`` first maximum == the struct-min code tiebreak);
-    codes asserted identical to the batch join path — including
-    engineered exact ties — in tests/test_pq.py. Use :func:`pq_encode`
-    where bit-exact oracle parity is graded; use this for bulk index
-    builds (DESIGN.md measures the speedup at 100× data). NULL
-    ids/vectors filtered, mis-sized vectors raise (same contract as the
-    join path's slice). ``exact_fold=True`` computes each sub-dot with
-    the strict sequential ``np.add.accumulate`` fold (the
-    :func:`ivf_assign_arrow` contract) — bit-identical scores to the
-    join path's ``dot() − off`` Catalyst fold, for contexts where
-    exactness is contractual."""
-    import numpy as np
-    import pandas as pd
-
-    books = np.asarray(codebooks, dtype=np.float64)  # m × ksub × dsub
-    m, _ksub, dsub = books.shape
-    offs = 0.5 * (books * books).sum(axis=2)  # m × ksub
-    sub_ids = np.arange(m, dtype="int32")
-
-    def enc(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if vecs.shape[1] != m * dsub:
-                raise ValueError(
-                    f"pq_encode_arrow: vector dim {vecs.shape[1]} != "
-                    f"m*dsub = {m * dsub}"
-                )
-            subs = vecs.reshape(len(vecs), m, dsub)
-            if exact_fold:
-                # products: n × m × ksub × dsub, folded left-to-right
-                prods = subs[:, :, None, :] * books[None, :, :, :]
-                dots = np.add.accumulate(prods, axis=3)[..., -1]
-            else:
-                dots = np.einsum("nmd,mkd->nmk", subs, books)
-            scores = dots - offs
-            codes = scores.argmax(axis=2).astype("int32")
-            yield pd.DataFrame(
-                {
-                    "vid": np.repeat(pdf[id_col].values, m),
-                    "sub_id": np.tile(sub_ids, len(vecs)),
-                    "code": codes.reshape(-1),
-                }
-            )
-
-    base = df.select(id_col, vec_col).filter(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
-    )
-    return base.mapInPandas(enc, "vid long, sub_id int, code int")
-
-
 def ivfpq_encode_arrow(
     df: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_fold: bool = False,
 ) -> DataFrame:
-    """Arrow/numpy FAST PATH for the FULL IVF×PQ index entry — the fused
-    production twin of ``stream_ivfpq_ingest``'s relational stage: ONE
-    ``mapInPandas`` pass computes the coarse cell (the
-    :func:`ivf_assign_arrow` matmul) AND the m per-subspace PQ codes
-    (the :func:`pq_encode_arrow` einsum) per vector, emitting the same
-    exploded (vec_id, sub_id, code, cell) grain — so a `foreachBatch`
-    ingest needs no per-micro-batch join to stitch cell onto codes (a
-    join would put a shuffle inside every micro-batch for what is
-    per-row arithmetic). Same tiebreak contracts as the two kernels it
-    fuses (``np.argmax`` first maximum == low-index cell / lowest-code);
-    ``exact_fold=True`` computes every dot with the strict sequential
-    ``np.add.accumulate`` fold, making cells AND codes bit-identical to
-    the graded relational stream (asserted, including the end-to-end
-    foreachBatch path, in tests/test_ann_ingest.py). NULL ids/vectors
-    filtered (same contract as both kernels); mis-sized vectors raise."""
+    """Arrow/numpy form of the full IVF×PQ index entry: ONE
+    ``mapInPandas`` pass computes each vector's coarse cell (as
+    :func:`ivf_assign_arrow`) AND its m per-subspace PQ codes
+    (argmax of sub-dot − ||c||²/2, as :func:`pq_encode`), emitting the
+    exploded (vec_id, sub_id, code, cell) grain of
+    ``stream_ivfpq_ingest`` — so a ``foreachBatch`` ingest needs no
+    per-micro-batch join (a shuffle) to stitch cell onto codes. Every
+    dot is the sequential fold of :func:`_fold_argmax`, so cells and
+    codes are bit-identical to the relational :func:`ivf_assign` and
+    :func:`pq_encode`, low-index cell and lowest-code tiebreaks included
+    (tests/test_ann_ingest.py, tests/test_pq.py). NULL ids/vectors are
+    filtered; mis-sized vectors raise."""
     import numpy as np
     import pandas as pd
 
-    cmat = np.asarray(centroids, dtype=np.float64).T  # dim × k
+    cmat = np.asarray(centroids, dtype=np.float64)  # k × dim
     books = np.asarray(codebooks, dtype=np.float64)  # m × ksub × dsub
     m, _ksub, dsub = books.shape
     offs = 0.5 * (books * books).sum(axis=2)  # m × ksub
     sub_ids = np.arange(m, dtype="int32")
 
     def enc(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if vecs.shape[1] != m * dsub:
-                raise ValueError(
-                    f"ivfpq_encode_arrow: vector dim {vecs.shape[1]} != "
-                    f"m*dsub = {m * dsub}"
-                )
-            subs = vecs.reshape(len(vecs), m, dsub)
-            if exact_fold:
-                cprods = vecs[:, None, :] * cmat.T[None, :, :]
-                cdots = np.add.accumulate(cprods, axis=2)[:, :, -1]
-                prods = subs[:, :, None, :] * books[None, :, :, :]
-                dots = np.add.accumulate(prods, axis=3)[..., -1]
-            else:
-                cdots = vecs @ cmat
-                dots = np.einsum("nmd,mkd->nmk", subs, books)
-            cells = np.argmax(cdots, axis=1).astype("int32")
-            codes = (dots - offs).argmax(axis=2).astype("int32")
+        for pdf, vecs in _vector_batches(batches, vec_col, m * dsub):
+            cells = _fold_argmax(vecs, cmat)
+            codes = _fold_argmax(vecs.reshape(len(vecs), m, dsub), books, offs)
             yield pd.DataFrame(
                 {
                     id_col: np.repeat(pdf[id_col].values, m),

@@ -139,4 +139,13 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # ResolveWriteToStream warns once per streaming query start that
+    # session-wide AQE is disabled for the stream (and that a temporary
+    # checkpoint was created); both are analysis-time notices, so only
+    # errors from that class reach the log. AQE itself is untouched.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

@@ -9,12 +9,11 @@ interpreted (no codegen inside ``transform``), which caps that path at
 ~1 ms/row. The throughput-critical ingest loop — the path the reference
 itself benchmarked, its spout emit loop ``server/Crane.go:63-99`` with a
 measured ceiling of 10-100 lines/s before tuple drops — belongs on the
-Arrow kernels instead: this module runs
-:func:`~..operators.similarity.ivfpq_encode_arrow` (one fused
-matmul+einsum per Arrow batch) inside ``foreachBatch``, and with
-``exact_fold=True`` (strict sequential ``np.add.accumulate`` dots) its
-cells and codes are BIT-identical to the graded relational stream —
-asserted end to end in tests/test_ann_ingest.py.
+Arrow kernel instead: this module runs
+:func:`~..operators.similarity.ivfpq_encode_arrow` (one vectorized
+sequential-fold pass per Arrow batch) inside ``foreachBatch``; its cells
+and codes are BIT-identical to the graded relational stream — asserted
+end to end in tests/test_ann_ingest.py.
 
 The sink closes the other reference gap: SDFS appends a new version per
 arrival with no replay guard (``server/sdfs.go:276-283``), so an
@@ -80,7 +79,6 @@ def ivfpq_index_sink(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_fold: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """:func:`idempotent_batch_sink` specialized to the IVF×PQ index:
     each micro-batch is encoded by the fused Arrow kernel before the
@@ -89,7 +87,7 @@ def ivfpq_index_sink(
 
     def encode(batch_df: DataFrame) -> DataFrame:
         # A small trigger (or a single-row-group file drain) arrives as
-        # one scan partition, which would run the whole Arrow matmul
+        # one scan partition, which would run the whole Arrow encode
         # kernel on one core; rebalance up to the cluster's parallelism
         # first. Guarded like inventory.t_cpu: a production trigger that
         # already has >= that many splits is left untouched.
@@ -102,7 +100,6 @@ def ivfpq_index_sink(
             codebooks,
             id_col=id_col,
             vec_col=vec_col,
-            exact_fold=exact_fold,
         )
 
     return idempotent_batch_sink(out_dir, encode)

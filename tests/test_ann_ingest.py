@@ -35,7 +35,7 @@ def _entries(df):
 def test_foreachbatch_arrow_ingest_matches_graded_relational_stream(
     spark, sf_dir, tmp_path
 ):
-    """End to end: the Arrow foreachBatch ingest (exact_fold=True) writes
+    """End to end: the Arrow foreachBatch ingest writes
     BIT-identical index entries to the graded relational streaming query
     — same cells, same codes, same exploded grain — proving the
     production fast path and the oracle-graded path are the same index."""
@@ -44,7 +44,7 @@ def test_foreachbatch_arrow_ingest_matches_graded_relational_stream(
         _stream_embeddings(spark, sf_dir).filter(
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         ),
-        ivfpq_index_sink(out, _CENTROIDS64, _pq_stream_books(), exact_fold=True),
+        ivfpq_index_sink(out, _CENTROIDS64, _pq_stream_books()),
     )
     arrow_rows = _entries(read_ivfpq_index(spark, out))
     rel_rows = _entries(stream_ivfpq_ingest(spark, sf_dir))
@@ -53,19 +53,16 @@ def test_foreachbatch_arrow_ingest_matches_graded_relational_stream(
 
 
 def test_fused_kernel_matches_component_kernels(spark, sf_dir):
-    """The fused ivfpq_encode_arrow equals ivf_assign_arrow (cells) joined
-    with pq_encode_arrow (codes), both in exact_fold mode — the fusion
+    """The fused ivfpq_encode_arrow equals the relational ivf_assign
+    (cells) joined with the relational pq_encode (codes) — the fusion
     removes the per-batch join, not any arithmetic."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     books = _pq_stream_books()
-    fused = _entries(
-        S.ivfpq_encode_arrow(emb, _CENTROIDS64, books, exact_fold=True)
-    )
+    fused = _entries(S.ivfpq_encode_arrow(emb, _CENTROIDS64, books))
     cells = {
-        r.vec_id: r.cell
-        for r in S.ivf_assign_arrow(emb, _CENTROIDS64, exact_fold=True).collect()
+        r.vec_id: r.cell for r in S.ivf_assign(emb, _CENTROIDS64).collect()
     }
-    codes = S.pq_encode_arrow(emb, books, exact_fold=True).collect()
+    codes = S.pq_encode(emb, books).collect()
     joined = sorted((r.vid, r.sub_id, r.code, cells[r.vid]) for r in codes)
     assert fused == joined
 

@@ -58,30 +58,3 @@ def test_approx_results_are_true_cosines(spark, sf_dir):
             key = (r.query_id, r.cand_id)
             if key in exact_scores:
                 assert r.cos_sim == exact_scores[key], (name, key)
-
-
-def test_arrow_cosine_topk_matches_relational(spark, sf_dir):
-    """The Arrow brute-force baseline must return row-identical top-k to
-    the relational path (same 6-decimal round, same cand_id tiebreak,
-    same self-pair filter) — with and without exclude_self."""
-    from crane_stream_processing_spark.catalog import load_table
-    from crane_stream_processing_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import functions as F
-
-    q = emb.filter(F.col("vec_id") < 12)
-    for excl in (True, False):
-        rel = sorted(
-            map(tuple, cosine_topk(emb, q, k=5, exclude_self=excl).collect())
-        )
-        fast = sorted(
-            map(
-                tuple,
-                cosine_topk_arrow(emb, q, k=5, exclude_self=excl).collect(),
-            )
-        )
-        assert fast == rel and len(fast) == 12 * 5

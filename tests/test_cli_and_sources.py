@@ -1,9 +1,12 @@
-"""CLI surface + rate-source smoke tests."""
+"""CLI surface, rate-source smoke tests and the catalog schema contract."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from crane_stream_processing_spark.catalog import SCHEMAS, TABLES, load_table
 from crane_stream_processing_spark.cli import main
 from crane_stream_processing_spark.streaming.sinks import (
     VersionedSink,
@@ -453,3 +456,18 @@ def test_cli_grep_limit_not_hit_reports_exact(spark, tmp_path, capsys):
     assert out.out.count("alpha") == 2
     assert ": 2 matches" in out.err
     assert "limit reached" not in out.err
+
+
+def test_load_table_schema_matches_catalog(spark, sf_dir):
+    """catalog.SCHEMAS is the declared contract of every table:
+    ``load_table`` must return exactly its field names and data types at
+    every generated scale factor (the sf* siblings of the unit SF dir)."""
+    root = os.path.dirname(sf_dir)
+    sfs = sorted(d for d in os.listdir(root) if d.startswith("sf"))
+    assert sfs
+    for sf in sfs:
+        for name in TABLES:
+            got = load_table(spark, os.path.join(root, sf), name).schema
+            assert [(f.name, f.dataType) for f in got] == [
+                (f.name, f.dataType) for f in SCHEMAS[name]
+            ], (sf, name)

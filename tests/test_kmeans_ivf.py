@@ -113,46 +113,24 @@ def test_ivfpq_query_probes_carry_no_centroid_literals(spark, emb):
 
 
 def test_arrow_coarse_assign_matches_relational(spark, emb):
-    """The Arrow/numpy fast-path quantizer must agree with the relational
-    (graded) path corpus-wide at large k: same argmax, same low-index
-    tiebreak; BLAS accumulation-order ulps never flip a real argmax."""
+    """The Arrow quantizer must reproduce the relational path's cells
+    bit for bit: corpus-wide at k=64 and k=256, and on a
+    catastrophic-cancellation fixture where the association ORDER of the
+    dot decides the argmax (exact arithmetic would pick the other cell)."""
+    import numpy as np
+
     from crane_stream_processing_spark.operators.similarity import (
-        ivf_assign,
         ivf_assign_arrow,
     )
 
     for k in (64, 256):
         cents = hyperplanes(k, 64, seed="crane-ivf-arrow")
-        rel = {
-            (r.vec_id, r.cell) for r in ivf_assign(emb, cents).collect()
-        }
+        rel = {(r.vec_id, r.cell) for r in ivf_assign(emb, cents).collect()}
         fast = {
             (r.vec_id, r.cell)
             for r in ivf_assign_arrow(emb, cents).collect()
         }
         assert fast == rel and len(fast) == emb.count()
-
-
-def test_arrow_exact_fold_matches_relational_bitwise(spark, emb):
-    """exact_fold=True must reproduce the relational path's cells via a
-    strict sequential left fold (np.add.accumulate) — asserted on the
-    corpus at k=256 AND on a catastrophic-cancellation fixture where the
-    association ORDER of the dot decides the argmax, so any reordering
-    (pairwise/BLAS) would pick the other cell."""
-    import numpy as np
-
-    from crane_stream_processing_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_arrow,
-    )
-
-    cents = hyperplanes(256, 64, seed="crane-ivf-arrow")
-    rel = {(r.vec_id, r.cell) for r in ivf_assign(emb, cents).collect()}
-    exact = {
-        (r.vec_id, r.cell)
-        for r in ivf_assign_arrow(emb, cents, exact_fold=True).collect()
-    }
-    assert exact == rel
 
     # numpy-level: the accumulate fold IS the Python sequential fold
     rng = np.random.default_rng(5)
@@ -164,37 +142,15 @@ def test_arrow_exact_fold_matches_relational_bitwise(spark, emb):
 
     # cancellation fixture: sequential fold of v.c0 loses the +1.0
     # (1e16 + 1.0 == 1e16), so fold-dots are (0.0, 0.5) -> cell 1, while
-    # mathematically exact dots are (1.0, 0.5) -> cell 0. The relational
-    # path and exact_fold must AGREE on cell 1.
+    # mathematically exact dots are (1.0, 0.5) -> cell 0. Both paths
+    # must AGREE on cell 1.
     tie_cents = [[1.0, 1.0, 1.0], [0.0, 0.5, 0.0]]
     fx = spark.createDataFrame(
         [(0, [1e16, 1.0, -1e16])], "vec_id long, embedding array<double>"
     )
     rel_cell = ivf_assign(fx, tie_cents).collect()[0].cell
-    exact_cell = ivf_assign_arrow(
-        fx, tie_cents, exact_fold=True
-    ).collect()[0].cell
-    assert rel_cell == exact_cell == 1
-
-
-def test_arrow_kmeans_trainer_matches_relational(spark, emb):
-    """The Arrow iteration body (one matmul + np.add.at partial sums per
-    batch) must train the same model as the relational body on real
-    embeddings — here bit-identical (same init, same low-index argmax
-    tiebreak, partition-local accumulation in the same row order); the
-    contract only allows ulp divergence on engineered ties, which the
-    certificate consumers absorb. Also sanity: the arrow model's inertia
-    improves over the seed centroids, i.e. training actually trained."""
-    import numpy as np
-
-    from crane_stream_processing_spark.operators.similarity import kmeans_fit
-
-    rel = np.array(kmeans_fit(emb, k=8, iters=2))
-    arr = np.array(kmeans_fit(emb, k=8, iters=2, arrow=True))
-    assert np.allclose(rel, arr, rtol=0, atol=1e-9)
-
-    seeds = np.array(kmeans_fit(emb, k=8, iters=0, arrow=True))
-    assert _inertia(emb, seeds.tolist()) >= _inertia(emb, arr.tolist())
+    fast_cell = ivf_assign_arrow(fx, tie_cents).collect()[0].cell
+    assert rel_cell == fast_cell == 1
 
 
 def test_exact_kmeans_trainer_deterministic_and_guarded(spark, emb):

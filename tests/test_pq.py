@@ -143,21 +143,27 @@ def test_rowlocal_codes_match_batch_encode(spark):
     assert r[(0, 0)] == 0 and r[(1, 0)] == 2  # ties → lowest code
 
 
+def _arrow_codes(df, books):
+    """(vid, sub_id) -> code from the fused IVF×PQ Arrow kernel; the
+    coarse cell is irrelevant here, so one zero centroid of matching dim
+    stands in for the IVF centroids."""
+    dim = len(books) * len(books[0][0])
+    return {
+        (r.vec_id, r.sub_id): r.code
+        for r in S.ivfpq_encode_arrow(df, [[0.0] * dim], books).collect()
+    }
+
+
 def test_arrow_encode_matches_batch_encode(spark):
-    """The Arrow/numpy bulk encoder must agree with the join+groupBy
+    """The fused Arrow encoder's codes must agree with the join+groupBy
     path code-for-code — same argmax(dot − off) staging, same
     lowest-code tiebreak, including engineered exact ties."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     emb = _corpus(spark, n=50, dim=16, seed=11)
     books = S.pq_fit(emb, m=4, ksub=4, iters=2)
     batch = {
         (r.vid, r.sub_id): r.code for r in S.pq_encode(emb, books).collect()
     }
-    fast = {
-        (r.vid, r.sub_id): r.code
-        for r in S.pq_encode_arrow(emb, books).collect()
-    }
+    fast = _arrow_codes(emb, books)
     assert fast == batch and len(fast) == 50 * 4
 
     tie_books = [[[1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.0, 1.0]]] * 2
@@ -169,10 +175,7 @@ def test_arrow_encode_matches_batch_encode(spark):
         (r.vid, r.sub_id): r.code
         for r in S.pq_encode(tie_emb, tie_books).collect()
     }
-    f = {
-        (r.vid, r.sub_id): r.code
-        for r in S.pq_encode_arrow(tie_emb, tie_books).collect()
-    }
+    f = _arrow_codes(tie_emb, tie_books)
     assert f == b and f[(0, 0)] == 0 and f[(1, 0)] == 2
 
 
@@ -181,35 +184,30 @@ def test_arrow_encode_rejects_misfactored_dim(spark):
 
     emb = _corpus(spark, n=4, dim=16)
     books3 = [[[0.0] * 3] * 4] * 4  # m*dsub = 12 != 16
-    with _pytest.raises(Exception, match="m\\*dsub|12"):
-        S.pq_encode_arrow(emb, books3).collect()
+    with _pytest.raises(Exception, match="vector dim 16 != index dim 12"):
+        _arrow_codes(emb, books3)
 
 
 def test_arrow_encode_exact_fold_matches_batch(spark):
-    """exact_fold=True must reproduce the join path's codes through the
-    strict sequential fold — including the cancellation fixture where
+    """The fused Arrow encoder's strict sequential fold must reproduce
+    the join path's codes — including the cancellation fixture where
     the association order of the sub-dot decides the argmax."""
     emb = _corpus(spark, n=40, dim=16, seed=3)
     books = S.pq_fit(emb, m=4, ksub=4, iters=2)
     batch = {
         (r.vid, r.sub_id): r.code for r in S.pq_encode(emb, books).collect()
     }
-    exact = {
-        (r.vid, r.sub_id): r.code
-        for r in S.pq_encode_arrow(emb, books, exact_fold=True).collect()
-    }
-    assert exact == batch
+    assert _arrow_codes(emb, books) == batch
 
     # one subspace (dsub=3): the fold of v.c0 loses the +1.0
     # (1e16 + 1.0 == 1e16) -> dot 0.0, score 0.0 - 1.5 = -1.5; exact
     # math would give 1.0 - 1.5 = -0.5. c1 scores -0.6 - 0.18 = -0.78,
     # strictly BETWEEN them — so the association order decides the
     # argmax: fold -> code 1, exact math -> code 0. The join path and
-    # exact_fold must agree on the fold's answer.
+    # the Arrow kernel must agree on the fold's answer.
     cbooks = [[[1.0, 1.0, 1.0], [0.0, -0.6, 0.0]]]
     fx = spark.createDataFrame(
         [(0, [1e16, 1.0, -1e16])], "vec_id long, embedding array<double>"
     )
     b = S.pq_encode(fx, cbooks).collect()[0].code
-    e = S.pq_encode_arrow(fx, cbooks, exact_fold=True).collect()[0].code
-    assert b == e == 1
+    assert b == _arrow_codes(fx, cbooks)[(0, 0)] == 1

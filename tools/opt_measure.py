@@ -21,7 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import force  # noqa: E402
+from bench import force, warm_up  # noqa: E402
 from crane_stream_processing_spark.inventory import (  # noqa: E402
     REGISTRY,
     fixture_seconds,
@@ -61,14 +61,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("opt_measure")
 
-    # Warm-up mirrors bench.py: flagship plan + Python worker pool.
-    force(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
-
-    def _ident(it):
-        yield from it
-
-    force(spark.range(0, 64, 1, 64).mapInPandas(_ident, "id long"))
-    release_query_caches(spark)
+    warm_up(spark, sf_dir)
 
     if args.plans:
         os.makedirs(PLANS_DIR, exist_ok=True)

@@ -32,13 +32,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
 from crane_stream_processing_spark.catalog import load_table  # noqa: E402
 from crane_stream_processing_spark.session import get_spark  # noqa: E402
-
-KEY_SHIFT = 1_000_000_000
+from scale_probe import replicate  # noqa: E402
 
 # Key columns to shift per table; documents.text additionally perturbed.
 SHIFTS = {
@@ -80,28 +76,6 @@ DEFAULT_QUERIES = [
 ]
 
 
-def replicate(df: DataFrame, n: int, shift_cols: list[str],
-              perturb_text: bool = False) -> DataFrame:
-    copies = F.broadcast(
-        df.sparkSession.range(n).select(F.col("id").alias("__copy"))
-    )
-    out = df.crossJoin(copies)
-    for c in shift_cols:
-        out = out.withColumn(c, F.col(c) + F.col("__copy") * KEY_SHIFT)
-    if perturb_text:
-        suffixed = F.array_join(
-            F.transform(
-                F.split(F.col("text"), " "),
-                lambda x: F.concat(x, F.lit("~"), F.col("__copy").cast("string")),
-            ),
-            " ",
-        )
-        out = out.withColumn(
-            "text", F.when(F.col("__copy") == 0, F.col("text")).otherwise(suffixed)
-        ).withColumn("n_chars", F.length("text").cast("long"))
-    return out.drop("__copy")
-
-
 def build(n: int, out_dir: str, src: str) -> None:
     spark = get_spark("scale_core_build")
     os.makedirs(out_dir, exist_ok=True)
@@ -139,7 +113,7 @@ def main() -> None:
         build(args.build, args.out, args.src)
         return
 
-    from bench import force
+    from bench import force, warm_up
     from crane_stream_processing_spark.inventory import (
         REGISTRY,
         fixture_seconds,
@@ -150,13 +124,7 @@ def main() -> None:
     names = args.queries or DEFAULT_QUERIES
     spark = get_spark("scale_core_probe")
 
-    force(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
-
-    def _ident(it):
-        yield from it
-
-    force(spark.range(0, 64, 1, 64).mapInPandas(_ident, "id long"))
-    release_query_caches(spark)
+    warm_up(spark, sf_dir)
 
     out: dict[str, float] = {}
     for name in names:
