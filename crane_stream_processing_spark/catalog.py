@@ -23,6 +23,8 @@ __all__ = [
     "TABLES",
     "SCHEMAS",
     "default_sf_dir",
+    "events_schema",
+    "events_ts_type",
     "load_table",
     "load_tables",
     "normalize_events_ts",
@@ -162,21 +164,54 @@ def ensure_engine_confs(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one catalog table. Parquet carries its own schema; SCHEMAS is
-    the declared contract, and tests/test_cli_and_sources.py asserts that
-    the returned schema equals it at every generated scale factor."""
+    """Read one catalog table with its declared schema (SCHEMAS), so no
+    schema-inference job runs; tests/test_cli_and_sources.py asserts that
+    the declared schema equals the inferred one at every generated scale
+    factor."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     ensure_engine_confs(spark)
+    schema = SCHEMAS[name]
     if name == "events":
         # events.ts may be stored as TIMESTAMP(NANOS) (generation-dependent);
         # without this conf such a scan throws PARQUET_TYPE_ILLEGAL. Harmless
         # for MICROS files.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and "ts" in df.columns:
+        schema = events_schema(events_ts_type(spark, sf_dir))
+    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events":
         df = normalize_events_ts(df)
     return df
+
+
+def events_ts_type(spark: SparkSession, sf_dir: str) -> T.DataType:
+    """The stored type of ``events.ts`` under ``sf_dir`` as Spark reads it
+    with nanosAsLong set: TIMESTAMP(NANOS) arrives as long, TIMESTAMP(MICROS)
+    as TIMESTAMP_NTZ or TIMESTAMP. Probed from the parquet footer once per
+    table dir (an artifact), because it depends on how the data was
+    generated: forcing one type over the other would silently corrupt
+    every timestamp."""
+    from .inventory import artifact
+
+    return artifact(
+        "crane_events_ts_type",
+        sf_dir,
+        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        .schema["ts"]
+        .dataType,
+        directory=False,
+    )
+
+
+def events_schema(ts_type: T.DataType) -> T.StructType:
+    """SCHEMAS["events"] with ``ts`` read as ``ts_type``, the stored type
+    (``events_ts_type``) that ``normalize_events_ts`` then converts."""
+    return T.StructType(
+        [
+            T.StructField(f.name, ts_type) if f.name == "ts" else f
+            for f in SCHEMAS["events"].fields
+        ]
+    )
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -190,7 +190,7 @@ def artifact(name: str, sf_dir: str | None, build, *key, directory: bool = True)
 
 
 # Queries that must persist an intermediate DURING their (lazy) execution
-# — the recursive-CTE edge list, the label-coherence int8 rows — cannot
+# — the recursive-CTE hop table, the label-coherence int8 rows — cannot
 # unpersist it before the caller materializes the result. They register
 # the cached frame here instead, and the harnesses (bench.py,
 # tools/driver_check.py) call release_query_caches() after each query's
@@ -377,77 +377,11 @@ def _load_all() -> None:
         __import__(f"{__name__}.{mod}")
 
 
-# The driver's correctness gate grades the FIRST 50 registry entries in
-# insertion order per round. Rotate this list each round so every family
-# accumulates a graded row: round 1 covered apps/io/src/join/agg/window
-# (CORRECTNESS_r01.json); round 2 proved TPC-H / dedup / similarity /
-# text (CORRECTNESS_r02.json, 49/50); round 3 proved scalars, setops,
-# eventtime, windows tail, multimodal, udf/udtf, and 11 of 13 stream_*
-# queries (CORRECTNESS_r03.json, 50/50); round 4 proved graph_*,
-# sample_*, curate_*, sql_*, udtf_* and the evt_/text_/sim_ tails
-# (CORRECTNESS_r04.json, 50/50); round 5 proved the 25 round-4
-# post-freeze additions plus a 25-row backfill (CORRECTNESS_r05.json,
-# 50/50 — cumulative union 218/218). Round 6 fronted the nine round-5
-# post-freeze additions + 41 backfill (CORRECTNESS_r06.json, 50/50 —
-# cumulative union 227/227). Round 7 fronted the nine round-6
-# post-freeze additions + 41 backfill (CORRECTNESS_r07.json, 50/50 —
-# cumulative union 236/236: every query that existed at the round-6
-# freeze has a green driver row). Round 8 (this list, generated by
-# tools/rotate_priority.py from the accumulated CORRECTNESS files):
-# the FOURTEEN round-7 post-freeze additions that have never been
-# inside a driver window (the curation/ANN-operations family:
-# dedup_substring_window_pairs, text_dup_ngram_coverage, the DSIR
-# importance/resample/decontaminate trio, text_nb_lang_confusion,
-# sim_ivf_recall_at_k / _filtered_topk / _index_health,
-# text_hybrid_rrf_search, and the four streaming twins
-# stream_dsir_score / stream_curate_pipeline / stream_dedup_index_ingest
-# / stream_ivfpq_arrow_idempotent_sink) PLUS the TEN round-8 additions
-# (sim_ivf_retrain_loop — the health→retrain→recall operational loop;
-# mm_png_codec_roundtrip + mm_png_ahash + stream_mm_png_ahash — the
-# real compressed-codec decode, batch and streaming; curate_dsir_shift
-# — the selection-shifted-the-distribution proof; curate_pii_redact +
-# stream_pii_redact — export scrubbing and its on-ingest twin;
-# curate_token_budget_fill — mixture construction by token budget;
-# io_incremental_agg_maintenance + io_minmax_partial_rescan — IVM
-# refresh vs recompute for the self-maintainable COUNT/SUM pair and
-# the delete-triggered partial rescan for anti-monotone MIN), then a
-# 26-row backfill re-proving the round-7 window's families. The green
-# round-8 window closed the cumulative driver union over the FULL
-# registry as of that freeze: 260/260 (confirmed by the round-8
-# judge's independent full regrade). Round 9 (this list) fronts the
-# SIX round-9 additions (stream_incremental_agg_maintenance — the
-# streaming IVM twin over a landed feed through the idempotent journal
-# sink; io_cdc_ivm_maintenance — the CDC upsert feed folded into the
-# maintained view as delete+insert pairs; mm_crosscodec_dedup_pairs —
-# the mixed BMP+PNG corpus deduped through one mime-dispatched decode
-# and an equi-join on the aHash words; mm_ahash_hamming_near_pairs —
-# banded-Hamming NEAR-dup with the pigeonhole recall guarantee itself
-# hash-graded; stream_ivf_query_topk — ONLINE vector search: a query
-# stream answered per micro-batch against the persisted IVF index
-# through the idempotent sink, replay-graded; mm_wav_volume_invariant_fp
-# — the audio dedup key: energy-delta fingerprint proven exactly
-# loudness-invariant through two real encode→decode paths), then a
-# 44-row backfill
-# re-proving the round-8 window's families. The green round-9 window
-# kept the cumulative union closed at 266/266. Round 10 (this list,
-# seeded by tools/rotate_priority.py) fronts the FOUR round-10
-# additions (mm_wav_fp_hamming_near_pairs — banded-Hamming audio
-# near-dup over the energy-delta fingerprint, the image recipe's
-# modality twin; stream_ivf_ingest_then_serve — READ-YOUR-WRITES for
-# the ANN index: holdout vectors ingested through the idempotent sink,
-# then the query stream served against the refreshed base∪delta index;
-# stream_cdc_ivm_maintenance — the CDC upsert feed landed and drained
-# through the journal maintainer; stream_ivm_compaction_cycle — a full
-# multi-batch journal→base compaction graded against the from-scratch
-# recompute), keeps sim_ivf_retrain_loop fronted because its grade
-# CHANGED this round (the after-side is now oracle-computed via the
-# exact-k-means SQL re-derivation — no literal TRUE cells), plus
-# sim_ivf_trained_topk / sim_ivf_trained_nprobe_topk (trained-index
-# ANN serving, single- and multi-probe, with the row-level grade the
-# exact trainer makes possible), then a backfill re-proving the
-# round-8/9 windows' families. A green round-10 window closes the
-# cumulative union at 272/272.
+# The `__spark_entry__` correctness gate grades the first 50 registry
+# entries in insertion order, so this list fronts the queries whose grade
+# matters most now: the ones changed most recently (history in CHANGES.md).
 GRADE_PRIORITY: list[str] = [
+    "sql_recursive_order_chain",
     "mm_wav_fp_hamming_near_pairs",
     "stream_ivf_ingest_then_serve",
     "stream_cdc_ivm_maintenance",
@@ -497,7 +431,6 @@ GRADE_PRIORITY: list[str] = [
     "pipeline_curate_end2end",
     "src_xml_roundtrip",
     "join_bloom_runtime_filter",
-    "evt_rate_limit_audit",
 ]
 
 

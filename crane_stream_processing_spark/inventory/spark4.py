@@ -187,86 +187,78 @@ def sql_recursive_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cyclic graphs would need (the distributed alternative for those:
     operators.dedup.connected_components label propagation).
 
-    The edge list (LEAD + ROW_NUMBER over ONE window pass) is computed
-    outside the recursion and cached: each of the max-chain-depth
-    recursion steps re-executes its plan for the edge side, so an
-    uncached window there re-scans + re-sorts orders per step (measured
-    17.7 s → 7.0 s at sf0.1, depth 24). The per-step frontier join is an
-    equi shuffle join on o_orderkey; total work is O(rows · depth /
-    cluster), the same as any vertex-centric BFS. The cache is registered
-    for post-query release (harnesses call release_query_caches after
-    materializing) so it cannot pin memory across later queries."""
+    The walk is unrolled: each recursive step advances up to
+    ``ORDER_CHAIN_HOPS`` (K) hops through a cached hop table (the order's
+    1st..Kth successors, from one window pass), so a chain of length L
+    takes ceil((L - 1) / K) steps instead of L - 1 — 3 instead of ~24 at
+    sf0.01 and sf0.1, where every step is a new plan, a repartition, a
+    convergence probe and a broadcast regardless of its size. Only the
+    K-th hop of a step is ``live`` and extends the frontier, so every
+    chain member is emitted exactly once, as in the one-hop walk. The
+    hop table is cached because every step re-executes the recursion's
+    non-recursive side (an uncached window would re-scan and re-sort
+    orders per step), and registered for post-query release (harnesses
+    call release_query_caches after materializing), so it cannot pin
+    memory across later queries."""
+    # The recursion's width follows the input's scan splits, floored at
+    # min(4, cores) so a one-split input does not serialize every step on
+    # one core; at scale the split count dominates. The width and the AQE
+    # switch live in a CLONE session (shared SparkContext and caches,
+    # private SQLConf), so the host session's confs never change.
+    scan_splits = t(spark, sf_dir, "orders").rdd.getNumPartitions()
+    width_floor = min(4, spark.sparkContext.defaultParallelism)
+    rec_parts = max(scan_splits, width_floor)
+    rec = spark.newSession()
+    rec.conf.set("spark.sql.shuffle.partitions", str(rec_parts))
+    # With AQE on, every recursion step materializes its stages as separate
+    # jobs; for a floor-sized input the frontier is KB-sized and that is
+    # pure overhead. An input wide enough to set the width keeps AQE.
+    if scan_splits <= width_floor:
+        rec.conf.set("spark.sql.adaptive.enabled", "false")
+    return _order_chain(rec, sf_dir, rec_parts)
+
+
+# Hops advanced per recursion step: the per-step fixed cost (plan, probe,
+# repartition, broadcast) dominates; 8 tied 16 for fastest in a sweep of
+# {4, 6, 8, 16} at sf0.01 and sf0.1, with a hop table half the size.
+ORDER_CHAIN_HOPS = 8
+
+
+def _order_chain(rec: SparkSession, sf_dir: str, parts: int) -> DataFrame:
+    """The unrolled order-chain walk in session ``rec``. The hop table is
+    hash-partitioned on the join key at ``parts``, the recursion's shuffle
+    width, so its side of every step's join reuses the cached layout."""
     from pyspark.sql import Window
 
     from . import register_query_cache
 
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    # Each of the ~depth recursion steps is its own job whose frontier
-    # join shuffles BOTH sides at the session's static partition count
-    # (AQE does not re-plan inside UnionLoop), so per-step cost is
-    # dominated by task launches on near-empty partitions. Derive the
-    # recursion's partition count from the INPUT's scan splits instead
-    # (guide §2: scale-adaptive, never a local-mode constant): at sf0.1
-    # orders is one split -> 1-partition steps (measured 5.4 -> 4.7 s);
-    # at 100 TB the scan yields thousands of splits and the steps keep
-    # that parallelism. The cached edge list is hash-partitioned on the
-    # join key at the same count, so its side of every step reuses the
-    # cached layout. The narrowed shuffle.partitions lives in a CLONE
-    # session (shared SparkContext/caches, private SQLConf, read at the
-    # recursion's action time), so the host session's planner conf is
-    # never mutated — building this query mid-session leaks nothing.
-    # Floor the width at min(4, cores): deriving it from scan splits
-    # ALONE collapsed to 1 partition at bench SF (one parquet split), and
-    # a 1-wide recursion serializes every step onto one core. The floor
-    # is core-count-capped (never a local constant), and at scale the
-    # split count dominates. Round-10 swept the width with AQE on (8
-    # best); round 11 re-swept with AQE scoped off for floor-sized
-    # inputs (below) and the knee moved to 2-4 (min-of-3: 1-wide 3.34 s,
-    # 2-wide 3.31, 4-wide 3.33, 8-wide 3.68).
-    scan_splits = t(spark, sf_dir, "orders").rdd.getNumPartitions()
-    width_floor = min(4, spark.sparkContext.defaultParallelism)
-    rec_parts = max(scan_splits, width_floor)
-    rec = spark.newSession()
-    edges = register_query_cache(
+    # hop 0 is the order itself (the anchor's row); hops 1..K its successors
+    succ = [F.lead("o_orderkey", h).over(w) for h in range(1, ORDER_CHAIN_HOPS + 1)]
+    hops = register_query_cache(
         t(rec, sf_dir, "orders")
         .select(
             "o_orderkey",
-            F.lead("o_orderkey").over(w).alias("next_key"),
             F.row_number().over(w).alias("rk"),
+            F.array("o_orderkey", *succ).alias("hops"),
         )
-        .repartition(rec_parts, "o_orderkey")
+        .select("o_orderkey", "rk", F.posexplode("hops").alias("hop", "dst"))
+        .where("dst IS NOT NULL")
+        .repartition(parts, "o_orderkey")
         .cache()
     )
-    # Materialize the cache BEFORE scoping the clone's partition count
-    # down: shuffle.partitions is read at action time, and the window
-    # pass itself should keep the session's full parallelism — only the
-    # recursion steps run at the input-derived count. 1-long bounded
-    # action (count of the edge table).
-    edges.count()
-    rec.conf.set("spark.sql.shuffle.partitions", str(rec_parts))
-    # UnionLoopExec materializes every recursion step with adaptive
-    # execution when AQE is on, and each AQE stage materialization is
-    # its own Spark job — the status tracker counts 87 jobs (AQE on) vs
-    # 62 (off) for the identical ~24-step recursion, i.e. the per-step
-    # convergence probe and the step's shuffle run as SEPARATE jobs.
-    # When the INPUT (scan splits), not the floor, decides the width,
-    # the steps carry real data volume and AQE's coalescing/skew
-    # protection stays on; for floor-sized inputs the per-step frontier
-    # is KB-sized and AQE's extra per-step job + re-optimization is pure
-    # overhead — measured min-of-3 at sf0.1: 3.68 s (AQE on) vs 3.33 s
-    # (off) at identical results. Clone-scoped, like the width conf: the
-    # host session's planner behavior is never touched.
-    if scan_splits <= width_floor:
-        rec.conf.set("spark.sql.adaptive.enabled", "false")
-    edges.createOrReplaceTempView("order_chain_edges")  # clone-scoped view
+    # No eager count: the walk's anchor step fills the cache, and counting
+    # first only added jobs (19 vs 14 at sf0.01).
+    hops.createOrReplaceTempView("order_chain_hops")  # clone-scoped view
     return rec.sql(
-        """
-        WITH RECURSIVE chain(root_key, o_orderkey, depth) AS (
-          SELECT o_orderkey, o_orderkey, 1 FROM order_chain_edges WHERE rk = 1
+        f"""
+        WITH RECURSIVE chain(root_key, o_orderkey, depth, live) AS (
+          SELECT o_orderkey, o_orderkey, 1, TRUE
+          FROM order_chain_hops WHERE rk = 1 AND hop = 0
           UNION ALL
-          SELECT c.root_key, n.next_key, c.depth + 1
-          FROM chain c JOIN order_chain_edges n ON n.o_orderkey = c.o_orderkey
-          WHERE n.next_key IS NOT NULL
+          SELECT c.root_key, n.dst, c.depth + n.hop, n.hop = {ORDER_CHAIN_HOPS}
+          FROM chain c JOIN order_chain_hops n ON n.o_orderkey = c.o_orderkey
+          WHERE c.live AND n.hop > 0
         )
         SELECT root_key, o_orderkey, depth FROM chain
         """

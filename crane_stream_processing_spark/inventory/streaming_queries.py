@@ -24,55 +24,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..catalog import events_schema, events_ts_type, normalize_events_ts
 from . import dsum, query, t
 from .eventtime import (
     ORACLE_SESSION_30M,
     ORACLE_SLIDING_12H,
     ORACLE_TUMBLING_DAILY_BY_TYPE,
 )
-
-# The streaming file source needs a user-provided schema; the ts column's
-# stored type varies by how the dataset was generated — TIMESTAMP(NANOS)
-# (arrives as long under nanosAsLong) or TIMESTAMP(MICROS) NTZ/LTZ. Probe
-# the actual type with a batch footer read once per table dir and adapt,
-# mirroring catalog.load_table's convert-only-if-long behavior. Forcing a
-# LongType schema over a MICROS file would silently coerce micros into the
-# long column and the ns→µs division would corrupt every timestamp.
-_EVENTS_FIELDS = [
-    ("event_id", T.LongType()),
-    ("user_id", T.LongType()),
-    ("event_type", T.StringType()),
-    ("value", T.DoubleType()),
-    ("props", T.StringType()),
-]
-
-
-def _events_ts_type(spark: SparkSession, sf_dir: str) -> T.DataType:
-    from . import artifact
-
-    return artifact(
-        "crane_events_ts_type",
-        sf_dir,
-        lambda: spark.read.option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .schema["ts"]
-        .dataType,
-        directory=False,
-    )
-
-
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    fields = [T.StructField("event_id", T.LongType()), T.StructField("ts", ts_type)]
-    fields += [T.StructField(n, t_) for n, t_ in _EVENTS_FIELDS[1:]]
-    return T.StructType(fields)
-
-
-def _normalize_ts(df: DataFrame) -> DataFrame:
-    """ts → TIMESTAMP_LTZ — delegates to the catalog's single definition
-    of the events timestamp contract (batch and streaming must agree)."""
-    from ..catalog import normalize_events_ts
-
-    return normalize_events_ts(df)
 
 
 def _set_session_confs(spark: SparkSession) -> None:
@@ -92,14 +50,14 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files (stream it directly; the glob would match zero leaves and
     # every streaming query would silently read an empty stream).
     path = os.path.join(sf_dir, "events.parquet")
-    reader = spark.readStream.schema(
-        _events_schema(_events_ts_type(spark, sf_dir))
-    )
+    # The streaming file source needs a user-provided schema: the stored
+    # ts type is probed once per table dir (see catalog.events_ts_type).
+    reader = spark.readStream.schema(events_schema(events_ts_type(spark, sf_dir)))
     if os.path.isdir(path):
         src = reader.parquet(path)
     else:
         src = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    return _normalize_ts(src)
+    return normalize_events_ts(src)
 
 
 def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,7 +74,7 @@ def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     start; re-writing it each call just burned a job). The sentinel file
     is written with ts as TIMESTAMP_LTZ micros and both legs are
     normalized to that type before the union, so it composes with any
-    stored ts type in the real table (see _normalize_ts)."""
+    stored ts type in the real table (see catalog.normalize_events_ts)."""
     _set_session_confs(spark)
 
     from . import artifact
@@ -129,14 +87,14 @@ def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (-1, far_us, -1, "error", 0.0, "{}"),
                 (-2, far_us - 86_400 * 2 * 1_000_000, -1, "purchase", 0.0, "{}"),
             ],
-            _events_schema(T.LongType()),
+            events_schema(T.LongType()),
         ).withColumn("ts", F.timestamp_micros("ts")).coalesce(1).write.mode(
             "overwrite"
         ).parquet(sentinel_dir)
 
     sentinel_dir = artifact("crane_sentinel", None, _build_sentinel)
     real = _stream_events(spark, sf_dir)
-    sent = spark.readStream.schema(_events_schema(T.TimestampType())).parquet(
+    sent = spark.readStream.schema(events_schema(T.TimestampType())).parquet(
         sentinel_dir
     )
     return real.union(sent)

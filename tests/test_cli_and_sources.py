@@ -6,7 +6,13 @@ import os
 
 import pytest
 
-from crane_stream_processing_spark.catalog import SCHEMAS, TABLES, load_table
+from crane_stream_processing_spark.catalog import (
+    SCHEMAS,
+    TABLES,
+    events_ts_type,
+    load_table,
+    normalize_events_ts,
+)
 from crane_stream_processing_spark.cli import main
 from crane_stream_processing_spark.streaming.sinks import (
     VersionedSink,
@@ -459,15 +465,39 @@ def test_cli_grep_limit_not_hit_reports_exact(spark, tmp_path, capsys):
 
 
 def test_load_table_schema_matches_catalog(spark, sf_dir):
-    """catalog.SCHEMAS is the declared contract of every table:
-    ``load_table`` must return exactly its field names and data types at
-    every generated scale factor (the sf* siblings of the unit SF dir)."""
+    """catalog.SCHEMAS is the declared contract of every table: the schema
+    Spark infers from each parquet file (events after its ts
+    normalization) must equal it, and ``load_table``, which reads with it,
+    must return exactly its field names and data types, at every
+    generated scale factor (the sf* siblings of the unit SF dir)."""
     root = os.path.dirname(sf_dir)
     sfs = sorted(d for d in os.listdir(root) if d.startswith("sf"))
     assert sfs
     for sf in sfs:
         for name in TABLES:
             got = load_table(spark, os.path.join(root, sf), name).schema
-            assert [(f.name, f.dataType) for f in got] == [
-                (f.name, f.dataType) for f in SCHEMAS[name]
-            ], (sf, name)
+            inferred = spark.read.parquet(os.path.join(root, sf, f"{name}.parquet"))
+            if name == "events":
+                inferred = normalize_events_ts(inferred)
+            declared = [(f.name, f.dataType) for f in SCHEMAS[name]]
+            assert [(f.name, f.dataType) for f in inferred.schema] == declared, (sf, name)
+            assert [(f.name, f.dataType) for f in got] == declared, (sf, name)
+
+
+def test_load_table_fires_no_jobs(spark, sf_dir):
+    """Reading with the declared schema runs no schema-inference job for
+    any table. The events ts probe is an artifact paid once per table
+    dir, so it is taken before the window."""
+    events_ts_type(spark, sf_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test_load_table_fires_no_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        before = tracker.getJobIdsForGroup(group)
+        for name in TABLES:
+            load_table(spark, sf_dir, name)
+        after = tracker.getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(after) == sorted(before) == []
