@@ -13,6 +13,16 @@ iteration order, reference ``server/wordCount.go:107-111``); every top-k
 here totally orders by (count desc, key asc) so results are reproducible
 and oracle-checkable.
 
+Tokenizing note: every app reads its fields with one literal regex per
+line through ``regexp_extract_all``, so the pattern compiles once per task
+and no field array is built only to read one element: wordCount explodes
+``tokens`` (every ``\\S+``), and top-users and hot-resources explode the
+one capture of an anchored line pattern (``_field``), which is ``[]`` for
+a line of the wrong shape. Fields follow Go ``strings.Fields`` over Java's
+``\\s`` (space, ``\\t``, ``\\n``, ``\\x0b``, ``\\f``, ``\\r``): leading and
+trailing whitespace never yields an empty field. In each pattern ``\\S+``
+and ``\\s+`` alternate, so a match runs in linear time.
+
 Scale note: each pipeline is one shuffle (the groupBy); the top-k is a
 TakeOrderedAndProject over partial per-partition top-ks — no single-node
 "joiner" bottleneck like the reference's lone sink (SURVEY.md §4).
@@ -38,10 +48,25 @@ __all__ = [
 
 TOP_K = 5  # reference flushes the top 5 (server/wordCount.go:101-124)
 
+# Anchored whole-line patterns; group 1 is the one field the app keeps.
+EDGE_FOLLOWEE = r"^\s*\S+\s+(\S+)\s*$"  # exactly 2 fields → field[1]
+CLF_RESOURCE = r"^\s*(?:\S+\s+){6}(\S+)(?:\s+\S+){3,}\s*$"  # ≥10 → field[6]
+
 
 def _topk_by_count(counted: DataFrame, key: str, k: int) -> DataFrame:
     # Total order: count desc, key asc — deterministic unlike the reference.
     return counted.orderBy(F.col("cnt").desc(), F.col(key).asc()).limit(k)
+
+
+def _field(lines: DataFrame, col: str, pattern: str, name: str) -> DataFrame:
+    # One row per line that matches: the anchored pattern matches at most
+    # once, so regexp_extract_all yields [capture] or [] and explode drops
+    # the misfits. One regex evaluation per line — a regexp_extract plus a
+    # `!= ""` filter evaluates it twice, because the filter is pushed below
+    # the projection with the alias inlined.
+    return lines.select(
+        F.explode(F.regexp_extract_all(F.col(col), F.lit(pattern), 1)).alias(name)
+    )
 
 
 def wordcount(lines: DataFrame, k: int = TOP_K, col: str = "value") -> DataFrame:
@@ -50,7 +75,7 @@ def wordcount(lines: DataFrame, k: int = TOP_K, col: str = "value") -> DataFrame
     Reference semantics: worker splits each line on whitespace and emits
     (word, 1); sink accumulates counts; ticker writes the top 5
     (``server/wordCount.go:75-84`` transform, ``:45-74`` join, ``:99-124``
-    flush). One Spark shuffle: explode → filter → groupBy.count.
+    flush). One Spark shuffle: explode(tokens) → groupBy.count.
     """
     words = lines.select(F.explode(tokens(F.col(col))).alias("word"))
     counted = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
@@ -63,13 +88,11 @@ def top_users(lines: DataFrame, k: int = TOP_K, col: str = "value") -> DataFrame
     Reference semantics: each line is ``follower followee``; worker keeps
     field[1] (the followee), sink counts per followee
     (``server/twitter.go:59-67`` transform, ``:33-58`` join). Lines without
-    exactly 2 fields are dropped (``server/twitter.go:60-64``).
+    exactly 2 fields are dropped (``server/twitter.go:60-64``):
+    ``EDGE_FOLLOWEE`` matches only a 2-field line, whitespace-padded or
+    not, and captures its second field.
     """
-    # trim first — Go strings.Fields yields NO empty leading/trailing
-    # fields, but split(\s+) on " a b" gives ["", "a", "b"] (size 3) and
-    # would drop a valid whitespace-padded edge line / shift CLF indexes.
-    fields = lines.select(F.split(F.trim(F.col(col)), r"\s+").alias("f"))
-    followees = fields.filter(F.size("f") == 2).select(F.col("f")[1].alias("followee"))
+    followees = _field(lines, col, EDGE_FOLLOWEE, "followee")
     counted = followees.groupBy("followee").agg(F.count(F.lit(1)).alias("cnt"))
     return _topk_by_count(counted, "followee", k)
 
@@ -80,10 +103,11 @@ def hot_resources(lines: DataFrame, k: int = TOP_K, col: str = "value") -> DataF
     Reference semantics: drop lines not containing "200", drop lines with
     <10 whitespace fields, keep field[6] (the resource), count per resource
     (``server/hothttp.go:59-73`` transform, ``:33-58`` join).
+    ``CLF_RESOURCE`` skips six fields, captures the seventh and requires at
+    least three more.
     """
     ok = lines.filter(F.col(col).contains("200"))
-    fields = ok.select(F.split(F.trim(F.col(col)), r"\s+").alias("f"))
-    resources = fields.filter(F.size("f") >= 10).select(F.col("f")[6].alias("resource"))
+    resources = _field(ok, col, CLF_RESOURCE, "resource")
     counted = resources.groupBy("resource").agg(F.count(F.lit(1)).alias("cnt"))
     return _topk_by_count(counted, "resource", k)
 

@@ -26,9 +26,6 @@ __all__ = [
     "ts_str",
 ]
 
-WHITESPACE = r"\s+"
-
-
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
@@ -54,10 +51,17 @@ def let(value: Column, body) -> Column:
 
 
 def tokens(col: Column | str) -> Column:
-    """Whitespace tokenization → array<string>, empty strings removed.
-    DuckDB twin: ``list_filter(string_split_regex(x, '\\s+'), t -> t <> '')``.
+    """Whitespace tokenization → array<string>: every maximal run of
+    characters outside Java's ``\\s`` class (space, ``\\t``, ``\\n``,
+    ``\\x0b``, ``\\f``, ``\\r``), in order — the matches of ``\\S+``. No
+    element is empty; ``""`` and whitespace-only strings give ``[]``; NULL
+    gives NULL.
+    The pattern is a literal, so ``regexp_extract_all`` compiles it once per
+    task and the match runs in generated code, with no per-row lambda.
+    DuckDB twin: ``list_filter(string_split_regex(x, '\\s+'), t -> t <> '')``;
+    it agrees on every input without ``\\x0b``, which RE2's ``\\s`` lacks.
     Reference: strings.Fields (server/wordCount.go:75-84)."""
-    return F.filter(F.split(_c(col), WHITESPACE), lambda t: t != "")
+    return F.regexp_extract_all(_c(col), F.lit(r"\S+"), 0)
 
 
 def md5_hex(col: Column | str) -> Column:

@@ -381,56 +381,65 @@ def _load_all() -> None:
 # entries in insertion order, so this list fronts the queries whose grade
 # matters most now: the ones changed most recently (history in CHANGES.md).
 GRADE_PRIORITY: list[str] = [
+    # the reference apps (the tokenizer and field extractors changed)
+    "app_wordcount_top5",
+    "app_top_users_top5",
+    "app_hot_resources_top5",
+    "app_grep_counts",
+    # the order-chain walk (its anchor's SQL changed)
     "sql_recursive_order_chain",
-    "mm_wav_fp_hamming_near_pairs",
-    "stream_ivf_ingest_then_serve",
-    "stream_cdc_ivm_maintenance",
-    "stream_ivm_compaction_cycle",
-    "sim_ivf_trained_topk",
-    "sim_ivf_trained_nprobe_topk",
-    "stream_bottomk_sample",
-    "stream_weighted_es_sample",
-    "io_cdc_ivm_maintenance",
-    "mm_crosscodec_dedup_pairs",
-    "mm_ahash_hamming_near_pairs",
-    "stream_incremental_agg_maintenance",
-    "stream_ivf_query_topk",
-    "mm_wav_volume_invariant_fp",
-    "sim_ivf_recall_at_k",
-    "sim_ivf_filtered_topk",
-    "sim_ivf_index_health",
-    "sim_ivf_retrain_loop",
-    "dedup_substring_window_pairs",
-    "text_dup_ngram_coverage",
+    # the parts=2 streaming drains, not graded since they got parts=2
+    "stream_tumbling_daily_by_type",
+    "stream_dedup_user_day",
+    "stream_rocksdb_dedup_user_type",
+    "stream_session_windows_30m",
+    "stream_stream_join_error_purchase",
+    "stream_stream_left_join_error_purchase",
+    # the round-8 media, PII, IVF-retrain and IVM queries, which
+    # tests/test_round8_operators.py keeps inside the graded window
+    # (curate_dsir_shift and curate_token_budget_fill also call tokens)
     "mm_png_codec_roundtrip",
     "mm_png_ahash",
-    "stream_dedup_index_ingest",
-    "stream_ivfpq_arrow_idempotent_sink",
-    "stream_dsir_score",
-    "stream_curate_pipeline",
-    "curate_dsir_importance",
-    "curate_dsir_resample",
-    "curate_dsir_shift",
-    "text_nb_lang_confusion",
-    "curate_decontaminate_substring",
-    "text_hybrid_rrf_search",
     "stream_mm_png_ahash",
+    "sim_ivf_retrain_loop",
+    "curate_dsir_shift",
     "curate_pii_redact",
     "curate_token_budget_fill",
-    "io_incremental_agg_maintenance",
     "stream_pii_redact",
+    "io_incremental_agg_maintenance",
     "io_minmax_partial_rescan",
-    "io_dynamic_partition_overwrite",
-    "io_batch_cdc_merge",
-    "src_binaryfile_scan",
-    "join_cbo_stats_reorder",
+    # queries that call functions.tokens: text
+    "text_dup_ngram_coverage",
+    "text_nb_lang_confusion",
+    "text_hybrid_rrf_search",
+    "text_shingle_novelty_deciles",
+    "text_stats_documents",
+    "text_repetition_topbigram",
+    "text_bpe_pair_candidates",
+    "text_bpe_compression_by_lang",
+    "text_vocab_stats",
+    "text_tfidf_top_terms",
+    "text_bm25_search",
+    "text_bigram_lm_logprob",
+    "text_zipf_slope",
+    # dedup
     "dedup_index_incremental_merge",
-    "sim_ivf_arrow_coarse_topk",
-    "stream_ivf_ingest",
-    "stream_ivfpq_ingest",
+    "dedup_minhash_lsh_jaccard",
+    "dedup_simhash_documents",
+    "dedup_ngram_jaccard_pairs",
+    "dedup_shingle_containment_top1",
+    "dedup_survivor_retention",
+    "stream_dedup_minhash",
+    # curation
+    "curate_shard_assignment",
+    "curate_quality_gate",
+    "curate_mixture_weights",
+    "curate_split_leakage_audit",
+    "curate_chunk_overlap",
+    "curate_decontaminate",
+    "curate_pack_sequences",
     "pipeline_curate_end2end",
-    "src_xml_roundtrip",
-    "join_bloom_runtime_filter",
+    "stream_curate_pipeline",
 ]
 
 

@@ -250,10 +250,13 @@ def _order_chain(rec: SparkSession, sf_dir: str, parts: int) -> DataFrame:
     # No eager count: the walk's anchor step fills the cache, and counting
     # first only added jobs (19 vs 14 at sf0.01).
     hops.createOrReplaceTempView("order_chain_hops")  # clone-scoped view
+    # The anchor reads hop 0's dst (the order itself) as its second column,
+    # not o_orderkey twice: a repeated attribute in the anchor's output
+    # makes each step's LogicalRDD fail its output-column match and WARN.
     return rec.sql(
         f"""
         WITH RECURSIVE chain(root_key, o_orderkey, depth, live) AS (
-          SELECT o_orderkey, o_orderkey, 1, TRUE
+          SELECT o_orderkey, dst, 1, TRUE
           FROM order_chain_hops WHERE rk = 1 AND hop = 0
           UNION ALL
           SELECT c.root_key, n.dst, c.depth + n.hop, n.hop = {ORDER_CHAIN_HOPS}

@@ -15,6 +15,11 @@ from crane_stream_processing_spark.session import get_spark
 
 SF_UNIT = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# How functions.tokens prints in a Catalyst plan:
+# ``regexp_extract_all(<col>, \S+, 0)``. Plan-shape tests count it to pin
+# one tokenization per plan node.
+TOKENIZER = r", \S+, 0)"
+
 
 @pytest.fixture(scope="session")
 def spark():

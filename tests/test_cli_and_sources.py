@@ -366,11 +366,38 @@ def test_clf_source_handles_crlf_and_empty_dir(spark, tmp_path):
     )
 
 
+def _fields_lines(n: int = 200, seed: int = 7) -> list[str | None]:
+    """Lines of words joined by runs of Java's ``\\s`` characters except
+    ``\\n``, with leading and trailing runs, field counts 0-11, plus the
+    empty line, whitespace-only lines and a NULL."""
+    import random
+
+    rng = random.Random(seed)
+    ws, words = " \t\x0b\f\r", ("a", "bob", "GET", "/r", "200", "x-y", '"q')
+    lines: list[str | None] = ["", " ", "\t\x0b\f\r ", None]
+    counts = [1, 2, 3, 9, 10, 11] + [rng.randrange(12) for _ in range(n)]
+    for i, nf in enumerate(counts):
+        fields = [rng.choice(words) for _ in range(nf)]
+
+        def run(lo: int) -> str:
+            return "".join(rng.choice(ws) for _ in range(rng.randint(lo, 3)))
+
+        body = "".join(f + run(1) for f in fields[:-1]) + "".join(fields[-1:])
+        lines.append(run(i % 2) + body + run(i // 2 % 2))
+    return lines
+
+
 def test_apps_trim_matches_strings_fields_semantics(spark):
     """Go strings.Fields never yields empty leading/trailing fields; a
     whitespace-padded edge line must still count (twitter) and a padded
-    CLF line must still select the resource, not the method (hothttp)."""
+    CLF line must still select the resource, not the method (hothttp).
+    Over space, \\t, \\x0b, \\f and \\r, Go strings.Fields, Java \\s and
+    Python's str.split() agree, so str.split() is the reference for the
+    tokenizer and both field extractors on one generated DataFrame."""
+    from collections import Counter
+
     from crane_stream_processing_spark import apps
+    from crane_stream_processing_spark.functions import tokens
 
     edges = spark.createDataFrame(
         [(" alice bob",), ("alice bob ",), ("alice bob",)], "value string"
@@ -383,6 +410,20 @@ def test_apps_trim_matches_strings_fields_semantics(spark):
     )
     hot = apps.hot_resources(clf).collect()
     assert [(r.resource, r.cnt) for r in hot] == [("/r", 1)]
+
+    lines = _fields_lines()
+    df = spark.createDataFrame(list(enumerate(lines)), "id int, value string")
+    got = dict(df.select("id", tokens("value").alias("t")).collect())
+    assert got == {i: None if v is None else v.split() for i, v in enumerate(lines)}
+
+    split = [(v, v.split()) for v in lines if v is not None]
+    assert {len(f) for _, f in split} >= {0, 1, 2, 3, 9, 10, 11}
+    want_users = Counter(f[1] for _, f in split if len(f) == 2)
+    want_hot = Counter(f[6] for v, f in split if "200" in v and len(f) >= 10)
+    assert want_users and want_hot
+    n = len(lines)
+    assert {r.followee: r.cnt for r in apps.top_users(df, k=n).collect()} == want_users
+    assert {r.resource: r.cnt for r in apps.hot_resources(df, k=n).collect()} == want_hot
 
 
 def test_grouped_agg_udf_multi_column(spark):

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from crane_stream_processing_spark.operators import multimodal as M
 from crane_stream_processing_spark.operators import similarity as S
 
+from .conftest import TOKENIZER
+
 _words = st.lists(
     st.text(alphabet="abcdef", min_size=1, max_size=3), min_size=0, max_size=40
 )
@@ -208,8 +210,8 @@ def test_let_binding_survives_collapse_project(spark):
     ).select("doc_id", minhash_signature(F.col("sh")).alias("sig"))
     plan = _optimized_plan(staged)
     # one tokenization for the shingle binding — not 3 (element_at sites)
-    # or 36 (x12 seeds); the collapsed projection keeps exactly one split
-    assert plan.count("split(") == 1, plan[:3000]
+    # or 36 (x12 seeds); the collapsed projection keeps exactly one
+    assert plan.count(TOKENIZER) == 1, plan[:3000]
 
 
 def test_token_bigrams_edges_and_plan_shape(spark):
@@ -229,7 +231,7 @@ def test_token_bigrams_edges_and_plan_shape(spark):
     assert out[5] == ["p q"]  # empty tokens filtered before pairing
     assert out[4] == []
     plan = _optimized_plan(docs.select(token_bigrams("text").alias("g")))
-    assert plan.count("split(") == 1
+    assert plan.count(TOKENIZER) == 1
 
 
 def test_bpe_trainer_hand_computed_merges_and_exhaustion(spark, tmp_path):

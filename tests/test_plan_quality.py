@@ -11,6 +11,8 @@ from crane_stream_processing_spark.inventory import (
     release_query_caches,
 )
 
+from .conftest import TOKENIZER
+
 
 def _plan(spark, name, sf_dir, mode="formatted"):
     df = REGISTRY[name].fn(spark, sf_dir)
@@ -127,7 +129,9 @@ def test_no_inferred_filter_from_generate(spark, sf_dir):
     plan = _plan(spark, "curate_decontaminate", sf_dir)
     for line in plan.splitlines():
         if "Filter" in line and "size(" in line:
-            assert "split(" not in line, f"generator tree inlined into filter: {line[:200]}"
+            assert "split(" not in line and TOKENIZER not in line, (
+                f"generator tree inlined into filter: {line[:200]}"
+            )
 
 
 def test_tfidf_vocab_sides_broadcast(spark, sf_dir):
@@ -339,11 +343,11 @@ def test_registry_wide_no_broadcast_hint_on_scaled_tables(spark, sf_dir):
 
 def test_registry_wide_single_tokenization_per_plan_node(spark, sf_dir):
     """Sweep every batch query's optimized plan: no plan node may contain
-    more than one split() (the tokenizer) — a second occurrence in one
-    node means CollapseProject re-inlined a staged token pipeline into
-    multiple reference sites and it now re-executes per row per site
-    (the 8× LSH / 6× text-stats regressions; see functions.let and
-    DESIGN.md). Occurrences across DIFFERENT nodes are fine — separate
+    more than one tokenizer (``TOKENIZER``) or split() — a second
+    occurrence in one node means CollapseProject re-inlined a staged token
+    pipeline into multiple reference sites and it now re-executes per row
+    per site (the 8× LSH / 6× text-stats regressions; see functions.let
+    and DESIGN.md). Occurrences across DIFFERENT nodes are fine — separate
     operators legitimately re-tokenize their own inputs."""
     offenders = {}
     for name in sorted(REGISTRY):
@@ -352,7 +356,7 @@ def test_registry_wide_single_tokenization_per_plan_node(spark, sf_dir):
         df = REGISTRY[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         for ln in plan.splitlines():
-            if ln.count("split(") > 1:
+            if ln.count(TOKENIZER) > 1 or ln.count("split(") > 1:
                 offenders.setdefault(name, []).append(ln.strip()[:160])
     assert not offenders, f"re-inlined tokenizations: {offenders}"
 

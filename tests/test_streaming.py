@@ -390,6 +390,43 @@ def test_streaming_restart_exactly_once(spark, tdir):
     assert got == {("x", 2), ("y", 2), ("z", 1)}
 
 
+def test_checkpoint_file_manager_atomic_overwrite_contract(spark, tdir):
+    """The session's CheckpointFileManager keeps createAtomic's contract:
+    without overwrite, closing onto an existing file fails and the old
+    content stays; with overwrite, the new content replaces it. State-store
+    re-commits of a replayed batch rely on both. Setting
+    spark.sql.streaming.checkpointFileManagerClass to the FileSystem-based
+    manager forks fewer processes per commit but breaks the second half on
+    ``file:`` (the old file silently stays, the temp file leaks; DESIGN.md
+    streaming section), so the manager must stay Spark's default."""
+    from py4j.protocol import Py4JJavaError
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None) is None
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    cfm = pkg.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(tdir), conf)
+    target = os.path.join(tdir, "1.delta")
+    jtarget = jvm.org.apache.hadoop.fs.Path(target)
+
+    def write(data: bytes, overwrite: bool) -> None:
+        out = cfm.createAtomic(jtarget, overwrite)
+        out.write(bytearray(data))
+        out.close()
+
+    def content() -> bytes:
+        with open(target, "rb") as f:
+            return f.read()
+
+    write(b"old", False)
+    assert content() == b"old"
+    with pytest.raises(Py4JJavaError):
+        write(b"new", False)
+    assert content() == b"old"
+    write(b"new", True)
+    assert content() == b"new"
+
+
 def test_streaming_hot_resources_app(spark, tdir):
     """Registry dispatch beyond wordCount (the reference leaves twitter/
     hothttp unwired, ST9 — we register all three)."""

@@ -4,15 +4,21 @@
 Times a named subset of registry queries with the noop sink (guide §1.4)
 under the same session config as bench.py. Each timed run is its own
 Spark job group, so the harness prints the query's job count beside its
-min time; ``--plans TAG`` also dumps ``explain("formatted")`` to
-``plans/<round>/<query>_<TAG>.txt`` (the plan evidence).
+min time, and the processes forked during that run: the delta of the
+``processes`` counter in ``/proc/stat``, which counts forks SYSTEM-WIDE,
+so other work on the machine inflates it (without the native Hadoop
+library, local checkpoint renames and permission changes fork
+``readlink``/``chmod``; this column shows that per-batch floor of the
+``stream_*`` queries). ``--plans TAG`` also dumps ``explain("formatted")``
+to ``plans/<round>/<query>_<TAG>.txt`` (the plan evidence).
 
 Usage:
     python tools/opt_measure.py [--plans TAG] [--runs N] q1 q2 ...
     python tools/opt_measure.py --top 20            # 20 slowest from BENCH_DETAIL.json
 
-Prints ``<min s>  <jobs>  <query>`` per query (jobs of the fastest run),
-then one JSON line ``{"total", "queries", "jobs"}``.
+Prints ``<min s>  <jobs>  <forks>  <query>`` per query (jobs and forks of
+the fastest run), then one JSON line ``{"total", "queries", "jobs",
+"forks"}``.
 """
 
 from __future__ import annotations
@@ -36,6 +42,15 @@ from crane_stream_processing_spark.session import get_spark  # noqa: E402
 PLANS_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("CRANE_PLANS_ROUND", "r11")
 )
+
+
+def forks_since_boot() -> int:
+    """System-wide count of processes forked since boot (Linux)."""
+    with open("/proc/stat") as f:
+        for line in f:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise RuntimeError("no 'processes' line in /proc/stat")
 
 
 def main() -> None:
@@ -72,23 +87,28 @@ def main() -> None:
 
     out: dict[str, float] = {}
     jobs: dict[str, int] = {}
+    forks: dict[str, int] = {}
     tracker = spark.sparkContext.statusTracker()
+    print(f"{'min_s':>8}  {'jobs':>4}  {'forks':>6}  query  (forks: system-wide)", flush=True)
     for name in names:
         best = None
         for run in range(args.runs):
             group = f"opt_measure:{name}:{run}"
             spark.sparkContext.setJobGroup(group, group)
             f0 = fixture_seconds()
+            p0 = forks_since_boot()
             t0 = time.perf_counter()
             force(REGISTRY[name].fn(spark, sf_dir))
             wall = time.perf_counter() - t0
+            forked = forks_since_boot() - p0
             op = max(wall - (fixture_seconds() - f0), 0.0)
             if best is None or op < best:
                 best, jobs[name] = op, len(tracker.getJobIdsForGroup(group))
+                forks[name] = forked
             release_query_caches(spark)
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         out[name] = round(best, 4)
-        print(f"{best:8.3f}  {jobs[name]:4d}  {name}", flush=True)
+        print(f"{best:8.3f}  {jobs[name]:4d}  {forks[name]:6d}  {name}", flush=True)
         if args.plans:
             df = REGISTRY[name].fn(spark, sf_dir)
             with open(os.path.join(PLANS_DIR, f"{name}_{args.plans}.txt"), "w") as f:
@@ -96,7 +116,8 @@ def main() -> None:
                     df._jdf.queryExecution(), "formatted"))
             release_query_caches(spark)
 
-    print(json.dumps({"total": round(sum(out.values()), 3), "queries": out, "jobs": jobs}))
+    print(json.dumps({"total": round(sum(out.values()), 3), "queries": out,
+                      "jobs": jobs, "forks": forks}))
     if args.json_out:
         with open(args.json_out, "w") as f:
             json.dump(out, f, indent=1)
