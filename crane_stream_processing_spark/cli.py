@@ -155,7 +155,7 @@ def main(argv: list[str] | None = None) -> int:
                 else:
                     print(f"# {vm}: {counts[vm]} matches", file=sys.stderr)
         elif a.cmd == "put":
-            from .streaming.sinks import VersionedSink, list_versions
+            from .streaming.sinks import VersionedSink
 
             # Parquet is detected by CONTENT, not filename: a Spark
             # parquet output is a directory of part-*.parquet with no
@@ -179,9 +179,7 @@ def main(argv: list[str] | None = None) -> int:
                 if _is_parquet(a.local)
                 else spark.read.option("header", "true").csv(a.local)
             )
-            versions = list_versions(a.store, a.name)
-            v = (versions[0] + 1) if versions else 0
-            VersionedSink(a.store, a.name).write_version(df, v)
+            v = VersionedSink(a.store, a.name).write_next(df)
             print(f"committed {a.name} v{v}")
         elif a.cmd == "get":
             from .streaming.sinks import read_latest, read_version

@@ -118,13 +118,6 @@ def fixture_build_seconds() -> dict[str, float]:
     return dict(_ARTIFACTS.seconds)
 
 
-def add_fixture_seconds(sec: float, name: str = "inline") -> None:
-    """Credit fixture-build time recorded outside :func:`artifact` (e.g.
-    per-call scratch synthesis a query must rebuild each run)."""
-    _ARTIFACTS.total += sec
-    _ARTIFACTS.seconds[name] = _ARTIFACTS.seconds.get(name, 0.0) + sec
-
-
 def _fingerprint(sf_dir: str | None) -> tuple:
     """(basename, size, mtime_ns) of each catalog table under ``sf_dir``."""
     if sf_dir is None:
@@ -181,8 +174,10 @@ def artifact(name: str, sf_dir: str | None, build, *key, directory: bool = True)
         d = register_scratch_dir(tempfile.mkdtemp(prefix=f"{name}_"))
     t0 = time.perf_counter()
     value = build(d) if directory else build()
+    sec = time.perf_counter() - t0
     label = f"{name}[{','.join(map(str, key))}]" if key else name
-    add_fixture_seconds(time.perf_counter() - t0, label)
+    _ARTIFACTS.total += sec
+    _ARTIFACTS.seconds[label] = _ARTIFACTS.seconds.get(label, 0.0) + sec
     if directory and value is None:
         value = d
     _ARTIFACTS.entries[(name, sf, key)] = (fingerprint, d, value)

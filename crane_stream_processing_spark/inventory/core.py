@@ -66,6 +66,19 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Reference app parity (SURVEY.md §2.2 P1-P4, §2.4 A1/A2/A4, §2.6 T1).
 # --------------------------------------------------------------------------
+def duck_fields(expr: str) -> str:
+    """DuckDB SQL for the whitespace fields of ``expr``, as the apps read
+    them (Go ``strings.Fields`` over Java's ``\\s``): strip, then split,
+    on one class, so padding never yields an empty leading or trailing
+    field. DuckDB's ``TRIM`` strips spaces only, and RE2's ``\\s`` lacks
+    the ``\\v`` that Java's has."""
+    ws = r"[\s\v]"
+    return (
+        f"string_split_regex(regexp_replace({expr}, '^{ws}+|{ws}+$', '', 'g'), "
+        f"'{ws}+')"
+    )
+
+
 @query(
     "app_wordcount_top5",
     oracle="""
@@ -87,11 +100,11 @@ def app_wordcount_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "app_top_users_top5",
-    oracle="""
+    oracle=f"""
     SELECT followee, cnt FROM (
-      SELECT list_extract(string_split_regex(TRIM(
-               CAST(o_orderkey AS VARCHAR) || ' ' || CAST(o_custkey AS VARCHAR)),
-               '\\s+'), 2) AS followee,
+      SELECT list_extract({duck_fields(
+               "CAST(o_orderkey AS VARCHAR) || ' ' || CAST(o_custkey AS VARCHAR)"
+             )}, 2) AS followee,
              COUNT(*) AS cnt
       FROM orders
       GROUP BY 1
@@ -110,11 +123,11 @@ def app_top_users_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "app_hot_resources_top5",
-    oracle="""
+    oracle=f"""
     SELECT resource, cnt FROM (
       SELECT list_extract(f, 7) AS resource, COUNT(*) AS cnt
       FROM (
-        SELECT string_split_regex(TRIM(line), '\\s+') AS f
+        SELECT {duck_fields("line")} AS f
         FROM (
           SELECT 'h - - [01/Jan/2024: +0000] "GET ' || event_type ||
                  ' HTTP/1.0" 200 ' || CAST(event_id % 97 AS VARCHAR) AS line

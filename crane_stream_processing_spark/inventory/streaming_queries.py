@@ -208,13 +208,10 @@ def replay_batch0(journal_dir: str, what: str) -> None:
     (maxFilesPerTrigger set, source defaults change), partitions >= 1
     would survive the replay and double-apply — so fail LOUDLY instead
     of silently corrupting the graded result."""
-    import os
-
     from ..streaming.ann_ingest import idempotent_batch_sink
+    from ..streaming.ivm import journal_partitions
 
-    parts = sorted(
-        d for d in os.listdir(journal_dir) if d.startswith("__batch_id=")
-    )
+    parts = [d for _, d in journal_partitions(journal_dir)]
     if parts != ["__batch_id=0"]:
         raise AssertionError(
             f"{what}: full-feed replay of batch 0 requires a single-batch "
@@ -1673,12 +1670,12 @@ def stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is the BOTTOM-K of a uniform hash (md5 of the id — the
     min-wise/bottom-k sketch), so it is a pure FUNCTION of the set seen,
     not of arrival order or RNG state. Each micro-batch folds
-    ``bottomk(state ∪ batch)`` and publishes the new sample as a
-    versioned directory behind the same atomic pointer flip as the IVM
-    base (streaming.ivm's manifest discipline). Exactly-once here comes
-    from ALGEBRA, not partition bookkeeping — a third replay-safety
-    mechanism beside the idempotent partition overwrite and the fenced
-    journal: bottom-k is idempotent under re-merge of any already-seen
+    ``bottomk(state ∪ batch)`` and publishes the new sample as the next
+    version of a streaming.sinks versioned store (commit marker after
+    the data, like the IVM base generations). Exactly-once here comes
+    from ALGEBRA, not partition bookkeeping — unlike the idempotent
+    partition overwrite and the fenced journal, it needs no batch ids:
+    bottom-k is idempotent under re-merge of any already-seen
     subset (min-wise sets absorb duplicates), so an at-least-once
     redelivery of ANY batch — not just the offset-log tail — leaves the
     sample bit-identical (asserted in-query by re-merging batch 0's
@@ -1744,8 +1741,8 @@ def stream_weighted_es_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the streamed sample must equal the batch draw row-for-row
     (graded against the same oracle shape). Every property carries over
     unchanged because both samplers are bottom-k over a deterministic
-    per-element key: k-row state at any corpus size, the atomic
-    pointer-flip publish, and exactly-once BY ALGEBRA — a redelivered
+    per-element key: k-row state at any corpus size, the versioned-store
+    publish, and exactly-once BY ALGEBRA — a redelivered
     batch re-derives identical keys and the distinct-before-cut absorbs
     them (asserted in-query via a forced full re-merge). This is the
     'keep a weight-proportional sample of the growing corpus'
@@ -1859,11 +1856,12 @@ def stream_ivm_compaction_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     under its own ``__batch_id`` partition), and after every second
     batch B the maintainer folds partitions ≤ B−1 into a fresh base
     generation (streaming.ivm.compact_ivm_journal: one signed_fold
-    over |groups| + |folded partials| rows, atomically published via
-    the ``.__current`` pointer flip — no crash point leaves the base
+    over |groups| + |folded partials| rows, committed as a version of
+    the journal's ``_base`` store — no crash point leaves the live base
     path absent; folding ≤ B−1 while processing B is replay-safe
-    because B−1 has committed in the offset log). The graded result is
-    the post-drain view: the LIVE base (resolved through the pointer)
+    because B−1 has committed in the offset log). The shared base
+    fixture is generation 0 and is only read. The graded result is
+    the post-drain view: the LIVE base (the newest committed version)
     folded with ONLY the journal tail (read_journal excludes
     everything at or below the fence). Held to the SAME from-scratch
     recompute oracle as the maintenance queries (IVM_ORACLE), so the
@@ -1873,7 +1871,6 @@ def stream_ivm_compaction_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(groups) — it reads per-batch PARTIALS (already one row per
     touched group per batch), never facts, amortized every
     compact_every triggers."""
-    import os
     import tempfile
 
     from . import register_scratch_dir
@@ -1882,30 +1879,14 @@ def stream_ivm_compaction_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         compacted_upto,
         current_base,
         ivm_maintenance_sink,
+        journal_partitions,
         read_journal,
     )
 
-    import time
-
-    from . import add_fixture_seconds
-
     feed_dir = _ivm_feed_dir(spark, sf_dir)
-    # resolve (and possibly build) the shared base artifact BEFORE the
-    # copy timer below: ivm_base_dir credits its own build time, so
-    # building it inside the window would double-count
-    shared_base = ivm_base_dir(spark, sf_dir)
-    scratch = tempfile.mkdtemp(prefix="crane_ivm_cycle_")
-    register_scratch_dir(scratch)
-    journal_dir = os.path.join(scratch, "journal")
-    base_dir = os.path.join(scratch, "base")
-    # private base copy: compaction publishes new generations + the
-    # pointer NEXT TO its base, which must not touch the shared fixture.
-    # Unavoidably per-call (the run mutates it) — credited as fixture
-    # time, not operator time.
-    t0 = time.perf_counter()
-    spark.read.parquet(shared_base).write.parquet(base_dir)
-    add_fixture_seconds(
-        time.perf_counter() - t0, name="crane_ivm_cycle_base_copy"
+    base_dir = ivm_base_dir(spark, sf_dir)
+    journal_dir = register_scratch_dir(
+        tempfile.mkdtemp(prefix="crane_ivm_cycle_")
     )
     feed = (
         spark.readStream.schema("o_custkey long, dn long, dv decimal(28,4)")
@@ -1916,18 +1897,14 @@ def stream_ivm_compaction_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed,
         ivm_maintenance_sink(journal_dir, base_dir=base_dir, compact_every=2),
     )
-    fence = compacted_upto(base_dir)
-    live = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(journal_dir)
-        if d.startswith("__batch_id=")
-    ]
+    fence = compacted_upto(journal_dir)
+    live = [b for b, _ in journal_partitions(journal_dir)]
     if fence < 1 or not live or min(live) <= fence:
         raise AssertionError(
             "in-line compaction did not run as expected: "
-            f"fence={fence}, live partitions={sorted(live)}"
+            f"fence={fence}, live partitions={live}"
         )
     return ivm_fold_view(
-        spark.read.parquet(current_base(base_dir)),
-        read_journal(spark, journal_dir, "o_custkey", base_dir),
+        spark.read.parquet(current_base(journal_dir, base_dir)),
+        read_journal(spark, journal_dir, "o_custkey"),
     )

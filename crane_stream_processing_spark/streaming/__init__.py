@@ -8,8 +8,9 @@ at-least-once-with-duplicates (SURVEY.md §2.9 ST1-ST3).
 
 - :mod:`.sources` — line sources (file-dir, socket, rate) with the
   reference's throttling knobs (S1/S2/S10)
-- :mod:`.sinks` — the versioned sink emulating SDFS put/get-versions
-  (S5-S7), plus readers
+- :mod:`.sinks` — the versioned store emulating SDFS put/get-versions
+  (S5-S7), plus readers: the one publish mechanism for sink snapshots,
+  the sampler's sample and the IVM maintainer's base generations
 - :mod:`.engine` — the app runner: name→pipeline registry → complete-mode
   periodic-trigger query with checkpointing (ST4/ST9)
 - :mod:`.monitor` — delivery accounting: in-plan observed metrics + a
@@ -18,7 +19,8 @@ at-least-once-with-duplicates (SURVEY.md §2.9 ST1-ST3).
   foreachBatch + a batch-id-idempotent parquet sink (exactly-once on
   plain parquet)
 - :mod:`.ivm` / :mod:`.sampling` — the view-maintenance journal sink and
-  the bottom-k sampler fold, also foreachBatch sinks
+  the bottom-k sampler fold, also foreachBatch sinks; each publishes its
+  state as versions of a :mod:`.sinks` store
 
 The sinks here are plain ``(batch_df, batch_id)`` callables: a bounded
 pass drains a stream into one through

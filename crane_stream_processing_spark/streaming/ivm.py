@@ -16,25 +16,23 @@ The journal grows one partition per trigger, so a long-running maintainer
 periodically COMPACTS: fold the journal partitions for batch ids strictly
 below the last committed batch into a new base, then drop them.
 
-Crash-safety is ATOMIC, not assumed: each compacted base is written into
-its own VERSIONED directory (``<base>.__upto<N>`` — named by the highest
-batch id folded into it, so a retried compaction overwrites its own
-staging rather than colliding), and the only mutation readers can
-observe is an atomic pointer flip — the 1-line ``<base>.__current``
-manifest is written to a temp name and ``os.rename``d into place (atomic
-replace on POSIX). Readers (:func:`current_base` / :func:`read_journal`)
-resolve the live base THROUGH the pointer, so the current base path is
-never absent at any crash point: die before the flip and the pointer
-still names the old base (the half-built versioned dir is inert and gets
-overwritten by the retry); die after the flip but before cleanup and the
-fence (the ``upto`` recorded in the pointer) makes the already-folded
-journal partitions IGNORED, never double-applied — the next compaction
-removes them as cleanup. The previous base generation is retained until
-the following compaction retires it, so an in-flight reader that
-resolved the pointer just before a flip still has a live directory.
-(The ORIGINAL base directory is never deleted — it anchors the naming
-scheme and is the no-pointer fallback; one stale copy of the initial
-state is the bounded cost.)
+Crash-safety is ATOMIC, not assumed: each compacted base is a version
+of the ``streaming.sinks`` versioned store ``_base`` INSIDE the journal
+directory (``<journal>/_base/v=<N>/``), and its version id is the fence —
+the highest batch id folded into it. The ``_`` prefix hides the store
+from ``spark.read.parquet(<journal>)`` and from the journal sink's
+partition overwrites. A version becomes live only when its commit marker
+lands, after its data, so: die before the marker and readers still
+resolve the previous base + full journal (the half-built version dir is
+inert and gets overwritten by the retry, which writes the same id);
+die after the marker but before cleanup and the fence makes the
+already-folded journal partitions IGNORED, never double-applied — the
+next compaction removes them as cleanup. The previous base generation is
+retained until the following compaction expires it, so an in-flight
+reader that resolved the live version just before a commit still has a
+live directory. The caller's ``base_dir`` is generation 0: read when no
+version is committed, never written.
+
 Replay safety (same as every offset-log sink): a batch can only replay
 while it is the LAST uncommitted entry in the checkpoint's offset log —
 once batch N+1 has committed, batches ≤ N can never be redelivered, so
@@ -44,11 +42,13 @@ the one forbidden move, hence the explicit ``upto_batch_id`` argument.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sinks import VersionedSink, expire_versions, list_versions, version_dir
 
 __all__ = [
     "ivm_maintenance_sink",
@@ -57,9 +57,10 @@ __all__ = [
     "signed_fold",
     "compacted_upto",
     "current_base",
+    "journal_partitions",
 ]
 
-_POINTER = ".__current"  # <base>.__current: {"upto": N} — atomic flip target
+_BASE = "_base"  # <journal>/_base: the compacted-base generations
 
 
 def signed_fold(
@@ -108,7 +109,7 @@ def ivm_maintenance_sink(
     With ``base_dir`` + ``compact_every=N``, the maintainer runs its own
     compaction cycle IN-LINE: after writing batch id B ≡ 0 (mod N), it
     folds journal partitions up to B−1 into a new base generation (the
-    atomic pointer flip of :func:`compact_ivm_journal`). Replay-safe by
+    versioned-store commit of :func:`compact_ivm_journal`). Replay-safe by
     construction: while batch B is being processed, batch B−1 has
     already committed in the offset log and can never be redelivered —
     so ≤ B−1 is always sound to fold; and if batch B itself replays,
@@ -145,32 +146,26 @@ def ivm_maintenance_sink(
     return compacting_sink
 
 
-def compacted_upto(base_dir: str | None) -> int:
-    """The base's compaction fence: highest batch id ever folded into it
-    (−1 when no compaction has run / no base given). Read from the
-    atomic ``<base>.__current`` pointer manifest."""
-    if base_dir is None:
-        return -1
-    path = base_dir.rstrip("/") + _POINTER
-    if not os.path.exists(path):
-        return -1
-    with open(path) as f:
-        return int(json.load(f)["upto"])
+def compacted_upto(journal_dir: str) -> int:
+    """The compaction fence: highest batch id ever folded into the base
+    (−1 before the first compaction) — the newest committed version of
+    the journal's ``_base`` store."""
+    versions = list_versions(journal_dir, _BASE)
+    return versions[0] if versions else -1
 
 
-def current_base(base_dir: str) -> str:
-    """Resolve the LIVE base directory through the pointer manifest: the
-    original ``base_dir`` until a compaction ever ran, then
-    ``<base>.__upto<fence>``. The pointer flips atomically (temp-write +
-    rename), so this path always exists at every crash point."""
-    fence = compacted_upto(base_dir)
-    if fence < 0:
-        return base_dir
-    return base_dir.rstrip("/") + f".__upto{fence}"
+def current_base(journal_dir: str, base_dir: str) -> str:
+    """The LIVE base directory: ``base_dir`` (generation 0) until a
+    compaction ever committed, then the fence's version dir. A version
+    is committed only after its data, so this path always exists at
+    every crash point."""
+    fence = compacted_upto(journal_dir)
+    return base_dir if fence < 0 else version_dir(journal_dir, _BASE, fence)
 
 
-def _journal_partitions(journal_dir: str) -> list[tuple[int, str]]:
-    """(batch_id, dirname) for every ``__batch_id=`` partition present."""
+def journal_partitions(journal_dir: str) -> list[tuple[int, str]]:
+    """(batch_id, dirname) for every ``__batch_id=`` partition present,
+    in batch order."""
     return sorted(
         (int(d.split("=", 1)[1]), d)
         for d in os.listdir(journal_dir)
@@ -178,24 +173,18 @@ def _journal_partitions(journal_dir: str) -> list[tuple[int, str]]:
     )
 
 
-def read_journal(
-    spark: SparkSession,
-    journal_dir: str,
-    key: str,
-    base_dir: str | None = None,
-) -> DataFrame:
+def read_journal(spark: SparkSession, journal_dir: str, key: str) -> DataFrame:
     """Journal partials at their logical grain (key, dn, dv) —
-    ``__batch_id`` is the idempotency ledger, not data. When ``base_dir``
-    is given, partitions at or below its compaction fence are EXCLUDED:
-    they are stale leftovers of a compaction that crashed between the
-    pointer flip and the cleanup, and their deltas already live in the
-    base — the fence is what makes that crash window safe. A fully
-    compacted journal (zero live partitions — the steady state of a
-    long-running maintainer) returns an EMPTY frame with the journal
-    schema instead of tripping parquet schema inference on an empty
-    directory (round-9 advice)."""
-    fence = compacted_upto(base_dir)
-    live = [d for b, d in _journal_partitions(journal_dir) if b > fence]
+    ``__batch_id`` is the idempotency ledger, not data. Partitions at or
+    below the compaction fence are EXCLUDED: they are stale leftovers of
+    a compaction that crashed between its commit and the cleanup, and
+    their deltas already live in the base — the fence is what makes that
+    crash window safe. A fully compacted journal (zero live partitions —
+    the steady state of a long-running maintainer) returns an EMPTY
+    frame with the journal schema instead of tripping parquet schema
+    inference on an empty directory."""
+    fence = compacted_upto(journal_dir)
+    live = [d for b, d in journal_partitions(journal_dir) if b > fence]
     if not live:
         return spark.createDataFrame(
             [], f"{key} long, dn long, dv decimal(28,4)"
@@ -219,65 +208,45 @@ def compact_ivm_journal(
     maintenance cycle that keeps read-time fold cost
     O(groups + recent batches) forever:
 
-    1. new_base = :func:`signed_fold`(current base, folded partials) —
-       one groupBy over |groups| + |partials| rows, never facts — written
-       into its own versioned directory ``<base>.__upto<N>`` (a retried
-       compaction overwrites the same staging, idempotent).
-    2. The ``<base>.__current`` pointer flips ATOMICALLY (temp-write +
-       ``os.rename``) to name the new version and record the fence.
-       From that instant :func:`current_base` resolves the new base and
+    1. new_base = :func:`signed_fold`(live base, folded partials) — one
+       groupBy over |groups| + |partials| rows, never facts — written as
+       version ``upto_batch_id`` of the journal's ``_base`` store (a
+       retried compaction overwrites its own uncommitted version).
+    2. The version's commit marker lands after its data. From that
+       instant :func:`current_base` resolves the new base and
        :func:`read_journal` ignores the folded partitions even if step 3
        never runs (crash-safe against double-apply); before that instant
        readers see the old base + full journal. No crash point leaves
-       the base path absent.
-    3. Cleanup: the folded journal partitions are deleted and base
-       generations OLDER than the one just retired are removed (the
-       immediately-previous generation is kept one cycle for in-flight
-       readers that resolved the pointer pre-flip).
+       the live base path absent.
+    3. Cleanup: the folded journal partitions are deleted and all but
+       the two newest base versions expire (the previous generation is
+       kept one cycle for in-flight readers that resolved it pre-commit).
 
-    See the module docstring for the crash analysis and the
-    replay-safety precondition on ``upto_batch_id``. Returns the number
-    of journal partitions folded."""
-    import shutil
-
-    fence = compacted_upto(base_dir)
-    parts = [
-        (b, d)
-        for b, d in _journal_partitions(journal_dir)
-        if fence < b <= upto_batch_id
-    ]
+    ``base_dir`` is generation 0 and is only ever read. See the module
+    docstring for the crash analysis and the replay-safety precondition
+    on ``upto_batch_id``. Returns the number of journal partitions
+    folded."""
+    fence = compacted_upto(journal_dir)
+    present = journal_partitions(journal_dir)
+    parts = [d for b, d in present if fence < b <= upto_batch_id]
     # stale leftovers at or below the fence are pure cleanup — their
     # deltas are already in the base
-    stale = [d for b, d in _journal_partitions(journal_dir) if b <= fence]
-    for d in stale:
-        shutil.rmtree(os.path.join(journal_dir, d), ignore_errors=True)
+    for b, d in present:
+        if b <= fence:
+            shutil.rmtree(os.path.join(journal_dir, d), ignore_errors=True)
     if not parts:
         return 0
     folded = spark.read.parquet(
-        *[os.path.join(journal_dir, d) for _, d in parts]
+        *[os.path.join(journal_dir, d) for d in parts]
     ).select(key, "dn", "dv")
-    old_live = current_base(base_dir)
     new_base = signed_fold(
-        spark.read.parquet(old_live), folded, key, count_col, sum_col
+        spark.read.parquet(current_base(journal_dir, base_dir)),
+        folded, key, count_col, sum_col,
     )
-    root = base_dir.rstrip("/")
-    versioned = root + f".__upto{int(upto_batch_id)}"
-    new_base.write.mode("overwrite").parquet(versioned)
-    # THE atomic flip: temp-write the 1-line manifest, rename into place
-    pointer = root + _POINTER
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"upto": int(upto_batch_id)}, f)
-    os.rename(tmp, pointer)
-    # cleanup (all post-flip, all crash-tolerant): folded journal
+    VersionedSink(journal_dir, _BASE).write_version(new_base, int(upto_batch_id))
+    # cleanup (all post-commit, all crash-tolerant): folded journal
     # partitions, then base generations older than the one just retired
-    for _, d in parts:
+    for d in parts:
         shutil.rmtree(os.path.join(journal_dir, d), ignore_errors=True)
-    parent, name = os.path.split(root)
-    for entry in os.listdir(parent or "."):
-        if not entry.startswith(name + ".__upto"):
-            continue
-        v = int(entry.rsplit(".__upto", 1)[1])
-        if v < fence:  # strictly older than the retired generation
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+    expire_versions(journal_dir, _BASE, keep=2)
     return len(parts)

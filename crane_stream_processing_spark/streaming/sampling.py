@@ -5,20 +5,18 @@ The sample is the bottom-k of a uniform hash of the id (md5), so it is a
 pure FUNCTION of the element set, independent of arrival order, batch
 boundaries, or RNG state — the property that makes the classic reservoir
 requirement deterministic, distributed, and gradeable. Each micro-batch
-folds ``bottomk(state ∪ batch)`` and publishes the new sample as a
-versioned directory behind an atomic pointer flip (the
-``streaming.ivm`` manifest discipline: temp-write + ``os.rename``, so a
-reader-visible state path always exists at every crash point; the
-previous generation is retained one cycle for in-flight readers).
+folds ``bottomk(state ∪ batch)`` and publishes the new sample as the
+next version of a ``streaming.sinks`` versioned store (commit marker
+after the data, so a reader always resolves a complete sample; the
+previous version is retained one cycle for in-flight readers).
 
 Exactly-once comes from ALGEBRA, not batch bookkeeping: bottom-k over a
 SET absorbs re-merging any already-seen subset (``distinct`` before the
 cut — a redelivered element collapses with its stored copy instead of
 occupying a sample slot), so an at-least-once redelivery of ANY batch —
-not just the offset-log tail — leaves the sample bit-identical. This is
-the third replay-safety mechanism in the engine, beside the idempotent
-``__batch_id`` partition overwrite (ann_ingest) and the fenced journal
-(ivm).
+not just the offset-log tail — leaves the sample bit-identical. Unlike
+the idempotent ``__batch_id`` partition overwrite (ann_ingest) and the
+fenced journal (ivm), it needs no batch-id bookkeeping at all.
 
 At 100 TB: state is k rows regardless of corpus size; each trigger costs
 one local top-k heap per partition plus a k-row merge, and the hash
@@ -28,10 +26,11 @@ prefix property gives consistent samples across refreshes.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sinks import VersionedSink, expire_versions, list_versions, read_latest
 
 __all__ = ["bottomk_sampler", "es_keyed"]
 
@@ -69,8 +68,9 @@ def bottomk_sampler(
     """Build the sampler's ``(fold, current)`` pair over ``state_root``.
     ``fold(batch_df, batch_id)`` merges a batch (any DataFrame carrying
     ``id_col``) into the published sample; ``current()`` reads the live
-    sample (``id_col``, ``h``) through the pointer. ``fold`` is the
-    foreachBatch sink a stream drains into
+    sample (``id_col``, ``h``): the newest committed version of the
+    versioned store named ``basename(state_root)`` under its parent
+    directory. ``fold`` is the foreachBatch sink a stream drains into
     (``inventory.streaming_queries.drain``); tests and the graded
     queries force deterministic replays by calling it again with any
     batch.
@@ -82,7 +82,7 @@ def bottomk_sampler(
     the same min-wise state machine serves both because both are
     bottom-k over a deterministic per-element key. ``key_type`` is the
     ``h`` column's type for the empty pre-first-fold frame."""
-    ptr = state_root + ".__ptr"
+    store = VersionedSink(*os.path.split(state_root.rstrip("/")))
     if keyed is None:
         def keyed(df: DataFrame) -> DataFrame:
             return df.select(
@@ -97,44 +97,21 @@ def bottomk_sampler(
             df.distinct().orderBy("h", id_col).limit(k).select(id_col, "h")
         )
 
-    def current_version() -> int:
-        if not os.path.exists(ptr):
-            return -1
-        with open(ptr) as f:
-            return int(f.read())
-
     def current() -> DataFrame:
-        v = current_version()
-        if v < 0:
+        if not list_versions(store.base_dir, store.name):
             return spark.createDataFrame(
                 [], f"{id_col} long, h {key_type}"
             )
-        return spark.read.parquet(state_root + f".__v{v}")
+        return read_latest(spark, store.base_dir, store.name)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = keyed(batch_df)
-        cur_v = current_version()
-        if cur_v >= 0:
-            merged = bottomk(current().unionByName(hashed))
-        else:
-            merged = bottomk(hashed)
-        # ALWAYS a fresh version dir (cur+1, never the batch id): the
-        # fold READS the current version, so writing in place would
-        # delete its own input mid-plan; a replayed batch simply mints
-        # another version with bit-identical content — the pointer
-        # number is bookkeeping, the SET is what the grade holds.
-        new_v = cur_v + 1
-        merged.write.mode("overwrite").parquet(state_root + f".__v{new_v}")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(new_v))
-        os.rename(tmp, ptr)  # atomic publish
-        # retire generations older than the previous (reader-safe lag)
-        for v in range(new_v - 2, -1, -1):
-            old = state_root + f".__v{v}"
-            if os.path.isdir(old):
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                break
+        # ALWAYS a fresh version (newest+1, never the batch id): the fold
+        # READS the current version, so writing in place would delete its
+        # own input mid-plan; a replayed batch simply mints another
+        # version with bit-identical content — the version number is
+        # bookkeeping, the SET is what the grade holds.
+        store.write_next(bottomk(current().unionByName(keyed(batch_df))))
+        # keep the previous version one cycle for in-flight readers
+        expire_versions(store.base_dir, store.name, keep=2)
 
     return fold, current

@@ -29,6 +29,11 @@ shared storage (marker rename is atomic on HDFS; on S3A the destination
 object appears only once fully copied, which preserves the
 reader-visible invariant for these single-writer markers).
 
+The same store is the one publish mechanism for other streaming state:
+the bottom-k sampler's sample (``streaming.sampling``) and the IVM
+maintainer's compacted base generations (``streaming.ivm``) are versions
+of a name here, so ``store`` / ``ls`` list them like any sink output.
+
 Scale: each version is a normal partitioned parquet write — the sink
 inherits Spark's parallel write path; readers prune to the selected
 versions only (directory-level pruning, no full-listing scans).
@@ -154,10 +159,12 @@ __all__ = [
     "compact_latest",
     "delete_name",
     "store_names",
+    "version_dir",
 ]
 
 
-def _vdir(base_dir: str, name: str, version: int) -> str:
+def version_dir(base_dir: str, name: str, version: int) -> str:
+    """The data directory of one version (committed or not)."""
     return _join(base_dir, name, f"v={version:020d}")
 
 
@@ -181,7 +188,7 @@ class VersionedSink:
 
     def write_version(self, df: DataFrame, version: int) -> None:
         fs = _fs(self.base_dir)
-        path = _vdir(self.base_dir, self.name, version)
+        path = version_dir(self.base_dir, self.name, version)
         mpath = _join(
             _manifest_dir(self.base_dir, self.name), f"{version:020d}.json"
         )
@@ -200,6 +207,16 @@ class VersionedSink:
             "n_columns": len(df.columns),
         }
         fs.write_atomic(mpath, json.dumps(marker))  # atomic commit marker
+
+    def write_next(self, df: DataFrame) -> int:
+        """Write ``df`` as version newest+1 (0 for a new name) and return
+        that version id. Single writer per name: the id is allocated from
+        the committed markers, so a crash before the marker leaves the
+        same id to the retry, which overwrites its own uncommitted data."""
+        versions = list_versions(self.base_dir, self.name)
+        version = (versions[0] + 1) if versions else 0
+        self.write_version(df, version)
+        return version
 
 
 class MergeSink(VersionedSink):
@@ -268,9 +285,7 @@ class MergeSink(VersionedSink):
             )
         else:
             batch = batch_df.dropDuplicates(self.keys)  # keys-only rows
-        versions = list_versions(self.base_dir, self.name)
-        version = (versions[0] + 1) if versions else 0
-        if not versions:
+        if not list_versions(self.base_dir, self.name):
             merged = batch
         else:
             current = read_latest(spark, self.base_dir, self.name)
@@ -278,7 +293,7 @@ class MergeSink(VersionedSink):
                 batch.select(*self.keys), on=self.keys, how="left_anti"
             )
             merged = kept.unionByName(batch)
-        self.write_version(merged, version)
+        version = self.write_next(merged)
         fs.write_atomic(
             self._batch_marker(batch_id),
             json.dumps({"batch_id": batch_id, "version": version}),
@@ -301,7 +316,7 @@ def read_latest(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     versions = list_versions(base_dir, name)
     if not versions:
         raise FileNotFoundError(f"no committed versions for {name!r} in {base_dir}")
-    return spark.read.parquet(_vdir(base_dir, name, versions[0]))
+    return spark.read.parquet(version_dir(base_dir, name, versions[0]))
 
 
 def expire_versions(base_dir: str, name: str, keep: int) -> list[int]:
@@ -316,7 +331,7 @@ def expire_versions(base_dir: str, name: str, keep: int) -> list[int]:
         marker = _join(_manifest_dir(base_dir, name), f"{v:020d}.json")
         if fs.exists(marker):
             fs.remove(marker)
-        fs.rmtree(_vdir(base_dir, name, v))
+        fs.rmtree(version_dir(base_dir, name, v))
     return victims
 
 
@@ -343,15 +358,8 @@ def compact_latest(
     compaction there may be overwritten by the next snapshot (harmless:
     complete snapshots carry the full state) — compact those after the
     query stops or on the read path."""
-    versions = list_versions(base_dir, name)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions for {name!r} in {base_dir}")
-    latest = versions[0]
-    df = spark.read.parquet(_vdir(base_dir, name, latest)).coalesce(target_files)
-    new_version = latest + 1
-    sink = VersionedSink(base_dir, name)
-    sink.write_version(df, new_version)
-    return new_version
+    df = read_latest(spark, base_dir, name).coalesce(target_files)
+    return VersionedSink(base_dir, name).write_next(df)
 
 
 def read_version(
@@ -362,7 +370,7 @@ def read_version(
         raise FileNotFoundError(
             f"version {version} of {name!r} not committed in {base_dir}"
         )
-    return spark.read.parquet(_vdir(base_dir, name, version))
+    return spark.read.parquet(version_dir(base_dir, name, version))
 
 
 def read_versions(
@@ -378,7 +386,7 @@ def read_versions(
     if not versions:
         raise FileNotFoundError(f"no committed versions for {name!r} in {base_dir}")
     dfs = [
-        spark.read.parquet(_vdir(base_dir, name, v)).withColumn("version", F.lit(v))
+        spark.read.parquet(version_dir(base_dir, name, v)).withColumn("version", F.lit(v))
         for v in versions
     ]
     out = dfs[0]

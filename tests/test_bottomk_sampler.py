@@ -11,6 +11,10 @@ from pyspark.sql import functions as F
 
 from crane_stream_processing_spark.inventory.streaming_queries import drain
 from crane_stream_processing_spark.streaming.sampling import bottomk_sampler
+from crane_stream_processing_spark.streaming.sinks import (
+    list_versions,
+    store_names,
+)
 
 
 def _ids(df):
@@ -70,12 +74,10 @@ def test_multibatch_middle_replay_restart_and_retirement(spark, tmp_path):
     assert _ids(current()) == want
 
     # generation retirement: only the current and previous versions live
-    versions = sorted(
-        int(d.rsplit(".__v", 1)[1])
-        for d in os.listdir(str(tmp_path))
-        if d.startswith("sample.__v")
-    )
+    versions = sorted(list_versions(str(tmp_path), "sample"))
     assert len(versions) == 2 and versions[-1] == versions[0] + 1
+    # the sample is an ordinary store name, so `crane store` lists it
+    assert store_names(str(tmp_path)) == ["sample"]
 
     # restart on the SAME checkpoint: only the new file folds in
     _write_ids(spark, feed, 3, list(range(120, 200)))

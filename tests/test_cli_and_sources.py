@@ -426,6 +426,48 @@ def test_apps_trim_matches_strings_fields_semantics(spark):
     assert {r.resource: r.cnt for r in apps.hot_resources(df, k=n).collect()} == want_hot
 
 
+def test_app_oracles_split_fields_like_the_apps(spark):
+    """The DuckDB oracles of app_top_users_top5 and app_hot_resources_top5
+    read fields through ``core.duck_fields``; on tab-, space- and
+    \\v-padded lines it must yield the fields the apps read, so the
+    oracles' counts agree with apps.top_users / apps.hot_resources."""
+    from collections import Counter
+
+    import duckdb
+
+    from crane_stream_processing_spark import apps
+    from crane_stream_processing_spark.inventory import REGISTRY
+    from crane_stream_processing_spark.inventory.core import duck_fields
+
+    edge = "CAST(o_orderkey AS VARCHAR) || ' ' || CAST(o_custkey AS VARCHAR)"
+    assert duck_fields(edge) in REGISTRY["app_top_users_top5"].oracle
+    assert duck_fields("line") in REGISTRY["app_hot_resources_top5"].oracle
+
+    lines = [v for v in _fields_lines() if v is not None]
+    lines += ["\talice bob", "alice\tbob \t", " \x0balice bob\x0b"]
+    con = duckdb.connect()
+    try:
+        got = [
+            con.execute(f"SELECT {duck_fields('?')}", [v]).fetchone()[0]
+            for v in lines
+        ]
+    finally:
+        con.close()
+    # a blank line splits to [''] rather than []: one empty field, which
+    # neither oracle's field-count filter or field index can select
+    assert [[] if f == [""] else f for f in got] == [v.split() for v in lines]
+
+    duck_users = Counter(f[1] for f in got if len(f) == 2)
+    duck_hot = Counter(
+        f[6] for v, f in zip(lines, got) if "200" in v and len(f) >= 10
+    )
+    assert duck_users["bob"] >= 3 and duck_hot
+    df = spark.createDataFrame([(v,) for v in lines], "value string")
+    n = len(lines)
+    assert {r.followee: r.cnt for r in apps.top_users(df, k=n).collect()} == duck_users
+    assert {r.resource: r.cnt for r in apps.hot_resources(df, k=n).collect()} == duck_hot
+
+
 def test_grouped_agg_udf_multi_column(spark):
     """The grouped-agg wrapper must forward every bound column — a
     weighted mean takes (value, weight)."""

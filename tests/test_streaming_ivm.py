@@ -148,6 +148,17 @@ def test_restart_from_checkpoint_processes_only_new_files(spark, tmp_path):
     assert got == scratch == {1: (2, 10.0), 2: (2, 11.0), 3: (2, 15.0)}
 
 
+def _file_stats(root):
+    """(relative path, size, mtime_ns) of every file under ``root``."""
+    out = set()
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(dirpath, f))
+            rel = os.path.relpath(os.path.join(dirpath, f), root)
+            out.add((rel, st.st_size, st.st_mtime_ns))
+    return out
+
+
 def _view_from_batch(spark, base_df, feed_dir):
     delta = spark.read.schema(FEED_SCHEMA).parquet(feed_dir)
     return {
@@ -160,12 +171,18 @@ def test_journal_compaction_folds_and_preserves_view(spark, tmp_path):
     """Compacting journal partitions <= N into the base must leave the
     folded view bit-identical, delete exactly those partitions, and
     carry zero-count group deletion through the rewrite. The new base
-    lands in a versioned directory and becomes live via the atomic
-    pointer flip (resolved through current_base)."""
+    is a version of the journal's ``_base`` store and becomes live when
+    its commit marker lands (resolved through current_base); the
+    generation-0 base_dir is never written."""
     from crane_stream_processing_spark.streaming.ivm import (
         compact_ivm_journal,
         current_base,
         read_journal,
+    )
+    from crane_stream_processing_spark.streaming.sinks import (
+        list_versions,
+        store_names,
+        version_dir,
     )
 
     feed = str(tmp_path / "feed")
@@ -173,6 +190,7 @@ def test_journal_compaction_folds_and_preserves_view(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     base_dir = str(tmp_path / "base")
     _base(spark).write.mode("overwrite").parquet(base_dir)
+    gen0 = _file_stats(base_dir)
 
     waves = [
         [(1, 1, D("3.0000")), (2, -1, D("-5.0000"))],   # batch 0: cust 2 -> 0
@@ -187,8 +205,8 @@ def test_journal_compaction_folds_and_preserves_view(spark, tmp_path):
         return {
             r.o_custkey: (r.n_orders, float(r.total_price))
             for r in ivm_fold_view(
-                spark.read.parquet(current_base(base_dir)),
-                read_journal(spark, journal, "o_custkey", base_dir),
+                spark.read.parquet(current_base(journal, base_dir)),
+                read_journal(spark, journal, "o_custkey"),
             ).collect()
         }
 
@@ -201,15 +219,20 @@ def test_journal_compaction_folds_and_preserves_view(spark, tmp_path):
     left = {d for d in os.listdir(journal) if d.startswith("__batch_id=")}
     assert left == {"__batch_id=2"}
     assert view() == before
-    # the live base is the versioned dir; the original remains on disk
-    # (previous generation, kept one cycle for in-flight readers)
-    assert current_base(base_dir) == base_dir + ".__upto1"
+    # the live base is store version 1 (the fence); the original remains
+    # on disk, untouched (generation 0, the previous generation here)
+    assert list_versions(journal, "_base") == [1]
+    assert current_base(journal, base_dir) == version_dir(journal, "_base", 1)
     assert os.path.isdir(base_dir)
+    assert _file_stats(base_dir) == gen0
+    # the generations are an ordinary store name, so `crane store` and
+    # `crane ls` see them
+    assert store_names(journal) == ["_base"]
 
     # customer 2 zeroed out in batch 0 must NOT resurface in the new base
     base_keys = {
         r.o_custkey
-        for r in spark.read.parquet(current_base(base_dir)).collect()
+        for r in spark.read.parquet(current_base(journal, base_dir)).collect()
     }
     assert 2 not in base_keys
 
@@ -218,8 +241,8 @@ def test_journal_compaction_folds_and_preserves_view(spark, tmp_path):
 
 
 def test_compaction_fence_survives_crash_before_cleanup(spark, tmp_path):
-    """Crash window: the new base (with its _compacted_upto fence) is
-    swapped in but the folded journal partitions were never deleted. The
+    """Crash window: the new base (its store version id is the fence) is
+    committed but the folded journal partitions were never deleted. The
     read path must IGNORE the stale partitions (their deltas already
     live in the base — re-applying them would double-count), and the
     next compaction must treat them as cleanup, not fold input."""
@@ -254,15 +277,15 @@ def test_compaction_fence_survives_crash_before_cleanup(spark, tmp_path):
     assert compact_ivm_journal(spark, base_dir, journal, upto_batch_id=1) == 2
     shutil.copytree(saved, os.path.join(journal, "__batch_id=0"))
 
-    assert compacted_upto(base_dir) == 1
+    assert compacted_upto(journal) == 1
     # the fence excludes the stale partition: only batch 2's delta reads
-    rows = read_journal(spark, journal, "o_custkey", base_dir).collect()
+    rows = read_journal(spark, journal, "o_custkey").collect()
     assert {(r.o_custkey, r.dn) for r in rows} == {(4, 1)}
     view = {
         r.o_custkey: (r.n_orders, float(r.total_price))
         for r in ivm_fold_view(
-            spark.read.parquet(current_base(base_dir)),
-            read_journal(spark, journal, "o_custkey", base_dir),
+            spark.read.parquet(current_base(journal, base_dir)),
+            read_journal(spark, journal, "o_custkey"),
         ).collect()
     }
     assert view == {1: (3, 13.0), 2: (1, 5.0), 3: (2, 11.0), 4: (1, 9.0)}
@@ -270,17 +293,17 @@ def test_compaction_fence_survives_crash_before_cleanup(spark, tmp_path):
     # next compaction sweeps the stale partition as cleanup (fold count
     # 1: only batch 2), and the fence advances
     assert compact_ivm_journal(spark, base_dir, journal, upto_batch_id=2) == 1
-    assert compacted_upto(base_dir) == 2
+    assert compacted_upto(journal) == 2
     assert not any(
         d.startswith("__batch_id=") for d in os.listdir(journal)
     )
     final = {
         r.o_custkey: (r.n_orders, float(r.total_price))
         for r in ivm_fold_view(
-            spark.read.parquet(current_base(base_dir)),
+            spark.read.parquet(current_base(journal, base_dir)),
             # the fully-compacted steady state: read_journal must return
-            # an empty typed frame, not trip schema inference (r9 advice)
-            read_journal(spark, journal, "o_custkey", base_dir),
+            # an empty typed frame, not trip schema inference
+            read_journal(spark, journal, "o_custkey"),
         ).collect()
     }
     assert final == view
@@ -289,21 +312,25 @@ def test_compaction_fence_survives_crash_before_cleanup(spark, tmp_path):
 def test_compaction_crash_windows_leave_base_always_readable(
     spark, tmp_path, monkeypatch
 ):
-    """The round-9 advice's atomicity bar: kill the compactor at BOTH
-    positions the old two-rename design was vulnerable at — (a) after
-    the new base is fully written but before it becomes live, (b) after
-    it becomes live but before cleanup — and at each point a reader
-    resolving through current_base() must see an EXISTING directory
-    whose fold is correct. The only mutation in the whole cycle is the
-    atomic pointer rename, so there is no reader-visible gap."""
+    """The atomicity bar: kill the compactor at BOTH crash windows —
+    (a) after the new base is fully written but before it becomes live,
+    (b) after it becomes live but before cleanup — and at each point a
+    reader resolving through current_base() must see an EXISTING
+    directory whose fold is correct. The only reader-visible mutation in
+    the whole cycle is the store's atomic commit-marker rename, so there
+    is no reader-visible gap."""
     import shutil as real_shutil
 
-    from crane_stream_processing_spark.streaming import ivm as ivm_mod
+    from crane_stream_processing_spark.streaming import sinks as sinks_mod
     from crane_stream_processing_spark.streaming.ivm import (
         compact_ivm_journal,
         compacted_upto,
         current_base,
         read_journal,
+    )
+    from crane_stream_processing_spark.streaming.sinks import (
+        list_versions,
+        version_dir,
     )
 
     feed = str(tmp_path / "feed")
@@ -324,35 +351,37 @@ def test_compaction_crash_windows_leave_base_always_readable(
         return {
             r.o_custkey: (r.n_orders, float(r.total_price))
             for r in ivm_fold_view(
-                spark.read.parquet(current_base(base_dir)),
-                read_journal(spark, journal, "o_custkey", base_dir),
+                spark.read.parquet(current_base(journal, base_dir)),
+                read_journal(spark, journal, "o_custkey"),
             ).collect()
         }
 
     expect = {1: (3, 13.0), 2: (1, 5.0), 3: (2, 11.0), 4: (1, 9.0)}
     assert view() == expect
 
-    # (a) crash BETWEEN writing the new base and the pointer flip: fail
-    # the flip itself (the single os.rename)
-    def boom_rename(src, dst):
-        raise OSError("injected crash before pointer flip")
+    # (a) crash BETWEEN writing the new base and its commit: fail the
+    # commit itself (the marker's single os.replace)
+    def boom_replace(src, dst):
+        raise OSError("injected crash before commit marker")
 
-    monkeypatch.setattr(ivm_mod.os, "rename", boom_rename)
+    monkeypatch.setattr(sinks_mod.os, "replace", boom_replace)
     with pytest.raises(OSError, match="injected crash"):
         compact_ivm_journal(spark, base_dir, journal, upto_batch_id=1)
     monkeypatch.undo()
-    # pointer never flipped: reader sees the ORIGINAL base + full
-    # journal — identical view, live path exists
-    assert compacted_upto(base_dir) == -1
-    assert current_base(base_dir) == base_dir
-    assert os.path.isdir(current_base(base_dir))
+    # never committed: reader sees the ORIGINAL base + full journal —
+    # identical view, live path exists; the half-built version is inert
+    assert os.path.isdir(version_dir(journal, "_base", 1))
+    assert compacted_upto(journal) == -1
+    assert current_base(journal, base_dir) == base_dir
+    assert os.path.isdir(current_base(journal, base_dir))
     assert view() == expect
 
-    # retry succeeds and OVERWRITES the half-built versioned dir
+    # retry succeeds and OVERWRITES the half-built version
     assert compact_ivm_journal(spark, base_dir, journal, upto_batch_id=1) == 2
+    assert list_versions(journal, "_base") == [1]
     assert view() == expect
 
-    # (b) crash AFTER the flip, before cleanup: fail the first rmtree
+    # (b) crash AFTER the commit, before cleanup: fail the first rmtree
     def boom_rmtree(path, ignore_errors=False):
         raise OSError("injected crash before cleanup")
 
@@ -360,11 +389,11 @@ def test_compaction_crash_windows_leave_base_always_readable(
     with pytest.raises(OSError, match="injected crash"):
         compact_ivm_journal(spark, base_dir, journal, upto_batch_id=2)
     monkeypatch.undo()
-    # pointer flipped: fence excludes the folded-but-not-deleted batch-2
+    # committed: fence excludes the folded-but-not-deleted batch-2
     # partition, the live base exists, the view is unchanged
-    assert compacted_upto(base_dir) == 2
-    assert current_base(base_dir) == base_dir + ".__upto2"
-    assert os.path.isdir(current_base(base_dir))
+    assert compacted_upto(journal) == 2
+    assert current_base(journal, base_dir) == version_dir(journal, "_base", 2)
+    assert os.path.isdir(current_base(journal, base_dir))
     assert view() == expect
     # next cycle sweeps the stale partition as cleanup, folds nothing new
     assert compact_ivm_journal(spark, base_dir, journal, upto_batch_id=2) == 0
@@ -460,13 +489,14 @@ def test_auto_compaction_inside_maintainer(spark, tmp_path):
     drains — after five 1-file micro-batches, compactions fired at
     batch ids 2 and 4 (each folding everything below the then-current
     batch), the journal holds only the uncompacted tail, the base
-    resolved through the pointer carries the folded state, and the
+    resolved through the store carries the folded state, and the
     total view equals a from-scratch fold of the whole feed."""
     from crane_stream_processing_spark.streaming.ivm import (
         compacted_upto,
         current_base,
         read_journal,
     )
+    from crane_stream_processing_spark.streaming.sinks import list_versions
 
     feed = str(tmp_path / "feed")
     journal = str(tmp_path / "journal")
@@ -491,15 +521,41 @@ def test_auto_compaction_inside_maintainer(spark, tmp_path):
         checkpoint=ckpt,
     )
 
-    assert compacted_upto(base_dir) == 3
+    assert compacted_upto(journal) == 3
+    # the previous generation survives one cycle; older ones expire
+    assert list_versions(journal, "_base") == [3, 1]
     live = {d for d in os.listdir(journal) if d.startswith("__batch_id=")}
     assert live == {"__batch_id=4"}
     view = {
         r.o_custkey: (r.n_orders, float(r.total_price))
         for r in ivm_fold_view(
-            spark.read.parquet(current_base(base_dir)),
-            read_journal(spark, journal, "o_custkey", base_dir),
+            spark.read.parquet(current_base(journal, base_dir)),
+            read_journal(spark, journal, "o_custkey"),
         ).collect()
     }
     # base(1:2/10, 2:1/5, 3:1/7) + all five waves, cust 2 dropped
     assert view == {1: (4, 15.0), 3: (2, 11.0), 4: (1, 9.0)}
+
+
+def test_compaction_cycle_query_leaves_shared_base_untouched(spark, sf_dir):
+    """stream_ivm_compaction_cycle compacts next to its own journal and
+    only READS the shared ivm_base_dir artifact as generation 0: two runs
+    in one session return identical rows, and the artifact's files,
+    sizes and mtimes are unchanged."""
+    from crane_stream_processing_spark.inventory import release_query_caches
+    from crane_stream_processing_spark.inventory.core import ivm_base_dir
+    from crane_stream_processing_spark.inventory.streaming_queries import (
+        stream_ivm_compaction_cycle,
+    )
+
+    shared = ivm_base_dir(spark, sf_dir)
+    before = _file_stats(shared)
+    runs = []
+    for _ in range(2):
+        runs.append(
+            sorted(tuple(r) for r in stream_ivm_compaction_cycle(spark, sf_dir).collect())
+        )
+        release_query_caches(spark)
+    assert runs[0] and runs[0] == runs[1]
+    assert ivm_base_dir(spark, sf_dir) == shared
+    assert _file_stats(shared) == before
