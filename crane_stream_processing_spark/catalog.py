@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .session import exclude_generate_filter_rule
+from .session import ensure_engine_confs
 
 __all__ = [
     "TABLES",
@@ -28,6 +28,7 @@ __all__ = [
     "load_table",
     "load_tables",
     "normalize_events_ts",
+    "stream_table",
 ]
 
 TABLES = (
@@ -147,20 +148,14 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def ensure_engine_confs(spark: SparkSession) -> None:
-    """Self-set the confs the engine's semantics depend on, runtime-safe
-    on sessions the engine didn't build (the driver's own session):
-
-    - UTC timestamp semantics — oracle-comparable, cluster-independent
-      rendering/windowing/literal-casting of TIMESTAMP values;
-    - the InferFiltersFromGenerate exclusion (see session.py).
-
-    ``load_table`` calls this on every read; queries that serve from a
-    memoized fixture directory (and so may never touch ``load_table`` on
-    a fresh session) must call it directly before building
-    timestamp-sensitive expressions."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    exclude_generate_filter_rule(spark)
+def _schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The schema ``name`` is read with: SCHEMAS[name], with events.ts as
+    its probed stored type (``events_ts_type``)."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
+    if name == "events":
+        return events_schema(events_ts_type(spark, sf_dir))
+    return SCHEMAS[name]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -168,20 +163,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema-inference job runs; tests/test_cli_and_sources.py asserts that
     the declared schema equals the inferred one at every generated scale
     factor."""
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     ensure_engine_confs(spark)
-    schema = SCHEMAS[name]
-    if name == "events":
-        # events.ts may be stored as TIMESTAMP(NANOS) (generation-dependent);
-        # without this conf such a scan throws PARQUET_TYPE_ILLEGAL. Harmless
-        # for MICROS files.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = events_schema(events_ts_type(spark, sf_dir))
-    df = spark.read.schema(schema).parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        df = normalize_events_ts(df)
-    return df
+    df = spark.read.schema(_schema(spark, sf_dir, name)).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
+    return normalize_events_ts(df) if name == "events" else df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The streaming twin of ``load_table``: a file stream of one catalog
+    table with the same schema. A table may be one parquet FILE (stream
+    ``sf_dir`` with a filename glob, since the streaming file source takes
+    directories) or a parquet DIRECTORY of part files (stream it directly:
+    the glob would match no leaf and the stream would silently be empty)."""
+    ensure_engine_confs(spark)
+    reader = spark.readStream.schema(_schema(spark, sf_dir, name))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        df = reader.parquet(path)
+    else:
+        df = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def events_ts_type(spark: SparkSession, sf_dir: str) -> T.DataType:
@@ -220,7 +222,7 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     ns → µs (no double-precision loss; DuckDB truncates identically);
     TIMESTAMP(MICROS) NTZ → reinterpret in the UTC session. The single
     definition of the timestamp contract — batch (load_table) and
-    streaming (streaming_queries) both call it, so the two paths cannot
+    streaming (stream_table) both call it, so the two paths cannot
     disagree on the same column."""
     kind = df.schema["ts"].dataType.typeName()
     if kind == "long":

@@ -19,6 +19,7 @@ timezone/typing drift between Spark (session-TZ) and DuckDB (naive).
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -30,11 +31,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import TABLES, load_table
+from ..session import ensure_engine_confs
 
 __all__ = [
     "Query", "REGISTRY", "query", "t", "t_cpu", "dsum", "davg",
     "register_query_cache", "release_query_caches", "protect_host_caches",
-    "artifact", "register_scratch_dir", "register_conf_restore",
+    "artifact", "register_scratch_dir",
 ]
 
 
@@ -54,12 +56,22 @@ REGISTRY: dict[str, Query] = {}
 
 def query(name: str, oracle: str | None = None):
     """Register a query under ``name``. Used as a decorator; the decorated
-    function's docstring becomes the query's doc."""
+    function's docstring becomes the query's doc. The registered ``fn``
+    sets the engine semantics confs on the caller's session
+    (``session.ensure_engine_confs``) before it builds, so a builder that
+    serves a memoized fixture, and never reads through ``load_table``,
+    still plans under them on a session the engine didn't build."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_engine_confs(spark)
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = Query(fn=run, oracle=oracle, doc=fn.__doc__ or "")
         return fn
 
     return deco
@@ -224,22 +236,6 @@ def register_query_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-# Session confs a query builder raised for ITS plan (planner thresholds
-# read lazily at the caller's plan time, so restore-at-builder-exit would
-# lose the rewrite) — restored to their recorded prior value by the next
-# release_query_caches sweep. setdefault: if several queries touch the
-# same key before a sweep, the FIRST recorded prior wins (it is the
-# host's value).
-_CONF_RESTORES: dict[str, str] = {}
-
-
-def register_conf_restore(key: str, prev: str) -> None:
-    """Record a session conf to restore at the next
-    :func:`release_query_caches` (round-9 advice: a graded query must not
-    permanently mutate a host-owned session's planner behavior)."""
-    _CONF_RESTORES.setdefault(key, prev)
-
-
 def protect_host_caches(spark: SparkSession) -> bool:
     """Snapshot every currently-persistent RDD id as host-owned (scoped
     to this SparkContext's applicationId) so :func:`release_query_caches`
@@ -302,15 +298,6 @@ def release_query_caches(spark: SparkSession) -> None:
             spark.streams.resetTerminated()
         except Exception:  # noqa: BLE001
             pass
-    # Restore planner confs a query raised for its own plan (see
-    # register_conf_restore) — a key is forgotten only when its restore
-    # SUCCEEDED, mirroring the memory-sink retry discipline.
-    for key in list(_CONF_RESTORES):
-        try:
-            spark.conf.set(key, _CONF_RESTORES[key])
-        except Exception:  # noqa: BLE001 — transient: retry next sweep
-            continue
-        _CONF_RESTORES.pop(key, None)
     try:
         protected = _PROTECTED_RDD_IDS.get(
             spark.sparkContext.applicationId, set()

@@ -81,10 +81,10 @@ def duck_fields(expr: str) -> str:
 
 @query(
     "app_wordcount_top5",
-    oracle="""
+    oracle=f"""
     SELECT word, cnt FROM (
       SELECT word, COUNT(*) AS cnt
-      FROM (SELECT unnest(string_split_regex(text, '\\s+')) AS word FROM documents)
+      FROM (SELECT unnest({duck_fields("text")}) AS word FROM documents)
       WHERE word <> ''
       GROUP BY word
     ) ORDER BY cnt DESC, word ASC LIMIT 5
@@ -186,9 +186,6 @@ def src_clf_typed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic function of the events table, so it's written once per
     (process, sf_dir) and reused — the query under test is the SCAN, not
     the fixture write."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from .. import datasource
     from . import artifact
 
@@ -273,9 +270,6 @@ def io_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write→read cycle is lossless. The fixture is a deterministic
     function of the events table, written once per (process, sf_dir) —
     the query under test is the partitioned SCAN."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from . import dsum
 
     part_dir = _part_fixture(spark, sf_dir)
@@ -318,9 +312,6 @@ def io_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     author restating the predicate. Plan-asserted in
     tests/test_plan_quality.py; the aggregate matches the oracle
     computed from the unpartitioned source."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from . import dsum
 
     part_dir = _part_fixture(spark, sf_dir)
@@ -359,9 +350,6 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated; must match the oracle over the parquet original, proving
     the text roundtrip lossless. Fixture written once per (process,
     sf_dir); the graded path is the typed CSV scan."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from . import artifact, dsum
 
     def _build_csv(path: str) -> tuple[str, object]:
@@ -397,9 +385,6 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema, aggregated per lang; the text-length sum proves the
     payload survived byte-exact. Same fixture-cache pattern as the CSV
     roundtrip; the graded path is the typed JSON scan."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from . import artifact
 
     def _build_json(path: str) -> tuple[str, object]:
@@ -434,9 +419,6 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ORC, read back with the explicit schema, aggregated; timestamp
     min proves type fidelity through the format. Fixture cached per
     (process, sf_dir); the graded path is the typed ORC scan."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from . import artifact, dsum
 
     def _build_orc(path: str) -> tuple[str, object]:
@@ -475,9 +457,6 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text-length sum proves the payload survived the entity
     encode/decode byte-exact. Same fixture-cache pattern as the
     CSV/JSON/ORC roundtrips; the graded path is the typed XML scan."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from . import artifact
     from ..io import read_xml
 
@@ -538,9 +517,6 @@ def io_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     halves: untouched partitions read back exactly the source rows, the
     overwritten partition holds exactly the recomputed ones. The mode is
     a per-WRITE option, so nothing session-global changes."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table
     from .. import catalog
     from . import artifact, dsum
 
@@ -612,9 +588,6 @@ def io_batch_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delete semantics use an ANTI JOIN, never ``NOT IN`` (a NULL in the
     subquery would silently empty a NOT IN result — the oracle's keys
     are provably non-NULL so its NOT IN is safe)."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table
     from .. import catalog
     from . import artifact, dsum
 
@@ -674,9 +647,6 @@ def ivm_base_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (as an artifact) the IVM base state: the per-customer
     COUNT + exact-decimal SUM over pre-cutoff orders, written to parquet
     — the at-rest view a refresh reads INSTEAD of the fact table."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table
     from .. import catalog
     from . import artifact
 
@@ -820,9 +790,6 @@ def io_minmax_partial_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim). At 100 TB with point deletes, the touched-key set is tiny
     and this refresh reads |touched groups| of data instead of the
     table."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table
     from .. import catalog
     from . import artifact
 
@@ -893,9 +860,6 @@ def cdc_ivm_base_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (as an artifact) the CDC-IVM base state: the per-user
     COUNT + exact-decimal SUM(value) view over events — shared by the
     batch upsert query and its streaming twin."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table
     from .. import catalog
     from . import artifact
 
@@ -1036,9 +1000,6 @@ def src_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame. At 100 TB this scan parallelizes per file (each blob one
     task, no splitting mid-file) which is precisely what opaque media
     wants; the fixture is an artifact like every other source fixture."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table
     from . import artifact
 
     def _build_binfiles(d: str) -> None:
@@ -1139,9 +1100,6 @@ def io_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts and the bucketed sort-merge plan is the only
     non-shuffling one. The fixture write happens once per (process,
     sf_dir); the graded path is the bucketed scan + join."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
     lt, ot = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
     # The existence probe must consult the SESSION's catalog, not only the
@@ -1234,9 +1192,6 @@ def io_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, proving the layout write is lossless AND the bit math is
     engine-independent. At 100 TB: one range shuffle at write time buys
     two-dimensional file skipping on every scan thereafter."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from ..operators.layout import morton_interleave, write_zordered
     from . import artifact
 
@@ -1286,9 +1241,6 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the new column as NULL — no data rewrite, no backfill job), and the
     aggregate proves no rows/values are lost and the NULL accounting is
     exact against the oracle on the unsplit source."""
-    from ..catalog import ensure_engine_confs
-
-    ensure_engine_confs(spark)  # fixture memo may skip load_table on this session
     from .. import catalog
     from . import artifact, dsum
 
@@ -1342,9 +1294,6 @@ def io_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-table values — compaction preserved every row. At 100 TB the
     same rewrite runs per partition-directory with target_size = HDFS
     block; file counting uses the FS listing exactly as here."""
-    from .. import catalog
-
-    catalog.ensure_engine_confs(spark)  # fixture memo may skip load_table
     import glob as _glob
     import shutil
 

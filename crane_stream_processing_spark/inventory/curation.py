@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tokens
 from ..operators import sampling as SA
+from ..session import clone_session
 from . import query, t, t_cpu
 from .northstar import SQL_TOKS
 
@@ -1456,48 +1457,34 @@ def curate_token_budget_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     total — the receipt. Every number is an integer, so rows grade
     hash-exact.
 
-    SCALE SHAPE (the round-8 verdict's TopK rewrite, implemented): a
-    naive window cumsum sorts each FULL language partition — at 100 TB
-    with few languages that sort dominates. Instead the plan first cuts
-    each language to its ``budget`` longest documents via a
-    ``row_number() <= budget`` filter: zero-token documents are gated
-    out (``tok_cnt > 0``, mirrored in the oracle), so every emitted
-    document costs at least one token and no rank beyond ``budget`` can
-    ever satisfy ``cum_tokens <= budget`` — the cut is EXACT, not a
-    heuristic. Catalyst's ``InferWindowGroupLimit`` turns that rank
-    filter into map-side ``WindowGroupLimit`` (a per-group top-k heap in
-    each scan task BEFORE the shuffle), so the sort input is
-    O(budget × langs × tasks), independent of corpus size
+    SCALE SHAPE: a naive window cumsum sorts each FULL language
+    partition — at 100 TB with few languages that sort dominates.
+    Instead the plan first cuts each language to its ``budget`` longest
+    documents via a ``row_number() <= budget`` filter: zero-token
+    documents are gated out (``tok_cnt > 0``, mirrored in the oracle),
+    so every emitted document costs at least one token and no rank
+    beyond ``budget`` can ever satisfy ``cum_tokens <= budget`` — the
+    cut is EXACT, not a heuristic. Catalyst's ``InferWindowGroupLimit``
+    turns that rank filter into map-side ``WindowGroupLimit`` (a
+    per-group top-k heap in each scan task BEFORE the shuffle), so the
+    sort input is O(budget × langs × tasks), independent of corpus size
     (plan-asserted in tests/test_plan_quality.py). The cumsum then runs
-    within the k survivors."""
-    from ..functions import tokens
-    from pyspark.sql import Window
+    within the k survivors.
 
+    The rewrite applies only to k under
+    ``windowGroupLimitThreshold``, whose default (1000) is below the
+    budget, and the threshold is read when the caller plans the returned
+    frame. So the plan is built on a clone session
+    (``session.clone_session``) with the threshold raised: sessions the
+    engine didn't build still get the rewrite, and the caller's conf
+    never changes."""
     budget = 2000
-    # Runtime-set so sessions the engine didn't build (the grading
-    # driver's) still plan the rank filter as WindowGroupLimit — the
-    # default threshold (1000) is below this budget. The raise is
-    # SCOPED to the query's lifetime, not permanent (round-9 advice) —
-    # see register_conf_restore below for when it is undone.
-    from . import register_conf_restore
-
-    KEY = "spark.sql.optimizer.windowGroupLimitThreshold"
-    try:
-        prev = spark.conf.get(KEY)
-        raise_needed = int(prev) < budget
-    except Exception:  # noqa: BLE001 — conf missing/odd on exotic builds
-        prev, raise_needed = None, False
-    if raise_needed:
-        spark.conf.set(KEY, "100000")
-        # The threshold must HOLD until the caller plans + executes the
-        # returned lazy frame (a noop write builds a fresh QueryExecution
-        # that re-reads the conf), so restore-at-builder-exit would lose
-        # the rewrite. Restored by the harness's post-materialize
-        # release_query_caches — the same contract that releases caches
-        # and memory sinks (round-9 advice: no permanent host-session
-        # planner mutation).
-        register_conf_restore(KEY, prev)
-    docs = t_cpu(spark, sf_dir, "documents")
+    iso = clone_session(
+        spark,
+        "token_budget",
+        {"spark.sql.optimizer.windowGroupLimitThreshold": "100000"},
+    )
+    docs = t_cpu(iso, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "lang", F.size(tokens("text")).cast("long").alias("tok_cnt")
     ).filter(F.col("tok_cnt") > 0)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
+from ..session import clone_session
 from . import dsum, query, t
 
 
@@ -503,47 +504,6 @@ def join_salted_skew_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Clone sessions carry live-session state (confs, catalog): not artifacts.
-_ISOLATED_SESSIONS: dict[tuple[int, str], SparkSession] = {}
-
-
-def _isolated_session(
-    spark: SparkSession, purpose: str = "default"
-) -> SparkSession:
-    """A ``newSession`` clone for queries that must scope optimizer confs
-    without leaking them to concurrently-planned queries on the caller's
-    session (bloom injection thresholds, CBO switches). newSession
-    inherits builder-time confs only, so the runtime knobs that shape
-    harness parallelism/replanning parity are carried over explicitly,
-    and the engine's semantics confs (UTC, rule exclusions) are
-    re-established directly — one definition shared by every
-    isolated-session query so the carry-over set cannot drift.
-
-    Memoized per (SparkContext, purpose): a fresh JVM session per
-    invocation would accumulate SQLConf/listener/temp-view state without
-    bound across repeated bench/gate rounds in one long-lived process
-    (round-6 advice). Distinct *purposes* get distinct clones so one
-    query's scoped knobs (e.g. bloom thresholds) can never shape
-    another's plan; within a purpose every caller re-sets its full conf
-    set on each invocation, so reuse is conf-deterministic. The
-    carried-over runtime knobs are refreshed on every reuse too, in case
-    the caller's session changed them between invocations."""
-    from ..catalog import ensure_engine_confs
-
-    sc = spark.sparkContext
-    key = (id(sc), purpose)
-    iso = _ISOLATED_SESSIONS.get(key)
-    if iso is None or iso.sparkContext is not sc:
-        iso = spark.newSession()
-        _ISOLATED_SESSIONS[key] = iso
-    for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"):
-        v = spark.conf.get(k, None)
-        if v is not None:
-            iso.conf.set(k, v)
-    ensure_engine_confs(iso)
-    return iso
-
-
 @query(
     "join_bloom_runtime_filter",
     oracle="""
@@ -576,19 +536,17 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     creation side would broadcast; this query scopes those knobs down
     so the sf-scale harness exercises the 100 TB plan shape (where
     orders is NOT broadcastable and lineitem dwarfs 10 GiB).
-    Conf isolation: the knobs are set on a ``spark.newSession()`` clone
-    (same SparkContext, independent SQLConf), never on the caller's
-    session — so a query planned CONCURRENTLY on the caller's session
-    can never observe ``autoBroadcastJoinThreshold=-1`` or inherit the
-    bloom thresholds (round-5 verdict / advice item). The clone is
-    plan-scoped: the returned DataFrame executes on the shared context,
-    and ``load_table`` → ``ensure_engine_confs`` re-establishes the
-    semantics confs (UTC, rule exclusions) on the clone itself.
+    Conf isolation: the knobs are set on a clone session
+    (``session.clone_session``: same SparkContext, its own SQLConf),
+    never on the caller's session, so a query planned CONCURRENTLY on
+    the caller's session can never observe
+    ``autoBroadcastJoinThreshold=-1`` or inherit the bloom thresholds.
+    The returned DataFrame belongs to the clone and executes on the
+    shared context.
     ``tests/test_plan_quality.py`` asserts ``bloom_filter_agg`` +
     ``might_contain`` are actually in the optimized plan;
     ``test_bloom_runtime_filter_conf_isolation`` (same file) interleaves
     two invocations with a caller-session broadcast plan mid-window."""
-    iso = _isolated_session(spark, purpose="bloom")
     confs = {
         # Application (pruned) side must look big enough to bother.
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -600,8 +558,7 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    for k, v in confs.items():
-        iso.conf.set(k, v)
+    iso = clone_session(spark, "bloom", confs)
     orders = t(iso, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
@@ -617,8 +574,8 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum("l_extendedprice").alias("revenue"),
     )
     # Force plan resolution (bloom injection happens at optimization
-    # time) while the isolated session is current; the returned
-    # DataFrame carries the already-optimized plan.
+    # time) while the clone's confs are current; the returned DataFrame
+    # carries the already-optimized plan.
     out._jdf.queryExecution().optimizedPlan()
     return out
 
@@ -729,18 +686,23 @@ def join_cbo_stats_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure optimization: the result is order-independent, so the
     oracle is the plain join SQL over the original parquet (the managed
     copies are byte-identical snapshots of the same tables). Conf
-    isolation: cbo.enabled/joinReorder.enabled live on a
-    ``spark.newSession()`` clone (the `join_bloom_runtime_filter`
-    precedent — the catalog/metastore is shared across sessions of one
-    context, the SQLConf is not); broadcast thresholds are zeroed there
+    isolation: cbo.enabled/joinReorder.enabled live on a clone session
+    (``session.clone_session``, as in `join_bloom_runtime_filter`: the
+    catalog/metastore is shared across sessions of one context, the
+    SQLConf is not); broadcast thresholds are zeroed there
     because at 100 TB the fact side never broadcasts and join ORDER is
     what decides the shuffled bytes."""
     db = _cbo_stats_db(spark, sf_dir)
-    iso = _isolated_session(spark, purpose="cbo")
-    iso.conf.set("spark.sql.cbo.enabled", "true")
-    iso.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    iso.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    iso = clone_session(
+        spark,
+        "cbo",
+        {
+            "spark.sql.cbo.enabled": "true",
+            "spark.sql.cbo.joinReorder.enabled": "true",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    )
     o = iso.table(f"{db}.orders")
     c = iso.table(f"{db}.customer")
     n = iso.table(f"{db}.nation")

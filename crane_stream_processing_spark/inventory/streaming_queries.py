@@ -16,7 +16,6 @@ VersionedSink/parquet sink (streaming.sinks) with identical plans.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,40 +23,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..catalog import events_schema, events_ts_type, normalize_events_ts
+from ..catalog import events_schema, stream_table
+from ..session import scoped_confs
 from . import dsum, query, t
 from .eventtime import (
     ORACLE_SESSION_30M,
     ORACLE_SLIDING_12H,
     ORACLE_TUMBLING_DAILY_BY_TYPE,
 )
-
-
-def _set_session_confs(spark: SparkSession) -> None:
-    # Runtime-set so sessions the engine didn't build can read NANOS
-    # timestamps and render/window them in UTC (see catalog.load_table).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    _set_session_confs(spark)
-    # Layout-independent (catalog contract): events.parquet may be one
-    # FILE (stream the table dir with a filename glob — the streaming
-    # file source takes directories) or a parquet DIRECTORY of part
-    # files (stream it directly; the glob would match zero leaves and
-    # every streaming query would silently read an empty stream).
-    path = os.path.join(sf_dir, "events.parquet")
-    # The streaming file source needs a user-provided schema: the stored
-    # ts type is probed once per table dir (see catalog.events_ts_type).
-    reader = spark.readStream.schema(events_schema(events_ts_type(spark, sf_dir)))
-    if os.path.isdir(path):
-        src = reader.parquet(path)
-    else:
-        src = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    return normalize_events_ts(src)
 
 
 def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,8 +48,6 @@ def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is written with ts as TIMESTAMP_LTZ micros and both legs are
     normalized to that type before the union, so it composes with any
     stored ts type in the real table (see catalog.normalize_events_ts)."""
-    _set_session_confs(spark)
-
     from . import artifact
 
     far_us = 4102444800 * 1_000_000  # 2100-01-01 as epoch µs
@@ -93,7 +64,7 @@ def _stream_events_sentinel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(sentinel_dir)
 
     sentinel_dir = artifact("crane_sentinel", None, _build_sentinel)
-    real = _stream_events(spark, sf_dir)
+    real = stream_table(spark, sf_dir, "events")
     sent = spark.readStream.schema(events_schema(T.TimestampType())).parquet(
         sentinel_dir
     )
@@ -117,7 +88,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-@contextmanager
 def _scoped_stream_partitions(spark: SparkSession, parts: int | None = None):
     """Scope the stateful-operator partition count down for the single-box
     verification harness: each state partition carries fixed
@@ -130,23 +100,20 @@ def _scoped_stream_partitions(spark: SparkSession, parts: int | None = None):
     stream-stream joins, watermarked windows and dedups measured 0.2–1.0 s
     faster at 2 state partitions than 4, while CPU-heavy drains — banding,
     PQ encode, curate — prefer 4). The shuffle partition count is baked
-    into the checkpoint at query start, so it's set just for the start()
-    and restored after. On a real cluster set SPARK_GRAFT_STREAM_PARTITIONS
+    into the checkpoint at query start, so it's scoped to the start()
+    (session.scoped_confs). On a real cluster set SPARK_GRAFT_STREAM_PARTITIONS
     to O(total cores) — the env ALWAYS takes precedence over any per-query
     default; state scales OUT with partitions, and these defaults only
     trim fixed overhead when state is small."""
     import os
 
     key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
     scoped = os.environ.get(
         "SPARK_GRAFT_STREAM_PARTITIONS", str(parts if parts else 4)
     )
-    spark.conf.set(key, str(min(int(prev), int(scoped))))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return scoped_confs(
+        spark, {key: str(min(int(spark.conf.get(key)), int(scoped)))}
+    )
 
 
 def drain(
@@ -235,7 +202,7 @@ def stream_tumbling_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame
     over the events stream, complete-mode snapshot after a bounded
     availableNow pass — the streaming twin of evt_tumbling_daily_by_type,
     held to the identical DuckDB oracle."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -260,7 +227,7 @@ def stream_sliding_12h_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase-grid DuckDB oracle. Completes the streaming window-family
     parity: tumbling / sliding / session are all graded in BOTH batch and
     stream modes."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day", "12 hours").alias("w"))
@@ -288,7 +255,7 @@ def stream_dedup_user_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped against watermark-bounded state. Output projects only the key
     (which survivor wins depends on arrival order; the key set is exact),
     so the DuckDB DISTINCT oracles it."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     deduped = (
         ev.withColumn("day", F.to_date("ts").cast("string"))
         .withWatermark("ts", "1 day")
@@ -314,25 +281,18 @@ def stream_rocksdb_dedup_user_type(spark: SparkSession, sf_dir: str) -> DataFram
     restores from the checkpoint on failover, so the same plan survives.
     The answer must be byte-identical to the heap provider's — the DISTINCT
     oracle checks exactly that."""
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, "")
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        ev = _stream_events(spark, sf_dir)
+    provider = {
+        "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    }
+    with scoped_confs(spark, provider):
+        ev = stream_table(spark, sf_dir, "events")
         deduped = (
             ev.withWatermark("ts", "1 day")
             .dropDuplicates(["user_id", "event_type"])
             .select("user_id", "event_type")
         )
         drain(deduped, "stream_rocksdb_dedup_user_type", parts=2)
-    finally:
-        if prev:
-            spark.conf.set(provider_key, prev)
-        else:
-            spark.conf.unset(provider_key)
     return spark.table("stream_rocksdb_dedup_user_type")
 
 
@@ -350,7 +310,7 @@ def stream_static_enrich_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer dimension, aggregated per market segment. The static side is
     re-resolvable per micro-batch; no broadcast hint — customer is
     SF-scaled, the per-batch planner picks broadcast when it fits."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     cust = t(spark, sf_dir, "customer")
     agg = (
         ev.join(cust, ev.user_id == cust.c_custkey, "inner")
@@ -367,7 +327,7 @@ def stream_session_windows_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     F.session_window sessions (30-minute gap), complete-mode snapshot over
     a bounded pass (update mode is unsupported for session windows) — same
     gaps-and-islands oracle as the batch twin (evt_session_windows_30m)."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -399,7 +359,7 @@ def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame
     which must equal the batch GROUP BY."""
     from ..streaming.stateful import running_keyed_count
 
-    ev = _stream_events(spark, sf_dir).select(F.col("event_type").alias("key"))
+    ev = stream_table(spark, sf_dir, "events").select(F.col("event_type").alias("key"))
     counted = running_keyed_count(ev)
     drain(counted, "stream_stateful_running_count", mode="update")
     return (
@@ -425,7 +385,7 @@ def stream_stream_join_error_purchase(spark: SparkSession, sf_dir: str) -> DataF
     interval condition lets Spark evict rows older than watermark+1h);
     inner-join matches emit eagerly, so the bounded pass yields the full
     relational answer."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     errors = (
         ev.filter(F.col("event_type") == "error")
         .select(
@@ -543,7 +503,7 @@ def stream_versioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 
     from ..streaming.sinks import VersionedSink, read_latest
 
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value")
     )
@@ -576,7 +536,7 @@ def stream_merge_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.sinks import MergeSink, read_latest
 
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value")
     )
@@ -643,7 +603,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     evicts mid-query and the key set equals DISTINCT — which the oracle
     pins exactly; the eviction behavior itself is the documented scale
     property."""
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     deduped = (
         ev.withWatermark("ts", "2 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -652,32 +612,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     drain(deduped, "stream_dedup_within_watermark")
     return spark.table("stream_dedup_within_watermark")
 
-
-_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents file stream, layout-independent like _stream_events:
-    documents.parquet may be one FILE (stream sf_dir with a filename
-    glob) or a parquet DIRECTORY of part files (stream it directly — the
-    glob would match zero part-*.parquet leaves and the query would
-    silently read an empty stream and grade 0 rows against the oracle)."""
-    import os
-
-    _set_session_confs(spark)
-    path = os.path.join(sf_dir, "documents.parquet")
-    reader = spark.readStream.schema(_DOCS_SCHEMA)
-    if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
 
 # Oracle is the batch twin's, verbatim: the stream must answer identically.
 _ORACLE_MM_AHASH = """
@@ -783,7 +717,7 @@ def stream_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .curation import build_pii_redact
 
     out = build_pii_redact(
-        _spread(_stream_docs(spark, sf_dir).select("doc_id", "text"))
+        _spread(stream_table(spark, sf_dir, "documents").select("doc_id", "text"))
     )
     drain(out, "stream_pii_redact")
     return spark.table("stream_pii_redact")
@@ -829,7 +763,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     same banding CTE as dedup_minhash_lsh_jaccard."""
     from ..operators import dedup as D
 
-    docs = _stream_docs(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     staged = docs.select(
         "doc_id",
         "text",
@@ -884,7 +818,7 @@ def stream_dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ann_ingest import idempotent_batch_sink
     from . import register_scratch_dir
 
-    docs = _spread(_stream_docs(spark, sf_dir).select("doc_id", "text"))
+    docs = _spread(stream_table(spark, sf_dir, "documents").select("doc_id", "text"))
     banded = D.lsh_bands(docs, "doc_id", "text").select(
         F.col("doc").alias("doc_id"),
         F.col("band_idx").cast("long").alias("band_idx"),
@@ -897,30 +831,6 @@ def stream_dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay_batch0(out_dir, "stream_dedup_index_ingest")
     df = spark.read.parquet(out_dir)
     return df.select("doc_id", "band_idx", "band_hash")
-
-
-_EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-
-def _stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings file stream, layout-independent like _stream_docs:
-    embeddings.parquet may be a single file (glob on the parent) or a
-    parquet directory of part files (stream it directly — the glob on a
-    directory matches zero leaves and silently reads an empty stream)."""
-    import os
-
-    _set_session_confs(spark)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    reader = spark.readStream.schema(_EMBEDDINGS_SCHEMA)
-    if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "embeddings.parquet").parquet(sf_dir)
 
 
 def _oracle_stream_ivf_ingest() -> str:
@@ -964,7 +874,7 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .northstar import _CENTROIDS64
 
     emb = _spread(
-        _stream_embeddings(spark, sf_dir).filter(
+        stream_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         )
     )
@@ -1053,7 +963,7 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .northstar import _CENTROIDS64
 
     emb = _spread(
-        _stream_embeddings(spark, sf_dir).filter(
+        stream_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         )
     )
@@ -1106,7 +1016,7 @@ def stream_ivfpq_arrow_idempotent_sink(
     from . import register_scratch_dir
     from .northstar import _CENTROIDS64
 
-    emb = _stream_embeddings(spark, sf_dir).filter(
+    emb = stream_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
     out_dir = register_scratch_dir(tempfile.mkdtemp(prefix="crane_ivfpq_sink_"))
@@ -1211,7 +1121,7 @@ def stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import dsir_fold_score, token_bigrams
 
     model = _dsir_model(spark, sf_dir)
-    docs = _spread(_stream_docs(spark, sf_dir))
+    docs = _spread(stream_table(spark, sf_dir, "documents"))
     staged = docs.select(
         "doc_id", token_bigrams("text").alias("bg")
     ).crossJoin(F.broadcast(model))
@@ -1419,7 +1329,7 @@ def stream_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         directory=False,
     )
     out = build_curate_stream(
-        _spread(_stream_docs(spark, sf_dir).select("doc_id", "text")),
+        _spread(stream_table(spark, sf_dir, "documents").select("doc_id", "text")),
         model,
         dedup_horizon=f"{int(span)} seconds",
     )
@@ -1534,7 +1444,7 @@ def stream_ivf_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = _ivf64_index(spark, sf_dir)
 
     out_dir = register_scratch_dir(tempfile.mkdtemp(prefix="crane_ivfserve_"))
-    q_stream = _stream_embeddings(spark, sf_dir).filter(
+    q_stream = stream_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
         & F.col("embedding").isNotNull()
         & (F.col("vec_id") < 10)
@@ -1612,7 +1522,7 @@ def stream_ivf_ingest_then_serve(
         delta_dir,
         transform=lambda b: S.ivf_bucket_corpus(_spread(b), _CENTROIDS64),
     )
-    ingest_stream = _stream_embeddings(spark, sf_dir).filter(
+    ingest_stream = stream_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull() & held
     )
     drain(ingest_stream, ingest_sink)
@@ -1633,7 +1543,7 @@ def stream_ivf_ingest_then_serve(
             None, b, _CENTROIDS64, k=3, bucketed=live_index()
         ),
     )
-    q_stream = _stream_embeddings(spark, sf_dir).filter(
+    q_stream = stream_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull()
         & F.col("embedding").isNotNull()
         & (F.col("vec_id") < 10)
@@ -1696,7 +1606,7 @@ def stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, current = bottomk_sampler(
         spark, os.path.join(scratch, "sample"), k=100
     )
-    drain(_stream_docs(spark, sf_dir).select("doc_id"), fold)
+    drain(stream_table(spark, sf_dir, "documents").select("doc_id"), fold)
 
     before = {(r.doc_id, r.h) for r in current().collect()}
     # Forced replay of batch 0's rows: min-wise algebra must absorb the
@@ -1759,7 +1669,7 @@ def stream_weighted_es_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(scratch, "sample"), k=50,
         keyed=es_keyed("n_chars"), key_type="double",
     )
-    drain(_stream_docs(spark, sf_dir).select("doc_id", "n_chars"), fold)
+    drain(stream_table(spark, sf_dir, "documents").select("doc_id", "n_chars"), fold)
 
     before = {(r.doc_id, r.h) for r in current().collect()}
     # forced full re-merge: identical keys re-derive, the set absorbs

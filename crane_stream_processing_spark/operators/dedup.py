@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import let, md5_hex, seeded_md5, tokens
+from ..session import scoped_confs
 
 __all__ = [
     "exact_dedup",
@@ -385,13 +386,15 @@ def connected_components(
     """
     spark = pairs.sparkSession
     key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    if num_partitions:
-        # every iteration's join/groupBy shuffles the EDGE-sized data;
-        # scope the shuffle width to it for the duration of the loop
-        # (restored after — each localCheckpoint action plans under it)
-        spark.conf.set(key, str(min(int(prev), num_partitions)))
-    try:
+    # every iteration's join/groupBy shuffles the EDGE-sized data; scope
+    # the shuffle width to it for the duration of the loop (each
+    # localCheckpoint action plans under it)
+    width = (
+        {key: str(min(int(spark.conf.get(key)), num_partitions))}
+        if num_partitions
+        else {}
+    )
+    with scoped_confs(spark, width):
         # Materialize the PAIR list before the symmetrizing union: the two
         # union branches are separate physical subtrees, so an un-cut
         # lineage would execute the caller's pair-generation join (the
@@ -462,8 +465,6 @@ def connected_components(
                 "max_iters; raise it (rounds needed = graph diameter)"
             )
         return labels
-    finally:
-        spark.conf.set(key, prev)
 
 
 def semantic_prune(

@@ -20,10 +20,19 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS", "exclude_generate_filter_rule"]
+__all__ = [
+    "get_spark",
+    "DEFAULT_SHUFFLE_PARTITIONS",
+    "exclude_generate_filter_rule",
+    "ensure_engine_confs",
+    "clone_session",
+    "scoped_confs",
+]
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -55,6 +64,86 @@ def exclude_generate_filter_rule(spark: SparkSession) -> None:
         spark.conf.set(
             "spark.sql.optimizer.excludedRules", f"{cur},{_GENERATE_FILTER_RULE}"
         )
+
+
+# This module is the only writer of session confs, one mechanism per kind:
+# - engine semantics confs, set on the caller's session by every registry
+#   call (inventory.query), catalog read and clone (ensure_engine_confs);
+# - planner confs that must still hold when the caller plans the returned
+#   lazy frame, set on a memoized clone of the caller's session
+#   (clone_session), so the caller's conf never changes;
+# - confs read only while a builder runs (stream starts, iterative loops),
+#   set on the caller's session and restored on exit (scoped_confs).
+
+
+def ensure_engine_confs(spark: SparkSession) -> None:
+    """Self-set the confs the engine's semantics depend on, runtime-safe
+    on sessions the engine didn't build (the driver's own session):
+
+    - UTC timestamp semantics — oracle-comparable, cluster-independent
+      rendering/windowing/literal-casting of TIMESTAMP values;
+    - ``nanosAsLong``: events.ts may be stored as TIMESTAMP(NANOS), which
+      Spark cannot scan without it (harmless for MICROS files);
+    - the InferFiltersFromGenerate exclusion (see above)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    exclude_generate_filter_rule(spark)
+
+
+# Clone sessions carry live-session state (confs, catalog): not artifacts.
+_ISOLATED_SESSIONS: dict[tuple[int, str], SparkSession] = {}
+
+# Runtime knobs a clone copies from its caller, so the clone's plans keep
+# the caller's parallelism and replanning behaviour.
+_CARRIED_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+
+
+def clone_session(
+    spark: SparkSession, purpose: str, confs: Mapping[str, str]
+) -> SparkSession:
+    """A clone of ``spark`` (same SparkContext, catalog and cache, its own
+    SQLConf) with ``confs`` set, for a query whose planner confs must
+    still hold when the caller plans the returned lazy frame, and must
+    never be seen by the caller or by queries planned concurrently on its
+    session. A clone copies only builder-time confs, so the caller's
+    shuffle width and AQE switch are carried over and the engine
+    semantics confs are set on it directly.
+
+    Memoized per (SparkContext, purpose): a fresh JVM session per call
+    would accumulate SQLConf, listener and temp-view state without bound
+    in a long-lived process. Distinct purposes get distinct clones, so
+    one query's confs never shape another's plan; every call re-applies
+    the carried knobs and the purpose's full ``confs``, so reuse is
+    conf-deterministic."""
+    sc = spark.sparkContext
+    key = (id(sc), purpose)
+    iso = _ISOLATED_SESSIONS.get(key)
+    if iso is None or iso.sparkContext is not sc:
+        iso = spark.newSession()
+        _ISOLATED_SESSIONS[key] = iso
+    carried = {k: spark.conf.get(k) for k in _CARRIED_CONFS}
+    for k, v in {**carried, **confs}.items():
+        iso.conf.set(k, v)
+    ensure_engine_confs(iso)
+    return iso
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the body only, for confs read while
+    the body runs (a stream's start, an iterative loop's actions). On
+    exit each key gets its old value back, or is unset if it had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _WAREHOUSE_DIR: str | None = None

@@ -10,10 +10,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from crane_stream_processing_spark.catalog import stream_table
 from crane_stream_processing_spark.inventory.streaming_queries import (
     _pq_stream_books,
     _PQ_STREAM_DSUB,
-    _stream_embeddings,
     drain,
     stream_ivfpq_ingest,
 )
@@ -41,7 +41,7 @@ def test_foreachbatch_arrow_ingest_matches_graded_relational_stream(
     production fast path and the oracle-graded path are the same index."""
     out = str(tmp_path / "index")
     drain(
-        _stream_embeddings(spark, sf_dir).filter(
+        stream_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         ),
         ivfpq_index_sink(out, _CENTROIDS64, _pq_stream_books()),
@@ -137,7 +137,7 @@ def test_checkpoint_restart_ingests_nothing_new(spark, sf_dir, tmp_path):
     restart contract, same as the graded relational stream's)."""
     out = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
-    src = _stream_embeddings(spark, sf_dir).filter(
+    src = stream_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
     sink = ivfpq_index_sink(out, _CENTROIDS64, _pq_stream_books())

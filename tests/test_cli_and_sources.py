@@ -468,6 +468,40 @@ def test_app_oracles_split_fields_like_the_apps(spark):
     assert {r.resource: r.cnt for r in apps.hot_resources(df, k=n).collect()} == duck_hot
 
 
+def test_wordcount_oracle_splits_words_like_the_app(spark):
+    """The DuckDB oracle of app_wordcount_top5 reads words through
+    ``core.duck_fields``; on \\v-, tab- and space-padded text it counts
+    the same words as apps.wordcount (Java's ``\\s`` has the \\v that
+    RE2's lacks)."""
+    from collections import Counter
+
+    import duckdb
+
+    from crane_stream_processing_spark import apps
+    from crane_stream_processing_spark.inventory import REGISTRY
+
+    texts = [
+        "\x0balpha beta",
+        "beta\tgamma\t",
+        "  gamma alpha  ",
+        "alpha\x0bdelta\x0b",
+        "\t\x0b epsilon",
+        "",
+    ]
+    want = Counter(w for v in texts for w in v.split())
+    assert len(want) <= 5  # every word makes the top 5
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?)", [[v] for v in texts])
+        duck = dict(con.execute(REGISTRY["app_wordcount_top5"].oracle).fetchall())
+    finally:
+        con.close()
+    df = spark.createDataFrame([(v,) for v in texts], "value string")
+    assert duck == want
+    assert {r.word: r.cnt for r in apps.wordcount(df).collect()} == want
+
+
 def test_grouped_agg_udf_multi_column(spark):
     """The grouped-agg wrapper must forward every bound column — a
     weighted mean takes (value, weight)."""

@@ -273,27 +273,3 @@ def test_bpe_trainer_hand_computed_merges_and_exhaustion(spark, tmp_path):
         assert abs(comp[0].compression - 3 / 7) < 1e-12
     finally:
         release_query_caches(spark)
-
-
-def test_planner_conf_restored_by_release_sweep(spark, sf_dir):
-    """curate_token_budget_fill raises windowGroupLimitThreshold for its
-    own plan; the harness's post-materialize release_query_caches must
-    restore the host session's prior value (round-9 advice: no permanent
-    planner mutation on a host-owned session)."""
-    from crane_stream_processing_spark.inventory import (
-        REGISTRY,
-        release_query_caches,
-    )
-
-    key = "spark.sql.optimizer.windowGroupLimitThreshold"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "1000")  # the Spark default, below the budget
-        df = REGISTRY["curate_token_budget_fill"].fn(spark, sf_dir)
-        assert spark.conf.get(key) == "100000"  # raised while the plan lives
-        assert df.count() > 0  # materialize under the raised threshold
-        release_query_caches(spark)
-        assert spark.conf.get(key) == "1000"  # host value restored
-    finally:
-        release_query_caches(spark)
-        spark.conf.set(key, prev)

@@ -1,6 +1,7 @@
 """Lint: derived inputs are memoized through inventory.artifact, not through
-module-level containers. Parses inventory/*.py and fails on any module-level
-assignment of an empty dict, set or list outside the allowlist."""
+module-level containers. Parses inventory/*.py and session.py and fails on
+any module-level assignment of an empty dict, set or list outside the
+allowlist."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import glob
 import os
 
 import crane_stream_processing_spark.inventory as inventory
+import crane_stream_processing_spark.session as session
 
 # name → why it is module state rather than an artifact
 ALLOWED = {
@@ -22,7 +24,6 @@ ALLOWED = {
     "_QUERY_CACHES": "cached frames a query must persist until it is collected",
     "_MEMORY_SINKS": "memory-sink views dropped after each query",
     "_PROTECTED_RDD_IDS": "host-owned cached RDDs the release sweep must skip",
-    "_CONF_RESTORES": "session confs restored after each query",
     # the query registry itself, filled at import time by @query
     "REGISTRY": "named queries, registered once per import",
 }
@@ -59,8 +60,9 @@ def _module_memos(source: str) -> list[str]:
 
 def _inventory_memos() -> list[tuple[str, str]]:
     pkg = os.path.dirname(inventory.__file__)
+    paths = sorted(glob.glob(os.path.join(pkg, "*.py"))) + [session.__file__]
     out = []
-    for path in sorted(glob.glob(os.path.join(pkg, "*.py"))):
+    for path in paths:
         with open(path) as fh:
             out += [(os.path.basename(path), n) for n in _module_memos(fh.read())]
     return out

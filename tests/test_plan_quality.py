@@ -761,9 +761,15 @@ def test_token_budget_fill_is_group_limited_not_full_sort(spark, sf_dir):
     """The token-budget fill must cut each language to its budget-many
     longest docs BEFORE the window sort: the rank filter plans as
     map-side (Partial) + Final WindowGroupLimit, so sort input is
-    O(budget x langs x tasks) regardless of corpus size (the round-8
-    verdict's TopK rewrite)."""
-    plan = _plan(spark, "curate_token_budget_fill", sf_dir, mode="simple")
+    O(budget x langs x tasks) regardless of corpus size. The host's
+    windowGroupLimitThreshold is Spark's default (1000), below the
+    budget: the rewrite must not depend on the host's value, and the
+    host's value must not change."""
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    host = spark.newSession()
+    host.conf.set(key, "1000")
+    plan = _plan(host, "curate_token_budget_fill", sf_dir, mode="simple")
+    assert host.conf.get(key) == "1000"
     assert plan.count("WindowGroupLimit") >= 2, plan
     assert "Partial" in plan.split("WindowGroupLimit")[2].splitlines()[0] or (
         "Partial" in plan

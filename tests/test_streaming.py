@@ -303,6 +303,64 @@ def test_drain_failing_sink_reraises_and_cleans_up(spark, tdir):
     assert set(glob.glob(pattern)) == before
 
 
+def test_scoped_stream_partitions_per_query_width(spark):
+    """A query-level ``parts`` narrows the drain's shuffle width, and the
+    host session's conf is restored afterward."""
+    from crane_stream_processing_spark.inventory.streaming_queries import (
+        _scoped_stream_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with _scoped_stream_partitions(spark, parts=2):
+        assert spark.conf.get(key) == "2"
+    assert spark.conf.get(key) == prev
+
+
+def test_scoped_stream_partitions_env_overrides_query_width(spark, monkeypatch):
+    """SPARK_GRAFT_STREAM_PARTITIONS (the production knob — O(total
+    cores) on a real cluster) always beats a per-query default."""
+    from crane_stream_processing_spark.inventory.streaming_queries import (
+        _scoped_stream_partitions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "6")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with _scoped_stream_partitions(spark, parts=2):
+        assert spark.conf.get(key) == str(min(int(prev), 6))
+    assert spark.conf.get(key) == prev
+
+
+def test_scoped_confs_restores_or_unsets(spark):
+    """scoped_confs gives each key its old value back on exit, also when
+    the body raises, and unsets a key that had no value."""
+    from crane_stream_processing_spark.session import scoped_confs
+
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_confs(spark, {set_key: "3", unset_key: "x.Provider"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "x.Provider"
+            raise RuntimeError
+    assert spark.conf.get(set_key) == prev
+    assert spark.conf.get(unset_key, None) is None
+
+
+@pytest.mark.parametrize("name", ["events", "documents", "embeddings"])
+def test_stream_table_schema_matches_load_table(spark, sf_dir, name):
+    """The streaming reader and the batch reader of a catalog table agree
+    on its schema (events.ts normalized on both)."""
+    from crane_stream_processing_spark.catalog import load_table, stream_table
+
+    assert stream_table(spark, sf_dir, name).schema == (
+        load_table(spark, sf_dir, name).schema
+    )
+
+
 def test_replay_batch0_guard_and_idempotence(spark, tdir):
     """replay_batch0 refuses a multi-batch journal (replaying the whole
     feed as batch 0 would double-apply batches >= 1) and, on a
@@ -778,16 +836,14 @@ def test_state_store_reconciles_with_memory_sink(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from crane_stream_processing_spark.inventory.streaming_queries import (
-        _stream_events,
-    )
+    from crane_stream_processing_spark.catalog import stream_table
     from crane_stream_processing_spark.streaming.monitor import (
         read_state,
         state_metadata,
     )
 
     ckpt = tempfile.mkdtemp(prefix="statestore_audit_")
-    ev = _stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
