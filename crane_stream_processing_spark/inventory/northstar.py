@@ -1625,10 +1625,11 @@ def sim_ivf_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trained64(spark: SparkSession, sf_dir: str):
-    """The exact-trained k=64 / 2-iteration model (an artifact) and its
-    not-null corpus frame — ONE definition for the retrain loop and both
-    trained serving queries, so the training filter / k / iters cannot
-    drift between queries whose oracles share one CTE re-derivation."""
+    """The k=64 / 2-iteration k-means model (an artifact, trained by the
+    exact, engine-deterministic `kmeans_fit`) and its not-null corpus
+    frame — ONE definition for the retrain loop and both trained serving
+    queries, so the training filter / k / iters cannot drift between
+    queries whose oracles share one CTE re-derivation."""
     from . import artifact
 
     emb = t_cpu(spark, sf_dir, "embeddings").filter(
@@ -1637,7 +1638,7 @@ def _trained64(spark: SparkSession, sf_dir: str):
     model = artifact(
         "crane_kmeans64_exact_model",
         sf_dir,
-        lambda: S.kmeans_fit_exact(
+        lambda: S.kmeans_fit(
             emb.filter(S.l2norm("embedding") > 0), k=64, iters=2
         ),
         directory=False,
@@ -1646,15 +1647,15 @@ def _trained64(spark: SparkSession, sf_dir: str):
 
 
 def _sql_kmeans64_exact_ctes() -> str:
-    """The CTE chain re-deriving kmeans_fit_exact's k=64 / 2-iteration
-    trained centroids and the rebuilt inverted file IN SQL — what makes
-    the retrain loop's after-side integers two-sided (round-9 verdict
-    item #2). Mirrors the trainer move for move: seeds = the 64
+    """The CTE chain re-deriving `kmeans_fit`'s k=64 / 2-iteration
+    trained centroids (`pq_fit` with m=1) and the rebuilt inverted file
+    IN SQL — what makes the retrain loop's after-side integers
+    two-sided. Mirrors the trainer move for move: seeds = the 64
     lowest-first-occurrence-id distinct vectors; each training
     assignment = argmin L2 via argmax(dot − ||c||²/2) with the
-    lowest-cell tiebreak; each mean = per-dimension exact 2⁴⁸-scaled
-    integer decimal sums → one decimal→double conversion, one IEEE
-    division, one exact exponent shift (empty cells keep the previous
+    lowest-cell tiebreak (`pq_codes`); each mean = per-dimension exact
+    2⁴⁸-scaled integer decimal sums → one decimal→double conversion, one
+    IEEE division, one exact exponent shift (empty cells keep the previous
     centroid); the FINAL index assignment is plain-dot argmax — the
     ivf_bucket_corpus discipline. Requires `celled` (vec_id, embedding,
     …) in scope; emits `trained` (cell, cvec) and `a3` (vec_id,
@@ -1780,15 +1781,15 @@ def _sql_kmeans64_exact_ctes() -> str:
 )
 def sim_ivf_retrain_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full operational loop the round-7 verdict sketched — HEALTH →
-    RETRAIN → RECALL, tied into one graded query, now TWO-SIDED end to
-    end (round-9 verdict item #2): audit the persisted fixed-hyperplane
-    64-cell index (`_ivf64_index` — max cell size and hot-cell count,
-    the `sim_ivf_index_health` signals), re-run the distributed Lloyd's
-    k-means trainer with the ENGINE-DETERMINISTIC exact fold
-    (`kmeans_fit_exact`, k=64, 2 iterations — per-dimension 2⁴⁸-scaled
-    integer decimal sums make the trained centroids bit-reproducible
-    and SQL-re-derivable; validated 64/64 centroid rows bit-identical
-    against the DuckDB re-derivation at sf0.01 and sf0.1), rebuild the
+    RETRAIN → RECALL, tied into one graded query, TWO-SIDED end to
+    end: audit the persisted fixed-hyperplane 64-cell index
+    (`_ivf64_index` — max cell size and hot-cell count, the
+    `sim_ivf_index_health` signals), re-run the distributed Lloyd's
+    k-means trainer, which is ENGINE-DETERMINISTIC (`kmeans_fit`, k=64,
+    2 iterations — per-dimension 2⁴⁸-scaled integer decimal sums make
+    the trained centroids bit-reproducible and SQL-re-derivable;
+    validated 64/64 centroid rows bit-identical against the DuckDB
+    re-derivation at sf0.01 and sf0.1), rebuild the
     inverted file, and emit the loop's WHOLE ledger as oracle-computed
     values: max_before/hot_before/n_hit_before AND
     max_after/hot_after/n_hit_after are exact integers the oracle
@@ -1799,9 +1800,7 @@ def sim_ivf_retrain_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ≥0.4·n_exact floor as integer cross-multiplication) are now
     COMPUTED ON BOTH SIDES from those integers — no literal TRUE
     anywhere in the oracle; a drifted centroid, a flipped assignment
-    tie, or a lost recall hit mismatches the row. (`kmeans_fit`'s
-    Arrow trainer remains the throughput path and stays
-    certificate-graded where used — `sim_ivf_kmeans_topk`.) At 100 TB
+    tie, or a lost recall hit mismatches the row. At 100 TB
     this is the production retrain playbook: the health scan is a
     64-group agg, training moves only k×dim decimal sums per iteration
     (map-side partials, O(k·dim·partitions) shuffle), the rebuild is
@@ -1902,17 +1901,13 @@ def sim_ivf_retrain_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRAINED-index ANN with a ROW-LEVEL grade — the query
-    `kmeans_fit_exact` makes possible for the first time: every prior
-    trained-centroid consumer (`sim_ivf_kmeans_topk`,
-    `sim_ivf_retrain_loop` pre-round-10) could only be
-    certificate-graded because float-merge-order drift in the trainer
-    made the model irreproducible across engines; with the exact
-    trainer the k=64 / 2-iteration model is bit-identical to the
-    oracle's CTE re-derivation, so the SERVED ANSWERS themselves —
-    (query_id, cand_id, cos_sim, rank) over the trained inverted file —
-    grade hash-exact, the same row-level contract the fixed-hyperplane
-    paths (`sim_ivf_rel_coarse_topk`) always had. This is the
+    """TRAINED-index ANN with a ROW-LEVEL grade — the query the exact
+    trainer makes possible: the k=64 / 2-iteration model is
+    bit-identical to the oracle's CTE re-derivation, so the SERVED
+    ANSWERS themselves — (query_id, cand_id, cos_sim, rank) over the
+    trained inverted file — grade hash-exact, the same row-level
+    contract the fixed-hyperplane paths (`sim_ivf_rel_coarse_topk`)
+    always had. This is the
     production serving configuration: data-driven cells (balanced by
     Lloyd's, the retrain loop's measured max-cell improvement) under
     the standard cell-equi-join + within-cell exact-cosine top-3. At
@@ -1964,7 +1959,7 @@ def sim_ivf_trained_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary-recall knob (`ivf_ann_topk_nprobe`: each query probes its
     2 nearest trained cells — descending centroid dot, low-cell
     tiebreak, exactly the `probe_cells` contract) composed with the
-    `kmeans_fit_exact` model the oracle can re-derive: the oracle
+    `kmeans_fit` model the oracle can re-derive: the oracle
     replays the trainer's CTE chain, takes each query's top-2 trained
     cells by dot via the same deterministic ordering, and re-ranks the
     union of both cells' candidates — so the nprobe mechanics
@@ -2327,10 +2322,11 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     CERTIFICATE (same pattern as the HLL/KLL sketches): the query measures
     its own recall@3 against the exact brute-force top-3 on the bounded
     query set and asserts recall >= 0.5 — measured 0.80-0.83 across SFs
-    for nprobe=1 over 8 trained cells, so the margin absorbs centroid
-    drift from float merge order without ever passing a broken index. The
-    fixed-centroid variant sim_ivf_ann_topk carries the row-level oracle
-    for the search machinery itself."""
+    for nprobe=1 over 8 trained cells. The model itself is exact and
+    engine-deterministic (`kmeans_fit`), so the margin covers recall
+    across scale factors, not centroid drift. The fixed-centroid variant
+    sim_ivf_ann_topk carries the row-level oracle for the search
+    machinery itself."""
     emb = t_cpu(spark, sf_dir, "embeddings")
     centroids = _kmeans8(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
@@ -2381,18 +2377,19 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are scored, PQ compresses HOW each one is scored — at 100 TB
     the 8-byte codes replace the 256-byte float rows in the hot scan, a
     32x read shrink, and scoring is m LUT adds instead of dim multiplies.
-    Corpus-side work is all broadcast equi-joins + groupBy sums; the
-    only crossJoins are query-bounded (the 10 x 256 LUT build and the
+    Corpus-side work is row-local encoding against a one-row broadcast
+    codebook matrix, then equi-joins + groupBy sums; the other
+    crossJoins are query-bounded (the 10-query LUT build and the
     certificate's exact baseline).
 
     PQ training is iterative (outside SQL), so the graded contract is a
     recall CERTIFICATE in the sim_ivf_kmeans_topk pattern: recall@3 of
     the re-ranked shortlist against exact brute-force top-3 on the
     bounded query set, asserted >= 0.5 — measured 0.80 at sf0.01 AND
-    sf0.1 (shortlist=50 over 500-5000 vectors), so the margin absorbs
-    centroid drift from float merge order without passing a broken
-    index. Exact-side row counts come from the oracle; recall_ok is the
-    certificate bit."""
+    sf0.1 (shortlist=50 over 500-5000 vectors). The codebooks are exact
+    and engine-deterministic (`pq_fit`), so the margin covers recall
+    across scale factors, not centroid drift. Exact-side row counts come
+    from the oracle; recall_ok is the certificate bit."""
     emb = t_cpu(spark, sf_dir, "embeddings")
     books = _pq_books(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 10)
@@ -2440,7 +2437,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Recall compounds both approximations, so the certificate bar stays
     at 0.5 while the measured value is 0.77 (sf0.1) / 0.93 (sf0.01)
-    with nprobe=3 — the margin absorbs centroid drift on both axes.
+    with nprobe=3; both models are exact, so the margin covers recall
+    across scale factors, not centroid drift.
     Exact-side counts come from the oracle; recall_ok is the
     certificate bit."""
     emb = t_cpu(spark, sf_dir, "embeddings")

@@ -944,16 +944,11 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     each arriving vector gets its coarse cell AND its m=8 product-quantizer
     codes in one stateless pass, i.e. everything a billion-vector
     IVF×PQ deployment must write per new vector (the 8-byte code row IS
-    the index entry; the float vector can be discarded). The batch
-    encoder (`pq_encode`) assigns codes with an equi-join + groupBy
-    argmin — a streaming AGGREGATION would need watermark state for what
-    is per-row arithmetic — so the stream uses the row-local twin
-    (`pq_codes_from_matrix`): codebooks ride a 1-row broadcast
-    ``array<array<struct<cvec,off>>>`` relation
-    (`pq_codebook_matrix`, the `centroid_matrix` pattern), scores stage
-    in their own array column, argmax ties break to the lowest code —
-    bit-identical to the batch join path
-    (tests/test_pq.py::test_rowlocal_codes_match_batch_encode). Output
+    the index entry; the float vector can be discarded). Codes come
+    from the one code assigner (`pq_codes`): the codebooks ride the 1-row
+    broadcast `codebook_matrix` relation (the `centroid_matrix` pattern)
+    and each code is a row-local argmax with ties to the lowest code, so
+    a stream needs no aggregation, watermark or state for it. Output
     grain is the index's own: one (vec_id, sub_id, code, cell) row per
     subspace via posexplode (stateless generator, append mode, no
     watermark). Graded row-level against the oracle's inlined plane +
@@ -967,21 +962,14 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         )
     )
-    pqmat = F.broadcast(S.pq_codebook_matrix(spark, _pq_stream_books()))
-    staged = (
-        S.coarse_dots(emb, _CENTROIDS64, "embedding")
-        .crossJoin(pqmat)
-        .withColumn(
-            "__codes",
-            S.pq_codes_from_matrix(
-                F.col("embedding"), F.col("__pqmat"), _PQ_STREAM_DSUB
-            ),
-        )
-        .select(
-            "vec_id",
-            S.ivf_centroid(F.col("__dots")).alias("cell"),
-            F.posexplode("__codes").alias("sub_id", "code"),
-        )
+    staged = S.pq_codes(
+        S.coarse_dots(emb, _CENTROIDS64, "embedding"),
+        _pq_stream_books(),
+        "embedding",
+    ).select(
+        "vec_id",
+        S.ivf_centroid(F.col("__dots")).alias("cell"),
+        F.posexplode("__codes").alias("sub_id", "code"),
     )
     out = staged.select("vec_id", "sub_id", "code", "cell")
     drain(out, "stream_ivfpq_ingest")

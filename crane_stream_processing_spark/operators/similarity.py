@@ -40,8 +40,8 @@ __all__ = [
     "random_projection",
     "pq_fit",
     "pq_encode",
-    "pq_codebook_matrix",
-    "pq_codes_from_matrix",
+    "codebook_matrix",
+    "pq_codes",
     "pq_adc_topk",
     "ivfpq_topk",
     "pca_power_components",
@@ -445,8 +445,9 @@ def coarse_dots(
 ) -> DataFrame:
     """The coarse quantizer: ``df`` plus ``__dots``, the array of
     dot(``vec_col``, centroid) in cell order — the one source of
-    per-centroid dots for every IVF entry point, both k-means trainers
-    and semantic dedup. The centroids arrive through the broadcast
+    per-centroid dots for every IVF entry point and semantic dedup
+    (trainers and PQ codes assign through :func:`pq_codes`, whose argmax
+    subtracts ||c||²/2). The centroids arrive through the broadcast
     :func:`centroid_matrix` relation; cell id is the array index, so
     :func:`ivf_centroid` / :func:`probe_cells` consume ``__dots``
     directly. Row-local, so a streaming ``df`` gets a stream-static
@@ -510,55 +511,6 @@ def ivf_assign(
     base = df.select(F.col(id_col), F.col(vec_col))
     return coarse_dots(base, centroids, vec_col).select(
         id_col, ivf_centroid(F.col("__dots")).alias("cell")
-    )
-
-
-def pq_codebook_matrix(
-    spark: SparkSession, codebooks: list[list[list[float]]]
-) -> DataFrame:
-    """The PQ codebooks as DATA: a single-row relation whose one column
-    ``__pqmat`` is ``array<array<struct<cvec, off>>>`` — outer index =
-    sub_id, inner index = code, ``off`` = ||c||²/2 (the argmax(dot−off)
-    staging :func:`_codebook_df` uses). The row-local twin of the
-    broadcast (sub_id, code, cvec, off) join relation: broadcast
-    cross-joined in (bounded: ONE row), it lets a STREAM assign codes
-    without the join+groupBy argmin (a streaming aggregation would need
-    a watermark and shuffle state for what is per-row arithmetic)."""
-    row = [
-        [
-            (
-                [float(x) for x in vec],
-                sum(float(x) * float(x) for x in vec) / 2.0,
-            )
-            for vec in book
-        ]
-        for book in codebooks
-    ]
-    return spark.createDataFrame(
-        [(row,)],
-        "__pqmat array<array<struct<cvec: array<double>, off: double>>>",
-    )
-
-
-def pq_codes_from_matrix(vec: Column, pqmat: Column, dsub: int) -> Column:
-    """Per-subspace nearest-code array from the matrix COLUMN — for sub
-    j, argmax over its codebook of ``dot(subvec_j, cvec) − off``, ties to
-    the LOWEST code (first-occurrence array_position — the same tiebreak
-    as :func:`_assign_codes`'s struct-min, so codes are bit-identical to
-    the batch :func:`pq_encode` path). Entirely row-local: one fold per
-    (sub, code) pair, scores staged in their own array so nothing is
-    computed twice."""
-    scores = F.transform(
-        pqmat,
-        lambda book, j: F.transform(
-            book,
-            lambda c: dot(F.slice(vec, j * dsub + 1, dsub), c["cvec"])
-            - c["off"],
-        ),
-    )
-    return F.transform(
-        scores,
-        lambda s: (F.array_position(s, F.array_max(s)) - 1).cast("int"),
     )
 
 
@@ -715,198 +667,6 @@ def ivf_ann_topk_nprobe(
     return _cosine_topk_within(q, c, k, on="cell", exclude_self=exclude_self)
 
 
-def _nearest_cell(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(v, cell): the assignment step of both Lloyd's trainers — argmin
-    ||v − c||² as argmax(dot(v, c) − ||c||²/2) over the :func:`coarse_dots`
-    array, first-occurrence (lowest-cell) tiebreak via :func:`ivf_centroid`."""
-    offs = [sum(float(x) * float(x) for x in c) / 2.0 for c in centroids]
-    l2scores = F.zip_with(
-        F.col("__dots"), F.array(*[F.lit(o) for o in offs]), lambda d, o: d - o
-    )
-    return coarse_dots(vecs, centroids, "v").select(
-        "v", ivf_centroid(l2scores).alias("cell")
-    )
-
-
-def kmeans_fit(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 4,
-) -> list[list[float]]:
-    """Distributed Lloyd's k-means over an embedding column — the trainer
-    for data-driven IVF cells (vs the fixed-direction demo centroids).
-
-    Each iteration is two distributed steps: (1) assign every vector to its
-    nearest centroid — argmin L2 via argmax(dot(v,c) − ||c||²/2), a staged
-    row-local expression; (2) recompute means as k rows of per-dimension
-    SUM aggregates + a count — map-side partial aggregation collapses each
-    partition to ≤k rows of dim sums BEFORE the shuffle, so the exchange
-    moves O(k·dim·partitions) values regardless of corpus size (the
-    earlier posexplode form shuffled n·dim rows — linear in the data).
-    Only the k×dim centroid matrix ever reaches the driver (the model,
-    not the data) — at 100 TB that is a few KB per iteration. Init is
-    deterministic: the k lowest-id vectors. The vector column is cached
-    for the duration of training (each iteration re-reads it; at cluster
-    scale this is the standard iterate-over-cached-input pattern) and
-    released before returning."""
-    # Deterministic init: the k lexicographically-lowest-id DISTINCT
-    # vectors. Deduplication matters on dedup-heavy corpora — two
-    # identical seeds would stay identical forever (argmax ties go to the
-    # first, the twin cell never receives a vector, one cluster slot is
-    # permanently wasted). Probe 4k low-id rows for k distinct vectors.
-    seeds = (
-        df.orderBy(id_col)
-        .limit(4 * k)
-        .select(vec_col)
-        .collect()
-    )
-    centroids: list[list[float]] = []
-    seen: set[tuple[float, ...]] = set()
-    for r in seeds:
-        vec = tuple(float(x) for x in r[0])
-        if vec not in seen:
-            seen.add(vec)
-            centroids.append(list(vec))
-        if len(centroids) == k:
-            break
-    if not centroids:
-        raise ValueError("kmeans_fit: input DataFrame has no rows")
-    if len(centroids) < k:
-        raise ValueError(
-            f"kmeans_fit: found only {len(centroids)} distinct vectors in "
-            f"the {4 * k} lowest-id rows; need k={k} — lower k or dedup "
-            "the corpus first"
-        )
-    dim = len(centroids[0])
-
-    vecs = df.select(F.col(vec_col).alias("v")).persist()
-    try:
-        for _ in range(iters):
-            sums = _nearest_cell(vecs, centroids).groupBy("cell").agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(F.element_at("v", d + 1)).alias(f"s{d}")
-                    for d in range(dim)
-                ],
-            ).collect()
-            new_c = [list(c) for c in centroids]  # empty cells keep old center
-            for r in sums:
-                new_c[r.cell] = [float(r[f"s{d}"]) / r.n for d in range(dim)]
-            centroids = new_c
-    finally:
-        vecs.unpersist()
-    return centroids
-
-
-#: 2^48 — scales every float32-representable embedding component to an
-#: EXACT integer-valued double (48 significand bits needed at this
-#: corpus's exponent range < the 53 a double carries; asserted per fit).
-EXACT_COMPONENT_SCALE = float(1 << 48)
-
-
-def kmeans_fit_exact(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 2,
-) -> list[list[float]]:
-    """ENGINE-deterministic Lloyd's k-means — the trainer whose model an
-    ANSI-SQL oracle can re-derive bit-for-bit, making retrain pipelines
-    TWO-SIDED gradeable (round-9 verdict item #2; `kmeans_fit`'s float
-    partial sums are merge-order-sensitive in the last ulps, which is
-    why its consumers were certificate-graded).
-
-    Determinism comes from three exactness moves, each individually
-    cross-engine-reproducible:
-
-    1. **Seeds**: the k lowest-first-occurrence-id DISTINCT vectors —
-       one groupBy(vec) + min(id) + orderBy + limit, a pure relational
-       definition (SQL: GROUP BY embedding / MIN(vec_id) / LIMIT k).
-    2. **Assignment**: argmax(dot(v, c) − ||c||²/2) with first-occurrence
-       (lowest-cell) tiebreak — the same row-local sequential fold the
-       IVF oracles already replay row-level via ``list_dot_product``.
-    3. **Means**: each float32 component scaled by 2⁴⁸ is an EXACT
-       integer-valued double (validated in-pass: a single extra
-       aggregate counts non-integral components and raises — no silent
-       wrong answers on float64 inputs), summed as ``decimal(38,0)`` —
-       exact integer arithmetic, order-independent, NO rounding at the
-       cast because the double has no fractional part — then
-       mean = (CAST(sum AS DOUBLE) / n) / 2⁴⁸: one correctly-rounded
-       decimal→double conversion, one IEEE division, one exact
-       exponent shift — identical in any engine.
-
-    Scale shape matches :func:`kmeans_fit`: assignment is the shared
-    broadcast centroid-matrix step (:func:`_nearest_cell`), the
-    decimal sums collapse map-side to ≤k rows × dim per partition, and
-    only the k×dim model reaches the driver. The decimal-sum integer
-    headroom is 38 digits ≈ 2¹²⁶ — at 2⁴⁸ per component that is ~2⁷⁸
-    rows per cell before overflow, far beyond any corpus."""
-    seeds = (
-        df.select(F.col(vec_col).alias("v"), F.col(id_col).alias("i"))
-        .groupBy("v")
-        .agg(F.min("i").alias("__fid"))
-        .orderBy("__fid")
-        .limit(k)
-        .collect()
-    )
-    centroids = [[float(x) for x in r.v] for r in seeds]
-    if len(centroids) < k:
-        raise ValueError(
-            f"kmeans_fit_exact: only {len(centroids)} distinct vectors; "
-            f"need k={k}"
-        )
-    dim = len(centroids[0])
-    scale = EXACT_COMPONENT_SCALE
-
-    vecs = df.select(F.col(vec_col).alias("v")).persist()
-    try:
-        for _ in range(iters):
-            comp = [
-                F.element_at("v", d + 1).cast("double") * F.lit(scale)
-                for d in range(dim)
-            ]
-            aggs = [F.count(F.lit(1)).alias("n")] + [
-                F.sum(comp[d].cast("decimal(38,0)")).alias(f"s{d}")
-                for d in range(dim)
-            ]
-            # exactness guard, fused into the same pass: any component
-            # whose 2^48-scaled double is non-integral breaks the
-            # order-independence proof — fail loudly
-            nonint = F.aggregate(
-                F.transform(
-                    F.col("v"),
-                    lambda x: (
-                        x.cast("double") * F.lit(scale)
-                        != F.floor(x.cast("double") * F.lit(scale))
-                    ).cast("int"),
-                ),
-                F.lit(0),
-                lambda a, b: a + b,
-            )
-            aggs.append(F.sum(nonint).alias("__nonint"))
-            assigned = _nearest_cell(vecs, centroids)
-            sums = assigned.groupBy("cell").agg(*aggs).collect()
-            if sum(r["__nonint"] for r in sums):
-                raise ValueError(
-                    "kmeans_fit_exact: input has components not exactly "
-                    f"representable as integers at scale 2^48 — use "
-                    "kmeans_fit (certificate-graded) for float64 inputs"
-                )
-            new_c = [list(c) for c in centroids]  # empty cells keep old
-            for r in sums:
-                n = r["n"]
-                new_c[r["cell"]] = [
-                    (float(r[f"s{d}"]) / n) / scale for d in range(dim)
-                ]
-            centroids = new_c
-    finally:
-        vecs.unpersist()
-    return centroids
-
-
 def cosine_near_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1025,68 +785,178 @@ def random_projection(
     return df.select(F.col(id_col), guarded.alias("proj"))
 
 
-def _subvectors(
-    df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int
+#: 2^48 — scales every float32-representable embedding component to an
+#: EXACT integer-valued double (48 significand bits needed at this
+#: corpus's exponent range < the 53 a double carries; asserted per fit).
+EXACT_COMPONENT_SCALE = float(1 << 48)
+
+
+def codebook_matrix(
+    spark: SparkSession, codebooks: list[list[list[float]]]
 ) -> DataFrame:
-    """Explode each vector into its ``m`` contiguous subvectors:
-    (id, sub_id, subvec). One narrow projection + explode — linear, no
-    shuffle; the slice happens JVM-side on the array column."""
-    parts = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("sub_id"),
-                F.slice(F.col(vec_col), j * dsub + 1, dsub).alias("subvec"),
+    """A trained vector quantizer as DATA: ``m`` codebooks of ``k``
+    centroids each (a k-means model is the case m=1) in a single-row
+    relation. ``__cb`` is ``array<array<array<double>>>`` (outer index =
+    sub_id, inner index = code) and ``__off`` is
+    ``array<array<double>>``, the staged ||c||²/2 of each centroid, so
+    assignment is argmax(dot − off). Broadcast-crossJoined (bounded: ONE
+    row), it keeps the plan O(1) in m·k. Built from pandas so that, with
+    Arrow enabled, it is a JVM-side LocalRelation, as
+    :func:`centroid_matrix` is."""
+    import pandas as pd
+
+    cb = [[[float(x) for x in c] for c in book] for book in codebooks]
+    off = [[sum(x * x for x in c) / 2.0 for c in book] for book in cb]
+    return spark.createDataFrame(
+        pd.DataFrame({"__cb": [cb], "__off": [off]}),
+        "__cb array<array<array<double>>>, __off array<array<double>>",
+    )
+
+
+def _split(vec: Column, m: int, dsub: int) -> Column:
+    """The ``m`` contiguous ``dsub``-long subvectors of ``vec``."""
+    return F.array(*[F.slice(vec, j * dsub + 1, dsub) for j in range(m)])
+
+
+def _sub_dots(vec: Column, m: int, dsub: int) -> Column:
+    """dot(subvector j, centroid) for every code of every subspace, as
+    ``array<array<double>>`` against the ``__cb`` column. Each subvector
+    is sliced once per row and bound as a lambda variable: a slice inside
+    the per-code lambda would be re-evaluated at every fold step."""
+    return F.zip_with(
+        _split(vec, m, dsub),
+        F.col("__cb"),
+        lambda s, book: F.transform(book, lambda c: dot(s, c)),
+    )
+
+
+def pq_codes(
+    df: DataFrame, codebooks: list[list[list[float]]], vec_col: str
+) -> DataFrame:
+    """The code assigner: ``df`` plus ``__codes``, each vector's
+    nearest-centroid code per subspace (``array<int>``, index = sub_id):
+    argmax of dot(subvector j, c) − ||c||²/2, i.e. argmin L2. The first
+    max wins (array_position), so ties go to the lowest code. Every
+    trainer iteration, :func:`pq_encode` and the streaming IVF×PQ ingest
+    assign through it. Row-local, with the codebooks arriving through
+    the broadcast :func:`codebook_matrix` relation, so a streaming
+    ``df`` gets a stream-static broadcast join and no state."""
+    m, dsub = len(codebooks), len(codebooks[0][0])
+    mat = F.broadcast(codebook_matrix(df.sparkSession, codebooks))
+    scores = F.zip_with(
+        _sub_dots(F.col(vec_col), m, dsub),
+        F.col("__off"),
+        lambda d, o: F.zip_with(d, o, lambda x, y: x - y),
+    )
+    codes = F.transform(
+        scores, lambda s: (F.array_position(s, F.array_max(s)) - 1).cast("int")
+    )
+    return df.crossJoin(mat).withColumn("__codes", codes).drop("__cb", "__off")
+
+
+def _seed_books(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    probe: list,
+    m: int,
+    dsub: int,
+    k: int,
+) -> list[list[list[float]]]:
+    """Per subspace, the ``k`` distinct subvectors with the lowest
+    first-occurrence id, in that order. ``probe`` holds the ``4k``
+    lowest-id vectors in id order: a subvector first seen after them has
+    a higher first id than any in them, so when every subspace finds
+    ``k`` distinct subvectors in the probe (or the probe is the whole
+    input) it decides. Otherwise one groupBy(sub_id, subvector) min(id)
+    pass does. Distinct seeds matter on dedup-heavy corpora: a twin seed
+    loses every tie to its lower-code copy and never receives a vector."""
+    books: list[list[list[float]]] = [[] for _ in range(m)]
+    seen: list[set] = [set() for _ in range(m)]
+    for r in probe:
+        for j in range(m):
+            sv = tuple(float(x) for x in r[0][j * dsub : (j + 1) * dsub])
+            if len(books[j]) < k and sv not in seen[j]:
+                seen[j].add(sv)
+                books[j].append(list(sv))
+    if len(probe) == 4 * k and any(len(b) < k for b in books):
+        first = (
+            df.select(
+                F.col(id_col).alias("i"),
+                F.posexplode(_split(F.col(vec_col), m, dsub)).alias("j", "sv"),
             )
-            for j in range(m)
-        ]
-    )
-    return df.select(
-        F.col(id_col).alias("vid"), F.explode(parts).alias("p")
-    ).select("vid", F.col("p.sub_id").alias("sub_id"), F.col("p.subvec").alias("subvec"))
-
-
-def _codebook_df(spark_df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
-    """Materialize driver-side codebooks as a broadcastable (sub_id, code,
-    cvec, off) relation — m*ksub rows, a few KB; off = ||c||²/2 staged once
-    so assignment is argmax(dot−off) (the kmeans_fit identity)."""
-    spark = spark_df.sparkSession
-    rows = [
-        (j, c, list(map(float, vec)), sum(x * x for x in vec) / 2.0)
-        for j, book in enumerate(codebooks)
-        for c, vec in enumerate(book)
-    ]
-    return F.broadcast(
-        spark.createDataFrame(
-            rows, "sub_id int, code int, cvec array<double>, off double"
+            .groupBy("j", "sv")
+            .agg(F.min("i").alias("fid"))
         )
-    )
+        rank = F.row_number().over(Window.partitionBy("j").orderBy("fid"))
+        books = [[] for _ in range(m)]
+        for r in (
+            first.withColumn("r", rank)
+            .filter(F.col("r") <= k)
+            .orderBy("j", "r")
+            .collect()
+        ):
+            books[r.j].append([float(x) for x in r.sv])
+    for j, book in enumerate(books):
+        if len(book) < k:
+            raise ValueError(
+                f"pq_fit: subspace {j} has only {len(book)} distinct "
+                f"subvectors; need {k} — lower k or dedup the corpus first"
+            )
+    return books
 
 
-def _assign_codes(
-    sub: DataFrame, cb: DataFrame
-) -> DataFrame:
-    """Nearest-centroid code per (vid, sub_id): equi-join on sub_id against
-    the broadcast codebook (each subvector meets only its own subspace's
-    ksub centroids), then a deterministic argmin via min-over-struct with
-    the code as tiebreak — stable under retries, unlike bare min_by."""
-    scored = sub.join(cb, "sub_id").select(
-        "vid",
-        "sub_id",
-        F.struct(
-            (dot("subvec", "cvec") - F.col("off")).alias("neg_score"),
-            F.col("code").alias("code"),
-        ).alias("s"),
+def _exact_means(
+    vecs: DataFrame, codebooks: list[list[list[float]]], dsub: int
+) -> list[list[list[float]]]:
+    """One Lloyd's iteration: assign every (vector, subspace) with
+    :func:`pq_codes`, then recompute each centroid as the exact mean of
+    its cell, one (sub_id, code, component) group per centroid
+    component. Each float32 component scaled by 2⁴⁸ is an exact
+    integer-valued double; summed as ``decimal(38,0)`` it is exact
+    integer arithmetic, order-independent, with no rounding at the cast.
+    mean = (CAST(sum AS DOUBLE) / n) / 2⁴⁸ is one correctly rounded
+    conversion, one IEEE division and one exact exponent shift,
+    identical in any engine. An aggregate in the same pass counts the
+    non-integral components and raises. Empty cells keep their
+    centroid. One sum over exploded components rather than one
+    aggregate column per component: at sf0.01 on 4 cores an iteration
+    takes 0.4–0.5 s this way against 1.1–1.4 s, for the same model."""
+    m = len(codebooks)
+    comps = (
+        pq_codes(vecs, codebooks, "v")
+        .select(
+            F.posexplode(
+                F.zip_with(
+                    _split(F.col("v"), m, dsub),
+                    F.col("__codes"),
+                    lambda s, c: F.struct(c.alias("code"), s.alias("sv")),
+                )
+            ).alias("sub_id", "p")
+        )
+        .select("sub_id", "p.code", F.posexplode("p.sv").alias("d", "x"))
     )
-    # argmax(dot - off) == argmin(-(dot - off)); struct min is lexicographic
-    scored = scored.withColumn(
-        "s",
-        F.struct(
-            (-F.col("s.neg_score")).alias("d"), F.col("s.code").alias("code")
-        ),
+    x = F.col("x").cast("double") * F.lit(EXACT_COMPONENT_SCALE)
+    sums = (
+        comps.groupBy("sub_id", "code", "d")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(x.cast("decimal(38,0)")).alias("s"),
+            F.sum((x != F.floor(x)).cast("int")).alias("nonint"),
+        )
+        .collect()
     )
-    return scored.groupBy("vid", "sub_id").agg(
-        F.min("s").getField("code").alias("code")
-    )
+    if any(r["nonint"] for r in sums):
+        raise ValueError(
+            "pq_fit: input has components not exactly representable as "
+            "integers at scale 2^48 — train on float32 embeddings"
+        )
+    new = [[list(c) for c in book] for book in codebooks]
+    for r in sums:
+        new[r["sub_id"]][r["code"]][r["d"]] = (
+            float(r["s"]) / r["n"]
+        ) / EXACT_COMPONENT_SCALE
+    return new
 
 
 def pq_fit(
@@ -1097,76 +967,54 @@ def pq_fit(
     ksub: int = 16,
     iters: int = 2,
 ) -> list[list[list[float]]]:
-    """Product-quantization trainer: independent Lloyd's k-means in each of
-    ``m`` subspaces (dim/m components each), all m subspaces trained in the
-    SAME distributed pass — the subspace id rides the join/groupBy keys, so
-    adding subspaces adds rows, not jobs. Returns codebooks[sub][code] =
-    centroid (driver-side model, m·ksub·dsub floats — a few KB; the corpus
-    never reaches the driver).
+    """The vector-quantizer trainer: Lloyd's k-means in each of ``m``
+    subspaces (dim/m components each), all m trained in the SAME
+    distributed pass — the subspace id rides the groupBy key, so adding
+    subspaces adds rows, not jobs. :func:`kmeans_fit` is the case m=1.
+    Returns codebooks[sub][code] = centroid (driver-side model,
+    m·ksub·dsub floats — a few KB; the corpus never reaches the driver).
 
-    Scale shape mirrors :func:`kmeans_fit`: assignment is a broadcast
-    equi-join (corpus subvectors × their subspace's ksub centroids), the
-    mean update is dsub per-dimension SUM aggregates per (sub_id, code) —
-    map-side partials collapse each partition to ≤ m·ksub rows before the
-    shuffle. At 100 TB you train on a sample (PQ codebooks saturate at
-    ~100k training points) and ENCODE the full corpus; the encode path is
-    the same assignment join. Init is deterministic: per subspace, the
-    first ksub distinct subvectors from the lexicographically-lowest-id
-    vectors (probing 4·ksub rows, the kmeans_fit discipline)."""
-    dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if dim_row is None:
+    Engine-deterministic, so an ANSI-SQL oracle re-derives the model bit
+    for bit (``northstar._sql_kmeans64_exact_ctes``): seeds are the
+    lowest-first-occurrence-id distinct subvectors (:func:`_seed_books`),
+    assignment is :func:`pq_codes`, and means are exact
+    (:func:`_exact_means`). Input components must be exact integers at
+    2⁴⁸ (float32 embeddings are); other input raises.
+
+    Scale: the decimal sums collapse map-side to ≤ m·ksub·dsub rows per
+    partition before the shuffle, and only the model reaches the driver.
+    The decimal(38,0) headroom (~2¹²⁶) allows ~2⁷⁸ rows per cell. The
+    vector column is cached while training (each iteration re-reads it).
+    At 100 TB train on a sample (codebooks saturate at ~100k points) and
+    encode the full corpus with :func:`pq_encode`."""
+    probe = df.orderBy(id_col).limit(4 * ksub).select(vec_col).collect()
+    if not probe:
         raise ValueError("pq_fit: input DataFrame has no rows")
-    dim = dim_row["d"]
+    dim = len(probe[0][0])
     if dim % m != 0:
         raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
     dsub = dim // m
-    seeds = (
-        df.orderBy(id_col).limit(4 * ksub).select(vec_col).collect()
-    )
-    codebooks: list[list[list[float]]] = []
-    for j in range(m):
-        seen: set[tuple[float, ...]] = set()
-        book: list[list[float]] = []
-        for r in seeds:
-            sv = tuple(float(x) for x in r[0][j * dsub : (j + 1) * dsub])
-            if sv not in seen:
-                seen.add(sv)
-                book.append(list(sv))
-            if len(book) == ksub:
-                break
-        if len(book) < ksub:
-            raise ValueError(
-                f"pq_fit: subspace {j} has only {len(book)} distinct "
-                f"subvectors in the {4 * ksub} lowest-id rows; need "
-                f"ksub={ksub} — lower ksub or dedup first"
-            )
-        codebooks.append(book)
-
-    sub = _subvectors(df, id_col, vec_col, m, dsub).persist()
+    codebooks = _seed_books(df, id_col, vec_col, probe, m, dsub, ksub)
+    vecs = df.select(F.col(vec_col).alias("v")).persist()
     try:
         for _ in range(iters):
-            cb = _codebook_df(df, codebooks)
-            codes = _assign_codes(sub, cb)
-            upd = (
-                sub.join(codes, ["vid", "sub_id"])
-                .groupBy("sub_id", "code")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[
-                        F.sum(F.element_at("subvec", i + 1).cast("double")).alias(f"s{i}")
-                        for i in range(dsub)
-                    ],
-                )
-                .collect()
-            )
-            for r in upd:
-                codebooks[r["sub_id"]][r["code"]] = [
-                    r[f"s{i}"] / r["n"] for i in range(dsub)
-                ]
-            # Empty cells keep their previous centroid (standard Lloyd's).
+            codebooks = _exact_means(vecs, codebooks, dsub)
     finally:
-        sub.unpersist()
+        vecs.unpersist()
     return codebooks
+
+
+def kmeans_fit(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 8,
+    iters: int = 4,
+) -> list[list[float]]:
+    """Distributed Lloyd's k-means over an embedding column — the trainer
+    for data-driven IVF cells: :func:`pq_fit` with one subspace, so the
+    model is its single k×dim codebook."""
+    return pq_fit(df, id_col, vec_col, m=1, ksub=k, iters=iters)[0]
 
 
 def pq_encode(
@@ -1177,12 +1025,12 @@ def pq_encode(
 ) -> DataFrame:
     """Encode every vector to its m nearest-centroid codes:
     (vid, sub_id, code) — m small ints per vector, the 8-byte-per-vector
-    compressed index PQ exists for. Linear: one broadcast equi-join +
-    one groupBy over n·m rows."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    sub = _subvectors(df, id_col, vec_col, m, dsub)
-    return _assign_codes(sub, _codebook_df(df, codebooks))
+    compressed index PQ exists for. :func:`pq_codes` plus a posexplode:
+    row-local and linear, no shuffle."""
+    base = df.select(F.col(id_col).alias("vid"), F.col(vec_col))
+    return pq_codes(base, codebooks, vec_col).select(
+        "vid", F.posexplode("__codes").alias("sub_id", "code")
+    )
 
 
 def ivfpq_encode_arrow(
@@ -1257,10 +1105,11 @@ def pq_adc_topk(
     Relational shape: LUT = |Q|·m·ksub-row broadcast (a few KB); scoring =
     codes (n·m rows) equi-joined to the LUT on (sub_id, code) + groupBy
     (query_id, cand_id) SUM — linear in corpus size, map-side partials.
-    The only crossJoin is the LUT build itself: |Q| x m·ksub, both sides
-    broadcast-tiny. ADC scores are rounded to 6 before ranking so
-    shortlist membership is stable across retries/engines up to genuine
-    1e-6 ties (which the cand_id tiebreak then pins).
+    The only crossJoins are against the one-row broadcast
+    :func:`codebook_matrix` (the LUT build and the encode). ADC scores
+    are rounded to 6 before ranking so shortlist membership is stable
+    across retries/engines up to genuine 1e-6 ties (which the cand_id
+    tiebreak then pins).
 
     Output: (query_id, cand_id, cos_sim, rank) for the exact re-ranked
     top-k; grade recall against brute force — ADC is an approximation,
@@ -1286,25 +1135,24 @@ def _adc_lut(
     vec_col: str,
 ) -> DataFrame:
     """The ADC lookup table, broadcast: (query_id, sub_id, code, lutv)
-    with lutv = dot(query subvector, centroid) — |Q| queries crossJoined
-    with the (m·ksub)-row codebook relation, two broadcast-tiny sides.
-    Inlining the codebook as m·ksub·dsub literals instead is
-    semantically identical, but analysis + codegen of the 2k-literal
+    with lutv = dot(query subvector, centroid) — the |Q| queries
+    crossJoined with the one-row :func:`codebook_matrix` (the dots of
+    :func:`pq_codes`, without the offsets), then exploded per subspace
+    and per code. Inlining the codebook as m·ksub·dsub literals instead
+    is semantically identical, but analysis + codegen of the 2k-literal
     projection cost ~2 s per run at any SF (measured 4.5 s -> 2.4 s)."""
-    dsub = len(codebooks[0][0])
+    m, dsub = len(codebooks), len(codebooks[0][0])
+    mat = F.broadcast(codebook_matrix(queries.sparkSession, codebooks))
     return F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        )
-        .crossJoin(_codebook_df(queries, codebooks))
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
+        .crossJoin(mat)
         .select(
             "query_id",
-            "sub_id",
-            "code",
-            dot(
-                F.slice("qvec", F.col("sub_id") * dsub + 1, dsub), F.col("cvec")
-            ).alias("lutv"),
+            F.posexplode(_sub_dots(F.col(vec_col), m, dsub)).alias(
+                "sub_id", "__row"
+            ),
         )
+        .select("query_id", "sub_id", F.posexplode("__row").alias("code", "lutv"))
     )
 
 
@@ -1350,8 +1198,8 @@ def ivfpq_topk(
     At 100 TB this is the only layout that is simultaneously
     read-efficient (cell-pruned scan of 8-byte codes, not float rows)
     and shuffle-efficient (every join here is an equi-join on cell /
-    code / id keys; the sole crossJoin is the |Q|×(m·ksub) LUT build,
-    both sides broadcast-tiny).
+    code / id keys; the only crossJoins are against one-row broadcast
+    centroid and codebook matrices).
 
     Candidate flow: codes ⨝ cells on cand_id (both built once per
     corpus — the persisted index), ⨝ the exploded (query, cell) probe

@@ -232,9 +232,16 @@ def get_spark(
     # session-wide AQE is disabled for the stream (and that a temporary
     # checkpoint was created); both are analysis-time notices, so only
     # errors from that class reach the log. AQE itself is untouched.
+    # MapPartitionsRDD warns on every unpersist of a localCheckpointed
+    # RDD that it cannot be recomputed; release_query_caches drops those
+    # on purpose after each query. In a full registry pass that is the
+    # only WARN this logger prints.
     jvm = spark.sparkContext._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+    for logger in (
         "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
+        "org.apache.spark.rdd.MapPartitionsRDD",
+    ):
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+            logger, jvm.org.apache.logging.log4j.Level.ERROR
+        )
     return spark

@@ -78,3 +78,22 @@ def assert_query_matches_oracle(spark, duck, qfn, oracle, sf_dir):
     assert len(sr) == len(dr), f"row count mismatch: spark={len(sr)} duck={len(dr)}"
     for i, (a, b) in enumerate(zip(sr, dr)):
         assert a == b, f"row {i} mismatch:\n spark={a}\n duck ={b}"
+
+
+def models_across_layouts(spark, df, fit) -> list:
+    """``fit(df')`` under every layout a model must not depend on: shuffle
+    partitions {1, 8} × AQE {on, off} × ``df`` repartitioned to {1, 8}.
+    An exact trainer returns the same model for all eight."""
+    from crane_stream_processing_spark.session import scoped_confs
+
+    models = []
+    for parts in ("1", "8"):
+        for aqe in ("true", "false"):
+            confs = {
+                "spark.sql.shuffle.partitions": parts,
+                "spark.sql.adaptive.enabled": aqe,
+            }
+            with scoped_confs(spark, confs):
+                for n in (1, 8):
+                    models.append(fit(df.repartition(n)))
+    return models

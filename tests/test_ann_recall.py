@@ -58,3 +58,61 @@ def test_approx_results_are_true_cosines(spark, sf_dir):
             key = (r.query_id, r.cand_id)
             if key in exact_scores:
                 assert r.cos_sim == exact_scores[key], (name, key)
+
+
+def test_ivf_recall_surface_monotone_in_nprobe(spark, sf_dir):
+    # Probe sets are nested (top-1 ⊂ top-2 ⊂ top-4 cells), so for every k
+    # the recall must be monotone non-decreasing in nprobe.
+    from crane_stream_processing_spark.inventory.northstar import (
+        sim_ivf_recall_at_k,
+    )
+
+    rows = sim_ivf_recall_at_k(spark, sf_dir).collect()
+    surface = {(r.nprobe, r.k): r.recall for r in rows}
+    assert len(surface) == 9
+    for k in (1, 3, 5):
+        assert surface[(1, k)] <= surface[(2, k)] <= surface[(4, k)]
+    # recall is a proper ratio, and n_hit can never exceed n_exact
+    for r in rows:
+        assert 0.0 <= r.recall <= 1.0 and r.n_hit <= r.n_exact
+
+
+def test_filtered_ann_respects_predicate_and_subsets_cell(spark, sf_dir):
+    # Every returned candidate satisfies the metadata predicate, and the
+    # filtered top-k is a subset of the query's cell members — ranks are
+    # computed over the filtered population (no post-filter truncation).
+    from crane_stream_processing_spark.inventory.northstar import (
+        sim_ivf_ann_topk,
+        sim_ivf_filtered_topk,
+    )
+
+    rows = sim_ivf_filtered_topk(spark, sf_dir).collect()
+    assert rows and all(r.cand_label % 2 == 0 for r in rows)
+    # per query: ranks are 1..n contiguous (a re-ranked population, not
+    # the unfiltered ranking with holes)
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r.query_id, []).append(r.rank)
+    for q, ranks in by_q.items():
+        assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
+    # the filtered result can only contain candidates the unfiltered
+    # cell search could see (same cells, same index)
+    unfiltered_pairs = {
+        (r.query_id, r.cand_id)
+        for r in sim_ivf_ann_topk(spark, sf_dir)
+        .select("query_id", "cand_id")
+        .collect()
+    }
+    # not a subset of unfiltered TOP-K (filtering changes the cut), so
+    # check against full cell membership via a wider unfiltered k: the
+    # even-labelled candidates ranked top-3 filtered must appear in the
+    # unfiltered ranking of the same cell at some rank -> verify by
+    # membership in the cell join re-derived from the persisted index
+    from crane_stream_processing_spark.inventory.northstar import _ivf_index
+
+    idx = _ivf_index(spark, sf_dir)
+    cell_of = {r.cand_id: r.cell for r in idx.select("cand_id", "cell").collect()}
+    for r in rows:
+        assert cell_of[r.cand_id] == cell_of[r.query_id], (
+            "filtered candidate must come from the query's probed cell"
+        )

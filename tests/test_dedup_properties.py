@@ -5,13 +5,18 @@
 - simhash is invariant to token order only in its multiset sense,
   and identical docs hash identically;
 - the order-insensitive fingerprint equates permutations while the
-  rolling hash distinguishes them."""
+  rolling hash distinguishes them;
+- semantic prune (SemDeDup) only prunes ids with a lower-id witness
+  above the threshold."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from crane_stream_processing_spark.operators import dedup as D
+from crane_stream_processing_spark.operators import similarity as S
 from crane_stream_processing_spark.operators.text import fingerprint, rolling_hash
 
 
@@ -272,3 +277,43 @@ def test_incremental_index_merge_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert out and all(
         (h > 0) == bool(d) and 0 <= h <= 4 for h, d in out.values()
     )
+
+
+@pytest.fixture(scope="module")
+def emb(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def test_semantic_prune_sound_and_subset(spark, emb):
+    """Every pruned id has a lower-id witness at cosine >= threshold
+    (soundness, checked against the exact all-pairs graph), and the pruned
+    set is a subset of the exact global prune set."""
+    cents = S.kmeans_fit(emb, k=8, iters=2)
+    pruned = {
+        r.pruned
+        for r in D.semantic_prune(emb, cents, threshold=0.4, nprobe=2).collect()
+    }
+    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+            for r in emb.collect()}
+    exact_pruned = set()
+    ids = sorted(vecs)
+    for i, ib in enumerate(ids):
+        for ia in ids[:i]:
+            a, b = vecs[ia], vecs[ib]
+            cos = round(
+                float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 6
+            )
+            if cos >= 0.4:
+                exact_pruned.add(ib)
+                break
+    assert pruned <= exact_pruned
+    if exact_pruned:
+        assert len(pruned) / len(exact_pruned) >= 0.5
+
+
+def test_semantic_prune_certificate_bits(spark, sf_dir):
+    from crane_stream_processing_spark.inventory import REGISTRY
+
+    row = REGISTRY["dedup_semantic_prune"].fn(spark, sf_dir).collect()[0]
+    assert row.subset_ok and row.recall_ok
+    assert row.n_window > 0

@@ -1,5 +1,7 @@
-"""Distributed k-means (the IVF trainer): convergence and integration
-with ivf_ann_topk. Only the k x dim centroid matrix touches the driver."""
+"""Distributed k-means (the IVF trainer) and the IVF search it feeds:
+convergence, exactness, layout independence, integration with
+ivf_ann_topk and probe selection under ties. Only the k x dim centroid
+matrix touches the driver."""
 
 from __future__ import annotations
 
@@ -154,26 +156,21 @@ def test_arrow_coarse_assign_matches_relational(spark, emb):
 
 
 def test_exact_kmeans_trainer_deterministic_and_guarded(spark, emb):
-    """kmeans_fit_exact's two contracts: (a) run-determinism — two fits
+    """The exact trainer's two contracts: (a) run-determinism — two fits
     on the same input return bit-identical models (the property that
-    makes the retrain loop's after-side SQL-re-derivable, unlike the
-    float-merge-order-sensitive kmeans_fit); (b) the integral-at-2^48
-    guard — a float64 input that is NOT exactly representable at the
-    scale must raise, never silently produce an unprovable model. Also:
-    the exact model trains (inertia improves over its seeds)."""
-    import numpy as np
+    makes the retrain loop's after-side SQL-re-derivable); (b) the
+    integral-at-2^48 guard — a float64 input that is NOT exactly
+    representable at the scale must raise, never silently produce an
+    unprovable model. Also: the model trains (inertia improves over its
+    seeds)."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from crane_stream_processing_spark.operators.similarity import (
-        kmeans_fit_exact,
-    )
-
-    a = kmeans_fit_exact(emb, k=8, iters=2)
-    b = kmeans_fit_exact(emb, k=8, iters=2)
+    a = kmeans_fit(emb, k=8, iters=2)
+    b = kmeans_fit(emb, k=8, iters=2)
     assert a == b  # bit-identical, not allclose
 
-    seeds = kmeans_fit_exact(emb, k=8, iters=0)
+    seeds = kmeans_fit(emb, k=8, iters=0)
     assert _inertia(emb, seeds) >= _inertia(emb, a)
 
     # 0.1 is not a dyadic rational: 0.1 * 2^48 is non-integral
@@ -182,28 +179,108 @@ def test_exact_kmeans_trainer_deterministic_and_guarded(spark, emb):
         F.transform("embedding", lambda x: x.cast("double") + F.lit(0.1)),
     )
     with _pytest.raises(ValueError, match="not exactly representable"):
-        kmeans_fit_exact(bad, k=8, iters=1)
+        kmeans_fit(bad, k=8, iters=1)
 
 
 def test_exact_kmeans_hand_computed_means(spark):
-    """kmeans_fit_exact on a hand-separable float32-representable
-    corpus: two clear clusters, k=2, 1 iteration — the trained
-    centroids must be EXACTLY the cluster means (decimal-exact sums /
-    count / 2^48 shift), and the seed order must follow
-    first-occurrence id order. Guards the exact-fold arithmetic against
-    refactors independently of the SQL-oracle parity."""
-    from crane_stream_processing_spark.operators.similarity import (
-        kmeans_fit_exact,
-    )
-
+    """kmeans_fit on a hand-separable float32-representable corpus: two
+    clear clusters, k=2, 1 iteration — the trained centroids must be
+    EXACTLY the cluster means (decimal-exact sums / count / 2^48 shift),
+    and the seed order must follow first-occurrence id order. Guards the
+    exact-fold arithmetic against refactors independently of the
+    SQL-oracle parity."""
     # dyadic components (exact at 2^48); ids chosen so seeds = rows 1,2
     rows = [
         (1, [0.25, 0.0]), (2, [8.0, 8.25]),
         (3, [0.5, 0.25]), (4, [8.5, 7.75]), (5, [0.75, 0.5]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = kmeans_fit_exact(df, k=2, iters=1)
+    got = kmeans_fit(df, k=2, iters=1)
     # assignment to seeds (0.25,0) and (8,8.25): {1,3,5} -> cell 0,
     # {2,4} -> cell 1; means exactly:
     assert got[0] == [(0.25 + 0.5 + 0.75) / 3, (0.0 + 0.25 + 0.5) / 3]
     assert got[1] == [(8.0 + 8.5) / 2, (8.25 + 7.75) / 2]
+
+
+def test_kmeans_model_independent_of_layout(spark, emb):
+    """The k=8 model is bit-identical across shuffle partitions, AQE
+    and input partitioning: exact sums do not depend on merge order."""
+    from .conftest import models_across_layouts
+
+    models = models_across_layouts(
+        spark, emb, lambda df: kmeans_fit(df, k=8, iters=2)
+    )
+    assert all(m == models[0] for m in models)
+
+
+def test_seeds_past_the_probe_are_lowest_first_occurrence(spark):
+    """Seeds are the k distinct vectors with the lowest first-occurrence
+    id, also when the 4k lowest-id rows hold fewer than k distinct
+    vectors and the relational pass decides."""
+    rows = [(i, [1.0, 1.0]) for i in range(8)]  # the 4k=8 probe: one vector
+    rows += [(8, [2.0, 0.0]), (9, [1.0, 1.0]), (10, [0.0, 2.0]), (11, [2.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    assert kmeans_fit(df, k=2, iters=0) == [[1.0, 1.0], [2.0, 0.0]]
+    with pytest.raises(ValueError, match="distinct"):
+        kmeans_fit(df, k=4, iters=0)
+
+
+def test_ivf_nprobe_tied_centroids_no_duplicate_pairs(spark):
+    """Tied centroid dots must still probe nprobe DISTINCT cells exactly
+    once each (probe_cells sorts (dot, cell-index) pairs, so ties break
+    by index instead of collapsing through first-occurrence
+    array_position). A duplicate cell in the probe list would emit
+    duplicate (query, candidate) pairs inside the top-k; a collapsed
+    tie would silently scan fewer than nprobe cells."""
+    from crane_stream_processing_spark.operators.similarity import (
+        ivf_ann_topk_nprobe,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i % 3)]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    dup_centroids = [[1.0, 0.5], [1.0, 0.5]]  # every query ties both cells
+    out = ivf_ann_topk_nprobe(
+        emb, emb.filter("vec_id < 3"), dup_centroids, k=3, nprobe=2
+    )
+    rows = [(r.query_id, r.cand_id) for r in out.collect()]
+    assert len(rows) == len(set(rows)), rows
+
+
+def test_probe_cells_exact_count_under_ties(spark):
+    """probe_cells must return exactly nprobe distinct cells even when
+    dot values tie (a value-based recipe collapses tied dots through
+    array_distinct, probing fewer cells and never scanning the tied
+    cell), ordered desc-by-dot with low-index ties."""
+    from pyspark.sql import functions as F
+
+    from crane_stream_processing_spark.operators.similarity import (
+        probe_cells,
+    )
+
+    df = spark.createDataFrame(
+        [([0.5, 0.9, 0.9, 0.1, 0.9],)], "dots array<double>"
+    )
+    for nprobe, want in [(2, [1, 2]), (4, [1, 2, 4, 0]), (9, [1, 2, 4, 0, 3])]:
+        got = df.select(
+            probe_cells(F.col("dots"), nprobe).alias("c")
+        ).first().c
+        assert got == want, (nprobe, got)
+
+
+def test_sim_ivf_retrain_loop_certificates(spark, sf_dir):
+    """All three certificates must hold, and the oracle-exact integers
+    must be internally consistent (hits bounded by exact rows, health
+    scalars positive)."""
+    from crane_stream_processing_spark.inventory.northstar import (
+        sim_ivf_retrain_loop,
+    )
+
+    row = sim_ivf_retrain_loop(spark, sf_dir).collect()
+    assert len(row) == 1
+    r = row[0]
+    assert r.n_queries == 10 and r.n_exact == 30
+    assert 0 <= r.n_hit_before <= r.n_exact
+    assert r.max_before >= 1 and r.hot_before >= 0
+    assert r.balance_improved and r.recall_not_worse and r.recall_retrained_ok

@@ -3,8 +3,11 @@ so the tests pin (1) the degenerate-exactness contract — when the ADC
 shortlist covers the whole corpus, the exact re-rank stage makes the
 output IDENTICAL to brute force, proving approximation lives only in
 shortlist selection, never in the returned metric; (2) the code-table
-shape/range invariants the encode join relies on; and (3) loud failure
-on a mis-factored dimension. The recall floor of the full pipeline is
+shape/range invariants of the encoder; (3) the trainer's exactness:
+hand-computed means, k-means as PQ with one subspace and layout
+independence; (4) Arrow-vs-relational encode
+parity, ties and fold order included; and (5) loud failure on a
+mis-factored dimension. The recall floor of the full pipeline is
 pinned by the sim_pq_adc_topk certificate in the graded registry."""
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ def _corpus(spark, n=30, dim=16, seed=7):
         (i, [round(rng.uniform(-1, 1), 3) for _ in range(dim)])
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
 def test_pq_covering_shortlist_equals_exact(spark):
@@ -87,60 +90,54 @@ def test_ivfpq_subset_of_pq_and_true_cosines(spark):
         assert pq[(r.query_id, r.cand_id)] == r.cos_sim
 
 
-def test_rowlocal_codes_match_batch_encode(spark):
-    """The streaming ingest's row-local code assignment
-    (pq_codebook_matrix + pq_codes_from_matrix) must be BIT-identical to
-    the batch join+groupBy path (pq_encode) — same dot−off staging, same
-    lowest-code tiebreak — including on a codebook engineered to produce
-    exact score ties."""
-    from pyspark.sql import functions as F
-
-    emb = _corpus(spark, n=40, dim=16)
-    books = S.pq_fit(emb, m=4, ksub=4, iters=2)
-
-    batch = {
-        (r.vid, r.sub_id): r.code
-        for r in S.pq_encode(emb, books).collect()
-    }
-    pqmat = F.broadcast(S.pq_codebook_matrix(spark, books))
-    rowlocal = {
-        (r.vec_id, r.sub_id): r.code
-        for r in emb.crossJoin(pqmat)
-        .select(
-            "vec_id",
-            F.posexplode(
-                S.pq_codes_from_matrix(F.col("embedding"), F.col("__pqmat"), 4)
-            ).alias("sub_id", "code"),
-        )
-        .collect()
-    }
-    assert rowlocal == batch and len(batch) == 40 * 4
-
-    # tie fixture: duplicate centroids in one subspace → both paths must
-    # pick the LOWEST code
-    tie_books = [[[1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.0, 1.0]]] * 2
-    tie_emb = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 1.0]), (1, [0.0, 1.0, 1.0, 0.0])],
-        "vec_id long, embedding array<double>",
+def test_kmeans_is_pq_with_one_subspace(spark):
+    emb = _corpus(spark, n=40)
+    assert S.pq_fit(emb, m=1, ksub=4, iters=2)[0] == S.kmeans_fit(
+        emb, k=4, iters=2
     )
-    b = {
-        (r.vid, r.sub_id): r.code
-        for r in S.pq_encode(tie_emb, tie_books).collect()
-    }
-    m = F.broadcast(S.pq_codebook_matrix(spark, tie_books))
-    r = {
-        (row.vec_id, row.sub_id): row.code
-        for row in tie_emb.crossJoin(m)
-        .select(
-            "vec_id",
-            F.posexplode(
-                S.pq_codes_from_matrix(F.col("embedding"), F.col("__pqmat"), 2)
-            ).alias("sub_id", "code"),
-        )
-        .collect()
-    }
-    assert r == b
-    assert r[(0, 0)] == 0 and r[(1, 0)] == 2  # ties → lowest code
+
+
+def test_pq_hand_computed_means(spark):
+    """pq_fit on a hand-separable float32-representable corpus, m=2,
+    ksub=2, 1 iteration: each subspace's centroids must be EXACTLY the
+    means of its own cells (decimal-exact sums / count / 2^48 shift),
+    with seeds in first-occurrence id order per subspace — the two
+    subspaces split the rows differently."""
+    rows = [
+        (1, [0.25, 0.0, 4.0, 4.0]),
+        (2, [8.0, 8.25, 4.0, 4.0]),  # subspace 1 repeats row 1's subvector
+        (3, [0.5, 0.25, 0.0, 0.5]),
+        (4, [8.5, 7.75, 0.25, 0.0]),
+        (5, [0.75, 0.5, 4.5, 3.5]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = S.pq_fit(df, m=2, ksub=2, iters=1)
+    # subspace 0 seeds (0.25,0), (8,8.25): {1,3,5} -> 0, {2,4} -> 1
+    assert got[0] == [
+        [(0.25 + 0.5 + 0.75) / 3, (0.0 + 0.25 + 0.5) / 3],
+        [(8.0 + 8.5) / 2, (8.25 + 7.75) / 2],
+    ]
+    # subspace 1 seeds (4,4) (id 1) and (0,0.5) (id 3; id 2 repeats the
+    # first): {1,2,5} -> 0, {3,4} -> 1
+    assert got[1] == [
+        [(4.0 + 4.0 + 4.5) / 3, (4.0 + 4.0 + 3.5) / 3],
+        [(0.0 + 0.25) / 2, (0.5 + 0.0) / 2],
+    ]
+
+
+def test_pq_model_independent_of_layout(spark, sf_dir):
+    """The 8x32 codebooks are bit-identical across shuffle partitions,
+    AQE and input partitioning: exact sums do not depend on merge
+    order."""
+    from crane_stream_processing_spark.catalog import load_table
+
+    from .conftest import models_across_layouts
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    models = models_across_layouts(
+        spark, emb, lambda df: S.pq_fit(df, m=8, ksub=32, iters=2)
+    )
+    assert all(m == models[0] for m in models)
 
 
 def _arrow_codes(df, books):
@@ -155,9 +152,9 @@ def _arrow_codes(df, books):
 
 
 def test_arrow_encode_matches_batch_encode(spark):
-    """The fused Arrow encoder's codes must agree with the join+groupBy
-    path code-for-code — same argmax(dot − off) staging, same
-    lowest-code tiebreak, including engineered exact ties."""
+    """The fused Arrow encoder's codes must agree with the relational
+    assigner (pq_encode) code-for-code — same argmax(dot − off) staging,
+    same lowest-code tiebreak, including engineered exact ties."""
     emb = _corpus(spark, n=50, dim=16, seed=11)
     books = S.pq_fit(emb, m=4, ksub=4, iters=2)
     batch = {
@@ -190,7 +187,7 @@ def test_arrow_encode_rejects_misfactored_dim(spark):
 
 def test_arrow_encode_exact_fold_matches_batch(spark):
     """The fused Arrow encoder's strict sequential fold must reproduce
-    the join path's codes — including the cancellation fixture where
+    the relational assigner's codes — including the cancellation fixture where
     the association order of the sub-dot decides the argmax."""
     emb = _corpus(spark, n=40, dim=16, seed=3)
     books = S.pq_fit(emb, m=4, ksub=4, iters=2)
@@ -203,8 +200,8 @@ def test_arrow_encode_exact_fold_matches_batch(spark):
     # (1e16 + 1.0 == 1e16) -> dot 0.0, score 0.0 - 1.5 = -1.5; exact
     # math would give 1.0 - 1.5 = -0.5. c1 scores -0.6 - 0.18 = -0.78,
     # strictly BETWEEN them — so the association order decides the
-    # argmax: fold -> code 1, exact math -> code 0. The join path and
-    # the Arrow kernel must agree on the fold's answer.
+    # argmax: fold -> code 1, exact math -> code 0. The relational
+    # assigner and the Arrow kernel must agree on the fold's answer.
     cbooks = [[[1.0, 1.0, 1.0], [0.0, -0.6, 0.0]]]
     fx = spark.createDataFrame(
         [(0, [1e16, 1.0, -1e16])], "vec_id long, embedding array<double>"

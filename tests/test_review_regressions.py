@@ -54,50 +54,6 @@ def test_weighted_sample_negative_and_null_weights_keep_nothing(spark):
     assert weighted_sample(df, F.lit(1.5), "doc_id").count() == 100
 
 
-def test_ivf_nprobe_tied_centroids_no_duplicate_pairs(spark):
-    """Tied centroid dots must still probe nprobe DISTINCT cells exactly
-    once each (probe_cells sorts (dot, cell-index) pairs, so ties break
-    by index instead of collapsing through first-occurrence
-    array_position). A duplicate cell in the probe list would emit
-    duplicate (query, candidate) pairs inside the top-k; a collapsed
-    tie would silently scan fewer than nprobe cells."""
-    from crane_stream_processing_spark.operators.similarity import (
-        ivf_ann_topk_nprobe,
-    )
-
-    emb = spark.createDataFrame(
-        [(i, [1.0, float(i % 3)]) for i in range(8)],
-        "vec_id long, embedding array<float>",
-    )
-    dup_centroids = [[1.0, 0.5], [1.0, 0.5]]  # every query ties both cells
-    out = ivf_ann_topk_nprobe(
-        emb, emb.filter("vec_id < 3"), dup_centroids, k=3, nprobe=2
-    )
-    rows = [(r.query_id, r.cand_id) for r in out.collect()]
-    assert len(rows) == len(set(rows)), rows
-
-
-def test_probe_cells_exact_count_under_ties(spark):
-    """probe_cells must return exactly nprobe distinct cells even when
-    dot values tie (round-3 advisor: the value-based recipe collapsed
-    tied dots through array_distinct, probing fewer cells and never
-    scanning the tied cell), ordered desc-by-dot with low-index ties."""
-    from pyspark.sql import functions as F
-
-    from crane_stream_processing_spark.operators.similarity import (
-        probe_cells,
-    )
-
-    df = spark.createDataFrame(
-        [([0.5, 0.9, 0.9, 0.1, 0.9],)], "dots array<double>"
-    )
-    for nprobe, want in [(2, [1, 2]), (4, [1, 2, 4, 0]), (9, [1, 2, 4, 0, 3])]:
-        got = df.select(
-            probe_cells(F.col("dots"), nprobe).alias("c")
-        ).first().c
-        assert got == want, (nprobe, got)
-
-
 def test_salted_join_rejects_small_side_preserving_outer(spark):
     """right/full outer over the salt-replicated small side would emit
     each unmatched small row once per salt bucket — refuse loudly."""

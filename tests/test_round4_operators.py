@@ -1,7 +1,7 @@
-"""Round-4 operators: binary-quantization ANN, SemDeDup semantic prune,
-CCNet perplexity buckets, and exact-integer PCA power iteration — property
-tests beyond the registry-wide oracle sweep (which already grades each
-query's full output against DuckDB)."""
+"""Round-4 operators: binary-quantization ANN, CCNet perplexity buckets,
+and exact-integer PCA power iteration — property tests beyond the
+registry-wide oracle sweep (which already grades each query's full
+output against DuckDB)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-import crane_stream_processing_spark.operators.dedup as D
 import crane_stream_processing_spark.operators.similarity as S
 from crane_stream_processing_spark.inventory import REGISTRY
 
@@ -71,39 +70,6 @@ def test_binary_quant_scores_are_true_cosines(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # SemDeDup
 # ---------------------------------------------------------------------------
-
-
-def test_semantic_prune_sound_and_subset(spark, emb):
-    """Every pruned id has a lower-id witness at cosine >= threshold
-    (soundness, checked against the exact all-pairs graph), and the pruned
-    set is a subset of the exact global prune set."""
-    cents = S.kmeans_fit(emb, k=8, iters=2)
-    pruned = {
-        r.pruned
-        for r in D.semantic_prune(emb, cents, threshold=0.4, nprobe=2).collect()
-    }
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
-            for r in emb.collect()}
-    exact_pruned = set()
-    ids = sorted(vecs)
-    for i, ib in enumerate(ids):
-        for ia in ids[:i]:
-            a, b = vecs[ia], vecs[ib]
-            cos = round(
-                float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 6
-            )
-            if cos >= 0.4:
-                exact_pruned.add(ib)
-                break
-    assert pruned <= exact_pruned
-    if exact_pruned:
-        assert len(pruned) / len(exact_pruned) >= 0.5
-
-
-def test_semantic_prune_certificate_bits(spark, sf_dir):
-    row = REGISTRY["dedup_semantic_prune"].fn(spark, sf_dir).collect()[0]
-    assert row.subset_ok and row.recall_ok
-    assert row.n_window > 0
 
 
 # ---------------------------------------------------------------------------

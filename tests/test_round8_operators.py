@@ -1,8 +1,8 @@
-"""Round-8 operator properties: the IVF retrain loop's certificates, the
-DSIR selection-shift histogram, and the id-span-derived dedup horizon of
-the streaming curation pipeline (the round-7 advice item — duplicates
-whose synthesized event times straddle the default watermark horizon must
-still dedup when the caller derives the horizon from the id domain)."""
+"""Round-8 operator properties: the DSIR selection-shift histogram and
+the id-span-derived dedup horizon of the streaming curation pipeline (the
+round-7 advice item — duplicates whose synthesized event times straddle
+the default watermark horizon must still dedup when the caller derives
+the horizon from the id domain)."""
 
 from __future__ import annotations
 
@@ -10,23 +10,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_sim_ivf_retrain_loop_certificates(spark, sf_dir):
-    """All three certificates must hold, and the oracle-exact integers
-    must be internally consistent (hits bounded by exact rows, health
-    scalars positive)."""
-    from crane_stream_processing_spark.inventory.northstar import (
-        sim_ivf_retrain_loop,
-    )
-
-    row = sim_ivf_retrain_loop(spark, sf_dir).collect()
-    assert len(row) == 1
-    r = row[0]
-    assert r.n_queries == 10 and r.n_exact == 30
-    assert 0 <= r.n_hit_before <= r.n_exact
-    assert r.max_before >= 1 and r.hot_before >= 0
-    assert r.balance_improved and r.recall_not_worse and r.recall_retrained_ok
 
 
 def test_curate_dsir_shift_histogram_properties(spark, sf_dir):

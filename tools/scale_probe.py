@@ -304,9 +304,9 @@ def _scratch(prefix: str) -> str:
 
 def ingest_probe(spark, n: int) -> dict:
     """Streaming IVF×PQ ingest throughput BOTH WAYS (round-6 verdict #2):
-    the graded relational path (broadcast codebook relations + interpreted
-    Catalyst HOF scoring — ~1 ms/row, the known `stream_ivfpq_ingest`
-    profile) vs the production Arrow foreachBatch path
+    the graded relational path (broadcast centroid and codebook matrices
+    + interpreted Catalyst HOF scoring — ~1 ms/row, the known
+    `stream_ivfpq_ingest` profile) vs the production Arrow foreachBatch path
     (`ivfpq_encode_arrow`: one vectorized sequential-fold pass per Arrow
     batch, bit-identical entries — tests/test_ann_ingest.py),
     plus the Arrow path with the real batch-id-idempotent parquet sink so
@@ -322,7 +322,6 @@ def ingest_probe(spark, n: int) -> dict:
 
     from crane_stream_processing_spark.inventory.northstar import _CENTROIDS64
     from crane_stream_processing_spark.inventory.streaming_queries import (
-        _PQ_STREAM_DSUB,
         _pq_stream_books,
         drain,
     )
@@ -351,21 +350,14 @@ def ingest_probe(spark, n: int) -> dict:
         )
 
     def run_relational() -> None:
-        pqmat = F.broadcast(S.pq_codebook_matrix(spark, books))
-        staged = (
-            S.coarse_dots(stream_src(), _CENTROIDS64, "embedding")
-            .crossJoin(pqmat)
-            .withColumn(
-                "__codes",
-                S.pq_codes_from_matrix(
-                    F.col("embedding"), F.col("__pqmat"), _PQ_STREAM_DSUB
-                ),
-            )
-            .select(
-                "vec_id",
-                S.ivf_centroid(F.col("__dots")).alias("cell"),
-                F.posexplode("__codes").alias("sub_id", "code"),
-            )
+        staged = S.pq_codes(
+            S.coarse_dots(stream_src(), _CENTROIDS64, "embedding"),
+            books,
+            "embedding",
+        ).select(
+            "vec_id",
+            S.ivf_centroid(F.col("__dots")).alias("cell"),
+            F.posexplode("__codes").alias("sub_id", "code"),
         )
         ck = _scratch("crane_ingestprobe_ck_")
         q = (
@@ -731,15 +723,15 @@ def serve_probe(spark, n: int) -> dict:
     hyper_max = max_cell(index)
     shutil.rmtree(idx_dir, ignore_errors=True)
 
-    # TRAINED twin (round-10): the retrain loop's operational claim made
+    # TRAINED twin: the retrain loop's operational claim made
     # numeric — Lloyd's-balanced cells vs the data-blind hyperplanes at
     # the SAME corpus scale. Training cost is reported separately (paid
     # offline/amortized in production); the serve step is the like-for-
     # like comparison. Expect a smaller max cell and a faster serve at
     # large N (the nprobe=1 candidate set is the QUERY'S cell — tail
     # latency tracks the biggest cell a query can land in). The probe
-    # trains with kmeans_fit, the trainer of the registry's
-    # crane_kmeans8_model.
+    # trains with kmeans_fit at k=64 / 2 iterations, the configuration
+    # of the registry's crane_kmeans64_exact_model.
     t0 = time.perf_counter()
     trained = S.kmeans_fit(
         emb.filter(
