@@ -28,6 +28,7 @@ __all__ = [
     "load_table",
     "load_tables",
     "normalize_events_ts",
+    "row_count",
     "stream_table",
 ]
 
@@ -168,6 +169,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         os.path.join(sf_dir, f"{name}.parquet")
     )
     return normalize_events_ts(df) if name == "events" else df
+
+
+def row_count(sf_dir: str, name: str) -> int:
+    """Rows in one catalog table, summed from its parquet footers (a file
+    or a directory of part files): no Spark job, no data read."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        os.path.join(sf_dir, f"{name}.parquet"), format="parquet"
+    ).count_rows()
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -11,9 +11,12 @@ union+window recipe from operators.asof rather than a quadratic range join.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import row_count
 from ..operators.asof import asof_join
 from ..session import clone_session
 from . import dsum, query, t
@@ -547,6 +550,7 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``might_contain`` are actually in the optimized plan;
     ``test_bloom_runtime_filter_conf_isolation`` (same file) interleaves
     two invocations with a caller-session broadcast plan mid-window."""
+    n_orders = max(row_count(sf_dir, "orders"), 1)
     confs = {
         # Application (pruned) side must look big enough to bother.
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -557,6 +561,15 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # planning inputs where neither side broadcasts.
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        # Without row-count stats the filter is built at the default
+        # 8,388,608 bits (1 MB), and every lineitem scan task carries it
+        # as a literal (a 1 MB task binary). Size it for the orders rows
+        # (an upper bound on the filtered side) at Spark's 3 % false
+        # positive rate; Spark caps both at its max* confs.
+        "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems": str(n_orders),
+        "spark.sql.optimizer.runtime.bloomFilter.numBits": str(
+            math.ceil(-n_orders * math.log(0.03) / math.log(2) ** 2)
+        ),
     }
     iso = clone_session(spark, "bloom", confs)
     orders = t(iso, sf_dir, "orders").filter(

@@ -4,7 +4,10 @@
 Times a named subset of registry queries with the noop sink (guide §1.4)
 under the same session config as bench.py. Each timed run is its own
 Spark job group, so the harness prints the query's job count beside its
-min time, and the processes forked during that run: the delta of the
+min time, the whole-stage and expression classes Spark compiled during
+that run (the delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``'s
+count: a warm run that still compiles has lost its classes from Spark's
+generated-class cache), and the processes forked during it: the delta of the
 ``processes`` counter in ``/proc/stat``, which counts forks SYSTEM-WIDE,
 so other work on the machine inflates it (without the native Hadoop
 library, local checkpoint renames and permission changes fork
@@ -16,9 +19,9 @@ Usage:
     python tools/opt_measure.py [--plans TAG] [--runs N] q1 q2 ...
     python tools/opt_measure.py --top 20            # 20 slowest from BENCH_DETAIL.json
 
-Prints ``<min s>  <jobs>  <forks>  <query>`` per query (jobs and forks of
-the fastest run), then one JSON line ``{"total", "queries", "jobs",
-"forks"}``.
+Prints ``<min s>  <jobs>  <compiles>  <forks>  <query>`` per query (jobs,
+compiles and forks of the fastest run), then one JSON line ``{"total",
+"queries", "jobs", "compiles", "forks"}``.
 """
 
 from __future__ import annotations
@@ -87,28 +90,35 @@ def main() -> None:
 
     out: dict[str, float] = {}
     jobs: dict[str, int] = {}
+    compiles: dict[str, int] = {}
     forks: dict[str, int] = {}
     tracker = spark.sparkContext.statusTracker()
-    print(f"{'min_s':>8}  {'jobs':>4}  {'forks':>6}  query  (forks: system-wide)", flush=True)
+    compile_time = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                    .CodegenMetrics.METRIC_COMPILATION_TIME())
+    print(f"{'min_s':>8}  {'jobs':>4}  {'compiles':>8}  {'forks':>6}  query"
+          "  (forks: system-wide)", flush=True)
     for name in names:
         best = None
         for run in range(args.runs):
             group = f"opt_measure:{name}:{run}"
             spark.sparkContext.setJobGroup(group, group)
             f0 = fixture_seconds()
+            c0 = compile_time.getCount()
             p0 = forks_since_boot()
             t0 = time.perf_counter()
             force(REGISTRY[name].fn(spark, sf_dir))
             wall = time.perf_counter() - t0
             forked = forks_since_boot() - p0
+            compiled = compile_time.getCount() - c0
             op = max(wall - (fixture_seconds() - f0), 0.0)
             if best is None or op < best:
                 best, jobs[name] = op, len(tracker.getJobIdsForGroup(group))
-                forks[name] = forked
+                compiles[name], forks[name] = compiled, forked
             release_query_caches(spark)
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         out[name] = round(best, 4)
-        print(f"{best:8.3f}  {jobs[name]:4d}  {forks[name]:6d}  {name}", flush=True)
+        print(f"{best:8.3f}  {jobs[name]:4d}  {compiles[name]:8d}  {forks[name]:6d}  {name}",
+              flush=True)
         if args.plans:
             df = REGISTRY[name].fn(spark, sf_dir)
             with open(os.path.join(PLANS_DIR, f"{name}_{args.plans}.txt"), "w") as f:
@@ -117,7 +127,7 @@ def main() -> None:
             release_query_caches(spark)
 
     print(json.dumps({"total": round(sum(out.values()), 3), "queries": out,
-                      "jobs": jobs, "forks": forks}))
+                      "jobs": jobs, "compiles": compiles, "forks": forks}))
     if args.json_out:
         with open(args.json_out, "w") as f:
             json.dump(out, f, indent=1)
