@@ -22,8 +22,6 @@ __all__ = [
     "seeded_md5",
     "dot",
     "l2norm",
-    "cosine",
-    "ts_str",
 ]
 
 def _c(col: Column | str) -> Column:
@@ -113,15 +111,3 @@ def l2norm(a: Column | str) -> Column:
     """sqrt(sum(x^2)) in double. DuckDB twin: ``sqrt(list_dot_product(a::DOUBLE[], a::DOUBLE[]))``."""
     return F.sqrt(dot(a, a))
 
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity in double precision (NOT DuckDB's
-    list_cosine_similarity, which accumulates in float32)."""
-    return dot(a, b) / (l2norm(a) * l2norm(b))
-
-
-def ts_str(col: Column | str) -> Column:
-    """Render a timestamp to 'yyyy-MM-dd HH:mm:ss.SSSSSS' for output columns
-    — dodges timestamp typing/timezone drift between engines. DuckDB twin:
-    ``strftime(ts, '%Y-%m-%d %H:%M:%S.%f')``."""
-    return F.date_format(_c(col), "yyyy-MM-dd HH:mm:ss.SSSSSS")

@@ -390,7 +390,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality scoring: train a unigram LM on the corpus itself
     (p(t) = cf/total) and score every document by average token log-prob —
     the perplexity-proxy filter that flags gibberish/outlier documents
-    (heuristic twin: quality_score). The LM is vocabulary-sized and
+    (heuristic twin: curation_struct's quality). The LM is vocabulary-sized and
     broadcasts; the per-doc score is one grouped sum over the (doc, term)
     counts — two corpus shuffles total, both on keys Catalyst already
     needs. Log-bearing values are rounded (scale 4) and row selection is

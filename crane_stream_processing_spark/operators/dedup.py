@@ -22,7 +22,6 @@ from ..session import scoped_confs
 
 __all__ = [
     "exact_dedup",
-    "shingles",
     "minhash_signature",
     "lsh_bands",
     "lsh_candidate_pairs",
@@ -72,12 +71,6 @@ def token_shingles(toks: Column, k: int = 3) -> Column:
         )).otherwise(empty)
 
     return let(toks, body)
-
-
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Token k-shingles straight from a text column (convenience form; for
-    hot paths stage ``tokens()`` into a column and use token_shingles)."""
-    return token_shingles(tokens(col), k)
 
 
 def minhash_signature(shingle_col: Column, num_hashes: int = NUM_HASHES) -> Column:

@@ -1,7 +1,7 @@
 """Embedding similarity search (north-star surface): brute-force cosine
 top-k as the exact baseline, random-hyperplane LSH bucketing as the scale
 path. Embeddings are ``array<float>`` columns; all arithmetic is
-double-precision JVM array expressions (functions.dot/cosine) — no UDFs.
+double-precision JVM array expressions (functions.dot/l2norm) — no UDFs.
 
 Scale: brute-force is O(|queries|·|corpus|) with the query side broadcast —
 right for small query sets / reranking. LSH assigns each vector to a

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import let, md5_hex, tokens
+from ..functions import let, tokens
 
 
 def _shared_cache(df: DataFrame) -> DataFrame:
@@ -45,11 +45,6 @@ def _argmax_label(scores: Column, labels: list[str]) -> Column:
 
 __all__ = [
     "LANG_MARKERS",
-    "langid_scores",
-    "langid",
-    "quality_features",
-    "quality_score",
-    "token_stats",
     "token_bigrams",
     "doc_stats_struct",
     "curation_struct",
@@ -78,41 +73,7 @@ def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*markers)))
 
 
-def langid_scores(col: Column | str) -> list[Column]:
-    toks = tokens(col)
-    return [
-        _marker_hits(toks, m).alias(f"score_{lang}") for lang, m in LANG_MARKERS.items()
-    ]
-
-
-def langid(col: Column | str) -> Column:
-    """Predicted language = argmax marker-hit count, ties broken by
-    language code order, 'und' when nothing matches. DuckDB twin: same
-    CASE/greatest cascade over list_filter counts.
-
-    Tokenization is let-bound and the score array too: the naive cascade
-    reads each score twice and each score reads the token array, so an
-    inlined form re-tokenizes ~2·|langs| times per row."""
-    langs = list(LANG_MARKERS)
-    scores = let(
-        tokens(col),
-        lambda toks: F.array(*[_marker_hits(toks, LANG_MARKERS[l]) for l in langs]),
-    )
-    return _argmax_label(scores, langs)
-
-
 _ALL_MARKERS = tuple(sorted({m for ms in LANG_MARKERS.values() for m in ms}))
-
-
-def _mean_token_len(c: Column, toks: Column) -> Column:
-    # True mean: total token characters / token count. The tempting
-    # closed form (n_chars - n_tokens + 1) / n_tokens assumes exactly
-    # single-space separation — multi/leading/trailing whitespace
-    # inflates it, and whitespace-only docs got a nonzero "mean".
-    n_tokens = F.size(toks)
-    return F.when(n_tokens > 0, F.round(
-        F.length(F.array_join(toks, "")).cast("double") / n_tokens, 6
-    )).otherwise(F.lit(0.0))
 
 
 def _punct_ratio(c: Column) -> Column:
@@ -132,41 +93,11 @@ def _stopword_ratio(toks: Column) -> Column:
     )
 
 
-def quality_features(col: Column | str) -> dict[str, Column]:
-    """Document quality signals: length, token count, mean token length,
-    punctuation ratio, stopword ratio, uppercase ratio. Each token-derived
-    entry let-binds its own token array (entries are independent output
-    columns, so one binding cannot span them — but within an entry the
-    tokenizer must not replicate per reference)."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_chars = F.length(c)
-    return {
-        "n_chars": n_chars.cast("bigint"),
-        "n_tokens": F.size(tokens(c)).cast("bigint"),
-        "mean_token_len": let(tokens(c), lambda toks: _mean_token_len(c, toks)),
-        "punct_ratio": _punct_ratio(c),
-        "stopword_ratio": let(tokens(c), _stopword_ratio),
-        "upper_ratio": F.round(
-            (n_chars - F.length(F.regexp_replace(c, r"[A-Z]", ""))).cast("double")
-            / F.greatest(n_chars, F.lit(1)),
-            6,
-        ),
-    }
-
-
-def quality_score(col: Column | str) -> Column:
-    """Composite quality score in [0,1]: rewards stopword presence and
-    moderate length, penalizes punctuation soup — the standard shape of a
-    heuristic quality filter. One let-bound token pass for the whole
-    formula (the naive feature-dict form tokenized up to 6× per row once
-    CollapseProject merged the projection)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return let(tokens(c), lambda toks: _quality_from(c, toks))
-
-
 def _quality_from(c: Column, toks: Column) -> Column:
-    """quality_score's formula over an already-bound token array — shared
-    so the struct builders below stay bit-identical to quality_score."""
+    """Composite quality score in [0,1] over an already-bound token array:
+    rewards stopword presence and moderate length, penalizes punctuation
+    soup — the standard shape of a heuristic quality filter. Shared so
+    both struct builders below give bit-identical scores."""
     n_tok = F.size(toks).cast("bigint")
     len_ok = F.when((n_tok >= 5) & (n_tok <= 100000), 0.4).otherwise(0.0)
     stop_ok = F.least(_stopword_ratio(toks) * 4, F.lit(0.4))
@@ -224,19 +155,6 @@ def curation_struct(col: Column | str) -> Column:
         )
 
     return let(tokens(c), body)
-
-
-def token_stats(col: Column | str) -> dict[str, Column]:
-    """Token counting: whitespace tokens and a BPE-ish regex segmentation
-    (word pieces / numbers / single punctuation — the standard pre-tokenizer
-    shape, giving a deterministic proxy for LLM token counts)."""
-    c = F.col(col) if isinstance(col, str) else col
-    ws = tokens(c)
-    bpe_ish = F.regexp_extract_all(c, F.lit(r"\w+|[^\w\s]"), 0)
-    return {
-        "ws_tokens": F.size(ws).cast("bigint"),
-        "bpe_ish_tokens": F.size(bpe_ish).cast("bigint"),
-    }
 
 
 def token_bigrams(col: Column | str, as_struct: bool = False) -> Column:
@@ -308,7 +226,7 @@ def langid_ngram(col: Column | str) -> Column:
     """Language-ID, n-gram heuristic: score = total count of the
     language's signature character trigrams; argmax with ties toward
     profile order, 'und' when no gram matches. Complements the
-    stopword-marker detector (:func:`langid`)."""
+    stopword-marker detector in :func:`doc_stats_struct`."""
     c = F.col(col) if isinstance(col, str) else col
     langs = list(NGRAM_PROFILES)
     # Let-bound score array: each trigram's replace()-based count appears

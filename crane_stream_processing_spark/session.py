@@ -18,7 +18,13 @@ Scale rationale (100 TB design):
 
 from __future__ import annotations
 
+import fcntl
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import sys
 import tempfile
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
@@ -32,6 +38,7 @@ __all__ = [
     "ensure_engine_confs",
     "clone_session",
     "scoped_confs",
+    "local_fs_classes",
 ]
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -156,11 +163,103 @@ def _process_warehouse() -> str:
     global _WAREHOUSE_DIR
     if _WAREHOUSE_DIR is None:
         import atexit
-        import shutil
 
         _WAREHOUSE_DIR = tempfile.mkdtemp(prefix="crane_warehouse_")
         atexit.register(shutil.rmtree, _WAREHOUSE_DIR, ignore_errors=True)
     return _WAREHOUSE_DIR
+
+
+# Without the native Hadoop library, Hadoop's `file:` filesystem forks a
+# process in two calls: `chmod` in setPermission (every create and mkdir)
+# and `readlink` in getFileLinkStatus (every FileContext rename, so every
+# checkpoint commit), ~330 forks per streaming drain. The classes in
+# jvm/crane/fs answer both through java.nio. They must be on the JVM's
+# class path at launch, and only a local-mode JVM runs the executors too.
+_LOCAL_FS_SOURCES = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "crane", "fs"
+)
+_LOCAL_FS_CONF = {
+    "spark.hadoop.fs.file.impl": "crane.fs.NoForkLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "crane.fs.NoForkLocalFs",
+}
+
+
+def local_fs_classes() -> str | None:
+    """The class directory of the no-fork `file:` filesystem, compiled on
+    first use into ``$XDG_CACHE_HOME`` (default ``~/.cache``)
+    ``/crane_stream_processing_spark/nofork-<sha256 of the sources>/``.
+    The cache is not under TMPDIR, so a run that deletes its TMPDIR does
+    not pay for javac again. An flock serializes concurrent compiles and a
+    marker written after javac succeeds publishes the classes. When javac
+    is missing or fails, prints one line on stderr and returns None."""
+    sources = sorted(glob.glob(os.path.join(_LOCAL_FS_SOURCES, "*.java")))
+    digest = hashlib.sha256()
+    for path in sources:
+        with open(path, "rb") as fh:
+            digest.update(os.path.basename(path).encode() + b"\0" + fh.read())
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    out = os.path.join(
+        cache, "crane_stream_processing_spark", f"nofork-{digest.hexdigest()}"
+    )
+    classes, done = os.path.join(out, "classes"), os.path.join(out, "done")
+    try:
+        if not os.path.exists(done):
+            os.makedirs(out, exist_ok=True)
+            with open(os.path.join(out, "lock"), "a") as lock:
+                fcntl.flock(lock, fcntl.LOCK_EX)
+                if not os.path.exists(done):
+                    _javac(sources, classes)
+                    open(done, "w").close()
+    except (OSError, RuntimeError) as e:
+        print(
+            f"crane_stream_processing_spark: {e}; "
+            "using Hadoop's stock file: filesystem",
+            file=sys.stderr,
+        )
+        return None
+    return classes
+
+
+def _javac(sources: list[str], classes: str) -> None:
+    """Compile ``sources`` into ``classes`` against the jars of the Spark
+    that PySpark launches."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError("javac not found")
+    shutil.rmtree(classes, ignore_errors=True)  # a killed compile's leftovers
+    jars = os.path.join(_find_spark_home(), "jars", "*")
+    proc = subprocess.run(
+        [javac, "--release", "17", "-nowarn", "-d", classes, "-cp", jars, *sources],
+        capture_output=True,
+        text=True,
+    )
+    if proc.returncode != 0:
+        first = (proc.stderr.strip().splitlines() or ["no output"])[0]
+        raise RuntimeError(f"javac failed ({first})")
+
+
+def _with_local_fs(master: str | None, extra_conf: Mapping[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus the confs that make a local-mode JVM this
+    process is about to launch use the no-fork `file:` filesystem. The
+    compiled classes join any caller ``spark.driver.extraClassPath``, and
+    a caller ``fs.*.impl`` wins. Unchanged on any other master (its
+    executors would not have the classes), when the JVM already runs (its
+    class path is fixed), or when the classes cannot be compiled."""
+    from pyspark import SparkContext
+
+    conf = dict(extra_conf)
+    local = master is not None and (master == "local" or master.startswith("local["))
+    launched = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    if not local or launched:
+        return conf
+    classes = local_fs_classes()
+    if classes is None:
+        return conf
+    key = "spark.driver.extraClassPath"
+    class_path = os.pathsep.join(p for p in (conf.get(key), classes) if p)
+    return {**_LOCAL_FS_CONF, **conf, key: class_path}
 
 
 def get_spark(
@@ -174,6 +273,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when not already set
     by the environment; on a real cluster pass ``master=None`` and submit
     via spark-submit so the cluster manager decides.
+
+    A local-mode session this call launches uses the no-fork `file:`
+    filesystem (``local_fs_classes``); any other gets Hadoop's own.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -224,6 +326,15 @@ def get_spark(
         # (244 vs 224 MB). Static conf: it takes effect only when this
         # factory starts the JVM, not on a session the engine didn't build.
         .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # That cache is keyed by the generated source, and by default the
+        # class name carries the whole-stage codegen stage id, which AQE
+        # assigns in the order query stages finish. A query whose stages
+        # race (text_bm25_search's two broadcasts) then alternates between
+        # two sources for the same code and recompiles on a warm pass when
+        # it draws the variant not yet seen. Without the id in the name,
+        # equal pipelines share one class; stack traces name the class
+        # GeneratedIterator instead of GeneratedIteratorForCodegenStage<N>.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Per-process warehouse: the default ./spark-warehouse is shared by
@@ -235,7 +346,7 @@ def get_spark(
         # engine didn't build still work on their own warehouse.
         .config("spark.sql.warehouse.dir", _process_warehouse())
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_local_fs(master, extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

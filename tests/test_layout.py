@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -91,8 +90,8 @@ def orders_with_day(spark, sf_dir):
     )
 
 
-def test_zorder_bounds_both_dimensions(orders_with_day):
-    zdir = tempfile.mkdtemp(prefix="crane_zlay_")
+def test_zorder_bounds_both_dimensions(orders_with_day, tmp_path):
+    zdir = str(tmp_path / "zlay")
     write_zordered(orders_with_day, zdir, "o_custkey", "o_orderday",
                    num_files=8)
     fracs = _file_span_fracs(zdir, "o_custkey", "o_orderday")
@@ -106,8 +105,8 @@ def test_zorder_bounds_both_dimensions(orders_with_day):
     assert mean_b < 0.7, fracs
 
 
-def test_single_sort_leaves_second_dimension_unpruned(orders_with_day):
-    sdir = tempfile.mkdtemp(prefix="crane_slay_")
+def test_single_sort_leaves_second_dimension_unpruned(orders_with_day, tmp_path):
+    sdir = str(tmp_path / "slay")
     (
         orders_with_day.repartitionByRange(8, F.col("o_custkey"))
         .sortWithinPartitions("o_custkey")
@@ -121,8 +120,8 @@ def test_single_sort_leaves_second_dimension_unpruned(orders_with_day):
     assert mean_b > 0.9, fracs
 
 
-def test_zorder_roundtrip_lossless(spark, orders_with_day):
-    zdir = tempfile.mkdtemp(prefix="crane_zrt_")
+def test_zorder_roundtrip_lossless(spark, orders_with_day, tmp_path):
+    zdir = str(tmp_path / "zrt")
     write_zordered(orders_with_day, zdir, "o_custkey", "o_orderday",
                    num_files=4)
     back = spark.read.parquet(zdir)
@@ -138,7 +137,7 @@ def test_zorder_roundtrip_lossless(spark, orders_with_day):
     assert (a.k, a.s) == (b.k, b.s)
 
 
-def test_zorder_handles_subunit_float_ranges(spark):
+def test_zorder_handles_subunit_float_ranges(spark, tmp_path):
     """Score-like float keys in [0, 1): min-max scaling must use the real
     span (flooring it at 1 collapses every code to ~0 and the layout
     degenerates to arrival order on both dims)."""
@@ -146,7 +145,7 @@ def test_zorder_handles_subunit_float_ranges(spark):
         (F.col("id") % 141 / 141.0).alias("a"),
         (F.hash("id") % 997 / 2000.0 + 0.5).alias("b"),
     )
-    zdir = tempfile.mkdtemp(prefix="crane_zflt_")
+    zdir = str(tmp_path / "zflt")
     write_zordered(df, zdir, "a", "b", num_files=8)
     fracs = _file_span_fracs(zdir, "a", "b")
     mean_a = sum(f[0] for f in fracs) / len(fracs)

@@ -456,7 +456,10 @@ def test_checkpoint_file_manager_atomic_overwrite_contract(spark, tdir):
     spark.sql.streaming.checkpointFileManagerClass to the FileSystem-based
     manager forks fewer processes per commit but breaks the second half on
     ``file:`` (the old file silently stays, the temp file leaks; DESIGN.md
-    streaming section), so the manager must stay Spark's default."""
+    streaming section), so the manager must stay Spark's default. The
+    forks are removed one layer down instead: a session get_spark launches
+    locally runs this manager on the package's no-fork `file:` filesystem
+    (tests/test_local_fs.py), and the contract holds there too."""
     from py4j.protocol import Py4JJavaError
 
     assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None) is None

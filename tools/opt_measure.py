@@ -7,21 +7,23 @@ Spark job group, so the harness prints the query's job count beside its
 min time, the whole-stage and expression classes Spark compiled during
 that run (the delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``'s
 count: a warm run that still compiles has lost its classes from Spark's
-generated-class cache), and the processes forked during it: the delta of the
-``processes`` counter in ``/proc/stat``, which counts forks SYSTEM-WIDE,
-so other work on the machine inflates it (without the native Hadoop
-library, local checkpoint renames and permission changes fork
-``readlink``/``chmod``; this column shows that per-batch floor of the
-``stream_*`` queries). ``--plans TAG`` also dumps ``explain("formatted")``
+generated-class cache), the processes forked during it and the JVM threads
+started during it. Forks are the delta of the ``processes`` counter in
+``/proc/stat``, which counts every fork and clone SYSTEM-WIDE, threads
+included, so other work on the machine inflates it; threads are the delta
+of the JVM's ``ThreadMXBean.getTotalStartedThreadCount``. Forks beyond the
+threads are processes: Python workers, or a Hadoop shell command (the
+session's local filesystem runs none on checkpoint creates, mkdirs and
+renames). ``--plans TAG`` also dumps ``explain("formatted")``
 to ``plans/<round>/<query>_<TAG>.txt`` (the plan evidence).
 
 Usage:
     python tools/opt_measure.py [--plans TAG] [--runs N] q1 q2 ...
     python tools/opt_measure.py --top 20            # 20 slowest from BENCH_DETAIL.json
 
-Prints ``<min s>  <jobs>  <compiles>  <forks>  <query>`` per query (jobs,
-compiles and forks of the fastest run), then one JSON line ``{"total",
-"queries", "jobs", "compiles", "forks"}``.
+Prints ``<min s>  <jobs>  <compiles>  <forks>  <threads>  <query>`` per
+query (counts of the fastest run), then one JSON line ``{"total",
+"queries", "jobs", "compiles", "forks", "threads"}``.
 """
 
 from __future__ import annotations
@@ -92,11 +94,14 @@ def main() -> None:
     jobs: dict[str, int] = {}
     compiles: dict[str, int] = {}
     forks: dict[str, int] = {}
+    threads: dict[str, int] = {}
     tracker = spark.sparkContext.statusTracker()
-    compile_time = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+    jvm = spark.sparkContext._jvm
+    compile_time = (jvm.org.apache.spark.metrics.source
                     .CodegenMetrics.METRIC_COMPILATION_TIME())
-    print(f"{'min_s':>8}  {'jobs':>4}  {'compiles':>8}  {'forks':>6}  query"
-          "  (forks: system-wide)", flush=True)
+    thread_mx = jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    print(f"{'min_s':>8}  {'jobs':>4}  {'compiles':>8}  {'forks':>6}  {'threads':>7}"
+          "  query  (forks: system-wide)", flush=True)
     for name in names:
         best = None
         for run in range(args.runs):
@@ -104,21 +109,23 @@ def main() -> None:
             spark.sparkContext.setJobGroup(group, group)
             f0 = fixture_seconds()
             c0 = compile_time.getCount()
+            s0 = thread_mx.getTotalStartedThreadCount()
             p0 = forks_since_boot()
             t0 = time.perf_counter()
             force(REGISTRY[name].fn(spark, sf_dir))
             wall = time.perf_counter() - t0
             forked = forks_since_boot() - p0
+            started = thread_mx.getTotalStartedThreadCount() - s0
             compiled = compile_time.getCount() - c0
             op = max(wall - (fixture_seconds() - f0), 0.0)
             if best is None or op < best:
                 best, jobs[name] = op, len(tracker.getJobIdsForGroup(group))
-                compiles[name], forks[name] = compiled, forked
+                compiles[name], forks[name], threads[name] = compiled, forked, started
             release_query_caches(spark)
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         out[name] = round(best, 4)
-        print(f"{best:8.3f}  {jobs[name]:4d}  {compiles[name]:8d}  {forks[name]:6d}  {name}",
-              flush=True)
+        print(f"{best:8.3f}  {jobs[name]:4d}  {compiles[name]:8d}  {forks[name]:6d}"
+              f"  {threads[name]:7d}  {name}", flush=True)
         if args.plans:
             df = REGISTRY[name].fn(spark, sf_dir)
             with open(os.path.join(PLANS_DIR, f"{name}_{args.plans}.txt"), "w") as f:
@@ -127,7 +134,8 @@ def main() -> None:
             release_query_caches(spark)
 
     print(json.dumps({"total": round(sum(out.values()), 3), "queries": out,
-                      "jobs": jobs, "compiles": compiles, "forks": forks}))
+                      "jobs": jobs, "compiles": compiles, "forks": forks,
+                      "threads": threads}))
     if args.json_out:
         with open(args.json_out, "w") as f:
             json.dump(out, f, indent=1)
