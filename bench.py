@@ -35,7 +35,7 @@ from crane_stream_processing_spark.inventory import (
     fixture_seconds,
     release_query_caches,
 )
-from crane_stream_processing_spark.session import get_spark
+from crane_stream_processing_spark.session import cds_mode, get_spark
 
 
 def force(df) -> None:
@@ -196,7 +196,9 @@ def main() -> None:
 
     sf_dir = default_sf_dir()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    t0 = time.perf_counter()
     spark = get_spark("bench")
+    session_start = round(time.perf_counter() - t0, 4)
     warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
@@ -282,6 +284,11 @@ def main() -> None:
         "failed": failed,
         "sf": sf_val,
         "apps_throughput": apps,
+        # JVM start-up, outside the timed queries: get_spark's wall time
+        # and whether the JVM mapped ("map") or dumped ("train") a
+        # class-data-sharing archive, or used none (null).
+        "session_start_s": session_start,
+        "jvm_cds": cds_mode(spark),
     }
     detail_file = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json")

@@ -143,18 +143,14 @@ def dedup_minhash_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     <3-token docs (k-shingling of <k tokens is empty), and pairs can only
     reference ids that survived it — one less tokenization per row.
 
-    One chain execution (round-10, guide §1.2/§2.4): the expensive
-    tokenize→shingle chain used to run 4× (two band-join legs + two
-    exact-set legs; the before-plan holds 4 parquet scans, 0
-    ReusedExchange). Now the DISTINCT shingle sets are materialized once
-    (localCheckpoint) and every consumer derives from them — valid
-    because a minhash (per-seed MIN over per-shingle md5s) is invariant
-    under duplicate shingles, so minhash(distinct(sh)) ≡ minhash(sh)
-    bit-for-bit; the signature relation is materialized once more, so
-    each band-join leg re-derives only the 4 trivial band md5s from 12
-    hex strings. At 100 TB the win is 3 saved executions of the
-    full-corpus chain; the materialization holds the same rows the legs
-    each recomputed before."""
+    One chain execution: the DISTINCT shingle sets are materialized once
+    (localCheckpoint) and all four consumers (two band-join legs, two
+    exact-set legs) derive from them — valid because a minhash (per-seed
+    MIN over per-shingle md5s) is invariant under duplicate shingles, so
+    minhash(distinct(sh)) ≡ minhash(sh) bit-for-bit; the signature
+    relation is materialized once more, so each band-join leg re-derives
+    only the 4 trivial band md5s from 12 hex strings. At 100 TB that
+    saves 3 executions of the full-corpus tokenize→shingle chain."""
     docs = t_cpu(spark, sf_dir, "documents")
     sets = docs.select(
         F.col("doc_id").alias("doc"),
@@ -212,8 +208,8 @@ def _dedup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_index_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental AT-REST dedup-index merge (round-5 verdict optional
-    item — the batch complement of `stream_dedup_minhash`): the existing
+    """Incremental AT-REST dedup-index merge (the batch complement of
+    `stream_dedup_minhash`): the existing
     corpus's band buckets live in a PERSISTED parquet index
     (`_dedup_band_index`, built once and amortized across ingests), and a
     batch of newcomers (doc_id % 4 == 0 — a deterministic ~25% of the
@@ -284,13 +280,12 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_lsh_jaccard; exact sets are joined back only for the
     candidate pairs.
 
-    One chain execution (round-10, guide §1.2/§2.4): the before-plan ran
-    the tokenize→shingle chain 6× and the minhash 4× (12 parquet scans,
-    0 ReusedExchange — two band legs + two exact-set legs + two
-    signature legs). The distinct shingle sets and the signature
+    One chain execution: the distinct shingle sets and the signature
     relation are each materialized once (localCheckpoint; minhash over
     distinct shingles is bit-identical — per-seed MIN is duplicate-
-    invariant) and all six consumers derive from them. The est-side
+    invariant) and all six consumers (two band legs, two exact-set legs,
+    two signature legs) derive from them, so the tokenize→shingle chain
+    runs once, not 6×, and the minhash once, not 4×. The est-side
     signature filter to size(sh) > 0 docs is equivalent: candidates can
     only reference docs that survived banding's own short-doc filter."""
     docs = t_cpu(spark, sf_dir, "documents")
@@ -390,14 +385,13 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     The LSH candidate set is the PRODUCTION full-corpus banded self-join,
     membership-checked per probe pair via (least, greatest) equi keys."""
     docs = t_cpu(spark, sf_dir, "documents")
-    # Materialized ONCE and shared by four consumers (round-10, guide
-    # §1.2/§2.4): the full-corpus probe leg (b), the 100-doc probe leg
-    # (a — reading 100 materialized rows costs nothing, unlike the
-    # earlier negative where the checkpoint served ONLY this pushed-down
-    # leg), and both band-join legs via the signature relation below
-    # (minhash over distinct shingles is bit-identical: per-seed MIN is
-    # duplicate-invariant). Before: the tokenize→shingle chain ran 3×
-    # full-corpus + 1× probe-pruned; after: once.
+    # Materialized ONCE and shared by four consumers: the full-corpus
+    # probe leg (b), the 100-doc probe leg (a — reading 100 materialized
+    # rows costs nothing), and both band-join legs via the signature
+    # relation below (minhash over distinct shingles is bit-identical:
+    # per-seed MIN is duplicate-invariant). The tokenize→shingle chain
+    # runs once instead of 3× full-corpus + 1× probe-pruned. A checkpoint
+    # that served only the pushed-down probe leg would not pay for itself.
     sets = (
         docs.select("doc_id", tokens("text").alias("toks"))
         .select(
@@ -491,7 +485,7 @@ def text_shingle_novelty_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     never seen in any earlier document. A shingle is 'novel' exactly in
     the document that first introduces it (min doc_id — deterministic),
     so per-decile novel/total counts are exact BIGINTs and the rate is
-    ONE division of exact integers (round 6) — no average-of-doubles
+    ONE division of exact integers — no average-of-doubles
     drift. Plan shape: explode distinct shingles → min-doc_id hash
     aggregate (map-side combined) → equi join back on the shingle →
     two keyed aggregates; the only crossJoin is the 1-row corpus-count
@@ -590,9 +584,9 @@ def dedup_embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus — O(cap·n), linear in corpus size, same bounding
     discipline as sim_cosine_topk (10-query cap) and
     dedup_ngram_jaccard_pairs (doc_id < 100). The unbounded all-pairs
-    form was round 2's one perf-weak plan (10,000× the pairs at 100×
-    data); the production-scale path over the WHOLE corpus is the
-    LSH-bucketed dedup_cluster_canonical / sim_lsh_ann_topk."""
+    form is quadratic (10,000× the pairs at 100× data); the
+    production-scale path over the WHOLE corpus is the LSH-bucketed
+    dedup_cluster_canonical / sim_lsh_ann_topk."""
     return S.cosine_near_pairs(
         t_cpu(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         threshold=0.4, probe_max_id=200,
@@ -1071,11 +1065,11 @@ def sim_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-probe LSH against the exact brute-force ranking, in one pass
     — the measurement a pipeline runs before trusting an index
     configuration (plane count, probe fan-out) at scale. Both rankings
-    are deterministic (fixed seeded planes, round-6 + id tiebreaks), so
-    unlike the trained-index certificates this recall CURVE itself
-    grades row-level: n_exact, n_hit, and the recall ratio must match
-    the oracle exactly. Top-5 is computed once per side; the three k
-    cuts are a 3-row join, not three reruns. (Measured here: recall
+    are deterministic (fixed seeded planes, 6-place rounding + id
+    tiebreaks), so unlike the trained-index certificates this recall
+    CURVE itself grades row-level: n_exact, n_hit, and the recall ratio
+    must match the oracle exactly. Top-5 is computed once per side; the
+    three k cuts are a 3-row join, not three reruns. (Measured here: recall
     rises with k since bucket misses concentrate in the tail —
     the multiprobe variant exists to recover them.)"""
     emb = t_cpu(spark, sf_dir, "embeddings")
@@ -1292,8 +1286,8 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — 3x fewer cell joins and cosine evaluations than separate
     searches, bit-identical rankings. The exact baseline is the
     standard bounded 10-query broadcast crossJoin. Like
-    the LSH curve, every ranking is deterministic (round-6 + id
-    tiebreaks), so the recall surface itself grades row-level."""
+    the LSH curve, every ranking is deterministic (6-place rounding +
+    id tiebreaks), so the recall surface itself grades row-level."""
     emb = t_cpu(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     idx = _ivf_index(spark, sf_dir)
@@ -1401,7 +1395,7 @@ def sim_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed over the filtered population directly. No recall cliff, no
     extra index, and at 100 TB the filter REDUCES the join input
     instead of inflating k'. Same persisted index (_ivf_index), same
-    deterministic round-6 + id tiebreaks as the unfiltered
+    deterministic 6-place rounding + id tiebreaks as the unfiltered
     sim_ivf_ann_topk, so the filtered ranking grades row-level."""
     emb = t_cpu(spark, sf_dir, "embeddings")
     matching = emb.filter(F.col("label") % 2 == 0).select(
@@ -1440,7 +1434,7 @@ def _sql_ivf_cell64(vec_expr: str) -> str:
 # answer contract — the relational batch path, the Arrow batch path, and
 # the streaming serving path (stream_ivf_query_topk) all grade against
 # this literal, so "the same row-level oracle" is a shared definition,
-# not three hand-synced copies (round-9 review).
+# not three hand-synced copies.
 ORACLE_IVF_COARSE_TOPK: str = f"""
     WITH celled AS (
       SELECT vec_id, embedding, {_sql_ivf_cell64('embedding')} AS cell FROM embeddings
@@ -1582,7 +1576,7 @@ def _trained_ivf_index(
 )
 def sim_ivf_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF INDEX HEALTH — the operational complement of
-    `stream_ivf_ingest` (round-6 verdict optional item (b)): a deployment
+    `stream_ivf_ingest`: a deployment
     that streams arrivals into an inverted file must WATCH the file, or
     cell skew quietly destroys both recall (hot cells over-probed) and
     latency (the hot cell is the straggler in every search). One scan of
@@ -1780,7 +1774,7 @@ def _sql_kmeans64_exact_ctes() -> str:
     """,
 )
 def sim_ivf_retrain_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full operational loop the round-7 verdict sketched — HEALTH →
+    """The full operational loop of an IVF index — HEALTH →
     RETRAIN → RECALL, tied into one graded query, TWO-SIDED end to
     end: audit the persisted fixed-hyperplane 64-cell index
     (`_ivf64_index` — max cell size and hot-cell count, the
@@ -2219,8 +2213,8 @@ def sim_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-deterministic), and compare to the query's own label. Low kNN
     accuracy means the embedding space doesn't respect the labels and
     every downstream similarity op inherits that noise. Reuses the
-    cosine_topk contract (round-6, id tiebreak) so the neighbor set is
-    the oracle's; the vote is one groupBy + window over |Q|·3 rows.
+    cosine_topk contract (6-place rounding, id tiebreak) so the neighbor
+    set is the oracle's; the vote is one groupBy + window over |Q|·3 rows.
     Per-query verdict rows (not just the aggregate) so mispredictions
     are inspectable."""
     emb = t_cpu(spark, sf_dir, "embeddings")
@@ -2891,8 +2885,8 @@ def mm_wav_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rate, width, frame count, duration, peak, abs-sum) must be recovered
     from the container, and the oracle re-derives them in closed form from
     the signal definition. Two independent implementations (stdlib writer
-    vs our reader) meeting byte-exactly is the codec-correctness proof the
-    round-3 verdict marked env-blocked; compressed codecs (JPEG/MP3) stay
+    vs our reader) meeting byte-exactly is the codec-correctness proof;
+    compressed codecs (JPEG/MP3) stay
     behind media_decode_real. Scale: both stages are Arrow-batched
     mapInPandas, partition-parallel, zero shuffle (reference parity:
     Crane has no media path; this is north-star surface)."""
@@ -3112,7 +3106,7 @@ _SQL_WAV_RAMP = "(((doc_id * 7 + i * 13) % 512) - 256)"
     """,
 )
 def mm_wav_fp_hamming_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAR-duplicate AUDIO detection — the round-9 verdict's item #6,
+    """NEAR-duplicate AUDIO detection,
     completing the image↔audio dedup symmetry: every document's real WAV
     meets a minimally EDITED re-encode of itself (ONE 8-frame energy
     window's samples doubled — synthesize_wav_perturbed; the edit flips
@@ -3283,9 +3277,8 @@ def mm_bmp_ahash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_png_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL COMPRESSED-codec roundtrip — the first graded decode of a
-    compressed container (the round-7 verdict's suggested boundary
-    widening): stage 1 encodes each document's deterministic RGB grid as
-    a spec-conformant 8-bit truecolor PNG with stdlib zlib only
+    compressed container: stage 1 encodes each document's deterministic
+    RGB grid as a spec-conformant 8-bit truecolor PNG with stdlib zlib only
     (operators/multimodal.py encode_png — scanline filters CYCLE y mod 5
     so None/Sub/Up/Average/Paeth are all on the encoded wire, and the
     DEFLATE stream is split across two IDAT chunks); stage 2 is our
@@ -3388,7 +3381,7 @@ def _sql_ahash_words(gray00_r: str) -> str:
 def mm_crosscodec_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END MULTIMODAL DEDUP over a MIXED landing zone — the
     pipeline mm_png_ahash's codec-invariance proof sets up, completed as
-    one graded query (round-8 verdict item #8b): every document's RGB
+    one graded query: every document's RGB
     grid lands TWICE, once as a real 24-bit BMP and once as a real
     zlib-compressed PNG (disjoint media_id spaces — two crawls of the
     same asset in different containers); ONE mime-dispatched decode
@@ -3726,11 +3719,11 @@ def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     round.
 
     Graded as posexploded ``(vec_id, j, component)`` scalar rows: the
-    operator's natural ``array<double>`` output crashed the driver's
-    pandas oracle canonicalizer in round 2 ("unhashable type: 'list'" on
-    sort_values — CORRECTNESS_r02.json), so array-typed columns are now
-    banned from graded outputs (tools/driver_check.py type audit); the
-    array form remains the operator API (operators/similarity.py)."""
+    operator's natural ``array<double>`` output breaks the driver's
+    pandas oracle canonicalizer ("unhashable type: 'list'" on
+    sort_values), so array-typed columns are banned from graded outputs
+    (tools/driver_check.py type audit); the array form remains the
+    operator API (operators/similarity.py)."""
     proj = S.random_projection(
         t_cpu(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         out_dim=8, in_dim=64,

@@ -18,6 +18,7 @@ Scale rationale (100 TB design):
 
 from __future__ import annotations
 
+import atexit
 import fcntl
 import glob
 import hashlib
@@ -26,8 +27,10 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import zipfile
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
+from typing import IO
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +42,7 @@ __all__ = [
     "clone_session",
     "scoped_confs",
     "local_fs_classes",
+    "cds_mode",
 ]
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -162,11 +166,17 @@ def _process_warehouse() -> str:
     directory the already-created session will never use."""
     global _WAREHOUSE_DIR
     if _WAREHOUSE_DIR is None:
-        import atexit
-
         _WAREHOUSE_DIR = tempfile.mkdtemp(prefix="crane_warehouse_")
         atexit.register(shutil.rmtree, _WAREHOUSE_DIR, ignore_errors=True)
     return _WAREHOUSE_DIR
+
+
+def _cache_root() -> str:
+    """``$XDG_CACHE_HOME`` (default ``~/.cache``)``/crane_stream_processing_spark``:
+    build products that outlive a run. Not under TMPDIR, so a run that
+    deletes its TMPDIR does not pay for them again."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "crane_stream_processing_spark")
 
 
 # Without the native Hadoop library, Hadoop's `file:` filesystem forks a
@@ -185,30 +195,33 @@ _LOCAL_FS_CONF = {
 
 
 def local_fs_classes() -> str | None:
-    """The class directory of the no-fork `file:` filesystem, compiled on
-    first use into ``$XDG_CACHE_HOME`` (default ``~/.cache``)
-    ``/crane_stream_processing_spark/nofork-<sha256 of the sources>/``.
-    The cache is not under TMPDIR, so a run that deletes its TMPDIR does
-    not pay for javac again. An flock serializes concurrent compiles and a
-    marker written after javac succeeds publishes the classes. When javac
-    is missing or fails, prints one line on stderr and returns None."""
+    """A jar of the no-fork `file:` filesystem, compiled on first use
+    into ``<cache root>/nofork-jar-<sha256 of the sources>/nofork.jar``.
+    It is a jar, not the class directory, because class-data sharing
+    refuses a class path with a non-empty directory in it. An flock
+    serializes concurrent builds and a marker written after the jar is
+    complete publishes it. When javac is missing or fails, prints one
+    line on stderr and returns None."""
     sources = sorted(glob.glob(os.path.join(_LOCAL_FS_SOURCES, "*.java")))
     digest = hashlib.sha256()
     for path in sources:
         with open(path, "rb") as fh:
             digest.update(os.path.basename(path).encode() + b"\0" + fh.read())
-    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
-    out = os.path.join(
-        cache, "crane_stream_processing_spark", f"nofork-{digest.hexdigest()}"
-    )
-    classes, done = os.path.join(out, "classes"), os.path.join(out, "done")
+    out = os.path.join(_cache_root(), f"nofork-jar-{digest.hexdigest()}")
+    jar, done = os.path.join(out, "nofork.jar"), os.path.join(out, "done")
     try:
         if not os.path.exists(done):
             os.makedirs(out, exist_ok=True)
             with open(os.path.join(out, "lock"), "a") as lock:
                 fcntl.flock(lock, fcntl.LOCK_EX)
                 if not os.path.exists(done):
+                    classes = os.path.join(out, "classes")
                     _javac(sources, classes)
+                    with zipfile.ZipFile(jar, "w") as zf:
+                        for dirpath, _, names in sorted(os.walk(classes)):
+                            for name in sorted(names):
+                                path = os.path.join(dirpath, name)
+                                zf.write(path, os.path.relpath(path, classes))
                     open(done, "w").close()
     except (OSError, RuntimeError) as e:
         print(
@@ -217,7 +230,7 @@ def local_fs_classes() -> str | None:
             file=sys.stderr,
         )
         return None
-    return classes
+    return jar
 
 
 def _javac(sources: list[str], classes: str) -> None:
@@ -240,26 +253,240 @@ def _javac(sources: list[str], classes: str) -> None:
         raise RuntimeError(f"javac failed ({first})")
 
 
+def _launches_local_jvm(master: str | None) -> bool:
+    """Whether building a session on ``master`` makes this process launch
+    a local-mode JVM, so launch-time settings (class path, JVM flags) apply
+    to the driver and its executors alike: not on another master (its
+    executors would not get them), and not when a JVM already runs."""
+    from pyspark import SparkContext
+
+    local = master is not None and (master == "local" or master.startswith("local["))
+    launched = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+    return local and not launched
+
+
 def _with_local_fs(master: str | None, extra_conf: Mapping[str, str]) -> dict[str, str]:
     """``extra_conf`` plus the confs that make a local-mode JVM this
     process is about to launch use the no-fork `file:` filesystem. The
-    compiled classes join any caller ``spark.driver.extraClassPath``, and
-    a caller ``fs.*.impl`` wins. Unchanged on any other master (its
-    executors would not have the classes), when the JVM already runs (its
-    class path is fixed), or when the classes cannot be compiled."""
-    from pyspark import SparkContext
-
+    jar joins any caller ``spark.driver.extraClassPath``, and a caller
+    ``fs.*.impl`` wins. Unchanged unless ``_launches_local_jvm``, or when
+    the jar cannot be built."""
     conf = dict(extra_conf)
-    local = master is not None and (master == "local" or master.startswith("local["))
-    launched = SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
-    if not local or launched:
+    if not _launches_local_jvm(master):
         return conf
-    classes = local_fs_classes()
-    if classes is None:
+    jar = local_fs_classes()
+    if jar is None:
         return conf
     key = "spark.driver.extraClassPath"
-    class_path = os.pathsep.join(p for p in (conf.get(key), classes) if p)
+    class_path = os.pathsep.join(p for p in (conf.get(key), jar) if p)
     return {**_LOCAL_FS_CONF, **conf, key: class_path}
+
+
+# JDK class-data sharing. A Spark JVM loads and verifies ~18,000 classes
+# from $SPARK_HOME/jars at start-up. The first local JVM launched for a
+# class path dumps the classes it loaded into a dynamic AppCDS archive at
+# exit (-XX:ArchiveClassesAtExit); later launches map them pre-parsed and
+# pre-verified (-XX:SharedArchiveFile), ~1.2 s less start-up. JDK 17
+# crashes with SIGBUS mapping a truncated archive, so the archive is
+# published by a done-<pid> marker only once its JVM has exited 0 with
+# the file present (a failed dump exits 1), and only a published archive
+# is mapped. CDS warns on the JVM's stdout ("Skipping ...: Signed JAR",
+# "Unable to use shared archive" for a stale one), which would break the
+# one-line stdout of bench.py, so its log tags are switched off; a stale
+# or mismatched archive degrades to a normal start.
+_CDS_QUIET = "-Xlog:cds*=off"
+# (launched JVM, archive it dumps at exit, held training lock) of this
+# process's training launch until it is published or given up.
+_CDS_TRAINER: tuple[subprocess.Popen, str, IO[str]] | None = None
+
+
+def _cds_dir(class_path: str) -> str | None:
+    """``<cache root>/cds-<key>``, the archive directory for a launch on
+    ``class_path`` (``spark.driver.extraClassPath``); the key is a sha256
+    over the java binary (realpath and stat), the name, size and mtime of
+    each jar in ``$SPARK_HOME/jars``, and each class-path entry with its
+    size and mtime. None when CDS cannot work for this class path: JDK 17
+    refuses to dump or map an archive with a non-empty directory on the
+    class path before the last entry it used."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    java_home = os.environ.get("JAVA_HOME")  # what bin/spark-class runs
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        return None
+    java = os.path.realpath(java)
+    st = os.stat(java)
+    digest = hashlib.sha256(f"{java}\0{st.st_size}\0{st.st_mtime_ns}\0{st.st_ino}".encode())
+    entries = [p for p in class_path.split(os.pathsep) if p]
+    if any(os.path.isdir(p) and os.listdir(p) for p in entries):
+        return None
+    jars = os.path.join(_find_spark_home(), "jars")
+    for entry in [os.path.join(jars, n) for n in sorted(os.listdir(jars))] + entries:
+        try:
+            st = os.stat(entry)
+            digest.update(f"\0{entry}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+        except OSError:
+            digest.update(f"\0{entry}\0-".encode())
+    return os.path.join(_cache_root(), f"cds-{digest.hexdigest()}")
+
+
+def _cds_conf_dir() -> str | None:
+    """The ``SPARK_CONF_DIR`` a CDS launch uses, or None to skip CDS.
+    The launcher puts the conf directory on the class path ahead of the
+    jars. When it holds only ``*.template`` files (Spark reads none of
+    them) the launch points at an empty directory the engine owns; a
+    conf directory with any real file in it keeps CDS off."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        names = os.listdir(conf_dir)
+    except FileNotFoundError:
+        names = []
+    if any(not n.endswith(".template") for n in names):
+        return None
+    empty = os.path.join(_cache_root(), "conf-empty")
+    os.makedirs(empty, exist_ok=True)
+    return empty
+
+
+def _published_archive(out: str) -> str | None:
+    """The archive in ``out`` whose done-<pid> marker is published."""
+    for marker in sorted(glob.glob(os.path.join(out, "done-*"))):
+        archive = os.path.join(out, f"train-{marker.rsplit('-', 1)[1]}.jsa")
+        if os.path.isfile(archive):
+            return archive
+    return None
+
+
+def _publish_trained(wait_s: float = 0) -> None:
+    """Publish the archive of this process's training JVM once that JVM
+    has exited 0 and the file exists: write its done-<pid> marker and
+    delete the other archives and ``cds-*`` directories (a JVM that maps
+    one keeps it after the unlink). A JVM still running is waited for up
+    to ``wait_s`` after closing its stdin, PySpark's shutdown path. The
+    training lock is released once the outcome is known."""
+    global _CDS_TRAINER
+    if _CDS_TRAINER is None:
+        return
+    proc, archive, lock = _CDS_TRAINER
+    if proc.poll() is None:
+        if not wait_s:
+            return
+        try:
+            proc.stdin.close()
+            proc.wait(wait_s)
+        except (OSError, subprocess.TimeoutExpired):
+            return
+    _CDS_TRAINER = None
+    out = os.path.dirname(archive)
+    try:
+        if proc.returncode == 0 and os.path.isfile(archive):
+            pid = os.path.basename(archive)[len("train-") : -len(".jsa")]
+            open(os.path.join(out, f"done-{pid}"), "w").close()
+            for path in glob.glob(os.path.join(out, "train-*.jsa")):
+                if path != archive:
+                    os.unlink(path)
+            for path in glob.glob(os.path.join(os.path.dirname(out), "cds-*")):
+                if path != out:
+                    shutil.rmtree(path, ignore_errors=True)
+    except OSError:
+        pass  # unpublished: a later launch trains again
+    finally:
+        lock.close()
+
+
+@atexit.register
+def _exit_publish() -> None:
+    """At exit, give a training JVM 30 s to finish its dump."""
+    _publish_trained(wait_s=30)
+
+
+def _cds_plan(class_path: str) -> tuple[str, str, IO[str] | None] | None:
+    """(archive, conf directory, training lock) for a launch on
+    ``class_path``: the published archive to map and no lock, or, when
+    none is published, the archive this process's JVM dumps at exit and
+    the non-blocking flock that makes it the one trainer. None when CDS
+    is off for this launch or another process holds the lock."""
+    conf_dir = _cds_conf_dir()
+    out = _cds_dir(class_path) if conf_dir else None
+    if out is None:
+        return None
+    archive = _published_archive(out)
+    if archive is not None:
+        return archive, conf_dir, None
+    os.makedirs(out, exist_ok=True)
+    lock = open(os.path.join(out, "lock"), "a")
+    try:
+        fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except OSError:  # another process is training
+        lock.close()
+        return None
+    archive = _published_archive(out)  # published since the first look
+    if archive is not None:
+        lock.close()
+        return archive, conf_dir, None
+    return os.path.join(out, f"train-{os.getpid()}.jsa"), conf_dir, lock
+
+
+@contextmanager
+def _class_data_sharing(master: str | None, conf: Mapping[str, str]) -> Iterator[dict[str, str]]:
+    """``conf`` for the body's ``getOrCreate``, with the ``_cds_plan``
+    flag ahead of any caller ``spark.driver.extraJavaOptions``, and
+    ``SPARK_CONF_DIR`` pointing at the empty conf directory during the
+    body only. A training launch's JVM is kept for ``_publish_trained``
+    (at the next launch and at exit). Unchanged unless
+    ``_launches_local_jvm``."""
+    global _CDS_TRAINER
+    _publish_trained()
+    conf = dict(conf)
+    plan = None
+    if _launches_local_jvm(master):
+        try:
+            plan = _cds_plan(conf.get("spark.driver.extraClassPath", ""))
+        except OSError:
+            plan = None
+    if plan is None:
+        yield conf
+        return
+    archive, conf_dir, lock = plan
+    flag = f"-XX:{'SharedArchiveFile' if lock is None else 'ArchiveClassesAtExit'}={archive}"
+    key = "spark.driver.extraJavaOptions"
+    conf[key] = " ".join(p for p in (flag, _CDS_QUIET, conf.get(key)) if p)
+    prev = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        yield conf
+    except BaseException:
+        if lock is not None:
+            lock.close()
+        raise
+    finally:
+        if prev is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = prev
+    if lock is not None:
+        from pyspark import SparkContext
+
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if proc is None:
+            lock.close()
+            return
+        _CDS_TRAINER = (proc, archive, lock)
+
+
+def cds_mode(spark: SparkSession) -> str | None:
+    """How the session's JVM uses class-data sharing: ``"map"`` when it
+    was launched with an archive, ``"train"`` when it dumps one at exit,
+    None otherwise."""
+    runtime = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    for arg in runtime.getInputArguments():
+        if arg.startswith("-XX:SharedArchiveFile="):
+            return "map"
+        if arg.startswith("-XX:ArchiveClassesAtExit="):
+            return "train"
+    return None
 
 
 def get_spark(
@@ -275,7 +502,9 @@ def get_spark(
     via spark-submit so the cluster manager decides.
 
     A local-mode session this call launches uses the no-fork `file:`
-    filesystem (``local_fs_classes``); any other gets Hadoop's own.
+    filesystem (``local_fs_classes``) and starts from a class-data-sharing
+    archive (``_class_data_sharing``); any other gets Hadoop's own
+    filesystem and a stock JVM.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -346,9 +575,10 @@ def get_spark(
         # engine didn't build still work on their own warehouse.
         .config("spark.sql.warehouse.dir", _process_warehouse())
     )
-    for k, v in _with_local_fs(master, extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _class_data_sharing(master, _with_local_fs(master, extra_conf or {})) as conf:
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # ResolveWriteToStream warns once per streaming query start that
     # session-wide AQE is disabled for the stream (and that a temporary

@@ -1,14 +1,15 @@
 """The session's `file:` filesystem. ``session.get_spark`` compiles the
-no-fork classes in ``jvm/crane/fs`` and wires them in for a local-mode JVM
-it launches; they must create, chmod and stat local files exactly as
-Hadoop's stock classes do, which these tests check against ``os.stat`` /
-``os.readlink`` and against stock instances in the same JVM. Without
+no-fork classes in ``jvm/crane/fs`` into a jar and wires it in for a
+local-mode JVM it launches; they must create, chmod and stat local files
+exactly as Hadoop's stock classes do, which these tests check against
+``os.stat`` / ``os.readlink`` and against stock instances in the same JVM. Without
 javac the helper falls back to the stock classes with one stderr line."""
 
 from __future__ import annotations
 
 import os
 import shutil
+import zipfile
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -69,6 +70,15 @@ def test_session_file_scheme_uses_no_fork_classes(spark):
     stock = _fs(spark, stock=True)
     assert stock.getClass().getName() == "org.apache.hadoop.fs.LocalFileSystem"
     stock.close()
+    jar = session.local_fs_classes()
+    assert jar.endswith(".jar")
+    with zipfile.ZipFile(jar) as zf:
+        assert sorted(zf.namelist()) == [
+            f"crane/fs/NoFork{n}.class"
+            for n in ("LocalFileSystem", "LocalFs", "RawLocalFileSystem", "RawLocalFs")
+        ]
+    runtime = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    assert jar in runtime.getClassPath().split(os.pathsep)
 
 
 def _make_tree(spark, stock: bool, root: str) -> None:
@@ -180,7 +190,7 @@ def test_missing_javac_falls_back_with_one_stderr_line(tmp_path, monkeypatch, ca
 
 
 def test_no_fork_classes_wired_only_into_a_local_jvm_being_launched(monkeypatch):
-    monkeypatch.setattr(session, "local_fs_classes", lambda: "/cache/classes")
+    monkeypatch.setattr(session, "local_fs_classes", lambda: "/cache/nofork.jar")
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
     caller = {
@@ -189,12 +199,12 @@ def test_no_fork_classes_wired_only_into_a_local_jvm_being_launched(monkeypatch)
     }
     conf = session._with_local_fs("local[2]", caller)
     assert conf["spark.driver.extraClassPath"] == os.pathsep.join(
-        ["/caller.jar", "/cache/classes"]
+        ["/caller.jar", "/cache/nofork.jar"]
     )
     assert conf["spark.hadoop.fs.file.impl"] == "my.LocalFileSystem"
     assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] == "crane.fs.NoForkLocalFs"
     assert session._with_local_fs("local", {})["spark.driver.extraClassPath"] == (
-        "/cache/classes"
+        "/cache/nofork.jar"
     )
     for master in (None, "spark://host:7077", "local-cluster[2,1,1024]", "yarn"):
         assert session._with_local_fs(master, caller) == caller

@@ -4,6 +4,8 @@ design depends on, asserted so refactors can't silently lose them
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from crane_stream_processing_spark.inventory import (
@@ -800,3 +802,30 @@ def test_wav_fp_hamming_near_pairs_banded_equi_join(spark, sf_dir):
     plan = _plan(spark, "mm_wav_fp_hamming_near_pairs", sf_dir, mode="simple")
     assert "NestedLoop" not in plan, plan
     assert "band_idx" in plan and "band_val" in plan and "nw" in plan
+
+
+def test_approx_count_distinct_sketches_per_type_with_the_same_estimate(spark, sf_dir):
+    """agg_approx_count_distinct aggregates the distinct (event_type,
+    user_id) pairs, so every HLL++ buffer is keyed on event_type alone
+    (next to a countDistinct over raw rows, Spark's distinct rewrite keys
+    it on [event_type, user_id]), and its estimate equals, exactly, the
+    one over all events."""
+    from crane_stream_processing_spark.catalog import load_table
+    from crane_stream_processing_spark.inventory.aggregates import approx_and_exact_users
+
+    plan = _plan(spark, "agg_approx_count_distinct", sf_dir, mode="simple")
+    sketch_keys = [
+        re.search(r"keys=\[([^\]]*)\]", line).group(1)
+        for line in plan.splitlines()
+        if "approx_count_distinct" in line
+    ]
+    assert sketch_keys and all("user_id" not in k for k in sketch_keys), plan
+    events = load_table(spark, sf_dir, "events")
+    old = events.groupBy("event_type").agg(
+        F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
+        F.countDistinct("user_id").alias("exact_users"),
+    )
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
+    assert rows(approx_and_exact_users(events)) == rows(
+        old.select("event_type", "approx_users", "exact_users")
+    )
