@@ -159,15 +159,19 @@ def _schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
     return SCHEMAS[name]
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where catalog table ``name`` lives under ``sf_dir``: one parquet file
+    or a directory of part files."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table with its declared schema (SCHEMAS), so no
     schema-inference job runs; tests/test_cli_and_sources.py asserts that
     the declared schema equals the inferred one at every generated scale
     factor."""
     ensure_engine_confs(spark)
-    df = spark.read.schema(_schema(spark, sf_dir, name)).parquet(
-        os.path.join(sf_dir, f"{name}.parquet")
-    )
+    df = spark.read.schema(_schema(spark, sf_dir, name)).parquet(table_path(sf_dir, name))
     return normalize_events_ts(df) if name == "events" else df
 
 
@@ -176,9 +180,7 @@ def row_count(sf_dir: str, name: str) -> int:
     or a directory of part files): no Spark job, no data read."""
     import pyarrow.dataset as ds
 
-    return ds.dataset(
-        os.path.join(sf_dir, f"{name}.parquet"), format="parquet"
-    ).count_rows()
+    return ds.dataset(table_path(sf_dir, name), format="parquet").count_rows()
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -189,7 +191,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the glob would match no leaf and the stream would silently be empty)."""
     ensure_engine_confs(spark)
     reader = spark.readStream.schema(_schema(spark, sf_dir, name))
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if os.path.isdir(path):
         df = reader.parquet(path)
     else:
@@ -209,7 +211,7 @@ def events_ts_type(spark: SparkSession, sf_dir: str) -> T.DataType:
     return artifact(
         "crane_events_ts_type",
         sf_dir,
-        lambda: spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        lambda: spark.read.parquet(table_path(sf_dir, "events"))
         .schema["ts"]
         .dataType,
         directory=False,

@@ -30,8 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import TABLES, load_table
-from ..session import ensure_engine_confs
+from ..catalog import TABLES, load_table, table_path
+from ..session import ensure_engine_confs, spread
 
 __all__ = [
     "Query", "REGISTRY", "query", "t", "t_cpu", "dsum", "davg",
@@ -201,9 +201,8 @@ def artifact(name: str, sf_dir: str | None, build, *key, directory: bool = True)
 # unpersist it before the caller materializes the result. They register
 # the cached frame here instead, and the harnesses (bench.py,
 # tools/driver_check.py) call release_query_caches() after each query's
-# collect so no cache outlives the query that built it (round-3 verdict:
-# the leaked relations pinned executor memory across the other 190
-# registry queries in one long-lived session).
+# collect so no cache outlives the query that built it (a leaked relation
+# pins executor memory across every later query of a long-lived session).
 _QUERY_CACHES: list[DataFrame] = []
 
 # Memory-sink table names created by streaming registry queries
@@ -275,8 +274,8 @@ def release_query_caches(spark: SparkSession) -> None:
     # MemorySink's collected batches — see _MEMORY_SINKS note above).
     # A name is forgotten only when its drop SUCCEEDED — the drop is
     # idempotent and keyed by name, so a transient py4j failure retries
-    # on the next sweep instead of leaking the sink for the session
-    # (round-9 review). resetTerminated() is session-global, so it runs
+    # on the next sweep instead of leaking the sink for the session.
+    # resetTerminated() is session-global, so it runs
     # ONLY on sweeps that actually released an engine sink — a host
     # application's own terminated streaming queries are untouched by
     # batch-only registry cycles. CONTRACT NOTE (the stream-side analog
@@ -310,27 +309,11 @@ def release_query_caches(spark: SparkSession) -> None:
         pass
 
 
-# (sf_dir, table) → scan partitions, probed in the live session; not an artifact
-_SCAN_PARTS: dict[tuple[str, str], int] = {}
-
-
 def t_cpu(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a table for a CPU-bound per-row operator (minhash, simhash,
-    per-pair dot products): when the scan yields fewer partitions than the
-    session's parallelism (small/single parquet files), repartition so the
-    heavy row-local compute uses every core. At 100 TB the scan already has
-    more partitions than cores and this is a no-op — the guard keeps the
-    extra shuffle strictly for the under-partitioned case. The probe
-    (an RDD conversion) is cached per (sf_dir, table): static input files
-    → static partition count."""
-    df = load_table(spark, sf_dir, name)
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = (sf_dir, name)
-    if key not in _SCAN_PARTS:
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-    if _SCAN_PARTS[key] < p:
-        df = df.repartition(p)
-    return df
+    per-pair dot products), spread over the session's cores
+    (session.spread)."""
+    return spread(load_table(spark, sf_dir, name), sf_dir, table_path(sf_dir, name))
 
 
 def dsum(col: Column | str, scale: int = 4) -> Column:
@@ -377,7 +360,7 @@ GRADE_PRIORITY: list[str] = [
     "stream_session_windows_30m",
     "stream_stream_join_error_purchase",
     "stream_stream_left_join_error_purchase",
-    # the round-8 media, PII, IVF-retrain and IVM queries, which
+    # the media, PII, IVF-retrain and IVM queries, which
     # tests/test_round8_operators.py keeps inside the graded window
     # (curate_dsir_shift and curate_token_budget_fill also call tokens)
     "mm_png_codec_roundtrip",

@@ -23,6 +23,7 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as X
 from ..functions import tokens
+from ..session import spread
 from . import query, t, t_cpu
 
 # ---------------------------------------------------------------------------
@@ -706,7 +707,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.4,
         bucket_planes=_PLANES,
     )
-    labels = D.connected_components(pairs, num_partitions=8)
+    labels = D.connected_components(pairs)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -2956,11 +2957,6 @@ def _energy_delta_fp(energies: DataFrame) -> DataFrame:
     )
 
 
-# (sf_dir, kind) → scan partitions of the landed media corpus, probed in
-# the live session (like inventory._SCAN_PARTS), so not an artifact.
-_MEDIA_PARTS: dict[tuple[str, str], int] = {}
-
-
 def media_fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """Land an encoded media corpus as an artifact keyed on ``kind``:
     encoding (zlib DEFLATE, RIFF container writes) is FIXTURE SYNTHESIS,
@@ -2988,18 +2984,11 @@ def media_fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
 
 
 def _media(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """The landed media corpus, partitioned for the CPU-heavy decode:
-    blobs are a few hundred bytes each, so the parquet scan yields far
-    fewer partitions than cores — repartition (t_cpu discipline; the
-    tiny payload shuffle is cheaper than a 1-thread decode)."""
-    df = spark.read.parquet(media_fixture_dir(spark, sf_dir, kind))
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    key = (sf_dir, kind)
-    if key not in _MEDIA_PARTS:
-        _MEDIA_PARTS[key] = df.rdd.getNumPartitions()
-    if _MEDIA_PARTS[key] < p:
-        df = df.repartition(p)
-    return df
+    """The landed media corpus, spread over the session's cores for the
+    CPU-heavy decode (session.spread): blobs are a few hundred bytes each,
+    so the scan yields fewer splits than cores."""
+    d = media_fixture_dir(spark, sf_dir, kind)
+    return spread(spark.read.parquet(d), sf_dir, d)
 
 
 def _sql_wav_fp(samp: str, window: int = 64, n_alias: str = "n_windows") -> str:
@@ -3007,7 +2996,7 @@ def _sql_wav_fp(samp: str, window: int = 64, n_alias: str = "n_windows") -> str:
     definition parameterized on the sample expression, the window width
     and the window-count alias, shared by the volume-invariance oracle
     (window 64) and the banded near-dup oracle (window 8) so the
-    fingerprint algebra cannot drift between them (review finding; the
+    fingerprint algebra cannot drift between them (the
     _sql_ahash_words discipline for audio). Emits (doc_id, fp,
     <n_alias>); requires ``s`` (doc_id, n, i) in scope."""
     return f"""

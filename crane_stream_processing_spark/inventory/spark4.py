@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
-from ..session import clone_session
+from ..catalog import table_path
+from ..session import clone_session, scan_splits, small_state_width
 from . import query, t
 
 
@@ -202,19 +203,19 @@ def sql_recursive_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     call release_query_caches after materializing), so it cannot pin
     memory across later queries."""
     # The recursion's width follows the input's scan splits, floored at
-    # min(4, cores) so a one-split input does not serialize every step on
-    # one core; at scale the split count dominates. The width and the AQE
-    # switch live in a clone session (session.clone_session: shared
+    # the small-state width so a one-split input does not serialize every
+    # step on one core; at scale the split count dominates. The width and
+    # the AQE switch live in a clone session (session.clone_session: shared
     # SparkContext and caches, its own SQLConf), so the host session's
     # confs never change.
-    scan_splits = t(spark, sf_dir, "orders").rdd.getNumPartitions()
-    width_floor = min(4, spark.sparkContext.defaultParallelism)
-    rec_parts = max(scan_splits, width_floor)
+    splits = scan_splits(t(spark, sf_dir, "orders"), sf_dir, table_path(sf_dir, "orders"))
+    width_floor = small_state_width(spark)
+    rec_parts = max(splits, width_floor)
     confs = {"spark.sql.shuffle.partitions": str(rec_parts)}
     # With AQE on, every recursion step materializes its stages as separate
     # jobs; for a floor-sized input the frontier is KB-sized and that is
     # pure overhead. An input wide enough to set the width keeps AQE.
-    if scan_splits <= width_floor:
+    if splits <= width_floor:
         confs["spark.sql.adaptive.enabled"] = "false"
     rec = clone_session(spark, "order_chain", confs)
     return _order_chain(rec, sf_dir, rec_parts)

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import let, md5_hex, seeded_md5, tokens
-from ..session import scoped_confs
+from ..session import scoped_confs, small_state_width
 
 __all__ = [
     "exact_dedup",
@@ -349,7 +349,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 20,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph — the
     clustering step that turns pairwise dedup output (minhash/simhash/
@@ -371,23 +370,16 @@ def connected_components(
     The reference has no graph step (its dedup surface is absent
     entirely, SURVEY.md §2.7); this is north-star pipeline machinery.
 
-    ``num_partitions``: the edge list is usually orders of magnitude
-    smaller than the corpus that produced it — re-size the iteration's
-    shuffles to the GRAPH, not the corpus (each round pays fixed per-
-    partition cost). At 100 TB corpus / 10⁹-edge graph, size to the edge
-    count as usual.
+    The edge list is usually orders of magnitude smaller than the corpus
+    that produced it, and each round pays a fixed cost per partition, so
+    the loop runs at ``session.small_state_width``, not the corpus width:
+    the edges are repartitioned to it and every round's shuffles are
+    scoped to it (each localCheckpoint action plans under that scope).
     """
     spark = pairs.sparkSession
     key = "spark.sql.shuffle.partitions"
-    # every iteration's join/groupBy shuffles the EDGE-sized data; scope
-    # the shuffle width to it for the duration of the loop (each
-    # localCheckpoint action plans under it)
-    width = (
-        {key: str(min(int(spark.conf.get(key)), num_partitions))}
-        if num_partitions
-        else {}
-    )
-    with scoped_confs(spark, width):
+    width = min(int(spark.conf.get(key)), small_state_width(spark))
+    with scoped_confs(spark, {key: str(width)}):
         # Materialize the PAIR list before the symmetrizing union: the two
         # union branches are separate physical subtrees, so an un-cut
         # lineage would execute the caller's pair-generation join (the
@@ -400,9 +392,7 @@ def connected_components(
         edges = directed.union(
             directed.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        if num_partitions:
-            edges = edges.repartition(num_partitions)
-        edges = edges.localCheckpoint(eager=True)
+        edges = edges.repartition(width).localCheckpoint(eager=True)
 
         labels = (
             edges.select("u")
@@ -497,8 +487,8 @@ def semantic_prune(
     from .similarity import coarse_dots, probe_cells
 
     # Both self-join legs read the soft-assigned relation — uncheckpointed
-    # the corpus-wide k-dot assignment pass executes once per leg
-    # (round-10, guide §1.2; the substring_window_pairs discipline).
+    # the corpus-wide k-dot assignment pass executes once per leg (the
+    # substring_window_pairs discipline).
     # Swept by release_query_caches.
     e = (
         coarse_dots(emb, centroids, vec_col)
@@ -589,10 +579,10 @@ def substring_window_pairs(
     n_shared_windows."""
     # wins (the O(len)-md5-per-doc winnowing pass) is consumed by the
     # boilerplate filter AND both self-join legs — without the
-    # materialization the plan executes the winnowing 3× (round-10,
-    # guide §1.2/§2.4). pruned is likewise read by both legs; both
-    # checkpoints are O(docs × fingerprints/doc) rows of (id, hash) and
-    # are swept by release_query_caches.
+    # materialization the plan executes the winnowing 3×. pruned is
+    # likewise read by both legs; both checkpoints are O(docs ×
+    # fingerprints/doc) rows of (id, hash) and are swept by
+    # release_query_caches.
     wins = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(winnow_fingerprints(text_col, width, window)).alias("wh"),

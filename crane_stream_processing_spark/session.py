@@ -32,7 +32,7 @@ from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 from typing import IO
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "get_spark",
@@ -41,6 +41,10 @@ __all__ = [
     "ensure_engine_confs",
     "clone_session",
     "scoped_confs",
+    "cores",
+    "small_state_width",
+    "scan_splits",
+    "spread",
     "local_fs_classes",
     "cds_mode",
 ]
@@ -155,6 +159,57 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# Partition widths. Every width the engine picks for row-local fan-out,
+# recursion and iteration comes from the four functions below; the static
+# ``shuffle.partitions`` (get_spark), a drain's measured ``parts`` and
+# SPARK_GRAFT_STREAM_PARTITIONS are the only other inputs.
+
+
+def cores(spark: SparkSession) -> int:
+    """The session's core count (``defaultParallelism``): the width that
+    keeps every core busy on row-local work."""
+    return spark.sparkContext.defaultParallelism
+
+
+def small_state_width(spark: SparkSession) -> int:
+    """The width of a shuffle over small state: a drain's state store, a
+    recursion frontier, a label-propagation graph. Each partition costs a
+    fixed task (and state-store commit) per step whatever it holds, so at
+    this size four beat eight (all nine sf0.1 streaming queries: 27.0 s at
+    8, 17.1 s at 4); fewer cores cap it."""
+    return min(4, cores(spark))
+
+
+def scan_splits(df: DataFrame, sf_dir: str | None = None, path: str | None = None) -> int:
+    """The number of splits ``df`` scans as, without running a job. With
+    ``path`` (the parquet file or directory ``df`` reads) the probe is an
+    artifact keyed on its realpath and the core count (Spark sizes splits
+    by both), so it runs once per layout and again after a catalog table
+    under ``sf_dir`` is rewritten. Without ``path`` (a micro-batch) it
+    runs on every call."""
+    if path is None:
+        return df.rdd.getNumPartitions()
+    from .inventory import artifact
+
+    key = (os.path.realpath(path), cores(df.sparkSession))
+    return artifact("crane_scan_splits", sf_dir, lambda: scan_splits(df), *key, directory=False)
+
+
+def spread(df: DataFrame, sf_dir: str | None = None, path: str | None = None) -> DataFrame:
+    """``df`` fanned out to the session's cores before CPU-heavy row-local
+    work (hashing, dot folds, decoding). A small parquet file scans as one
+    split, because parquet cannot split inside a row group, so without
+    this the heavy stage runs on one core. A batch frame is repartitioned
+    only when ``scan_splits(df, sf_dir, path)`` is below the core count:
+    at scale the scan is already wider and this adds no shuffle. A
+    streaming frame has no split count before its batch, so it is always
+    repartitioned."""
+    n = cores(df.sparkSession)
+    if df.isStreaming or scan_splits(df, sf_dir, path) < n:
+        return df.repartition(n)
+    return df
 
 
 _WAREHOUSE_DIR: str | None = None
@@ -351,21 +406,29 @@ def _cds_conf_dir() -> str | None:
 
 
 def _published_archive(out: str) -> str | None:
-    """The archive in ``out`` whose done-<pid> marker is published."""
+    """The archive in ``out`` whose done-<pid> marker is published and
+    holds its byte size. A truncated archive kills JDK 17 with SIGBUS when
+    it is mapped, so one whose size differs is not returned, and the next
+    launch trains again."""
     for marker in sorted(glob.glob(os.path.join(out, "done-*"))):
         archive = os.path.join(out, f"train-{marker.rsplit('-', 1)[1]}.jsa")
-        if os.path.isfile(archive):
-            return archive
+        try:
+            with open(marker) as fh:
+                if int(fh.read()) == os.path.getsize(archive):
+                    return archive
+        except (OSError, ValueError):
+            continue
     return None
 
 
 def _publish_trained(wait_s: float = 0) -> None:
     """Publish the archive of this process's training JVM once that JVM
-    has exited 0 and the file exists: write its done-<pid> marker and
-    delete the other archives and ``cds-*`` directories (a JVM that maps
-    one keeps it after the unlink). A JVM still running is waited for up
-    to ``wait_s`` after closing its stdin, PySpark's shutdown path. The
-    training lock is released once the outcome is known."""
+    has exited 0 and the file exists: write its byte size into its
+    done-<pid> marker and delete the other archives, markers and
+    ``cds-*`` directories (a JVM that maps one keeps it after the
+    unlink). A JVM still running is waited for up to ``wait_s`` after
+    closing its stdin, PySpark's shutdown path. The training lock is
+    released once the outcome is known."""
     global _CDS_TRAINER
     if _CDS_TRAINER is None:
         return
@@ -383,9 +446,11 @@ def _publish_trained(wait_s: float = 0) -> None:
     try:
         if proc.returncode == 0 and os.path.isfile(archive):
             pid = os.path.basename(archive)[len("train-") : -len(".jsa")]
-            open(os.path.join(out, f"done-{pid}"), "w").close()
-            for path in glob.glob(os.path.join(out, "train-*.jsa")):
-                if path != archive:
+            marker = os.path.join(out, f"done-{pid}")
+            with open(marker, "w") as fh:
+                fh.write(str(os.path.getsize(archive)))
+            for path in glob.glob(os.path.join(out, "*-*")):  # train-*.jsa, done-*
+                if path not in (archive, marker):
                     os.unlink(path)
             for path in glob.glob(os.path.join(os.path.dirname(out), "cds-*")):
                 if path != out:

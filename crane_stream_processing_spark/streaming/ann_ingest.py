@@ -36,6 +36,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import spread
+
 __all__ = [
     "idempotent_batch_sink",
     "ivfpq_index_sink",
@@ -86,16 +88,10 @@ def ivfpq_index_sink(
     from ..operators import similarity as S
 
     def encode(batch_df: DataFrame) -> DataFrame:
-        # A small trigger (or a single-row-group file drain) arrives as
-        # one scan partition, which would run the whole Arrow encode
-        # kernel on one core; rebalance up to the cluster's parallelism
-        # first. Guarded like inventory.t_cpu: a production trigger that
-        # already has >= that many splits is left untouched.
-        par = batch_df.sparkSession.sparkContext.defaultParallelism
-        if batch_df.rdd.getNumPartitions() < par:
-            batch_df = batch_df.repartition(par)
+        # A small trigger arrives as one scan split; spread it so the
+        # Arrow encode kernel runs on every core.
         return S.ivfpq_encode_arrow(
-            batch_df,
+            spread(batch_df),
             centroids,
             codebooks,
             id_col=id_col,

@@ -145,3 +145,37 @@ def test_name_reused_by_second_site_raises():
     assert artifact("crane_test_dup", None, lambda: 1, directory=False) == 1
     with pytest.raises(ValueError, match="crane_test_dup"):
         artifact("crane_test_dup", None, lambda: 2, directory=False)
+
+
+def test_rewritten_table_is_probed_again(spark, sf_dir, tmp_path):
+    """t_cpu spreads a one-file table over the session's cores. Rewritten
+    as at least that many files, the table scans as that many splits; the
+    split probe is re-run (the table's fingerprint changed) and the scan
+    is left as it is."""
+    from crane_stream_processing_spark.catalog import load_table
+    from crane_stream_processing_spark.inventory import t_cpu
+    from crane_stream_processing_spark.session import cores
+
+    sf = str(tmp_path / "sf")
+    path = os.path.join(sf, "documents.parquet")
+    os.makedirs(sf)
+    table = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(table, path)
+
+    n = cores(spark)
+    df = t_cpu(spark, sf, "documents")
+    assert "RoundRobinPartitioning" in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == n
+
+    os.remove(path)
+    os.makedirs(path)
+    parts = 2 * n
+    step = -(-table.num_rows // parts)
+    for i in range(parts):
+        pq.write_table(table.slice(i * step, step), os.path.join(path, f"part-{i}.parquet"))
+    scan = load_table(spark, sf, "documents").rdd.getNumPartitions()
+    assert scan >= n
+    df = t_cpu(spark, sf, "documents")
+    assert "RoundRobinPartitioning" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == scan
+    assert df.count() == table.num_rows

@@ -40,12 +40,14 @@ def launching(tmp_path, monkeypatch):
     return str(conf_dir)
 
 
-def _publish_fake_archive(class_path: str) -> str:
+def _publish_fake_archive(class_path: str, size: int = 0) -> str:
     out = session._cds_dir(class_path)
     os.makedirs(out)
     archive = os.path.join(out, "train-7.jsa")
-    open(archive, "wb").close()
-    open(os.path.join(out, "done-7"), "w").close()
+    with open(archive, "wb") as fh:
+        fh.write(b"\0" * size)
+    with open(os.path.join(out, "done-7"), "w") as fh:
+        fh.write(str(size))
     return archive
 
 
@@ -73,6 +75,25 @@ def test_trains_without_an_archive_and_restores_an_unset_conf_dir(
         f"-XX:ArchiveClassesAtExit={out}/train-{os.getpid()}.jsa -Xlog:cds*=off"
     )
     assert "SPARK_CONF_DIR" not in os.environ
+
+
+@pytest.mark.parametrize("marker", ["16", "", "junk"])
+def test_archive_whose_size_differs_from_its_marker_is_retrained(launching, marker):
+    """JDK 17 dies with SIGBUS when it maps a truncated archive, so an
+    archive is mapped only while its size is the one its marker holds; a
+    truncated one (or a marker without a size) makes the launch train."""
+    archive = _publish_fake_archive(CALLER[CP], size=16)
+    assert session._published_archive(os.path.dirname(archive)) == archive
+    if marker == "16":
+        os.truncate(archive, 8)
+    else:
+        with open(os.path.join(os.path.dirname(archive), "done-7"), "w") as fh:
+            fh.write(marker)
+    assert session._published_archive(os.path.dirname(archive)) is None
+    with session._class_data_sharing("local[2]", CALLER) as conf:
+        pass
+    training = os.path.join(os.path.dirname(archive), f"train-{os.getpid()}.jsa")
+    assert conf[JOPTS].startswith(f"-XX:ArchiveClassesAtExit={training} ")
 
 
 def test_one_trainer_at_a_time(launching):
@@ -162,8 +183,10 @@ def test_marker_only_after_exit_status_zero(tmp_path, monkeypatch, returncode):
     old = tmp_path / "cds-old"
     old.mkdir()
     stale = os.path.join(out, "train-5.jsa")
+    stale_marker = os.path.join(out, "done-5")
     os.makedirs(out)
     open(stale, "wb").close()
+    open(stale_marker, "w").close()
     trainer = _trainer(out, 6, FakeJvm(returncode))
     monkeypatch.setattr(session, "_CDS_TRAINER", trainer)
     session._publish_trained()
@@ -172,7 +195,11 @@ def test_marker_only_after_exit_status_zero(tmp_path, monkeypatch, returncode):
     assert os.path.exists(os.path.join(out, "done-6")) == published
     assert (session._published_archive(out) == trainer[1]) == published
     assert os.path.exists(stale) != published
+    assert os.path.exists(stale_marker) != published
     assert old.exists() != published
+    if published:
+        with open(os.path.join(out, "done-6")) as fh:
+            assert fh.read() == str(os.path.getsize(trainer[1]))
 
 
 def test_running_trainer_is_published_only_after_it_exits(tmp_path, monkeypatch):

@@ -36,95 +36,96 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 MARKERS = tempfile.mkdtemp(prefix="chaos_markers_")
-
-spark = (
-    SparkSession.builder.appName("chaos")
-    .master("local[4, 2]")  # 4 threads, 2 task attempts: one retry
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="chaos_wh_"))
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-
-
-def flaky(it):
-    """mapInPandas passthrough that dies on the FIRST attempt of every
-    task covering partition 0 — the moral equivalent of the worker hosting
-    that partition crashing mid-task. Drops a marker file per injected
-    death (local mode: executor shares the driver host) so the test can
-    prove faults actually fired rather than silently not triggering."""
-    from pyspark import TaskContext
-
-    tc = TaskContext.get()
-    if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-        open(os.path.join(MARKERS, f"death_{tc.taskAttemptId()}"), "w").close()
-        raise RuntimeError("chaos: injected task failure")
-    yield from it
-
-
-results = {}
-
-# --- batch: keyed aggregate over a faulted scan --------------------------
-df = spark.range(0, 20000, 1, 4).withColumn("k", F.col("id") % 7)
-truth = sorted(
-    df.groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
-    ).collect()
-)
-faulted = sorted(
-    df.mapInPandas(flaky, "id long, k long")
-    .groupBy("k")
-    .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
-    .collect()
-)
-results["batch_ok"] = [tuple(r) for r in truth] == [tuple(r) for r in faulted]
-
-# --- streaming: 3-microbatch wordcount with a death per microbatch -------
+WAREHOUSE = tempfile.mkdtemp(prefix="chaos_wh_")
 src = tempfile.mkdtemp(prefix="chaos_src_")
 ckpt = tempfile.mkdtemp(prefix="chaos_ckpt_")
-words = ["alpha", "beta", "gamma", "delta"]
-for b in range(3):
-    with open(os.path.join(src, f"f{b}.txt"), "w") as f:
-        for i in range(500):
-            f.write(f"{words[i % 4]} {words[(i + b) % 4]}\n")
+try:
+    spark = (
+        SparkSession.builder.appName("chaos")
+        .master("local[4, 2]")  # 4 threads, 2 task attempts: one retry
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", WAREHOUSE)
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
-batch_truth = sorted(
-    spark.read.text(src)
-    .select(F.explode(F.split("value", " ")).alias("w"))
-    .groupBy("w")
-    .agg(F.count(F.lit(1)).alias("n"))
-    .collect()
-)
+    def flaky(it):
+        """mapInPandas passthrough that dies on the FIRST attempt of every
+        task covering partition 0 — the moral equivalent of the worker hosting
+        that partition crashing mid-task. Drops a marker file per injected
+        death (local mode: executor shares the driver host) so the test can
+        prove faults actually fired rather than silently not triggering."""
+        from pyspark import TaskContext
 
-lines = spark.readStream.option("maxFilesPerTrigger", "1").text(src)
-counts = (
-    lines.repartition(4)
-    .mapInPandas(flaky, "value string")
-    .select(F.explode(F.split("value", " ")).alias("w"))
-    .groupBy("w")
-    .agg(F.count(F.lit(1)).alias("n"))
-)
-q = (
-    counts.writeStream.outputMode("complete")
-    .format("memory")
-    .queryName("chaos_wc")
-    .option("checkpointLocation", ckpt)
-    .trigger(availableNow=True)
-    .start()
-)
-q.awaitTermination()
-stream_rows = sorted(spark.sql("SELECT w, n FROM chaos_wc").collect())
-results["stream_ok"] = (
-    [tuple(r) for r in batch_truth] == [tuple(r) for r in stream_rows]
-)
-results["n_injected_deaths"] = len(glob.glob(os.path.join(MARKERS, "death_*")))
+        tc = TaskContext.get()
+        if tc.partitionId() == 0 and tc.attemptNumber() == 0:
+            open(os.path.join(MARKERS, f"death_{tc.taskAttemptId()}"), "w").close()
+            raise RuntimeError("chaos: injected task failure")
+        yield from it
 
-print(json.dumps(results))
-for d in (src, ckpt, MARKERS):
-    shutil.rmtree(d, ignore_errors=True)
-spark.stop()
+    results = {}
+
+    # --- batch: keyed aggregate over a faulted scan --------------------------
+    df = spark.range(0, 20000, 1, 4).withColumn("k", F.col("id") % 7)
+    truth = sorted(
+        df.groupBy("k").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
+        ).collect()
+    )
+    faulted = sorted(
+        df.mapInPandas(flaky, "id long, k long")
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("id").alias("s"))
+        .collect()
+    )
+    results["batch_ok"] = [tuple(r) for r in truth] == [tuple(r) for r in faulted]
+
+    # --- streaming: 3-microbatch wordcount with a death per microbatch -------
+    words = ["alpha", "beta", "gamma", "delta"]
+    for b in range(3):
+        with open(os.path.join(src, f"f{b}.txt"), "w") as f:
+            for i in range(500):
+                f.write(f"{words[i % 4]} {words[(i + b) % 4]}\n")
+
+    batch_truth = sorted(
+        spark.read.text(src)
+        .select(F.explode(F.split("value", " ")).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+
+    lines = spark.readStream.option("maxFilesPerTrigger", "1").text(src)
+    counts = (
+        lines.repartition(4)
+        .mapInPandas(flaky, "value string")
+        .select(F.explode(F.split("value", " ")).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    q = (
+        counts.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("chaos_wc")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    stream_rows = sorted(spark.sql("SELECT w, n FROM chaos_wc").collect())
+    results["stream_ok"] = (
+        [tuple(r) for r in batch_truth] == [tuple(r) for r in stream_rows]
+    )
+    results["n_injected_deaths"] = len(glob.glob(os.path.join(MARKERS, "death_*")))
+    results["dirs"] = [src, ckpt, MARKERS, WAREHOUSE]
+
+    print(json.dumps(results))
+    spark.stop()
+finally:
+    for d in (src, ckpt, MARKERS, WAREHOUSE):
+        shutil.rmtree(d, ignore_errors=True)
 '''
 
 
@@ -146,11 +147,13 @@ def test_task_failure_recovery_batch_and_stream():
     # and >= 1 per streaming microbatch is expected, but scheduling can
     # merge attempts — require at least 2 total to prove both paths faulted
     assert out["n_injected_deaths"] >= 2, out
+    assert not [d for d in out["dirs"] if os.path.exists(d)], "temp dirs left behind"
 
 
 REGISTRY_CHAOS_SCRIPT = r'''
 import json
 import os
+import shutil
 import sys
 import tempfile
 
@@ -160,75 +163,78 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.environ["CRANE_REPO_ROOT"])
 
 MARKERS = tempfile.mkdtemp(prefix="chaos_markers_")
-
-spark = (
-    SparkSession.builder.appName("chaos_registry")
-    .master("local[4, 2]")  # one retry per task
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="chaos_wh_"))
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-
-from crane_stream_processing_spark import inventory  # noqa: E402
-
-SF = os.environ.get("CRANE_CHAOS_SF_DIR", "/root/testdata/sf0.001")
-
-# Representative shapes: shuffle aggregate, window top-k, the new
-# nearest as-of (union + two window frames), iterative localCheckpoint
-# pagerank, LSH banding dedup, and the hash-based k-fold splitter.
-QUERIES = [
-    "q1_pricing_summary",
-    "window_top3_orders_per_customer",
-    "join_asof_nearest_purchase",
-    "graph_pagerank_nation",
-    "dedup_minhash_lsh_jaccard",
-    "curate_kfold_split",
-]
-
-
-def flaky_wrap(df):
-    """Append a passthrough stage that kills the first attempt of every
-    task covering partition 0 — injected AFTER each table scan, so every
-    query's input path faults at least once."""
-    from pyspark import TaskContext
-
-    def flaky(it):
-        tc = TaskContext.get()
-        if tc.partitionId() == 0 and tc.attemptNumber() == 0:
-            open(os.path.join(MARKERS, f"death_{tc.taskAttemptId()}"), "w").close()
-            raise RuntimeError("chaos: injected task failure")
-        yield from it
-
-    return df.mapInPandas(flaky, df.schema)
-
-
-orig_load = inventory.load_table
-results = {}
-for name in QUERIES:
-    truth = sorted(
-        [tuple(r) for r in inventory.REGISTRY[name].fn(spark, SF).collect()],
-        key=repr,
+WAREHOUSE = tempfile.mkdtemp(prefix="chaos_wh_")
+try:
+    spark = (
+        SparkSession.builder.appName("chaos_registry")
+        .master("local[4, 2]")  # one retry per task
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", WAREHOUSE)
+        .getOrCreate()
     )
-    inventory.load_table = lambda s, d, t: flaky_wrap(orig_load(s, d, t))
-    try:
-        faulted = sorted(
+    spark.sparkContext.setLogLevel("ERROR")
+
+    from crane_stream_processing_spark import inventory
+
+    SF = os.environ.get("CRANE_CHAOS_SF_DIR", "/root/testdata/sf0.001")
+
+    # Representative shapes: shuffle aggregate, window top-k, the new
+    # nearest as-of (union + two window frames), iterative localCheckpoint
+    # pagerank, LSH banding dedup, and the hash-based k-fold splitter.
+    QUERIES = [
+        "q1_pricing_summary",
+        "window_top3_orders_per_customer",
+        "join_asof_nearest_purchase",
+        "graph_pagerank_nation",
+        "dedup_minhash_lsh_jaccard",
+        "curate_kfold_split",
+    ]
+
+    def flaky_wrap(df):
+        """Append a passthrough stage that kills the first attempt of every
+        task covering partition 0 — injected AFTER each table scan, so every
+        query's input path faults at least once."""
+        from pyspark import TaskContext
+
+        def flaky(it):
+            tc = TaskContext.get()
+            if tc.partitionId() == 0 and tc.attemptNumber() == 0:
+                open(os.path.join(MARKERS, f"death_{tc.taskAttemptId()}"), "w").close()
+                raise RuntimeError("chaos: injected task failure")
+            yield from it
+
+        return df.mapInPandas(flaky, df.schema)
+
+    orig_load = inventory.load_table
+    results = {}
+    for name in QUERIES:
+        truth = sorted(
             [tuple(r) for r in inventory.REGISTRY[name].fn(spark, SF).collect()],
             key=repr,
         )
-    finally:
-        inventory.load_table = orig_load
-    inventory.release_query_caches(spark)
-    results[name] = (truth == faulted) and len(truth) > 0
+        inventory.load_table = lambda s, d, t: flaky_wrap(orig_load(s, d, t))
+        try:
+            faulted = sorted(
+                [tuple(r) for r in inventory.REGISTRY[name].fn(spark, SF).collect()],
+                key=repr,
+            )
+        finally:
+            inventory.load_table = orig_load
+        inventory.release_query_caches(spark)
+        results[name] = (truth == faulted) and len(truth) > 0
 
-import glob  # noqa: E402
+    import glob
 
-results["n_injected_deaths"] = len(glob.glob(os.path.join(MARKERS, "death_*")))
-print(json.dumps(results))
-spark.stop()
+    results["n_injected_deaths"] = len(glob.glob(os.path.join(MARKERS, "death_*")))
+    results["dirs"] = [MARKERS, WAREHOUSE]
+    print(json.dumps(results))
+    spark.stop()
+finally:
+    for d in (MARKERS, WAREHOUSE):
+        shutil.rmtree(d, ignore_errors=True)
 '''
 
 
@@ -256,6 +262,7 @@ def test_registry_queries_bit_identical_under_task_faults():
     assert proc.returncode == 0, f"chaos subprocess failed:\n{proc.stderr[-4000:]}"
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     deaths = out.pop("n_injected_deaths")
+    assert not [d for d in out.pop("dirs") if os.path.exists(d)], "temp dirs left behind"
     bad = {k: v for k, v in out.items() if not v}
     assert not bad, f"diverged or empty under faults: {bad}"
     # every query's faulted run must have actually faulted at least once

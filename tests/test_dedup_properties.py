@@ -92,7 +92,7 @@ def test_connected_components_hand_graph(spark):
     )
     got = {
         (r.node, r.label)
-        for r in D.connected_components(pairs, num_partitions=4).collect()
+        for r in D.connected_components(pairs).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5), (7, 7)}
 
@@ -100,7 +100,7 @@ def test_connected_components_hand_graph(spark):
         [(i, i + 1) for i in range(10)], "id_a long, id_b long"
     )
     labels = {
-        r.label for r in D.connected_components(chain, num_partitions=4).collect()
+        r.label for r in D.connected_components(chain).collect()
     }
     assert labels == {0}
 
@@ -108,7 +108,7 @@ def test_connected_components_hand_graph(spark):
 def test_connected_components_restores_shuffle_conf(spark):
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    D.connected_components(pairs, num_partitions=2).collect()
+    D.connected_components(pairs).collect()
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -192,7 +192,7 @@ def test_connected_components_random_graph_vs_union_find(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         r.node: r.label
-        for r in D.connected_components(pairs, num_partitions=4).collect()
+        for r in D.connected_components(pairs).collect()
     }
     assert got == {v: lbl for v, lbl in want.items()}
 

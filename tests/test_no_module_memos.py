@@ -18,8 +18,6 @@ ALLOWED = {
     "_ISOLATED_SESSIONS": "clone sessions of the live SparkContext",
     "_CBO_DBS": "ANALYZEd copies registered in the live session's catalog",
     "_BUCKETED_SFS": "bucketed tables registered in the live session's catalog",
-    "_SCAN_PARTS": "scan partition counts probed in the live session",
-    "_MEDIA_PARTS": "media scan partition counts probed in the live session",
     # release bookkeeping: emptied by release_query_caches after each query
     "_QUERY_CACHES": "cached frames a query must persist until it is collected",
     "_MEMORY_SINKS": "memory-sink views dropped after each query",

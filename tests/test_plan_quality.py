@@ -61,9 +61,11 @@ def test_lsh_band_join_is_equi(spark, sf_dir):
 
 
 def test_cpu_bound_scans_are_parallel(spark, sf_dir):
+    """t_cpu spreads a one-split scan over every core (session.spread)."""
+    from crane_stream_processing_spark.session import cores
+
     df = REGISTRY["dedup_simhash_documents"].fn(spark, sf_dir)
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert df.rdd.getNumPartitions() >= min(p, 8)
+    assert df.rdd.getNumPartitions() >= min(cores(spark), 8)
 
 
 def test_scalar_projection_no_shuffle(spark, sf_dir):

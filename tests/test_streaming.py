@@ -835,6 +835,7 @@ def test_state_store_reconciles_with_memory_sink(spark, sf_dir):
     SAID, the checkpoint is what it IS HOLDING; equality is the
     exactly-once accounting audit."""
     import os as _os
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -846,43 +847,46 @@ def test_state_store_reconciles_with_memory_sink(spark, sf_dir):
     )
 
     ckpt = tempfile.mkdtemp(prefix="statestore_audit_")
-    ev = stream_table(spark, sf_dir, "events")
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("statestore_audit")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        ev = stream_table(spark, sf_dir, "events")
+        agg = (
+            ev.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("statestore_audit")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
-    sink = {
-        (r.w.start.isoformat(), r.event_type): r.n
-        for r in spark.table("statestore_audit").collect()
-    }
-    assert sink, "events stream produced no groups"
+        sink = {
+            (r.w.start.isoformat(), r.event_type): r.n
+            for r in spark.table("statestore_audit").collect()
+        }
+        assert sink, "events stream produced no groups"
 
-    meta = state_metadata(spark, _os.path.join(ckpt))
-    ops = [(r.operatorId, r.operatorName) for r in meta.collect()]
-    assert any(name == "stateStoreSave" for _, name in ops), ops
-    op_id = next(i for i, name in ops if name == "stateStoreSave")
+        meta = state_metadata(spark, _os.path.join(ckpt))
+        ops = [(r.operatorId, r.operatorName) for r in meta.collect()]
+        assert any(name == "stateStoreSave" for _, name in ops), ops
+        op_id = next(i for i, name in ops if name == "stateStoreSave")
 
-    st = read_state(spark, ckpt, operator_id=op_id)
-    # state rows carry the operator's INTERNAL field names — key.window
-    # (not the query's alias) and value.count (the physical aggregate
-    # buffer), which is exactly the point: this is the checkpoint's own
-    # layout, not a replay of the query
-    held = {
-        (r.key.window.start.isoformat(), r.key.event_type): r.value["count"]
-        for r in st.collect()
-    }
-    assert held == sink, (
-        f"checkpointed state and sink diverge: "
-        f"{len(held)} held vs {len(sink)} reported"
-    )
+        st = read_state(spark, ckpt, operator_id=op_id)
+        # state rows carry the operator's INTERNAL field names — key.window
+        # (not the query's alias) and value.count (the physical aggregate
+        # buffer), which is exactly the point: this is the checkpoint's own
+        # layout, not a replay of the query
+        held = {
+            (r.key.window.start.isoformat(), r.key.event_type): r.value["count"]
+            for r in st.collect()
+        }
+        assert held == sink, (
+            f"checkpointed state and sink diverge: "
+            f"{len(held)} held vs {len(sink)} reported"
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
